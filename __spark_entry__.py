@@ -229,43 +229,39 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dataforge_core_spark.session import session_key
+from dataforge_core_spark.operators._store import stored
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:  # robust under by-path module loading
     sys.path.insert(0, _REPO)
 _PROJECT_DIR = os.path.join(_REPO, "projects", "tpch_demo")
 
-_hub_cache: dict = {}
 
-
+@stored("engine_hub_compile")
 def _build(spark: SparkSession, sf_dir: str):
-    key = (session_key(spark), sf_dir)
-    if key not in _hub_cache:
-        from dataforge_core_spark import ProjectRunner, load_project
+    from dataforge_core_spark import ProjectRunner, load_project
 
-        project = load_project(_PROJECT_DIR)
-        runner = ProjectRunner(
-            spark, project, {"DATA_DIR": sf_dir}, persist_hubs=False
-        )
-        # level-parallel compile + eager local checkpoint per hub: the
-        # reference's run.sql materializes every hub table, and
-        # checkpointed frames are plain LogicalRDD scans — persisted
-        # (CacheManager) hubs instead tax EVERY later query in the
-        # session with canonicalized-plan cache-match passes over 7
-        # wide hub plans (measured: ~10s across the bench phase).
-        # Downstream hubs compile against the checkpointed frames, so
-        # nothing is stored twice and independent hubs materialize
-        # concurrently (was: sequential persist -> checkpoint ->
-        # unpersist, ~1.4x slower at sf0.1).  NOT the emitter's
-        # single-SQL-per-hub path: measured head-to-head it is
-        # warm-identical (5.61 vs 5.59s) and ~10s WORSE cold (ANTLR
-        # first-parse warmup on the giant statements), and the heap
-        # bloat degraded the cache-served dedup lanes downstream.
-        hubs = runner.build_checkpointed()
-        outs = runner.build_outputs(hubs)
-        _hub_cache[key] = (hubs, outs)
-    return _hub_cache[key]
+    project = load_project(_PROJECT_DIR)
+    runner = ProjectRunner(
+        spark, project, {"DATA_DIR": sf_dir}, persist_hubs=False
+    )
+    # level-parallel compile + eager local checkpoint per hub: the
+    # reference's run.sql materializes every hub table, and
+    # checkpointed frames are plain LogicalRDD scans — persisted
+    # (CacheManager) hubs instead tax EVERY later query in the
+    # session with canonicalized-plan cache-match passes over 7
+    # wide hub plans (measured: ~10s across the bench phase).
+    # Downstream hubs compile against the checkpointed frames, so
+    # nothing is stored twice and independent hubs materialize
+    # concurrently (was: sequential persist -> checkpoint ->
+    # unpersist, ~1.4x slower at sf0.1).  NOT the emitter's
+    # single-SQL-per-hub path: measured head-to-head it is
+    # warm-identical (5.61 vs 5.59s) and ~10s WORSE cold (ANTLR
+    # first-parse warmup on the giant statements), and the heap
+    # bloat degraded the cache-served dedup lanes downstream.
+    hubs = runner.build_checkpointed()
+    outs = runner.build_outputs(hubs)
+    return hubs, outs
 
 
 def _canonical(df: DataFrame) -> DataFrame:

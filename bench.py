@@ -9,12 +9,13 @@ Protocol (three phases):
 1. **Session warmup** — one noop write of the smallest table, so
    executor-thread spin-up / parquet datasource init / scan JIT don't
    land on the alphabetically-first query.
-2. **Index builds, timed cold** — operator-level shared indexes (the
-   persisted shingle relation, minhash pair table, simhash signatures,
-   normalized embeddings, the IVF k-means index, and the engine hub
-   compile) are built from a cleared-cache state and each build is timed
-   explicitly.  These are one-time costs a long-lived session pays once;
-   previously they hid inside the first run's spread.
+2. **Index builds, timed cold** — every stored index the operators
+   register (the persisted shingle relation, minhash pair table,
+   simhash signatures, normalized embeddings, the IVF k-means index,
+   the engine hub compile, ...) is built from a cleared store and each
+   build is timed explicitly.  These are one-time costs a long-lived
+   session pays once; previously they hid inside the first run's
+   spread.
 3. **Queries, timed warm** — each query executes fully (noop sink — no
    driver collection) N times (default 3); the per-query number is the
    MEDIAN, so one contended run on a noisy box cannot distort the
@@ -167,7 +168,9 @@ def _steal_pct(t0: list[int], t1: list[int]) -> float:
     -1.0 when unavailable."""
     if not t0 or not t1 or len(t0) < 8 or len(t1) < 8:
         return -1.0
-    tot = sum(b - a for a, b in zip(t0, t1))
+    # fields 0-7 only (user..steal): guest and guest_nice are already
+    # counted inside user and nice
+    tot = sum(b - a for a, b in zip(t0[:8], t1[:8]))
     if tot <= 0:
         return -1.0
     return round(100.0 * (t1[7] - t0[7]) / tot, 2)
@@ -213,527 +216,40 @@ def _jvm_gauges(spark) -> dict:
         return {}
 
 
-def _clear_operator_caches(spark) -> None:
-    """Drop every operator-level cache so index builds measure cold."""
-    import __spark_entry__ as entry
-    from dataforge_core_spark.operators import (
-        dedup,
-        multimodal,
-        simhash,
-        similarity,
-        sketches,
-        text,
-        training,
-    )
-    from dataforge_core_spark.session import free_local_checkpoint
-
-    # the DSIR feature-bucket relation (checkpointed)
-    for _name, df in training._dsir_bkt_cache.values():
-        free_local_checkpoint(df)
-    training._dsir_bkt_cache.clear()
-    # the five-gate ingest verdict relation (checkpointed)
-    for df in training._ingest_base_cache.values():
-        free_local_checkpoint(df)
-    training._ingest_base_cache.clear()
-    # merge tables are plain tuples (the train loop frees its own
-    # blocks) — cleared so the timed train row measures a real build;
-    # the encode lane's (word, n_pieces) vocabulary is checkpointed
-    for df in text._bpe_wp_cache.values():
-        free_local_checkpoint(df)
-    text._bpe_wp_cache.clear()
-    text._bpe_cache.clear()
-    for _m, _u, _qv, _t, mdf, udf, cntdf in (
-        text._ppl_model_cache.values()
-    ):
-        free_local_checkpoint(mdf)
-        free_local_checkpoint(udf)
-        free_local_checkpoint(cntdf)
-    text._ppl_model_cache.clear()
-    # the per-document LM score relation (checkpointed, r15)
-    for _name, df in text._lm_scores_cache.values():
-        free_local_checkpoint(df)
-    text._lm_scores_cache.clear()
-    for hubs, _outs in entry._hub_cache.values():
-        for df in hubs.values():
-            free_local_checkpoint(df)
-    # both label caches hold localCheckpoint-ed frames — free the
-    # blocks eagerly (clear() alone leaves them to the async
-    # ContextCleaner, which lets superseded blocks linger through the
-    # timed phase)
-    for df in dedup._labels_cache.values():
-        free_local_checkpoint(df)
-    dedup._labels_cache.clear()
-    for df in dedup._full_labels_cache.values():
-        free_local_checkpoint(df)
-    dedup._full_labels_cache.clear()
-    for _p, _l, pos, lens in dedup._substr_cache.values():
-        free_local_checkpoint(pos)
-        free_local_checkpoint(lens)
-    dedup._substr_cache.clear()
-    for _b, _k, bands, kdf in dedup._nd_index_cache.values():
-        free_local_checkpoint(bands)
-        free_local_checkpoint(kdf)
-    dedup._nd_index_cache.clear()
-    for df in dedup._tokbase_cache.values():
-        free_local_checkpoint(df)
-    dedup._tokbase_cache.clear()
-    for df in dedup._ex_cache.values():
-        free_local_checkpoint(df)
-    dedup._ex_cache.clear()
-    for cache in (dedup._pairs_cache,):
-        for df in cache.values():
-            try:
-                df.unpersist()
-            except Exception:
-                pass
-        cache.clear()
-    # the signature relation is checkpointed (narrow build) as of r15
-    for df in simhash._sig_cache.values():
-        free_local_checkpoint(df)
-    simhash._sig_cache.clear()
-    for df in simhash._salted_cache.values():
-        free_local_checkpoint(df)
-    simhash._salted_cache.clear()
-    similarity._v_cache.clear()
-    similarity._kmeans_cache.clear()
-    similarity._centroid_cache.clear()
-    # _pr_edges_cache holds views over the same checkpointed graph
-    # frames _knn_cache owns — free the blocks once, clear both
-    for df in similarity._knn_cache.values():
-        free_local_checkpoint(df)
-    similarity._knn_cache.clear()
-    similarity._pr_edges_cache.clear()
-    for _name, df in similarity._xq_cache.values():
-        free_local_checkpoint(df)
-    similarity._xq_cache.clear()
-    similarity._top_pc_cache.clear()
-    similarity._pc2_cache.clear()
-    similarity._pcs_cache.clear()
-    for _name, df in similarity._x2_cache.values():
-        free_local_checkpoint(df)
-    similarity._x2_cache.clear()
-    for _out, ckpts in similarity._kcore_cache.values():
-        for df in ckpts:
-            free_local_checkpoint(df)
-    similarity._kcore_cache.clear()
-    for _name, df in similarity._sq_cache.values():
-        free_local_checkpoint(df)
-    similarity._sq_cache.clear()
-    for _name, df in similarity._nprobe_scored_cache.values():
-        free_local_checkpoint(df)
-    similarity._nprobe_scored_cache.clear()
-    for _name, df in similarity._pq_curve_cache.values():
-        free_local_checkpoint(df)
-    similarity._pq_curve_cache.clear()
-    for _rn, _cn, _con, rs_df, cb_df, codes_df in (
-        similarity._trained_cb_cache.values()
-    ):
-        free_local_checkpoint(rs_df)
-        free_local_checkpoint(cb_df)
-        free_local_checkpoint(codes_df)
-    similarity._trained_cb_cache.clear()
-    for cache in (similarity._pq_codes_cache, similarity._rpq_codes_cache):
-        for _name, df in cache.values():
-            free_local_checkpoint(df)
-        cache.clear()
-    for df in multimodal._phash_cache.values():
-        free_local_checkpoint(df)
-    multimodal._phash_cache.clear()
-    # the stored salted LSH band tables (image + audio, per cap)
-    for df in multimodal._salted_bands_cache.values():
-        free_local_checkpoint(df)
-    multimodal._salted_bands_cache.clear()
-    for df in multimodal._afp_cache.values():
-        free_local_checkpoint(df)
-    multimodal._afp_cache.clear()
-    for _name, df in multimodal._phash_probe_cache.values():
-        free_local_checkpoint(df)
-    multimodal._phash_probe_cache.clear()
-    for _name, df in multimodal._afp_probe_cache.values():
-        free_local_checkpoint(df)
-    multimodal._afp_probe_cache.clear()
-    for df in multimodal._phash_clusters_cache.values():
-        free_local_checkpoint(df)
-    multimodal._phash_clusters_cache.clear()
-    for df in multimodal._afp_clusters_cache.values():
-        free_local_checkpoint(df)
-    multimodal._afp_clusters_cache.clear()
-    for _name, df in sketches._toks_cache.values():
-        free_local_checkpoint(df)
-    sketches._toks_cache.clear()
-    # the stored bottom-K sketch rows (r15)
-    for _name, df in sketches._bk_cache.values():
-        free_local_checkpoint(df)
-    sketches._bk_cache.clear()
-    for _name, df in sketches._hll_regs_cache.values():
-        free_local_checkpoint(df)
-    sketches._hll_regs_cache.clear()
-    for _m, _t, mat, topdf in sketches._cms_cache.values():
-        free_local_checkpoint(mat)
-        free_local_checkpoint(topdf)
-    sketches._cms_cache.clear()
-    entry._hub_cache.clear()
-    spark.catalog.clearCache()
-
-
-# Builder dependency edges: which builders' cached artifacts each one
-# consumes.  The index phase runs builders CONCURRENTLY (round-13: the
-# sequential phase cost 49-55s, most of it per-build JIT / scheduling
-# latency on otherwise idle executor threads; a real cluster submits
-# independent index jobs concurrently too).  Declared edges keep a
-# shared prologue from being raced into twice; conf-mutating builds
-# (the CC label loops, the k-means Lloyd loop) additionally serialize
-# their shuffle-width override through session.shuffle_override's lock.
-_INDEX_DEPS: dict[str, list[str]] = {
-    "engine_hub_compile": [],
-    "token_base": [],
-    "dedup_shingles": ["token_base"],
-    "dedup_substr_positions": ["token_base"],
-    "dedup_minhash_pairs": ["dedup_shingles"],
-    "dedup_cluster_labels": ["dedup_minhash_pairs"],
-    "near_dedup_probe_index": ["dedup_minhash_pairs"],
-    "simhash_signatures": ["token_base"],
-    "simhash_salted_bands": ["simhash_signatures"],
-    # review fix (r13): _toks_view derives from dedup._ex_df — without
-    # the edge, kmv and the shingle builders race the unguarded
-    # _ex_cache/_tokbase_cache check-then-act at phase start
-    "ann_normed": [],
-    "ann_sq_codes": ["ann_normed"],
-    "ann_knn_edges": ["ann_normed"],
-    "ann_kcore_peel": ["ann_knn_edges"],
-    "kmv_shingle_toks": ["dedup_shingles"],
-    "kmv_bottomk": ["kmv_shingle_toks"],
-    "cms_matrix": ["token_base"],
-    "hll_registers": ["kmv_shingle_toks"],
-    "embeddings_pc_fit": ["ann_normed"],
-    "embeddings_pc2_fit": ["embeddings_pc_fit"],
-    "embeddings_pcs_fit": ["embeddings_pc2_fit"],
-    "embedding_cluster_labels": ["ann_normed"],
-    "ann_ivf_kmeans_index": ["ann_normed"],
-    "ann_outlier_centroids": ["ann_normed"],
-    "pq_codes": ["ann_normed"],
-    "pq_residual_codes": ["ann_ivf_kmeans_index"],
-    "pq_trained_codebook": ["ann_ivf_kmeans_index"],
-    "multimodal_phash_index": [],
-    "phash_probe_index": ["multimodal_phash_index"],
-    "phash_cluster_labels": ["multimodal_phash_index"],
-    "phash_salted_bands": ["multimodal_phash_index"],
-    "audio_afp_index": [],
-    "afp_probe_index": ["audio_afp_index"],
-    "afp_cluster_labels": ["audio_afp_index"],
-    "afp_salted_bands": ["audio_afp_index"],
-    "train_bpe_merge_train": [],
-    # review fix (r13): text._ppl_model reads dedup._token_base_view
-    "ppl_gate_model": ["token_base"],
-    "lm_doc_scores": ["token_base"],
-    "dsir_bucket_rows": [],
-    # the stored five-gate verdict relation: each gate probes its own
-    # stored index, so the base depends on all five (r14)
-    "ingest_gate_base": [
-        "near_dedup_probe_index",
-        "phash_probe_index",
-        "afp_probe_index",
-        "ppl_gate_model",
-        "ann_ivf_kmeans_index",
-    ],
-}
-
-
 def _run_index_builds(spark) -> tuple[dict[str, float], float]:
-    """Run every index builder, concurrently where the dependency
-    edges allow, and return (per-builder wall seconds, phase wall
-    seconds).  Per-builder times overlap under concurrency, so the
+    """Build every registered stored index (operators/_store.py) on a
+    4-thread pool and return (per-index wall seconds, phase wall
+    seconds).  An index whose build needs another one calls it, and the
+    store's per-key locks make a second caller wait for the running
+    build, so no dependency list or scheduler is needed.  Per-index
+    times overlap and include waits on shared prerequisites, so the
     PHASE wall is the session's real one-time cost; both are stamped.
-    ``SPARK_GRAFT_INDEX_SEQ=1`` restores the sequential pre-r13
-    behavior (then phase wall == sum of builds)."""
+
+    Four in flight, not eight (r16 measured, quiet box): eight
+    concurrent builders oversubscribe the local scheduler, so a
+    builder's wall includes waiting on cores held by the other seven —
+    per-builder times read 2-7x the uncontended cost without buying any
+    phase wall."""
     import concurrent.futures as _cf
 
-    builders = _index_builders()
-    order = [name for name, _ in builders]
-    thunks = dict(builders)
-    missing = set(order) ^ set(_INDEX_DEPS)
-    assert not missing, f"_INDEX_DEPS out of sync with builders: {missing}"
-    # dict(builders) dedupes thunks; a duplicate name would make
-    # len(done) unable to reach len(order) and the scheduler loop below
-    # would spin forever — and the symmetric-difference check above
-    # cannot see duplicates (r13 advice)
-    assert len(set(order)) == len(order), (
-        f"duplicate index-builder names: "
-        f"{sorted(n for n in set(order) if order.count(n) > 1)}"
-    )
+    from dataforge_core_spark.operators import _store
 
     times: dict[str, float] = {}
     t_phase = time.perf_counter()
 
-    def _run(name: str) -> None:
+    def _run(name: str, build) -> None:
         t0 = time.perf_counter()
-        thunks[name](spark)
+        build(spark, SF_DIR)
         times[name] = round(time.perf_counter() - t0, 3)
 
-    if os.environ.get("SPARK_GRAFT_INDEX_SEQ"):
-        for name in order:
-            _run(name)
-        return times, round(time.perf_counter() - t_phase, 3)
-
-    done: set[str] = set()
-    in_flight: dict = {}
-    # 4-way submission, not 8 (r16 measured, quiet box): 8 concurrent
-    # builders oversubscribe the 32-thread local scheduler, so a
-    # builder's WALL includes waiting on cores held by the other seven
-    # — per-builder times (and their sum) read 2-7x the uncontended
-    # cost and swing wildly run-to-run (pq_trained_codebook 2.9s <->
-    # 20.9s between back-to-back stamps) without buying any phase wall
-    # (w8 walls 37.7/39.6 vs w4 29.6/36.0; sums 221/276 vs 112/140;
-    # sequential truth: sum == wall == 85.9).  Four in flight keeps the
-    # tail back-filled (guide §2.6: 2-3 jobs in flight is plenty) and
-    # keeps the stamped per-builder costs meaningful.
-    workers = int(os.environ.get("SPARK_GRAFT_INDEX_WORKERS", "4"))
-    with _cf.ThreadPoolExecutor(max_workers=workers) as ex:
-        while len(done) < len(order):
-            for name in order:
-                if (
-                    name not in done
-                    and name not in in_flight
-                    and all(d in done for d in _INDEX_DEPS[name])
-                ):
-                    in_flight[name] = ex.submit(_run, name)
-            done_now, _ = _cf.wait(
-                in_flight.values(), return_when=_cf.FIRST_COMPLETED
-            )
-            for name in [n for n, f in in_flight.items() if f in done_now]:
-                in_flight.pop(name).result()  # re-raise builder errors
-                done.add(name)
+    with _cf.ThreadPoolExecutor(max_workers=4) as ex:
+        futures = [
+            ex.submit(_run, name, build)
+            for name, build in _store.registered().items()
+        ]
+        for f in futures:
+            f.result()  # re-raise builder errors
     return times, round(time.perf_counter() - t_phase, 3)
-
-
-def _index_builders():
-    """(name, thunk) per shared index, in dependency order (the
-    sequential-fallback order; concurrent execution derives its
-    schedule from _INDEX_DEPS)."""
-    import __spark_entry__ as entry
-    from dataforge_core_spark.operators import (
-        dedup,
-        multimodal,
-        simhash,
-        similarity,
-        sketches,
-        text,
-        training,
-    )
-
-    return [
-        # entry._build checkpoints every hub eagerly (see its comment),
-        # so this build IS the materialization — hub/output query lanes
-        # then read checkpointed blocks
-        ("engine_hub_compile", lambda s: entry._build(s, SF_DIR)),
-        # THE corpus tokenize pass — every token-consuming index below
-        # (shingles, substring windows, CMS, simhash) derives from it
-        ("token_base", lambda s: dedup._token_base(s, SF_DIR).count()),
-        ("dedup_shingles", lambda s: dedup._ex_df(s, SF_DIR).count()),
-        # the checkpointed sliding-window position relation (substring
-        # measurement + removal lanes)
-        (
-            "dedup_substr_positions",
-            lambda s: dedup._substr_views(s, SF_DIR),
-        ),
-        # pairs BEFORE labels: the cluster build consumes the cached
-        # pair frame (otherwise the full minhash pipeline runs cold
-        # inside the label timing and the pairs row measures a no-op)
-        (
-            "dedup_minhash_pairs",
-            lambda s: dedup.dedup_minhash(s, SF_DIR).count(),
-        ),
-        (
-            "dedup_cluster_labels",
-            # the FULL-corpus assignment (singletons attached,
-            # checkpointed) — what the cluster/stats/keep-best/report
-            # lanes actually consume; builds the endpoint labels
-            # transitively
-            lambda s: dedup._full_labels(s, SF_DIR, False).count(),
-        ),
-        # the corpus-side probe index of the streaming near-dedup gate
-        (
-            "near_dedup_probe_index",
-            lambda s: dedup._near_dedup_index(s, SF_DIR),
-        ),
-        (
-            "simhash_signatures",
-            lambda s: simhash._sig_df(s, SF_DIR).count(),
-        ),
-        # the checkpointed banded+salted LSH table (pairs base)
-        (
-            "simhash_salted_bands",
-            lambda s: simhash._salted_bands(
-                s, SF_DIR, simhash.MAX_BLOCK_BUCKET
-            ).count(),
-        ),
-        ("ann_normed", lambda s: similarity._normed(s, SF_DIR)),
-        # the checkpointed SQ8 code table
-        (
-            "ann_sq_codes",
-            lambda s: similarity._sq_index_view(s, SF_DIR),
-        ),
-        # the checkpointed kNN edge list (pagerank / triangles base)
-        (
-            "ann_knn_edges",
-            lambda s: similarity._knn_edges_view(s, SF_DIR),
-        ),
-        # the materialized k-core peel rounds (survivor node sets)
-        (
-            "ann_kcore_peel",
-            lambda s: similarity.ann_kcore(s, SF_DIR).count(),
-        ),
-        # the checkpointed (source, shingle-hash) sketch universe
-        (
-            "kmv_shingle_toks",
-            lambda s: sketches._toks_view(s, SF_DIR),
-        ),
-        # the stored bottom-K sketch rows (source, h, rn) — the KMV
-        # counterpart of the HLL register table; five estimator lanes
-        # read it instead of re-ranking the universe (r15)
-        (
-            "kmv_bottomk",
-            lambda s: sketches._bk_view(s, SF_DIR),
-        ),
-        # the checkpointed CMS counter matrix + exact top tokens
-        (
-            "cms_matrix",
-            lambda s: sketches._cms_views(s, SF_DIR),
-        ),
-        # the stored HLL register table (m=256 rows per source)
-        (
-            "hll_registers",
-            lambda s: sketches._hll_regs_view(s, SF_DIR),
-        ),
-        # power-iteration PC fits (the whitening-direction index;
-        # pc2 = deflation pass over the same checkpointed matrix)
-        (
-            "embeddings_pc_fit",
-            lambda s: similarity._fit_top_pc(s, SF_DIR),
-        ),
-        (
-            "embeddings_pc2_fit",
-            lambda s: similarity._fit_top_pc2(s, SF_DIR),
-        ),
-        # deflation continued to N_PC directions (PCs 3-4: one deflate
-        # pass + one chain each over the re-checkpointed residuals)
-        (
-            "embeddings_pcs_fit",
-            lambda s: similarity._fit_top_pcs(s, SF_DIR),
-        ),
-        (
-            "embedding_cluster_labels",
-            lambda s: similarity.dedup_semantic_cluster(s, SF_DIR).count(),
-        ),
-        (
-            "ann_ivf_kmeans_index",
-            lambda s: similarity._kmeans_assignments(s, SF_DIR),
-        ),
-        (
-            "ann_outlier_centroids",
-            lambda s: similarity._label_centroids(s, SF_DIR),
-        ),
-        # the stored PQ code tables (raw + untrained-residual): encode
-        # once per session, every ADC consumer reads codes
-        (
-            "pq_codes",
-            lambda s: similarity._pq_codes_view(s, SF_DIR),
-        ),
-        (
-            "pq_residual_codes",
-            lambda s: similarity._rpq_codes_view(s, SF_DIR),
-        ),
-        # the trained residual-PQ codebook + its stored codes
-        # (per-subspace Lloyd rounds over the checkpointed
-        # residual-subvector relation; needs the k-means index above)
-        (
-            "pq_trained_codebook",
-            lambda s: similarity._trained_rcb(s, SF_DIR),
-        ),
-        # the checkpointed image-hash index (the Python decode+hash
-        # pass both phash lanes serve from)
-        (
-            "multimodal_phash_index",
-            lambda s: multimodal._phash_df(s, SF_DIR).count(),
-        ),
-        # the corpus-side band table of the streaming image gate
-        (
-            "phash_probe_index",
-            lambda s: multimodal._phash_probe_index(s, SF_DIR),
-        ),
-        # the stored salted LSH band table of the image near-dup lane
-        (
-            "phash_salted_bands",
-            lambda s: multimodal._salted_hash_bands(
-                s, SF_DIR, "phash", multimodal.MAX_PHASH_BUCKET
-            ).count(),
-        ),
-        # the checkpointed audio-fingerprint index (the fused
-        # synth+parse+fingerprint Arrow pass both audio-fp lanes
-        # serve from)
-        (
-            "audio_afp_index",
-            lambda s: multimodal._afp_df(s, SF_DIR).count(),
-        ),
-        # the corpus-side band table of the streaming audio gate
-        (
-            "afp_probe_index",
-            lambda s: multimodal._afp_probe_index(s, SF_DIR),
-        ),
-        # the stored salted LSH band table of the audio near-dup lane
-        (
-            "afp_salted_bands",
-            lambda s: multimodal._salted_hash_bands(
-                s, SF_DIR, "afp", multimodal.MAX_AFP_BUCKET
-            ).count(),
-        ),
-        # the audio dup-cluster labels (CC over the fingerprint pair
-        # graph, cached in multimodal._afp_clusters_cache)
-        (
-            "afp_cluster_labels",
-            lambda s: multimodal.multimodal_audio_clusters(
-                s, SF_DIR
-            ).count(),
-        ),
-        # the image dup-cluster labels (CC over the phash pair graph,
-        # cached in multimodal._phash_clusters_cache)
-        (
-            "phash_cluster_labels",
-            lambda s: multimodal.multimodal_phash_clusters(
-                s, SF_DIR
-            ).count(),
-        ),
-        # the BPE merge-train loop (its lane then serves literal rows)
-        (
-            "train_bpe_merge_train",
-            lambda s: text.train_bpe_merges(s, SF_DIR).count(),
-        ),
-        # the stored LM-gate model (bigram scores + smoothing
-        # denominators + threshold scalars, corpus split only)
-        (
-            "ppl_gate_model",
-            lambda s: text._ppl_model(s, SF_DIR),
-        ),
-        # the per-document LM score relation — text_bigram_lm serves
-        # it directly and the perplexity filter's threshold subtree and
-        # output are projections over it (r15)
-        (
-            "lm_doc_scores",
-            lambda s: text._lm_scores(s, SF_DIR),
-        ),
-        # the checkpointed DSIR (doc_id, bkt, is_bench) feature-bucket
-        # relation (both DSIR passes + every lane run read it)
-        (
-            "dsir_bucket_rows",
-            lambda s: training._dsir_bucket_view(s, SF_DIR),
-        ),
-        # the stored five-gate ingest verdict relation — both
-        # media_policy decision lanes are projections over it
-        (
-            "ingest_gate_base",
-            lambda s: training._ingest_base(s, SF_DIR).count(),
-        ),
-    ]
 
 
 def main() -> None:
@@ -814,9 +330,11 @@ def main() -> None:
         "noop"
     ).mode("overwrite").save()
 
-    # Phase 2: shared index builds, timed cold (concurrent where the
-    # dependency edges allow — see _run_index_builds).
-    _clear_operator_caches(spark)
+    # Phase 2: shared index builds, timed cold (concurrently — see
+    # _run_index_builds).
+    from dataforge_core_spark.operators import _store
+
+    _store.clear_all(spark)
     index_build, index_wall = _run_index_builds(spark)
 
     # Phase 3: queries, indexes warm.  Each lane also records its

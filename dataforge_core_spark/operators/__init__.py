@@ -111,36 +111,6 @@ def _recorded_names() -> set:
     }
 
 
-def _deferred_names() -> set:
-    """The DEFER_PAST_CAPTURE set while its freezing round's record is
-    still pending, else empty — the ONE definition of the deferral
-    gate (stale_hubs and _merge both rank against it; review fix,
-    r13)."""
-    return (
-        DEFER_PAST_CAPTURE
-        if _max_recorded_round() < _DEFER_UNTIL_ROUND
-        else set()
-    )
-
-
-# Lanes added AFTER a round's capture-window composition was verified
-# and frozen: NOT hoisted ahead of driver-green rows while the
-# freezing round's record is still pending, so they cannot displace
-# the window's veteran-refresh block.  They stay locally
-# oracle-verified (tests/test_oracle.py) regardless; once a
-# CORRECTNESS_r{N}+ record exists the deferral expires and _merge
-# hoists them like any other unrecorded row (they become the
-# least-proven set).  Re-armed in r12 for the late-round composite
-# lane (the r12 window was verified as 3 pinned + hub_nation + all 37
-# r8 veterans + 7 new lanes + 2 r9s = 50 before this lane existed);
-# the original r7 deferral set expired when CORRECTNESS_r7 landed.
-_DEFER_UNTIL_ROUND = 12
-DEFER_PAST_CAPTURE: set = {
-    "train_ingest_decision",
-    "stream_ann_topk",
-}
-
-
 def _max_recorded_round() -> int:
     import glob
     import os
@@ -217,7 +187,7 @@ def _window_plan() -> tuple[list[str], list[str]]:
     for m in _modules():
         names.update(m.queries().keys())
     recorded = sorted(names & _recorded_names())
-    unproven = names - set(recorded) - _deferred_names()
+    unproven = names - set(recorded)
 
     budget = max(ROTATION_SLOTS, CAPTURE_WINDOW - 3 - len(unproven))
     combined = sorted(cands + recorded, key=_age_key)[:budget]
@@ -255,12 +225,7 @@ def _merge(items: dict) -> dict:
     stale_hubs so hubs and veterans cannot double-spend window slots —
     r13 advice), then everything else."""
     recorded = _recorded_names()
-    deferred = _deferred_names()
-    fresh = {
-        k: v
-        for k, v in items.items()
-        if k not in recorded and k not in deferred
-    }
+    fresh = {k: v for k, v in items.items() if k not in recorded}
     for k in _window_plan()[1]:
         if k in items:
             fresh[k] = items[k]

@@ -28,6 +28,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dataforge_core_spark.operators._store import stored
 from dataforge_core_spark.session import (
     free_local_checkpoint,
     session_key,
@@ -148,9 +149,7 @@ def _duck_ex_sql() -> str:
     """
 
 
-_ex_cache: dict = {}
-
-
+@stored("dedup_shingles")
 def _ex_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distinct (doc_id, shingle-hash) relation, persisted once per
     (session, sf) — the shared base of minhash and n-gram Jaccard.
@@ -167,39 +166,33 @@ def _ex_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     real multi-file corpus the scan is already parallel.  At 100 TB the
     persist becomes a parquet checkpoint keyed by doc partition.
     """
-    key = (session_key(spark), sf_dir)
-    if key not in _ex_cache:
-        from pyspark.sql import functions as F
-        from pyspark.sql.window import Window
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
 
-        toks = _token_base(spark, sf_dir)
-        w = Window.partitionBy("doc_id").orderBy("pos")
-        sh = toks.select(
-            "doc_id",
-            F.concat_ws(
-                " ", "tk", F.lead("tk", 1).over(w), F.lead("tk", 2).over(w)
-            ).alias("s"),
-            F.lead("tk", 2).over(w).isNotNull().alias("ok"),
-        )
-        # localCheckpoint, NOT lazy persist (r10): with persist, the
-        # window-over-token-base re-derivation leaked into consumers on
-        # cache-plan mismatches — train_contamination measured 0.86s
-        # persist vs 0.44s checkpointed at sf0.1 warm; the checkpoint
-        # truncates lineage to the materialized blocks so every consumer
-        # is a LogicalRDD scan (same rule as _normed / _token_base)
-        ex = (
-            sh.filter("ok")
-            .selectExpr("doc_id", f"{_SPARK_H} AS s")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        _ex_cache[key] = ex
-    return _ex_cache[key]
+    toks = _token_base(spark, sf_dir)
+    w = Window.partitionBy("doc_id").orderBy("pos")
+    sh = toks.select(
+        "doc_id",
+        F.concat_ws(
+            " ", "tk", F.lead("tk", 1).over(w), F.lead("tk", 2).over(w)
+        ).alias("s"),
+        F.lead("tk", 2).over(w).isNotNull().alias("ok"),
+    )
+    # localCheckpoint, NOT lazy persist (r10): with persist, the
+    # window-over-token-base re-derivation leaked into consumers on
+    # cache-plan mismatches — train_contamination measured 0.86s
+    # persist vs 0.44s checkpointed at sf0.1 warm; the checkpoint
+    # truncates lineage to the materialized blocks so every consumer
+    # is a LogicalRDD scan (same rule as _normed / _token_base)
+    return (
+        sh.filter("ok")
+        .selectExpr("doc_id", f"{_SPARK_H} AS s")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
 
 
-_tokbase_cache: dict = {}
-
-
+@stored("token_base")
 def _token_base(spark: SparkSession, sf_dir: str):
     """THE single corpus tokenize pass: checkpointed exploded
     (doc_id, pos, tk) relation every token-consuming index derives
@@ -213,22 +206,18 @@ def _token_base(spark: SparkSession, sf_dir: str):
     partitioned by doc rather than a localCheckpoint).  pos is 0-based
     (posexplode), matching the sequence(0, n-w) convention of the
     substring SQL."""
-    key = (session_key(spark), sf_dir)
-    if key not in _tokbase_cache:
-        from pyspark.sql import functions as F
+    from pyspark.sql import functions as F
 
-        par = spark.sparkContext.defaultParallelism
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-        base = (
-            docs.repartition(par, "doc_id")
-            .select(
-                "doc_id",
-                F.posexplode(F.expr(_SPARK_TOKENS)).alias("pos", "tk"),
-            )
-            .localCheckpoint(eager=True)
+    par = spark.sparkContext.defaultParallelism
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    return (
+        docs.repartition(par, "doc_id")
+        .select(
+            "doc_id",
+            F.posexplode(F.expr(_SPARK_TOKENS)).alias("pos", "tk"),
         )
-        _tokbase_cache[key] = base
-    return _tokbase_cache[key]
+        .localCheckpoint(eager=True)
+    )
 
 
 def _token_base_view(spark: SparkSession, sf_dir: str) -> str:
@@ -301,9 +290,6 @@ def _jaccard_verify(ex: DataFrame, cand: DataFrame) -> DataFrame:
 MAX_BAND_BUCKET = 1000
 
 
-_pairs_cache: dict = {}
-
-
 def dedup_minhash(
     spark: SparkSession,
     sf_dir: str,
@@ -353,15 +339,17 @@ def _minhash_sig_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@stored("dedup_minhash_pairs")
 def _verified_pairs(
     spark: SparkSession,
     sf_dir: str,
-    cap: int,
+    cap: int = MAX_BAND_BUCKET,
     bands_n: int = MINHASH_BANDS,
     rows_n: int = MINHASH_R,
 ) -> DataFrame:
     """Verified near-dup pairs WITH their integer basis
-    (inter_n, n_a, n_b), persisted per (session, sf, cap, layout)."""
+    (inter_n, n_a, n_b), persisted per (session, sf, cap, layout) and
+    materialized before it is returned."""
     from pyspark.sql import functions as F
 
     if bands_n < 1 or rows_n < 1 or bands_n * rows_n > MINHASH_N:
@@ -369,10 +357,6 @@ def _verified_pairs(
             f"LSH layout {bands_n}x{rows_n} exceeds the "
             f"{MINHASH_N}-column signature"
         )
-    key = (session_key(spark), sf_dir, cap, bands_n, rows_n)
-    if key in _pairs_cache:
-        return _pairs_cache[key]
-
     ex = _ex_df(spark, sf_dir)
     sig = _minhash_sig_df(spark, sf_dir)
     keys = ", ".join(_band_keys(bands_n, rows_n))
@@ -410,7 +394,7 @@ def _verified_pairs(
         .distinct()
     )
     out = _jaccard_verify(ex, cand).persist()
-    _pairs_cache[key] = out
+    out.count()
     return out
 
 
@@ -751,12 +735,13 @@ def scalar_sig_exprs() -> tuple[str, list[str]]:
     return hs, sig
 
 
-_nd_index_cache: dict = {}
-
-
-def _near_dedup_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """(band view, exact-key view): the corpus-side probe index of the
-    STREAMING near-dedup gate (streaming_rows.stream_near_dedup).
+@stored("near_dedup_probe_index")
+def _near_dedup_stored(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, str, DataFrame, DataFrame]:
+    """(band view, exact-key view, their frames): the corpus-side probe
+    index of the STREAMING near-dedup gate
+    (streaming_rows.stream_near_dedup).
     Corpus docs only (doc_id % INCR_MOD < INCR_NEW_GE):
 
     - banded minhash rows (band_key, doc_id, chs) where chs is the
@@ -772,44 +757,45 @@ def _near_dedup_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     stored dedup index a continuous ingest probes."""
     from pyspark.sql import functions as F
 
-    key = (session_key(spark), sf_dir)
-    if key not in _nd_index_cache:
-        corp = f"doc_id % {INCR_MOD} < {INCR_NEW_GE}"
-        ex = _ex_df(spark, sf_dir).filter(corp)
-        # pre-partitioned pack — see _jaccard_verify
-        arrs = ex.repartition("doc_id").groupBy("doc_id").agg(
-            F.sort_array(F.collect_list("s")).alias("chs")
+    corp = f"doc_id % {INCR_MOD} < {INCR_NEW_GE}"
+    ex = _ex_df(spark, sf_dir).filter(corp)
+    # pre-partitioned pack — see _jaccard_verify
+    arrs = ex.repartition("doc_id").groupBy("doc_id").agg(
+        F.sort_array(F.collect_list("s")).alias("chs")
+    )
+    keys = ", ".join(_band_keys(MINHASH_BANDS, MINHASH_R))
+    bands = (
+        _minhash_sig_df(spark, sf_dir)
+        .filter(corp)
+        .selectExpr("doc_id", f"explode(array({keys})) AS band_key")
+        .join(arrs, "doc_id")
+        .selectExpr(
+            "band_key",
+            "doc_id",
+            "chs",
+            "ROW_NUMBER() OVER (PARTITION BY band_key ORDER BY doc_id)"
+            " AS rn",
         )
-        keys = ", ".join(_band_keys(MINHASH_BANDS, MINHASH_R))
-        bands = (
-            _minhash_sig_df(spark, sf_dir)
-            .filter(corp)
-            .selectExpr("doc_id", f"explode(array({keys})) AS band_key")
-            .join(arrs, "doc_id")
-            .selectExpr(
-                "band_key",
-                "doc_id",
-                "chs",
-                "ROW_NUMBER() OVER (PARTITION BY band_key ORDER BY doc_id)"
-                " AS rn",
-            )
-            .filter(f"rn <= {MAX_BAND_BUCKET}")
-            .drop("rn")
-            .localCheckpoint(eager=True)
-        )
-        kdf = (
-            spark.read.parquet(f"{sf_dir}/documents.parquet")
-            .filter(corp)
-            .selectExpr(f"md5({_SPARK_NORM}) AS ck")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        tag = abs(hash(key)) % 10**8
-        bname, kname = f"nd_bands_{tag}", f"nd_keys_{tag}"
-        bands.createOrReplaceTempView(bname)
-        kdf.createOrReplaceTempView(kname)
-        _nd_index_cache[key] = (bname, kname, bands, kdf)
-    return _nd_index_cache[key][0], _nd_index_cache[key][1]
+        .filter(f"rn <= {MAX_BAND_BUCKET}")
+        .drop("rn")
+        .localCheckpoint(eager=True)
+    )
+    kdf = (
+        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        .filter(corp)
+        .selectExpr(f"md5({_SPARK_NORM}) AS ck")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    tag = abs(hash((session_key(spark), sf_dir))) % 10**8
+    bname, kname = f"nd_bands_{tag}", f"nd_keys_{tag}"
+    bands.createOrReplaceTempView(bname)
+    kdf.createOrReplaceTempView(kname)
+    return bname, kname, bands, kdf
+
+
+def _near_dedup_index(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    return _near_dedup_stored(spark, sf_dir)[:2]
 
 
 def dedup_index_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -981,12 +967,9 @@ def dedup_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _full_labels(spark, sf_dir, pointer_doubling=False)
 
 
-_labels_cache: dict = {}
-_full_labels_cache: dict = {}
-
-
+@stored("dedup_cluster_labels")
 def _full_labels(
-    spark: SparkSession, sf_dir: str, pointer_doubling: bool
+    spark: SparkSession, sf_dir: str, pointer_doubling: bool = False
 ) -> DataFrame:
     """FULL-CORPUS cluster assignment (every doc_id, singletons mapped
     to themselves), checkpointed once per (session, sf, variant): the
@@ -998,30 +981,24 @@ def _full_labels(
     a single ExistingRDD scan; at 100 TB this is the written
     cluster-assignment table a real dedup pipeline persists between
     stages."""
-    key = (session_key(spark), sf_dir, pointer_doubling)
-    if key not in _full_labels_cache:
-        full = _attach_singletons(
-            spark, sf_dir, _cluster_labels(spark, sf_dir, pointer_doubling)
-        ).localCheckpoint(eager=True)
-        _full_labels_cache[key] = full
-    return _full_labels_cache[key]
+    return _attach_singletons(
+        spark, sf_dir, _cluster_labels(spark, sf_dir, pointer_doubling)
+    ).localCheckpoint(eager=True)
 
 
+@stored("dedup_endpoint_labels")
 def _cluster_labels(
-    spark: SparkSession, sf_dir: str, pointer_doubling: bool
+    spark: SparkSession, sf_dir: str, pointer_doubling: bool = False
 ) -> DataFrame:
     """Cached fixed-point label frame per (session, sf, variant) — the
     cluster assignment is the near-dup pipeline's 'index': every
     downstream consumer (cluster rows, keep-best selection) reads the
     same checkpointed frame instead of re-running the propagation
     loop."""
-    key = (session_key(spark), sf_dir, pointer_doubling)
-    if key not in _labels_cache:
-        labels, _ = _cc_min_label(
-            dedup_minhash(spark, sf_dir), pointer_doubling=pointer_doubling
-        )
-        _labels_cache[key] = labels
-    return _labels_cache[key]
+    labels, _ = _cc_min_label(
+        dedup_minhash(spark, sf_dir), pointer_doubling=pointer_doubling
+    )
+    return labels
 
 
 def _cc_min_label(
@@ -1701,11 +1678,12 @@ _BOILERPLATE_ORACLE = _boilerplate_sql("duck")
 
 SUBSTR_WIN = 8  # tokens; >= 2 occurrences of a window marks it duplicated
 
-_substr_cache: dict = {}
 
-
-def _substr_views(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """(positions view, doc-length view): the localCheckpoint-ed
+@stored("dedup_substr_positions")
+def _substr_stored(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, str, DataFrame, DataFrame]:
+    """(positions view, doc-length view, their frames): the localCheckpoint-ed
     (doc_id, i, window-md5) sliding-window relation plus per-doc token
     counts, built once per (session, sf) and shared by the measurement
     (dedup_substring) and removal (dedup_substring_clean) lanes — each
@@ -1715,42 +1693,43 @@ def _substr_views(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     Same recipe as dedup._ex_df / sketches._toks_view; the repartition
     spreads the single-file scan."""
     w = SUBSTR_WIN
-    key = (session_key(spark), sf_dir)
-    if key not in _substr_cache:
-        from pyspark.sql import functions as F
-        from pyspark.sql.window import Window
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
 
-        tag = abs(hash(key)) % 10**8
-        # derived from the shared token base (one corpus tokenize pass
-        # for the whole index phase): the w-gram at 0-based position i
-        # is the window of leads 0..w-1 over (doc_id, pos) — identical
-        # strings to slice(tok, i + 1, w)
-        base = _token_base(spark, sf_dir)
-        win = Window.partitionBy("doc_id").orderBy("pos")
-        leads = [F.col("tk")] + [
-            F.lead("tk", j).over(win) for j in range(1, w)
-        ]
-        pos = (
-            base.select(
-                "doc_id",
-                F.col("pos").alias("i"),
-                F.concat_ws(" ", *leads).alias("gram"),
-                F.lead("tk", w - 1).over(win).isNotNull().alias("ok"),
-            )
-            .filter("ok")
-            .selectExpr("doc_id", "i", "md5(gram) AS h")
-            .localCheckpoint(eager=True)
+    tag = abs(hash((session_key(spark), sf_dir))) % 10**8
+    # derived from the shared token base (one corpus tokenize pass
+    # for the whole index phase): the w-gram at 0-based position i
+    # is the window of leads 0..w-1 over (doc_id, pos) — identical
+    # strings to slice(tok, i + 1, w)
+    base = _token_base(spark, sf_dir)
+    win = Window.partitionBy("doc_id").orderBy("pos")
+    leads = [F.col("tk")] + [
+        F.lead("tk", j).over(win) for j in range(1, w)
+    ]
+    pos = (
+        base.select(
+            "doc_id",
+            F.col("pos").alias("i"),
+            F.concat_ws(" ", *leads).alias("gram"),
+            F.lead("tk", w - 1).over(win).isNotNull().alias("ok"),
         )
-        lens = (
-            base.groupBy("doc_id")
-            .agg(F.count("*").cast("int").alias("n_tokens"))
-            .localCheckpoint(eager=True)
-        )
-        pname, lname = f"substr_pos_{tag}", f"substr_len_{tag}"
-        pos.createOrReplaceTempView(pname)
-        lens.createOrReplaceTempView(lname)
-        _substr_cache[key] = (pname, lname, pos, lens)
-    return _substr_cache[key][0], _substr_cache[key][1]
+        .filter("ok")
+        .selectExpr("doc_id", "i", "md5(gram) AS h")
+        .localCheckpoint(eager=True)
+    )
+    lens = (
+        base.groupBy("doc_id")
+        .agg(F.count("*").cast("int").alias("n_tokens"))
+        .localCheckpoint(eager=True)
+    )
+    pname, lname = f"substr_pos_{tag}", f"substr_len_{tag}"
+    pos.createOrReplaceTempView(pname)
+    lens.createOrReplaceTempView(lname)
+    return pname, lname, pos, lens
+
+
+def _substr_views(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    return _substr_stored(spark, sf_dir)[:2]
 
 
 def _substring_sql(

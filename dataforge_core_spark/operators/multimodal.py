@@ -26,6 +26,9 @@ from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dataforge_core_spark.operators._store import stored
+from dataforge_core_spark.session import free_local_checkpoint, session_key
+
 META_SCHEMA = (
     "doc_id bigint, source_bytes int, source_md5 string, fmt string, "
     "width int, height int, channels int, sample_rate int"
@@ -1032,30 +1035,23 @@ def image_phash_fn():
     return phash
 
 
-_phash_cache: dict = {}
-
-
+@stored("multimodal_phash_index")
 def _phash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpointed (doc_id, phash) relation — the stored image-hash
     index.  The Python decode+hash pass runs ONCE per (session, sf);
     the group-count lane and the banded near-dup lane both serve from
     the checkpointed frame (at 100 TB the image decode is the dominant
     cost, so every consumer must ride one pass over the bytes)."""
-    from dataforge_core_spark.session import session_key
+    synth, ph = image_synth_fn(), image_phash_fn()
 
-    key = (session_key(spark), sf_dir)
-    if key not in _phash_cache:
-        synth, ph = image_synth_fn(), image_phash_fn()
+    def fused(batches):
+        return ph(synth(batches))
 
-        def fused(batches):
-            return ph(synth(batches))
-
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id"
-        )
-        hashed = docs.mapInPandas(fused, "doc_id bigint, phash bigint")
-        _phash_cache[key] = hashed.localCheckpoint(eager=True)
-    return _phash_cache[key]
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id"
+    )
+    hashed = docs.mapInPandas(fused, "doc_id bigint, phash bigint")
+    return hashed.localCheckpoint(eager=True)
 
 
 def multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1282,45 +1278,42 @@ def _phash_neardup_body(dialect: str, src: str, cap: int) -> str:
     return _hash_neardup_body(dialect, src, cap)
 
 
-_phash_probe_cache: dict = {}
-
-
-def _phash_probe_index(spark: SparkSession, sf_dir: str) -> str:
+@stored("phash_probe_index")
+def _phash_probe_stored(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, DataFrame]:
     """Checkpointed CORPUS-side band table (bno, blk, cphash) for the
     streaming image gate — corpus docs only (the dedup_incremental
     doc_id split), per-bucket membership rn-capped at MAX_PHASH_BUCKET
     like the minhash probe index (stream_near_dedup's corpb), so an
     incoming image probes at most PHASH_BANDS * cap candidates."""
     from dataforge_core_spark.operators.dedup import INCR_MOD, INCR_NEW_GE
-    from dataforge_core_spark.session import session_key
-
-    key = (session_key(spark), sf_dir)
-    if key not in _phash_probe_cache:
-        view = f"phash_src_{abs(hash(key)) % 10**8}"
-        _phash_df(spark, sf_dir).createOrReplaceTempView(view)
-        df = spark.sql(
-            f"""
-            SELECT bno, blk, cphash FROM (
-              SELECT bno, blk, phash AS cphash,
-                     ROW_NUMBER() OVER (PARTITION BY bno, blk
-                          ORDER BY doc_id) AS rn
-              FROM (
-                SELECT doc_id, phash,
-                       posexplode(array({_phash_blocks_expr()}))
-                         AS (bno, blk)
-                FROM {view}
-                WHERE doc_id % {INCR_MOD} < {INCR_NEW_GE}
-              ) b
-            ) t WHERE rn <= {MAX_PHASH_BUCKET}
-            """
-        ).localCheckpoint(eager=True)
-        name = f"phash_probe_{abs(hash(key)) % 10**8}"
-        df.createOrReplaceTempView(name)
-        _phash_probe_cache[key] = (name, df)
-    return _phash_probe_cache[key][0]
+    tag = abs(hash((session_key(spark), sf_dir))) % 10**8
+    view = f"phash_src_{tag}"
+    _phash_df(spark, sf_dir).createOrReplaceTempView(view)
+    df = spark.sql(
+        f"""
+        SELECT bno, blk, cphash FROM (
+          SELECT bno, blk, phash AS cphash,
+                 ROW_NUMBER() OVER (PARTITION BY bno, blk
+                      ORDER BY doc_id) AS rn
+          FROM (
+            SELECT doc_id, phash,
+                   posexplode(array({_phash_blocks_expr()}))
+                     AS (bno, blk)
+            FROM {view}
+            WHERE doc_id % {INCR_MOD} < {INCR_NEW_GE}
+          ) b
+        ) t WHERE rn <= {MAX_PHASH_BUCKET}
+        """
+    ).localCheckpoint(eager=True)
+    name = f"phash_probe_{tag}"
+    df.createOrReplaceTempView(name)
+    return name, df
 
 
-_salted_bands_cache: dict = {}
+def _phash_probe_index(spark: SparkSession, sf_dir: str) -> str:
+    return _phash_probe_stored(spark, sf_dir)[0]
 
 
 def _salted_hash_bands(
@@ -1336,41 +1329,43 @@ def _salted_hash_bands(
     a media-dedup deployment probes."""
     from pyspark.sql import functions as F
 
-    from dataforge_core_spark.session import session_key
-
     bands_n, bits = (
         (PHASH_BANDS, _PHASH_BAND_BITS)
         if col == "phash"
         else (AFP_BANDS, _AFP_BAND_BITS)
     )
     src = _phash_df if col == "phash" else _afp_df
-    key = (session_key(spark), sf_dir, col, cap)
-    if key not in _salted_bands_cache:
-        bands = src(spark, sf_dir).selectExpr(
-            "doc_id",
-            col,
-            f"posexplode(array({_hash_blocks_expr(col, bands_n, bits)}))"
-            " AS (bno, blk)",
+    bands = src(spark, sf_dir).selectExpr(
+        "doc_id",
+        col,
+        f"posexplode(array({_hash_blocks_expr(col, bands_n, bits)}))"
+        " AS (bno, blk)",
+    )
+    heavy = (
+        bands.groupBy("bno", "blk")
+        .count()
+        .filter(F.col("count") > cap)
+        .select(
+            "bno", "blk", F.ceil(F.col("count") / cap).alias("nsalt")
         )
-        heavy = (
-            bands.groupBy("bno", "blk")
-            .count()
-            .filter(F.col("count") > cap)
-            .select(
-                "bno", "blk", F.ceil(F.col("count") / cap).alias("nsalt")
-            )
-        )
-        salted = bands.join(
-            F.broadcast(heavy), ["bno", "blk"], "left"
-        ).select(
-            "bno",
-            "blk",
-            "doc_id",
-            col,
-            F.expr("doc_id % coalesce(nsalt, 1)").alias("salt"),
-        )
-        _salted_bands_cache[key] = salted.localCheckpoint(eager=True)
-    return _salted_bands_cache[key]
+    )
+    salted = bands.join(
+        F.broadcast(heavy), ["bno", "blk"], "left"
+    ).select(
+        "bno",
+        "blk",
+        "doc_id",
+        col,
+        F.expr("doc_id % coalesce(nsalt, 1)").alias("salt"),
+    )
+    return salted.localCheckpoint(eager=True)
+
+
+@stored("phash_salted_bands")
+def _phash_salted_bands(
+    spark: SparkSession, sf_dir: str, cap: int = MAX_PHASH_BUCKET
+) -> DataFrame:
+    return _salted_hash_bands(spark, sf_dir, "phash", cap)
 
 
 def _neardup_from_salted_sql(
@@ -1420,15 +1415,12 @@ def _hash_neardup_served(
     """Spark side of the two media near-dup lanes: validate the dial
     (same guards as the oracle body), then run the remainder over the
     stored salted band table."""
-    from dataforge_core_spark.session import session_key
-
     _check_hash_ham(ham_max, bands_n)
     tag = abs(hash((session_key(spark), sf_dir, col, cap))) % 10**8
     salted_view = f"{col}_salted_{tag}"
     src_view = f"{col}_idx_{tag}"
-    _salted_hash_bands(spark, sf_dir, col, cap).createOrReplaceTempView(
-        salted_view
-    )
+    salted = _phash_salted_bands if col == "phash" else _afp_salted_bands
+    salted(spark, sf_dir, cap).createOrReplaceTempView(salted_view)
     src = _phash_df if col == "phash" else _afp_df
     src(spark, sf_dir).createOrReplaceTempView(src_view)
     return spark.sql(
@@ -1468,9 +1460,7 @@ WITH {_phash_h_ctes()},
 """
 
 
-_phash_clusters_cache: dict = {}
-
-
+@stored("phash_cluster_labels")
 def multimodal_phash_clusters(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1489,42 +1479,38 @@ def multimodal_phash_clusters(
     from pyspark.sql import functions as F
 
     from dataforge_core_spark.operators.dedup import _cc_min_label
-    from dataforge_core_spark.session import session_key
-
-    key = (session_key(spark), sf_dir)
-    if key not in _phash_clusters_cache:
-        view = f"phash_cl_{abs(hash(key)) % 10**8}"
-        _phash_df(spark, sf_dir).createOrReplaceTempView(view)
-        hsrc = (
-            f"(SELECT DISTINCT phash AS doc_id, phash FROM {view})"
+    view = f"phash_cl_{abs(hash((session_key(spark), sf_dir))) % 10**8}"
+    _phash_df(spark, sf_dir).createOrReplaceTempView(view)
+    hsrc = (
+        f"(SELECT DISTINCT phash AS doc_id, phash FROM {view})"
+    )
+    pairs = spark.sql(
+        f"WITH {_phash_pairs_ctes('spark', hsrc, MAX_PHASH_BUCKET)}"
+        " SELECT doc_a, doc_b FROM pairs"
+    )
+    labels = _cc_min_label(pairs)[0]
+    docs = _phash_df(spark, sf_dir)
+    # hash -> component root (min hash), then min doc_id per root;
+    # the finished doc-level frame is the cached artifact (the
+    # rooted relation is referenced twice below)
+    rooted = docs.join(
+        labels, docs.phash == labels.doc_id, "left"
+    ).select(
+        docs.doc_id.alias("d"),
+        F.coalesce("cluster_id", docs.phash).alias("root"),
+    )
+    out = (
+        rooted.join(
+            rooted.groupBy("root").agg(
+                F.min("d").alias("cluster_id")
+            ),
+            "root",
         )
-        pairs = spark.sql(
-            f"WITH {_phash_pairs_ctes('spark', hsrc, MAX_PHASH_BUCKET)}"
-            " SELECT doc_a, doc_b FROM pairs"
-        )
-        labels = _cc_min_label(pairs)[0]
-        docs = _phash_df(spark, sf_dir)
-        # hash -> component root (min hash), then min doc_id per root;
-        # the finished doc-level frame is the cached artifact (the
-        # rooted relation is referenced twice below)
-        rooted = docs.join(
-            labels, docs.phash == labels.doc_id, "left"
-        ).select(
-            docs.doc_id.alias("d"),
-            F.coalesce("cluster_id", docs.phash).alias("root"),
-        )
-        out = (
-            rooted.join(
-                rooted.groupBy("root").agg(
-                    F.min("d").alias("cluster_id")
-                ),
-                "root",
-            )
-            .select(F.col("d").alias("doc_id"), "cluster_id")
-            .localCheckpoint(eager=True)
-        )
-        _phash_clusters_cache[key] = out
-    return _phash_clusters_cache[key]
+        .select(F.col("d").alias("doc_id"), "cluster_id")
+        .localCheckpoint(eager=True)
+    )
+    free_local_checkpoint(labels)  # folded into the checkpoint above
+    return out
 
 
 def _phash_clusters_oracle() -> str:
@@ -1758,28 +1744,29 @@ def afp_fp_fn():
     return fp
 
 
-_afp_cache: dict = {}
-
-
+@stored("audio_afp_index")
 def _afp_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpointed (doc_id, afp) relation — the stored audio
     fingerprint index (one fused synth+parse+fingerprint Arrow pass
     per session, like the image hash index)."""
-    from dataforge_core_spark.session import session_key
+    synth, fp = afp_synth_fn(), afp_fp_fn()
 
-    key = (session_key(spark), sf_dir)
-    if key not in _afp_cache:
-        synth, fp = afp_synth_fn(), afp_fp_fn()
+    def fused(batches):
+        return fp(synth(batches))
 
-        def fused(batches):
-            return fp(synth(batches))
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id"
+    )
+    fps = docs.mapInPandas(fused, "doc_id bigint, afp bigint")
+    return fps.localCheckpoint(eager=True)
 
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id"
-        )
-        fps = docs.mapInPandas(fused, "doc_id bigint, afp bigint")
-        _afp_cache[key] = fps.localCheckpoint(eager=True)
-    return _afp_cache[key]
+
+@stored("afp_salted_bands")
+def _afp_salted_bands(
+    spark: SparkSession, sf_dir: str, cap: int = MAX_AFP_BUCKET
+) -> DataFrame:
+    return _salted_hash_bands(spark, sf_dir, "afp", cap)
+
 
 
 def multimodal_audio_fingerprint(
@@ -1860,47 +1847,45 @@ WITH {_afp_h_ctes()},
 """
 
 
-_afp_probe_cache: dict = {}
-
-
-def _afp_probe_index(spark: SparkSession, sf_dir: str) -> str:
+@stored("afp_probe_index")
+def _afp_probe_stored(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, DataFrame]:
     """Checkpointed CORPUS-side band table (bno, blk, cafp) for the
     streaming audio gate — corpus docs only (the dedup_incremental
     doc_id split), per-bucket membership rn-capped at MAX_AFP_BUCKET
     like the image probe index, so an incoming track probes at most
     AFP_BANDS * cap candidates."""
     from dataforge_core_spark.operators.dedup import INCR_MOD, INCR_NEW_GE
-    from dataforge_core_spark.session import session_key
-
-    key = (session_key(spark), sf_dir)
-    if key not in _afp_probe_cache:
-        view = f"afp_src_{abs(hash(key)) % 10**8}"
-        _afp_df(spark, sf_dir).createOrReplaceTempView(view)
-        blocks = _hash_blocks_expr("afp", AFP_BANDS, _AFP_BAND_BITS)
-        df = spark.sql(
-            f"""
-            SELECT bno, blk, cafp FROM (
-              SELECT bno, blk, afp AS cafp,
-                     ROW_NUMBER() OVER (PARTITION BY bno, blk
-                          ORDER BY doc_id) AS rn
-              FROM (
-                SELECT doc_id, afp,
-                       posexplode(array({blocks})) AS (bno, blk)
-                FROM {view}
-                WHERE doc_id % {INCR_MOD} < {INCR_NEW_GE}
-              ) b
-            ) t WHERE rn <= {MAX_AFP_BUCKET}
-            """
-        ).localCheckpoint(eager=True)
-        name = f"afp_probe_{abs(hash(key)) % 10**8}"
-        df.createOrReplaceTempView(name)
-        _afp_probe_cache[key] = (name, df)
-    return _afp_probe_cache[key][0]
+    tag = abs(hash((session_key(spark), sf_dir))) % 10**8
+    view = f"afp_src_{tag}"
+    _afp_df(spark, sf_dir).createOrReplaceTempView(view)
+    blocks = _hash_blocks_expr("afp", AFP_BANDS, _AFP_BAND_BITS)
+    df = spark.sql(
+        f"""
+        SELECT bno, blk, cafp FROM (
+          SELECT bno, blk, afp AS cafp,
+                 ROW_NUMBER() OVER (PARTITION BY bno, blk
+                      ORDER BY doc_id) AS rn
+          FROM (
+            SELECT doc_id, afp,
+                   posexplode(array({blocks})) AS (bno, blk)
+            FROM {view}
+            WHERE doc_id % {INCR_MOD} < {INCR_NEW_GE}
+          ) b
+        ) t WHERE rn <= {MAX_AFP_BUCKET}
+        """
+    ).localCheckpoint(eager=True)
+    name = f"afp_probe_{tag}"
+    df.createOrReplaceTempView(name)
+    return name, df
 
 
-_afp_clusters_cache: dict = {}
+def _afp_probe_index(spark: SparkSession, sf_dir: str) -> str:
+    return _afp_probe_stored(spark, sf_dir)[0]
 
 
+@stored("afp_cluster_labels")
 def multimodal_audio_clusters(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
@@ -1916,41 +1901,37 @@ def multimodal_audio_clusters(
     from pyspark.sql import functions as F
 
     from dataforge_core_spark.operators.dedup import _cc_min_label
-    from dataforge_core_spark.session import session_key
-
-    key = (session_key(spark), sf_dir)
-    if key not in _afp_clusters_cache:
-        view = f"afp_cl_{abs(hash(key)) % 10**8}"
-        _afp_df(spark, sf_dir).createOrReplaceTempView(view)
-        hsrc = f"(SELECT DISTINCT afp AS doc_id, afp FROM {view})"
-        pairs = spark.sql(
-            "WITH "
-            + _hash_pairs_ctes(
-                "spark", hsrc, MAX_AFP_BUCKET, "afp",
-                AFP_BANDS, _AFP_BAND_BITS, AFP_HAMMING_MAX,
-            )
-            + " SELECT doc_a, doc_b FROM pairs"
+    view = f"afp_cl_{abs(hash((session_key(spark), sf_dir))) % 10**8}"
+    _afp_df(spark, sf_dir).createOrReplaceTempView(view)
+    hsrc = f"(SELECT DISTINCT afp AS doc_id, afp FROM {view})"
+    pairs = spark.sql(
+        "WITH "
+        + _hash_pairs_ctes(
+            "spark", hsrc, MAX_AFP_BUCKET, "afp",
+            AFP_BANDS, _AFP_BAND_BITS, AFP_HAMMING_MAX,
         )
-        labels = _cc_min_label(pairs)[0]
-        docs = _afp_df(spark, sf_dir)
-        rooted = docs.join(
-            labels, docs.afp == labels.doc_id, "left"
-        ).select(
-            docs.doc_id.alias("d"),
-            F.coalesce("cluster_id", docs.afp).alias("root"),
+        + " SELECT doc_a, doc_b FROM pairs"
+    )
+    labels = _cc_min_label(pairs)[0]
+    docs = _afp_df(spark, sf_dir)
+    rooted = docs.join(
+        labels, docs.afp == labels.doc_id, "left"
+    ).select(
+        docs.doc_id.alias("d"),
+        F.coalesce("cluster_id", docs.afp).alias("root"),
+    )
+    out = (
+        rooted.join(
+            rooted.groupBy("root").agg(
+                F.min("d").alias("cluster_id")
+            ),
+            "root",
         )
-        out = (
-            rooted.join(
-                rooted.groupBy("root").agg(
-                    F.min("d").alias("cluster_id")
-                ),
-                "root",
-            )
-            .select(F.col("d").alias("doc_id"), "cluster_id")
-            .localCheckpoint(eager=True)
-        )
-        _afp_clusters_cache[key] = out
-    return _afp_clusters_cache[key]
+        .select(F.col("d").alias("doc_id"), "cluster_id")
+        .localCheckpoint(eager=True)
+    )
+    free_local_checkpoint(labels)  # folded into the checkpoint above
+    return out
 
 
 def _afp_clusters_oracle() -> str:

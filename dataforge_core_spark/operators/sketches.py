@@ -24,6 +24,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dataforge_core_spark.operators._store import stored
 from dataforge_core_spark.session import session_key
 
 KMV_K = 64
@@ -69,11 +70,9 @@ def _toks_cte(dialect: str, docs: str = "documents") -> str:
     )
 
 
-_toks_cache: dict = {}
-
-
-def _toks_view(spark: SparkSession, sf_dir: str) -> str:
-    """Temp-view name of the localCheckpoint-ed (source, h) shingle-hash
+@stored("kmv_shingle_toks")
+def _toks_stored(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
+    """(view name, frame) of the localCheckpoint-ed (source, h) shingle-hash
     relation, built once per (session, sf) and shared by every sketch
     lane.  Before this, each lane's SQL inlined the tokenize/explode CTE
     and Spark re-evaluated it at every reference (the distinct-count
@@ -82,38 +81,37 @@ def _toks_view(spark: SparkSession, sf_dir: str) -> str:
     scan of the materialized hashes.  The explicit repartition spreads
     the single-file sf0.1 scan across cores (multi-file corpora are
     already parallel), the same shape as dedup._ex_df."""
-    key = (session_key(spark), sf_dir)
-    if key not in _toks_cache:
-        # derive from the dedup pipeline's shared shingle relation
-        # instead of re-tokenizing the corpus: dedup._ex_df's (doc_id,
-        # 56-bit 3-gram hash) uses the IDENTICAL normalization
-        # (_SPARK_NORM), shingle string (space-joined 3-gram) and hash
-        # (_SPARK_H) as _toks_cte, so the sketch universe is one
-        # doc_id -> source attach + DISTINCT over the already-persisted
-        # index — at 100 TB this removes a whole corpus tokenize pass
-        # (the index phase was running five).
-        from dataforge_core_spark.operators.dedup import _ex_df
+    # derive from the dedup pipeline's shared shingle relation
+    # instead of re-tokenizing the corpus: dedup._ex_df's (doc_id,
+    # 56-bit 3-gram hash) uses the IDENTICAL normalization
+    # (_SPARK_NORM), shingle string (space-joined 3-gram) and hash
+    # (_SPARK_H) as _toks_cte, so the sketch universe is one
+    # doc_id -> source attach + DISTINCT over the already-persisted
+    # index — at 100 TB this removes a whole corpus tokenize pass
+    # (the index phase was running five).
+    from dataforge_core_spark.operators.dedup import _ex_df
 
-        ex = _ex_df(spark, sf_dir)
-        docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-            "doc_id", "source"
-        )
-        toks = (
-            ex.join(docs, "doc_id")
-            .selectExpr("source", "s AS h")
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        name = f"kmv_toks_{abs(hash(key)) % 10**8}"
-        toks.createOrReplaceTempView(name)
-        _toks_cache[key] = (name, toks)
-    return _toks_cache[key][0]
+    ex = _ex_df(spark, sf_dir)
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", "source"
+    )
+    toks = (
+        ex.join(docs, "doc_id")
+        .selectExpr("source", "s AS h")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    name = f"kmv_toks_{abs(hash((session_key(spark), sf_dir))) % 10**8}"
+    toks.createOrReplaceTempView(name)
+    return name, toks
 
 
-_bk_cache: dict = {}
+def _toks_view(spark: SparkSession, sf_dir: str) -> str:
+    return _toks_stored(spark, sf_dir)[0]
 
 
-def _bk_view(spark: SparkSession, sf_dir: str) -> str:
+@stored("kmv_bottomk")
+def _bk_stored(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
     """The STORED bottom-K sketch rows: checkpointed (source, h, rn)
     with rn <= KMV_BK_MAX — the KMV counterpart of _hll_regs_view.
     Five estimator lanes (kmv_distinct, k_curve, jaccard, setops,
@@ -125,27 +123,28 @@ def _bk_view(spark: SparkSession, sf_dir: str) -> str:
     100 TB this is the persisted K-row sketch a warehouse serves
     overlap queries from; only the exact eval baselines still scan the
     universe (r15, guide §2.4)."""
-    key = (session_key(spark), sf_dir)
-    if key not in _bk_cache:
-        toks = _toks_view(spark, sf_dir)
-        df = (
-            spark.sql(
-                f"""
-                SELECT source, h, rn FROM (
-                  SELECT source, h,
-                         ROW_NUMBER() OVER (PARTITION BY source
-                                            ORDER BY h) AS rn
-                  FROM {toks}
-                ) WHERE rn <= {KMV_BK_MAX}
-                """
-            )
-            .coalesce(1)
-            .localCheckpoint(eager=True)
+    toks = _toks_view(spark, sf_dir)
+    df = (
+        spark.sql(
+            f"""
+            SELECT source, h, rn FROM (
+              SELECT source, h,
+                     ROW_NUMBER() OVER (PARTITION BY source
+                                        ORDER BY h) AS rn
+              FROM {toks}
+            ) WHERE rn <= {KMV_BK_MAX}
+            """
         )
-        name = f"kmv_bk_{abs(hash(key)) % 10**8}"
-        df.createOrReplaceTempView(name)
-        _bk_cache[key] = (name, df)
-    return _bk_cache[key][0]
+        .coalesce(1)
+        .localCheckpoint(eager=True)
+    )
+    name = f"kmv_bk_{abs(hash((session_key(spark), sf_dir))) % 10**8}"
+    df.createOrReplaceTempView(name)
+    return name, df
+
+
+def _bk_view(spark: SparkSession, sf_dir: str) -> str:
+    return _bk_stored(spark, sf_dir)[0]
 
 
 def _bk_ctes(
@@ -370,10 +369,10 @@ FROM scoped s JOIN ex e ON e.scope = s.scope
 """
 
 
-_hll_regs_cache: dict = {}
-
-
-def _hll_regs_view(spark: SparkSession, sf_dir: str) -> str:
+@stored("hll_registers")
+def _hll_regs_stored(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, DataFrame]:
     """The STORED HLL sketch: checkpointed (source, bucket, r) register
     table, m = 256 rows per source — built once per (session, sf) by
     the same map-side-combinable MAX aggregate the inline chain uses,
@@ -381,23 +380,24 @@ def _hll_regs_view(spark: SparkSession, sf_dir: str) -> str:
     corpus: at 100 TB this is the persisted sketch a dashboard queries
     while ingest keeps merging into it (the stream lane shows the
     incremental half)."""
-    key = (session_key(spark), sf_dir)
-    if key not in _hll_regs_cache:
-        toks = _toks_view(spark, sf_dir)
-        rho = _hll_rho_expr("spark")
-        df = spark.sql(
-            f"""
-            SELECT source, bucket, MAX(r) AS r FROM (
-              SELECT source, h DIV {_HLL_W} AS bucket, {rho} AS r
-              FROM (SELECT source, h, h % {_HLL_W} AS w
-                    FROM {toks}) t
-            ) rho GROUP BY source, bucket
-            """
-        ).localCheckpoint(eager=True)
-        name = f"hll_regs_{abs(hash(key)) % 10**8}"
-        df.createOrReplaceTempView(name)
-        _hll_regs_cache[key] = (name, df)
-    return _hll_regs_cache[key][0]
+    toks = _toks_view(spark, sf_dir)
+    rho = _hll_rho_expr("spark")
+    df = spark.sql(
+        f"""
+        SELECT source, bucket, MAX(r) AS r FROM (
+          SELECT source, h DIV {_HLL_W} AS bucket, {rho} AS r
+          FROM (SELECT source, h, h % {_HLL_W} AS w
+                FROM {toks}) t
+        ) rho GROUP BY source, bucket
+        """
+    ).localCheckpoint(eager=True)
+    name = f"hll_regs_{abs(hash((session_key(spark), sf_dir))) % 10**8}"
+    df.createOrReplaceTempView(name)
+    return name, df
+
+
+def _hll_regs_view(spark: SparkSession, sf_dir: str) -> str:
+    return _hll_regs_stored(spark, sf_dir)[0]
 
 
 def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1172,50 +1172,51 @@ FROM probes GROUP BY tok, exact_cnt
 """
 
 
-_cms_cache: dict = {}
+@stored("cms_matrix")
+def _cms_stored(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, str, DataFrame, DataFrame]:
+    """(matrix view, top-tokens view, their frames): the
+    localCheckpoint-ed d x w CMS counter matrix and the exact top-CMS_TOP
+    token counts, built once per (session, sf).  The matrix IS the index
+    (two corpus passes: d-replica bucket counts + exact vocabulary
+    counts — the 10x protocol measured the un-indexed lane at 9.2x for
+    10x input, pure re-scan); the probe then joins two bounded
+    checkpointed relations (d*w and CMS_TOP rows)."""
+    d, w, top = CMS_D, CMS_W, CMS_TOP
+    from dataforge_core_spark.operators.dedup import _token_base
+
+    tag = abs(hash((session_key(spark), sf_dir))) % 10**8
+    tmp = f"cms_base_{tag}"
+    # token occurrences WITH multiplicity off the shared token base
+    # (one corpus tokenize pass for the whole index phase)
+    _token_base(spark, sf_dir).createOrReplaceTempView(tmp)
+    toks = f"SELECT tk AS tok FROM {tmp} WHERE tk != ''"
+    h = (
+        "CAST(conv(substr(md5(concat(CAST(r AS STRING), ':', tok)), "
+        f"1, 14), 16, 10) AS BIGINT) % {w}"
+    )
+    mat = spark.sql(
+        f"""
+        SELECT r, {h} AS bucket, CAST(COUNT(*) AS BIGINT) AS cnt
+        FROM ({toks}) LATERAL VIEW explode(sequence(0, {d - 1})) s AS r
+        GROUP BY 1, 2
+        """
+    ).localCheckpoint(eager=True)
+    topdf = spark.sql(
+        f"""
+        SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt FROM ({toks})
+        GROUP BY tok ORDER BY cnt DESC, tok LIMIT {top}
+        """
+    ).localCheckpoint(eager=True)
+    mname, tname = f"cms_mat_{tag}", f"cms_top_{tag}"
+    mat.createOrReplaceTempView(mname)
+    topdf.createOrReplaceTempView(tname)
+    return mname, tname, mat, topdf
 
 
 def _cms_views(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """(matrix view, top-tokens view): the localCheckpoint-ed d x w CMS
-    counter matrix and the exact top-CMS_TOP token counts, built once
-    per (session, sf).  The matrix IS the index (two corpus passes:
-    d-replica bucket counts + exact vocabulary counts — the 10x
-    protocol measured the un-indexed lane at 9.2x for 10x input, pure
-    re-scan); the probe then joins two bounded checkpointed relations
-    (d*w and CMS_TOP rows)."""
-    key = (session_key(spark), sf_dir)
-    if key not in _cms_cache:
-        d, w, top = CMS_D, CMS_W, CMS_TOP
-        from dataforge_core_spark.operators.dedup import _token_base
-
-        tag = abs(hash(key)) % 10**8
-        tmp = f"cms_base_{tag}"
-        # token occurrences WITH multiplicity off the shared token base
-        # (one corpus tokenize pass for the whole index phase)
-        _token_base(spark, sf_dir).createOrReplaceTempView(tmp)
-        toks = f"SELECT tk AS tok FROM {tmp} WHERE tk != ''"
-        h = (
-            "CAST(conv(substr(md5(concat(CAST(r AS STRING), ':', tok)), "
-            f"1, 14), 16, 10) AS BIGINT) % {w}"
-        )
-        mat = spark.sql(
-            f"""
-            SELECT r, {h} AS bucket, CAST(COUNT(*) AS BIGINT) AS cnt
-            FROM ({toks}) LATERAL VIEW explode(sequence(0, {d - 1})) s AS r
-            GROUP BY 1, 2
-            """
-        ).localCheckpoint(eager=True)
-        topdf = spark.sql(
-            f"""
-            SELECT tok, CAST(COUNT(*) AS BIGINT) AS cnt FROM ({toks})
-            GROUP BY tok ORDER BY cnt DESC, tok LIMIT {top}
-            """
-        ).localCheckpoint(eager=True)
-        mname, tname = f"cms_mat_{tag}", f"cms_top_{tag}"
-        mat.createOrReplaceTempView(mname)
-        topdf.createOrReplaceTempView(tname)
-        _cms_cache[key] = (mname, tname, mat, topdf)
-    return _cms_cache[key][0], _cms_cache[key][1]
+    return _cms_stored(spark, sf_dir)[:2]
 
 
 def sketch_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -12,6 +12,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dataforge_core_spark.operators._store import stored
 from dataforge_core_spark.session import session_key
 
 # tiny per-language stopword lists for the heuristic language ID
@@ -455,117 +456,119 @@ PPL_KEEP_PCT = 75  # keep docs at or below the p75 mean-NLL (CCNet-ish)
 # relations an ingest stream joins against.
 # ---------------------------------------------------------------------------
 
-_ppl_model_cache: dict = {}
 
-
-def _ppl_model(spark: SparkSession, sf_dir: str):
-    """(model_view, uni_view, ql_v, thr) — the stored LM gate index."""
+@stored("ppl_gate_model")
+def _ppl_model_stored(spark: SparkSession, sf_dir: str) -> tuple:
+    """(model_view, uni_view, ql_v, thr, model, unim, cnt) — the stored
+    LM gate index and the checkpoints behind its views."""
     from dataforge_core_spark.operators.dedup import (
         INCR_MOD,
         INCR_NEW_GE,
         _token_base_view,
     )
 
-    key = (session_key(spark), sf_dir)
-    if key not in _ppl_model_cache:
-        tb = _token_base_view(spark, sf_dir)
-        tag = abs(hash(key)) % 10**8
-        corp_bg = _tb_bigram_sql(
-            tb, f"doc_id % {INCR_MOD} < {INCR_NEW_GE}"
-        )
-        # ONE bigram-count pass is the root of everything else (uni's
-        # per-w1 occurrence count = SUM(c); V = COUNT(DISTINCT w2)):
-        # deriving each artifact from the raw bigram chain instead
-        # measured 19.7s for the whole build at sf0.1 — from the
-        # checkpointed cnt it is ~4s including the threshold pass.
-        # r16 measured-and-rejected: checkpointing the per-doc dbg
-        # counts first (the _lm_scores one-pass shape) and deriving cnt
-        # + the threshold pass from it read 2.6/3.2 vs 2.5/2.6s over
-        # interleaved arms — here the corpus-SPLIT bigram stream is
-        # small enough that materializing dbg costs more than the
-        # second window pass it removes.
-        cntv = f"ppl_cnt_{tag}"
-        cnt = spark.sql(
-            f"SELECT w1, w2, COUNT(*) AS c FROM ({corp_bg}) bgx"
-            " GROUP BY w1, w2"
-        ).localCheckpoint(eager=True)
-        cnt.createOrReplaceTempView(cntv)
-        # V collected ONCE and inlined as a literal (the k-means
-        # centroid pattern) — the scalar subquery form re-ran the
-        # distinct-count aggregate inside every consumer statement
-        v = int(
-            spark.sql(
-                f"SELECT COUNT(DISTINCT w2) AS v FROM {cntv}"
-            ).collect()[0].v
-        )
-        uni_cte = f"""uni AS (
-          SELECT w1, SUM(c) + {v} AS cuv FROM {cntv} GROUP BY w1
-        )"""
-        model = spark.sql(
-            f"""
-            WITH {uni_cte}
-            SELECT c.w1, c.w2,
-                   CAST({_qlog2('spark', 'c.c + 1')}
-                        - {_qlog2('spark', 'u.cuv')} AS BIGINT) AS s
-            FROM {cntv} c JOIN uni u ON c.w1 = u.w1
-            """
-        ).localCheckpoint(eager=True)
-        unim = spark.sql(
-            f"""
-            WITH {uni_cte}
-            SELECT w1, CAST({_qlog2('spark', 'cuv')} AS BIGINT) AS ql_cuv
-            FROM uni
-            """
-        ).localCheckpoint(eager=True)
-        mname, uname = f"ppl_model_{tag}", f"ppl_uni_{tag}"
-        model.createOrReplaceTempView(mname)
-        unim.createOrReplaceTempView(uname)
-        ql_v = spark.sql(
-            f"SELECT CAST({_qlog2('spark', str(v))} AS BIGINT) AS ql_v"
-        ).collect()[0].ql_v
-        # threshold: nearest-rank pct of the CORPUS docs' mean NLL
-        # under this model (corpus bigrams are all seen by construction)
-        # — the one remaining bigram pass, joined against the stored
-        # model relation.
-        # The cum window below is GLOBAL (single partition) but its
-        # input is the value-grouped vals relation, whose row count is
-        # bounded by the mean_nll_q value GRID, not the corpus: every
-        # per-bigram score is a _qlog2 quantized log (0 <= -s <=
-        # 64 * _QL_SCALE, since cuv < 2^63), and the per-doc mean
-        # inherits that range — at most ~640k distinct integer values
-        # at ANY corpus size (r16 window audit; the plan-quality gate
-        # test_global_windows_only_over_aggregated_relations asserts
-        # the aggregate sits below every global window).
-        thr = spark.sql(
-            f"""
-            WITH dbg AS (SELECT doc_id, w1, w2, COUNT(*) AS k
-                         FROM ({corp_bg}) bgx GROUP BY doc_id, w1, w2),
-            m AS (
-              SELECT d.doc_id,
-                     (-CAST(SUM(d.k * m.s) AS BIGINT))
-                       DIV CAST(SUM(d.k) AS BIGINT) AS mean_nll_q
-              FROM dbg d JOIN {mname} m ON d.w1 = m.w1 AND d.w2 = m.w2
-              GROUP BY d.doc_id
-            ),
-            vals AS (SELECT mean_nll_q AS v, COUNT(*) AS c FROM m
-                     GROUP BY mean_nll_q),
-            cum AS (SELECT v, SUM(c) OVER (ORDER BY v) AS cumc,
-                           SUM(c) OVER () AS n FROM vals)
-            SELECT MIN(v) AS t FROM cum
-            WHERE cumc >= 1 + ({PPL_KEEP_PCT} * (n - 1)) DIV 100
-            """
-        ).collect()[0].t
-        _ppl_model_cache[key] = (
-            mname, uname, int(ql_v), int(thr), model, unim, cnt
-        )
-    return _ppl_model_cache[key][:4]
+    tb = _token_base_view(spark, sf_dir)
+    tag = abs(hash((session_key(spark), sf_dir))) % 10**8
+    corp_bg = _tb_bigram_sql(
+        tb, f"doc_id % {INCR_MOD} < {INCR_NEW_GE}"
+    )
+    # ONE bigram-count pass is the root of everything else (uni's
+    # per-w1 occurrence count = SUM(c); V = COUNT(DISTINCT w2)):
+    # deriving each artifact from the raw bigram chain instead
+    # measured 19.7s for the whole build at sf0.1 — from the
+    # checkpointed cnt it is ~4s including the threshold pass.
+    # r16 measured-and-rejected: checkpointing the per-doc dbg
+    # counts first (the _lm_scores one-pass shape) and deriving cnt
+    # + the threshold pass from it read 2.6/3.2 vs 2.5/2.6s over
+    # interleaved arms — here the corpus-SPLIT bigram stream is
+    # small enough that materializing dbg costs more than the
+    # second window pass it removes.
+    cntv = f"ppl_cnt_{tag}"
+    cnt = spark.sql(
+        f"SELECT w1, w2, COUNT(*) AS c FROM ({corp_bg}) bgx"
+        " GROUP BY w1, w2"
+    ).localCheckpoint(eager=True)
+    cnt.createOrReplaceTempView(cntv)
+    # V collected ONCE and inlined as a literal (the k-means
+    # centroid pattern) — the scalar subquery form re-ran the
+    # distinct-count aggregate inside every consumer statement
+    v = int(
+        spark.sql(
+            f"SELECT COUNT(DISTINCT w2) AS v FROM {cntv}"
+        ).collect()[0].v
+    )
+    uni_cte = f"""uni AS (
+      SELECT w1, SUM(c) + {v} AS cuv FROM {cntv} GROUP BY w1
+    )"""
+    model = spark.sql(
+        f"""
+        WITH {uni_cte}
+        SELECT c.w1, c.w2,
+               CAST({_qlog2('spark', 'c.c + 1')}
+                    - {_qlog2('spark', 'u.cuv')} AS BIGINT) AS s
+        FROM {cntv} c JOIN uni u ON c.w1 = u.w1
+        """
+    ).localCheckpoint(eager=True)
+    unim = spark.sql(
+        f"""
+        WITH {uni_cte}
+        SELECT w1, CAST({_qlog2('spark', 'cuv')} AS BIGINT) AS ql_cuv
+        FROM uni
+        """
+    ).localCheckpoint(eager=True)
+    mname, uname = f"ppl_model_{tag}", f"ppl_uni_{tag}"
+    model.createOrReplaceTempView(mname)
+    unim.createOrReplaceTempView(uname)
+    ql_v = spark.sql(
+        f"SELECT CAST({_qlog2('spark', str(v))} AS BIGINT) AS ql_v"
+    ).collect()[0].ql_v
+    # threshold: nearest-rank pct of the CORPUS docs' mean NLL
+    # under this model (corpus bigrams are all seen by construction)
+    # — the one remaining bigram pass, joined against the stored
+    # model relation.
+    # The cum window below is GLOBAL (single partition) but its
+    # input is the value-grouped vals relation, whose row count is
+    # bounded by the mean_nll_q value GRID, not the corpus: every
+    # per-bigram score is a _qlog2 quantized log (0 <= -s <=
+    # 64 * _QL_SCALE, since cuv < 2^63), and the per-doc mean
+    # inherits that range — at most ~640k distinct integer values
+    # at ANY corpus size (r16 window audit; the plan-quality gate
+    # test_global_windows_only_over_aggregated_relations asserts
+    # the aggregate sits below every global window).
+    thr = spark.sql(
+        f"""
+        WITH dbg AS (SELECT doc_id, w1, w2, COUNT(*) AS k
+                     FROM ({corp_bg}) bgx GROUP BY doc_id, w1, w2),
+        m AS (
+          SELECT d.doc_id,
+                 (-CAST(SUM(d.k * m.s) AS BIGINT))
+                   DIV CAST(SUM(d.k) AS BIGINT) AS mean_nll_q
+          FROM dbg d JOIN {mname} m ON d.w1 = m.w1 AND d.w2 = m.w2
+          GROUP BY d.doc_id
+        ),
+        vals AS (SELECT mean_nll_q AS v, COUNT(*) AS c FROM m
+                 GROUP BY mean_nll_q),
+        cum AS (SELECT v, SUM(c) OVER (ORDER BY v) AS cumc,
+                       SUM(c) OVER () AS n FROM vals)
+        SELECT MIN(v) AS t FROM cum
+        WHERE cumc >= 1 + ({PPL_KEEP_PCT} * (n - 1)) DIV 100
+        """
+    ).collect()[0].t
+    return (
+        mname, uname, int(ql_v), int(thr), model, unim, cnt
+    )
 
 
-_lm_scores_cache: dict = {}
+def _ppl_model(spark: SparkSession, sf_dir: str):
+    """(model_view, uni_view, ql_v, thr) — the stored LM gate index."""
+    return _ppl_model_stored(spark, sf_dir)[:4]
 
 
-def _lm_scores(spark: SparkSession, sf_dir: str) -> str:
-    """Temp-view name of the checkpointed per-document LM score
+@stored("lm_doc_scores")
+def _lm_scores_stored(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, DataFrame]:
+    """(view name, frame) of the checkpointed per-document LM score
     relation (doc_id, n_bigrams, lp_sum_q) — text_bigram_lm's exact
     output, which the perplexity filter's mean_nll_q is a pure
     projection of.
@@ -585,65 +588,66 @@ def _lm_scores(spark: SparkSession, sf_dir: str) -> str:
 
     from dataforge_core_spark.session import free_local_checkpoint
 
-    key = (session_key(spark), sf_dir)
-    if key not in _lm_scores_cache:
-        _view(spark, sf_dir)
-        tb = _token_base_view(spark, sf_dir)
-        n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
-        tag = abs(hash(key)) % 10**8
-        # ONE bigram pass (r16): inlined, _bigram_lm_sql's dbg/cnt/uni
-        # CTEs each re-derive the lead-window bigram stream over the
-        # token base (Spark inlines CTEs per reference, and the three
-        # different group keys defeat exchange reuse) — the build paid
-        # three corpus window passes.  dbg (one row per distinct
-        # (doc, bigram)) is aggregated once and checkpointed; cnt and
-        # uni are provably sums of its k column (COUNT(*) over bg
-        # grouped coarser == SUM(k) over dbg), and V is unchanged
-        # (COUNT(DISTINCT w2) over cnt).  The scaffolding checkpoints
-        # are freed as soon as the score relation materializes.
-        dbg = spark.sql(
-            f"SELECT doc_id, w1, w2, COUNT(*) AS k "
-            f"FROM ({_tb_bigram_sql(tb)}) bgx GROUP BY doc_id, w1, w2"
-        ).localCheckpoint(eager=True)
-        dbgv = f"lm_dbg_{tag}"
-        dbg.createOrReplaceTempView(dbgv)
-        cnt = spark.sql(
-            f"SELECT w1, w2, CAST(SUM(k) AS BIGINT) AS c "
-            f"FROM {dbgv} GROUP BY w1, w2"
-        ).localCheckpoint(eager=True)
-        cntv = f"lm_cnt_{tag}"
-        cnt.createOrReplaceTempView(cntv)
-        df = (
-            spark.sql(
-                f"""
-            WITH uni AS (
-              SELECT w1, SUM(c)
-                     + (SELECT COUNT(DISTINCT w2) FROM {cntv}) AS cuv
-              FROM {cntv} GROUP BY w1
-            ),
-            model AS (
-              SELECT c.w1, c.w2,
-                     ({_qlog2('spark', 'c.c + 1')}
-                      - {_qlog2('spark', 'u.cuv')}) AS s
-              FROM {cntv} c JOIN uni u ON c.w1 = u.w1
-            )
-            SELECT d.doc_id, CAST(SUM(d.k) AS BIGINT) AS n_bigrams,
-                   CAST(SUM(d.k * m.s) AS BIGINT) AS lp_sum_q
-            FROM {dbgv} d JOIN model m ON d.w1 = m.w1 AND d.w2 = m.w2
-            GROUP BY d.doc_id
-            """
-            )
-            .coalesce(index_width(n_docs))
-            .localCheckpoint(eager=True)
+    _view(spark, sf_dir)
+    tb = _token_base_view(spark, sf_dir)
+    n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+    tag = abs(hash((session_key(spark), sf_dir))) % 10**8
+    # ONE bigram pass (r16): inlined, _bigram_lm_sql's dbg/cnt/uni
+    # CTEs each re-derive the lead-window bigram stream over the
+    # token base (Spark inlines CTEs per reference, and the three
+    # different group keys defeat exchange reuse) — the build paid
+    # three corpus window passes.  dbg (one row per distinct
+    # (doc, bigram)) is aggregated once and checkpointed; cnt and
+    # uni are provably sums of its k column (COUNT(*) over bg
+    # grouped coarser == SUM(k) over dbg), and V is unchanged
+    # (COUNT(DISTINCT w2) over cnt).  The scaffolding checkpoints
+    # are freed as soon as the score relation materializes.
+    dbg = spark.sql(
+        f"SELECT doc_id, w1, w2, COUNT(*) AS k "
+        f"FROM ({_tb_bigram_sql(tb)}) bgx GROUP BY doc_id, w1, w2"
+    ).localCheckpoint(eager=True)
+    dbgv = f"lm_dbg_{tag}"
+    dbg.createOrReplaceTempView(dbgv)
+    cnt = spark.sql(
+        f"SELECT w1, w2, CAST(SUM(k) AS BIGINT) AS c "
+        f"FROM {dbgv} GROUP BY w1, w2"
+    ).localCheckpoint(eager=True)
+    cntv = f"lm_cnt_{tag}"
+    cnt.createOrReplaceTempView(cntv)
+    df = (
+        spark.sql(
+            f"""
+        WITH uni AS (
+          SELECT w1, SUM(c)
+                 + (SELECT COUNT(DISTINCT w2) FROM {cntv}) AS cuv
+          FROM {cntv} GROUP BY w1
+        ),
+        model AS (
+          SELECT c.w1, c.w2,
+                 ({_qlog2('spark', 'c.c + 1')}
+                  - {_qlog2('spark', 'u.cuv')}) AS s
+          FROM {cntv} c JOIN uni u ON c.w1 = u.w1
         )
-        free_local_checkpoint(dbg)
-        free_local_checkpoint(cnt)
-        spark.catalog.dropTempView(dbgv)
-        spark.catalog.dropTempView(cntv)
-        name = f"lm_scores_{tag}"
-        df.createOrReplaceTempView(name)
-        _lm_scores_cache[key] = (name, df)
-    return _lm_scores_cache[key][0]
+        SELECT d.doc_id, CAST(SUM(d.k) AS BIGINT) AS n_bigrams,
+               CAST(SUM(d.k * m.s) AS BIGINT) AS lp_sum_q
+        FROM {dbgv} d JOIN model m ON d.w1 = m.w1 AND d.w2 = m.w2
+        GROUP BY d.doc_id
+        """
+        )
+        .coalesce(index_width(n_docs))
+        .localCheckpoint(eager=True)
+    )
+    free_local_checkpoint(dbg)
+    free_local_checkpoint(cnt)
+    spark.catalog.dropTempView(dbgv)
+    spark.catalog.dropTempView(cntv)
+    name = f"lm_scores_{tag}"
+    df.createOrReplaceTempView(name)
+    return name, df
+
+
+def _lm_scores(spark: SparkSession, sf_dir: str) -> str:
+    return _lm_scores_stored(spark, sf_dir)[0]
 
 
 def _ppl_filter_sql(
@@ -1095,9 +1099,6 @@ SELECT
 
 BPE_ROUNDS = 3
 
-_bpe_cache: dict = {}
-# (word, n_pieces) after the trained merges — checkpointed per session
-_bpe_wp_cache: dict = {}
 
 
 def _sql_str(s: str) -> str:
@@ -1107,106 +1108,112 @@ def _sql_str(s: str) -> str:
 def train_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The first BPE_ROUNDS BPE merges over the piece-frequency table:
     (round, sym_a, sym_b, pair_n)."""
-    from dataforge_core_spark.session import free_local_checkpoint
-
-    key = (session_key(spark), sf_dir)
-    if key not in _bpe_cache:
-        _view(spark, sf_dir)
-        wf = spark.sql(
-            f"""
-            SELECT piece AS word, CAST(COUNT(*) AS BIGINT) AS cnt
-            FROM (
-              SELECT explode(regexp_extract_all(text, '{_BPE_RE_SPARK}', 0))
-                AS piece
-              FROM documents
-            ) GROUP BY piece
-            """
-        )
-        wf.createOrReplaceTempView("bpe_wf")
-        sym = spark.sql(
-            """
-            SELECT word, cnt, CAST(i AS INT) AS pos, substr(word, i, 1) AS sym
-            FROM bpe_wf LATERAL VIEW explode(sequence(1, length(word))) s AS i
-            WHERE length(word) >= 2
-            """
-        )
-        merges: list[tuple[int, str, str, int]] = []
-        ckpts = []
-        for k in range(1, BPE_ROUNDS + 1):
-            sym = sym.localCheckpoint(eager=True)
-            ckpts.append(sym)
-            sym.createOrReplaceTempView("bpe_sym")
-            pairs = spark.sql(
-                """
-                SELECT word, cnt, pos, sym,
-                       lead(sym) OVER (PARTITION BY word ORDER BY pos) AS nxt
-                FROM bpe_sym
-                """
-            ).localCheckpoint(eager=True)
-            ckpts.append(pairs)
-            pairs.createOrReplaceTempView("bpe_p")
-            top = spark.sql(
-                """
-                SELECT sym AS a, nxt AS b, CAST(SUM(cnt) AS BIGINT) AS n
-                FROM bpe_p WHERE nxt IS NOT NULL
-                GROUP BY sym, nxt ORDER BY n DESC, a, b LIMIT 1
-                """
-            ).collect()
-            if not top:
-                break
-            a, b, n = top[0]
-            merges.append((k, a, b, n))
-            sym = spark.sql(
-                f"""
-                WITH cand AS (
-                  SELECT word, pos,
-                         pos - ROW_NUMBER() OVER (PARTITION BY word
-                               ORDER BY pos) AS grp
-                  FROM bpe_p
-                  WHERE sym = {_sql_str(a)} AND nxt = {_sql_str(b)}
-                ),
-                ap AS (
-                  SELECT word, pos FROM (
-                    SELECT word, pos,
-                           pos - MIN(pos) OVER (PARTITION BY word, grp)
-                             AS off
-                    FROM cand
-                  ) WHERE off % 2 = 0
-                )
-                SELECT p.word, p.cnt,
-                       CAST(ROW_NUMBER() OVER (PARTITION BY p.word
-                            ORDER BY p.pos) AS INT) AS pos,
-                       CASE WHEN h.pos IS NOT NULL THEN p.sym || p.nxt
-                            ELSE p.sym END AS sym
-                FROM bpe_p p
-                LEFT JOIN ap h ON h.word = p.word AND h.pos = p.pos
-                LEFT JOIN ap t ON t.word = p.word AND t.pos = p.pos - 1
-                WHERE t.pos IS NULL
-                """
-            )
-        # The loop's final ``sym`` state IS the BPE-encoded vocabulary
-        # (every multi-char word reduced to its post-merge symbol
-        # sequence).  Materialize the per-word piece counts BEFORE
-        # freeing the loop checkpoints (sym still reads the last
-        # bpe_p checkpoint lazily) so the encode lane can reuse the
-        # training work instead of replaying the loop.
-        from pyspark.sql import functions as F
-
-        wp = (
-            sym.groupBy("word")
-            .agg(F.count("*").cast("bigint").alias("n_pieces"))
-            .localCheckpoint(eager=True)
-        )
-        for df in ckpts:  # merge table extracted — no state survives
-            free_local_checkpoint(df)
-        _bpe_wp_cache[key] = wp
-        _bpe_cache[key] = merges
     rows = " UNION ALL ".join(
         f"SELECT CAST({k} AS INT) AS round, {_sql_str(a)} AS sym_a,"
         f" {_sql_str(b)} AS sym_b, CAST({n} AS BIGINT) AS pair_n"
-        for k, a, b, n in _bpe_cache[key]
+        for k, a, b, n in _bpe_train(spark, sf_dir)[0]
     )
     return spark.sql(rows)
+
+
+@stored("train_bpe_merge_train")
+def _bpe_train(
+    spark: SparkSession, sf_dir: str
+) -> tuple[list[tuple[int, str, str, int]], DataFrame]:
+    """(merges, vocabulary): the BPE merge-train loop's merge table and
+    the checkpointed (word, n_pieces) vocabulary after the trained
+    merges."""
+    from dataforge_core_spark.session import free_local_checkpoint
+
+    _view(spark, sf_dir)
+    wf = spark.sql(
+        f"""
+        SELECT piece AS word, CAST(COUNT(*) AS BIGINT) AS cnt
+        FROM (
+          SELECT explode(regexp_extract_all(text, '{_BPE_RE_SPARK}', 0))
+            AS piece
+          FROM documents
+        ) GROUP BY piece
+        """
+    )
+    wf.createOrReplaceTempView("bpe_wf")
+    sym = spark.sql(
+        """
+        SELECT word, cnt, CAST(i AS INT) AS pos, substr(word, i, 1) AS sym
+        FROM bpe_wf LATERAL VIEW explode(sequence(1, length(word))) s AS i
+        WHERE length(word) >= 2
+        """
+    )
+    merges: list[tuple[int, str, str, int]] = []
+    ckpts = []
+    for k in range(1, BPE_ROUNDS + 1):
+        sym = sym.localCheckpoint(eager=True)
+        ckpts.append(sym)
+        sym.createOrReplaceTempView("bpe_sym")
+        pairs = spark.sql(
+            """
+            SELECT word, cnt, pos, sym,
+                   lead(sym) OVER (PARTITION BY word ORDER BY pos) AS nxt
+            FROM bpe_sym
+            """
+        ).localCheckpoint(eager=True)
+        ckpts.append(pairs)
+        pairs.createOrReplaceTempView("bpe_p")
+        top = spark.sql(
+            """
+            SELECT sym AS a, nxt AS b, CAST(SUM(cnt) AS BIGINT) AS n
+            FROM bpe_p WHERE nxt IS NOT NULL
+            GROUP BY sym, nxt ORDER BY n DESC, a, b LIMIT 1
+            """
+        ).collect()
+        if not top:
+            break
+        a, b, n = top[0]
+        merges.append((k, a, b, n))
+        sym = spark.sql(
+            f"""
+            WITH cand AS (
+              SELECT word, pos,
+                     pos - ROW_NUMBER() OVER (PARTITION BY word
+                           ORDER BY pos) AS grp
+              FROM bpe_p
+              WHERE sym = {_sql_str(a)} AND nxt = {_sql_str(b)}
+            ),
+            ap AS (
+              SELECT word, pos FROM (
+                SELECT word, pos,
+                       pos - MIN(pos) OVER (PARTITION BY word, grp)
+                         AS off
+                FROM cand
+              ) WHERE off % 2 = 0
+            )
+            SELECT p.word, p.cnt,
+                   CAST(ROW_NUMBER() OVER (PARTITION BY p.word
+                        ORDER BY p.pos) AS INT) AS pos,
+                   CASE WHEN h.pos IS NOT NULL THEN p.sym || p.nxt
+                        ELSE p.sym END AS sym
+            FROM bpe_p p
+            LEFT JOIN ap h ON h.word = p.word AND h.pos = p.pos
+            LEFT JOIN ap t ON t.word = p.word AND t.pos = p.pos - 1
+            WHERE t.pos IS NULL
+            """
+        )
+    # The loop's final ``sym`` state IS the BPE-encoded vocabulary
+    # (every multi-char word reduced to its post-merge symbol
+    # sequence).  Materialize the per-word piece counts BEFORE
+    # freeing the loop checkpoints (sym still reads the last
+    # bpe_p checkpoint lazily) so the encode lane can reuse the
+    # training work instead of replaying the loop.
+    from pyspark.sql import functions as F
+
+    wp = (
+        sym.groupBy("word")
+        .agg(F.count("*").cast("bigint").alias("n_pieces"))
+        .localCheckpoint(eager=True)
+    )
+    for df in ckpts:  # merge table extracted — no state survives
+        free_local_checkpoint(df)
+    return merges, wp
 
 
 def _bpe_cte_parts() -> tuple[list[str], str]:
@@ -1307,9 +1314,7 @@ def _bpe_merges_oracle() -> str:
 
 def train_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc token counts after applying the trained BPE merges."""
-    train_bpe_merges(spark, sf_dir)  # ensures merge + vocab caches
-    key = (session_key(spark), sf_dir)
-    _bpe_wp_cache[key].createOrReplaceTempView("bpe_vocab")
+    _bpe_train(spark, sf_dir)[1].createOrReplaceTempView("bpe_vocab")
     _view(spark, sf_dir)
     return spark.sql(
         f"""
@@ -1374,9 +1379,7 @@ def train_tokenizer_fertility(
     Served from the same checkpointed (word, n_pieces) vocabulary the
     encode lane uses: one corpus word-extract pass, a broadcast-sized
     vocab join, constant output cardinality (one row per language)."""
-    train_bpe_merges(spark, sf_dir)  # ensures merge + vocab caches
-    key = (session_key(spark), sf_dir)
-    _bpe_wp_cache[key].createOrReplaceTempView("bpe_vocab")
+    _bpe_train(spark, sf_dir)[1].createOrReplaceTempView("bpe_vocab")
     _view(spark, sf_dir)
     return spark.sql(
         f"""

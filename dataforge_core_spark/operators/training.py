@@ -28,6 +28,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from dataforge_core_spark.operators.dedup import _duck_ex_sql, _ex_df
+from dataforge_core_spark.operators._store import stored
 from dataforge_core_spark.operators.text import _DUCK_TOK, _SPARK_TOK, _view
 
 TOKEN_BUDGET = 2048  # context-window size in tokens
@@ -1285,10 +1286,10 @@ def _dsir_sql(dialect: str) -> str:
     return f"WITH {fb},\n{_dsir_body(dialect, 'fb')}"
 
 
-_dsir_bkt_cache: dict = {}
-
-
-def _dsir_bucket_view(spark: SparkSession, sf_dir: str) -> str:
+@stored("dsir_bucket_rows")
+def _dsir_bucket_stored(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, DataFrame]:
     """Checkpointed (doc_id, bkt, is_bench) feature-bucket relation —
     the tokenize + md5 + bigram-zip explode paid ONCE per session
     instead of once per corpus pass (the model pass and the scoring
@@ -1300,18 +1301,19 @@ def _dsir_bucket_view(spark: SparkSession, sf_dir: str) -> str:
     that shape remains in the oracle's CTE form (_dsir_sql)."""
     from dataforge_core_spark.session import session_key
 
-    key = (session_key(spark), sf_dir)
-    if key not in _dsir_bkt_cache:
-        _view(spark, sf_dir)
-        df = spark.sql(
-            f"""SELECT doc_id, {_dsir_bkt_expr("spark")} AS bkt,
-                       doc_id % {BENCH_MOD} = 0 AS is_bench
-                FROM ({_dsir_feats("spark")}) fx"""
-        ).localCheckpoint(eager=True)
-        name = f"dsir_bkt_{abs(hash(key)) % 10**8}"
-        df.createOrReplaceTempView(name)
-        _dsir_bkt_cache[key] = (name, df)
-    return _dsir_bkt_cache[key][0]
+    _view(spark, sf_dir)
+    df = spark.sql(
+        f"""SELECT doc_id, {_dsir_bkt_expr("spark")} AS bkt,
+                   doc_id % {BENCH_MOD} = 0 AS is_bench
+            FROM ({_dsir_feats("spark")}) fx"""
+    ).localCheckpoint(eager=True)
+    name = f"dsir_bkt_{abs(hash((session_key(spark), sf_dir))) % 10**8}"
+    df.createOrReplaceTempView(name)
+    return name, df
+
+
+def _dsir_bucket_view(spark: SparkSession, sf_dir: str) -> str:
+    return _dsir_bucket_stored(spark, sf_dir)[0]
 
 
 def train_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1556,9 +1558,7 @@ def _ingest_reason_sql(media_policy: str = "flag") -> str:
 _INGEST_REASON_SQL = _ingest_reason_sql()
 
 
-_ingest_base_cache: dict = {}
-
-
+@stored("ingest_gate_base")
 def _ingest_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpointed five-gate VERDICT relation (doc_id, text_status,
     image_status, audio_status, ppl_keep, contaminated) — the gate
@@ -1569,33 +1569,29 @@ def _ingest_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     persists: policies change far more often than verdicts, so
     re-deriving a decision is a projection, not five index probes."""
     from dataforge_core_spark.operators import streaming_rows as SR
-    from dataforge_core_spark.session import session_key
 
-    key = (session_key(spark), sf_dir)
-    if key not in _ingest_base_cache:
-        text = SR.stream_near_dedup(spark, sf_dir, batch=True).selectExpr(
-            "doc_id", "status AS text_status"
-        )
-        image = SR.stream_phash_gate(spark, sf_dir, batch=True).selectExpr(
-            "doc_id", "status AS image_status"
-        )
-        audio = SR.stream_afp_gate(spark, sf_dir, batch=True).selectExpr(
-            "doc_id", "status AS audio_status"
-        )
-        ppl = SR.stream_ppl_gate(spark, sf_dir, batch=True).selectExpr(
-            "doc_id", "ppl_keep"
-        )
-        sem = SR.stream_semantic_gate(spark, sf_dir, batch=True).selectExpr(
-            "vec_id AS doc_id", "contaminated"
-        )
-        _ingest_base_cache[key] = (
-            text.join(image, "doc_id", "left")
-            .join(audio, "doc_id", "left")
-            .join(ppl, "doc_id", "left")
-            .join(sem, "doc_id", "left")
-            .localCheckpoint(eager=True)
-        )
-    return _ingest_base_cache[key]
+    text = SR.stream_near_dedup(spark, sf_dir, batch=True).selectExpr(
+        "doc_id", "status AS text_status"
+    )
+    image = SR.stream_phash_gate(spark, sf_dir, batch=True).selectExpr(
+        "doc_id", "status AS image_status"
+    )
+    audio = SR.stream_afp_gate(spark, sf_dir, batch=True).selectExpr(
+        "doc_id", "status AS audio_status"
+    )
+    ppl = SR.stream_ppl_gate(spark, sf_dir, batch=True).selectExpr(
+        "doc_id", "ppl_keep"
+    )
+    sem = SR.stream_semantic_gate(spark, sf_dir, batch=True).selectExpr(
+        "vec_id AS doc_id", "contaminated"
+    )
+    return (
+        text.join(image, "doc_id", "left")
+        .join(audio, "doc_id", "left")
+        .join(ppl, "doc_id", "left")
+        .join(sem, "doc_id", "left")
+        .localCheckpoint(eager=True)
+    )
 
 
 def train_ingest_decision(

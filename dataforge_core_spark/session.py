@@ -198,11 +198,10 @@ def free_local_checkpoint(df) -> None:
     wrapper raised and silently fell through to the no-op branch, so
     rebound checkpoints (e.g. _cc_min_label results) were never freed
     (r14 advice).  Unwrap the alias chain first; anything that still
-    isn't a LogicalRDD has no checkpoint blocks to free."""
-    try:
-        plan = df._jdf.queryExecution().analyzed()
-        while plan.getClass().getSimpleName() in ("SubqueryAlias", "View"):
-            plan = plan.child()
+    isn't a LogicalRDD has no checkpoint blocks to free and returns
+    quietly.  Any other failure propagates."""
+    plan = df._jdf.queryExecution().analyzed()
+    while plan.getClass().getSimpleName() in ("SubqueryAlias", "View"):
+        plan = plan.child()
+    if plan.getClass().getSimpleName() == "LogicalRDD":
         plan.rdd().unpersist(False)
-    except Exception:
-        pass  # best-effort: freeing falls back to the ContextCleaner

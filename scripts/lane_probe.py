@@ -36,6 +36,7 @@ def main() -> None:
 
     import bench
     import __spark_entry__ as entry
+    from dataforge_core_spark.operators import _store
     from dataforge_core_spark.session import get_spark
 
     sf_dir = bench.SF_DIR
@@ -46,7 +47,7 @@ def main() -> None:
     spark.read.parquet(f"{sf_dir}/region.parquet").write.format(
         "noop"
     ).mode("overwrite").save()
-    bench._clear_operator_caches(spark)
+    _store.clear_all(spark)
     t0 = time.perf_counter()
     _, wall = bench._run_index_builds(spark)
     print(f"index phase wall {wall:.1f}s", flush=True)

@@ -470,6 +470,31 @@ def test_free_local_checkpoint_frees_blocks(spark):
     assert not (mine & rdd_ids()), "checkpoint blocks not freed"
 
 
+def test_free_local_checkpoint_ignores_non_checkpoints(spark):
+    """A frame whose plan is not a LogicalRDD holds no checkpoint
+    blocks: free_local_checkpoint returns quietly and leaves storage
+    alone (a persisted frame stays cached).  Anything else that goes
+    wrong propagates instead of being swallowed."""
+    from dataforge_core_spark.session import free_local_checkpoint
+
+    sc = spark.sparkContext
+
+    def rdd_ids():
+        return {i.id() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+    df = spark.range(50_000).selectExpr("id", "id * 2 AS x").persist()
+    df.count()
+    cached = rdd_ids()
+    try:
+        free_local_checkpoint(df)
+        free_local_checkpoint(spark.range(10).selectExpr("id + 1 AS y"))
+        assert rdd_ids() == cached, "a non-checkpoint frame was freed"
+    finally:
+        df.unpersist(True)
+    with pytest.raises(AttributeError):
+        free_local_checkpoint("not a frame")
+
+
 def test_session_key_is_application_id(spark):
     from dataforge_core_spark.session import session_key
 
@@ -548,7 +573,7 @@ def test_window_plan_unifies_hub_and_veteran_budget(monkeypatch):
     def _check():
         hubs, vets = ops._window_plan()
         recorded = all_names & ops._recorded_names()
-        unproven = all_names - recorded - ops._deferred_names()
+        unproven = all_names - recorded
         budget = max(
             ops.ROTATION_SLOTS, ops.CAPTURE_WINDOW - 3 - len(unproven)
         )
@@ -562,10 +587,7 @@ def test_window_plan_unifies_hub_and_veteran_budget(monkeypatch):
         # unproven block, in plan order
         items = {n: n for n in all_names}
         merged = list(ops._merge(items))
-        n_fresh = len(
-            [n for n in all_names if n not in recorded
-             and n not in ops._deferred_names()]
-        )
+        n_fresh = len([n for n in all_names if n not in recorded])
         assert merged[n_fresh:n_fresh + len(vets)] == vets
         return hubs, vets, budget
 
@@ -689,7 +711,7 @@ def test_narrow_session_isolates_shuffle_width(spark):
 
 def test_window_plan_invariants_over_random_histories():
     """Property test: under ANY record history (which lanes are
-    driver-proven, how old each record is, which are deferred),
+    proven, how old each record is),
     _window_plan keeps its invariants — the refresh block never
     exceeds the shared budget and fills it when enough recorded rows
     exist, at least one hub always refreshes, hubs/veterans never
@@ -718,32 +740,20 @@ def test_window_plan_invariants_over_random_histories():
                          label=f"round_{n}")
             for n in recorded | set(ops.HUB_POOL)
         }
-        deferred = set(
-            data.draw(
-                st.lists(
-                    st.sampled_from(sorted(all_names - recorded) or ["_"]),
-                    unique=True,
-                    max_size=5,
-                ),
-                label="deferred",
-            )
-        ) & all_names
-
         orig = (ops._recorded_names, ops._latest_records,
-                ops._deferred_names, ops._max_recorded_round)
+                ops._max_recorded_round)
         try:
             ops._recorded_names = lambda: recorded
             ops._latest_records = lambda: {
                 n: (r, {}) for n, r in rounds.items()
             }
-            ops._deferred_names = lambda: deferred
             ops._max_recorded_round = lambda: max(rounds.values(), default=0)
             hubs, vets = ops._window_plan()
         finally:
             (ops._recorded_names, ops._latest_records,
-             ops._deferred_names, ops._max_recorded_round) = orig
+             ops._max_recorded_round) = orig
 
-        unproven = all_names - recorded - deferred
+        unproven = all_names - recorded
         budget = max(
             ops.ROTATION_SLOTS, ops.CAPTURE_WINDOW - 3 - len(unproven)
         )

@@ -143,7 +143,7 @@ def test_simhash_hot_block_bucket_salted(spark, tmp_path):
     of corpus size, so a hot block must not go quadratic.  Same-residue
     pairs survive (partial recall), normal buckets are untouched, and
     the DuckDB oracle applies the identical rule."""
-    from dataforge_core_spark.operators import simhash
+    from dataforge_core_spark.operators import _store, simhash
 
     # 10 identical docs -> identical signatures -> all 4 blocks form one
     # 10-doc bucket; plus an identical pair in a normal (2-doc) bucket
@@ -189,7 +189,7 @@ def test_simhash_hot_block_bucket_salted(spark, tmp_path):
     assert got == want
 
     # with the cap above the hot bucket's size, all 45 pairs come back
-    simhash._sig_cache.clear()
+    _store.clear_all(spark)
     unguarded = {
         (r.doc_a, r.doc_b)
         for r in simhash.dedup_simhash_pairs(
