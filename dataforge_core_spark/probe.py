@@ -58,7 +58,7 @@ class ProbeResult:
 
 
 def ensure_datatypes_view(spark: SparkSession) -> None:
-    if VIEW_NAME not in [t.name for t in spark.catalog.listTables()]:
+    if not spark.catalog.tableExists(VIEW_NAME):
         spark.sql(_DATATYPES_SQL).createOrReplaceTempView(VIEW_NAME)
 
 
@@ -73,6 +73,21 @@ def build_probe_sql(
     ``WITH ct AS (SELECT <typed literal per parameter> FROM datatypes)
     SELECT <expr> as col1 FROM ct``.
     """
+    selects, body, _ = _probe_parts(expression, param_types, "p")
+    return _probe_sql(selects, f"{body} as col1")
+
+
+def _probe_sql(selects: list[str], select_list: str) -> str:
+    ct = ", ".join(selects) if selects else "1 AS p_dummy"
+    return f"WITH ct AS (SELECT {ct} FROM {VIEW_NAME}) SELECT {select_list} FROM ct"
+
+
+def _probe_parts(
+    expression: str, param_types: dict[str, str] | None, prefix: str
+) -> tuple[list[str], str, bool]:
+    """The parameter columns (named ``<prefix>0``, ``<prefix>1``, ...),
+    the rewritten body of one expression's probe, and whether it
+    aggregates."""
     parsed = parse_expression(expression, allow_this_agg=True)
     param_types = param_types or {}
     selects: list[str] = []
@@ -83,7 +98,7 @@ def build_probe_sql(
         key = f"{source}.{attr}"
         if key not in names:
             t = param_types.get(key, param_types.get(attr, "string"))
-            col = f"p{len(names)}"
+            col = f"{prefix}{len(names)}"
             selects.append(f"`{t}` AS {col}")
             names[key] = col
         return names[key]
@@ -104,9 +119,7 @@ def build_probe_sql(
         new_inner = rewrite(call.inner, inner_spans)
         spans.append((call.start, call.end, f"{call.func}({new_inner})"))
 
-    body = rewrite(expression, spans)
-    ct = ", ".join(selects) if selects else "1 AS p_dummy"
-    return f"WITH ct AS (SELECT {ct} FROM {VIEW_NAME}) SELECT {body} as col1 FROM ct"
+    return selects, rewrite(expression, spans), has_agg
 
 
 # Probe-result cache: a per-session dict held in a WeakKeyDictionary
@@ -125,6 +138,7 @@ def build_probe_sql(
 import hashlib
 import json
 import os
+import re
 import weakref
 
 _probe_cache: "weakref.WeakKeyDictionary[SparkSession, dict[str, ProbeResult]]"
@@ -179,14 +193,17 @@ class ProbeStore:
             message=e.get("message"),
         )
 
-    def put(self, sql: str, res: ProbeResult) -> None:
-        self._data[self._key(sql)] = {
-            "spark": self._version,
-            "status": res.status,
-            "data_type": res.data_type,
-            "schema_json": res.schema_json,
-            "message": res.message,
-        }
+    def put(self, results: dict[str, ProbeResult]) -> None:
+        """Record ``{probe sql: result}`` (one wave's fresh results) with
+        one merge-and-replace of the file."""
+        for sql, res in results.items():
+            self._data[self._key(sql)] = {
+                "spark": self._version,
+                "status": res.status,
+                "data_type": res.data_type,
+                "schema_json": res.schema_json,
+                "message": res.message,
+            }
         # merge-on-flush: re-read what's on disk and overlay our entries
         # before the atomic replace, so two concurrent runs sharing a
         # state dir accumulate instead of last-writer-wins dropping each
@@ -223,44 +240,114 @@ def run_probe(
     expression: str,
     param_types: dict[str, str] | None = None,
 ) -> ProbeResult:
-    sql = build_probe_sql(expression, param_types)
+    return run_probe_wave(spark, [(expression, param_types)])[0]
+
+
+# A window reorders rows and a generator adds or drops them; either would
+# change the other columns' first row in a fused probe, so it runs alone.
+_RUNS_ALONE = re.compile(
+    r"over\s*\(|\b(?:pos)?explode(?:_outer)?\s*\(|\binline(?:_outer)?\s*\("
+    r"|\bstack\s*\(|\bjson_tuple\s*\(",
+    re.IGNORECASE,
+)
+
+
+def run_probe_wave(
+    spark: SparkSession,
+    items: list[tuple[str, dict[str, str] | None]],
+) -> list[ProbeResult]:
+    """Probe independent ``(expression, param_types)`` pairs, one result
+    each, equal to what ``run_probe`` gives for the pair alone.
+
+    Cache and ProbeStore lookups are per expression, keyed by its
+    ``build_probe_sql`` text.  The misses run as at most two fused
+    SELECTs over the datatypes view (plain expressions, aggregate
+    expressions); an expression matched by ``_RUNS_ALONE`` runs on its
+    own.  A fused query that fails, comes back empty or has other columns
+    than the ones it asked for re-runs its expressions one by one, so
+    the miniSparky messages stay exact."""
+    parts = [_probe_parts(e, p, "p") for e, p in items]
+    sqls = [_probe_sql(sel, f"{body} as col1") for sel, body, _ in parts]
+    results: list[ProbeResult | None] = [None] * len(items)
     session_cache = _probe_cache.setdefault(spark, {})
-    cached = session_cache.get(sql)
-    if cached is not None:
-        probe_stats["hits"] += 1
-        return cached
-    if _probe_store is not None:
-        stored = _probe_store.get(sql)
-        if stored is not None:
-            probe_stats["store_hits"] += 1
-            session_cache[sql] = stored
-            return stored
-    probe_stats["runs"] += 1
+    groups: dict[str, list[int]] = {"plain": [], "agg": []}
+    alone: list[int] = []
+    for i, sql in enumerate(sqls):
+        hit = session_cache.get(sql)
+        if hit is not None:
+            probe_stats["hits"] += 1
+        elif _probe_store is not None:
+            hit = _probe_store.get(sql)
+            if hit is not None:
+                probe_stats["store_hits"] += 1
+                session_cache[sql] = hit
+        if hit is not None:
+            results[i] = hit
+        elif _RUNS_ALONE.search(items[i][0]):
+            alone.append(i)
+        else:
+            groups["agg" if parts[i][2] else "plain"].append(i)
+    misses = alone + groups["plain"] + groups["agg"]
+    if not misses:
+        return results
     ensure_datatypes_view(spark)
-    res = _run_probe_uncached(spark, sql)
-    if res.status != "error":
-        session_cache[sql] = res
-        if _probe_store is not None:
-            _probe_store.put(sql, res)
-    return res
+    for group in groups.values():
+        if len(group) < 2:
+            alone += group
+            continue
+        fused = _run_fused(spark, [items[i] for i in group])
+        if fused is None:
+            alone += group
+        else:
+            for i, res in zip(group, fused):
+                results[i] = res
+    for i in alone:
+        probe_stats["runs"] += 1
+        results[i] = _run_probe_uncached(spark, sqls[i])
+    fresh = {sqls[i]: results[i] for i in misses if results[i].status != "error"}
+    session_cache.update(fresh)
+    if fresh and _probe_store is not None:
+        _probe_store.put(fresh)
+    return results
 
 
-def _run_probe_uncached(spark: SparkSession, sql: str) -> ProbeResult:
+def _run_fused(
+    spark: SparkSession, items: list[tuple[str, dict[str, str] | None]]
+) -> list[ProbeResult] | None:
+    """One probe query for several expressions: each gets its own
+    parameter columns and alias, after a constant leading column (so no
+    expression can turn the select list into ``SELECT DISTINCT``).  The
+    names carry a digest of the expressions, which no expression can
+    spell, so a result with exactly the expected columns means every
+    expression stayed inside its own select item.  None when the query
+    fails or its result is empty or shaped otherwise."""
+    digest = hashlib.sha256("\0".join(e for e, _ in items).encode())
+    tag = "f" + digest.hexdigest()[:16]
+    selects: list[str] = []
+    cols = [f"1 AS {tag}"]
+    names = [tag]
+    for i, (expression, param_types) in enumerate(items):
+        sel, body, _ = _probe_parts(expression, param_types, f"{tag}_{i}p")
+        selects += sel
+        names.append(f"{tag}_{i}")
+        cols.append(f"{body} AS {names[-1]}")
+    probe_stats["runs"] += 1
     try:
-        df = spark.sql(sql)
+        df = spark.sql(_probe_sql(selects, ", ".join(cols)))
         rows = df.limit(1).collect()
-    except Exception as e:  # surface Spark analysis errors per-rule
-        return ProbeResult(status="error", message=str(e))
+    except Exception:
+        return None
     fields = df.schema.fields
-    field = fields[0]
-    # Behavior + message parity with miniSparky.py:66-77, including the
-    # precedence: the NULL check (on the FIRST column of the first row)
-    # fires before the extraneous-column check.  An empty result set is
-    # an error: the reference's ``df.head()[0]`` raises IndexError there,
-    # which its except-path reports verbatim (miniSparky.py:59,84-89).
-    if not rows:
-        return ProbeResult(status="error", message="list index out of range")
-    if rows and rows[0][0] is None:
+    if not rows or [f.name for f in fields] != names:
+        return None
+    return [_typed_result(f, v) for f, v in zip(fields[1:], rows[0][1:])]
+
+
+def _typed_result(field, value) -> ProbeResult:
+    """A probe column's result from its first-row value (miniSparky.py:
+    63-72): NULL is the improper-casting warning, anything else a
+    success; both record the type."""
+    if value is None:
         return ProbeResult(
             status="warning",
             data_type=field.dataType.simpleString(),
@@ -270,7 +357,28 @@ def _run_probe_uncached(spark: SparkSession, sql: str) -> ProbeResult:
                 "type casting or that you're doing some very complex logic"
             ),
         )
-    if len(fields) != 1 or field.name != "col1":
+    return ProbeResult(
+        status="success",
+        data_type=field.dataType.simpleString(),
+        schema_json=field.dataType.json(),
+    )
+
+
+def _run_probe_uncached(spark: SparkSession, sql: str) -> ProbeResult:
+    try:
+        df = spark.sql(sql)
+        rows = df.limit(1).collect()
+    except Exception as e:  # surface Spark analysis errors per-rule
+        return ProbeResult(status="error", message=str(e))
+    fields = df.schema.fields
+    # Behavior + message parity with miniSparky.py:66-77, including the
+    # precedence: the NULL check (on the FIRST column of the first row)
+    # fires before the extraneous-column check.  An empty result set is
+    # an error: the reference's ``df.head()[0]`` raises IndexError there,
+    # which its except-path reports verbatim (miniSparky.py:59,84-89).
+    if not rows:
+        return ProbeResult(status="error", message="list index out of range")
+    if rows[0][0] is not None and (len(fields) != 1 or fields[0].name != "col1"):
         # reference checks only fields[0].name != 'col1'; rejecting extra
         # columns too is a strictly stronger injection guard with the
         # same verbatim message
@@ -278,11 +386,7 @@ def _run_probe_uncached(spark: SparkSession, sql: str) -> ProbeResult:
             status="error",
             message="Extraneous input detected at end of expression",
         )
-    return ProbeResult(
-        status="success",
-        data_type=field.dataType.simpleString(),
-        schema_json=field.dataType.json(),
-    )
+    return _typed_result(fields[0], rows[0][0])
 
 
 _SIMPLE_TO_VIEW_COL = {
@@ -306,19 +410,29 @@ def _view_col_for(simple_type: str) -> str:
 
 
 def validate_project(spark: SparkSession, project) -> list[dict]:
+    """One report row per rule / relation / filter:
+    {kind, name, status, data_type, message} (see ``infer_types``)."""
+    return infer_types(spark, project)[0]
+
+
+def infer_types(
+    spark: SparkSession, project
+) -> tuple[list[dict], dict[tuple[str, str], str]]:
     """Dependency-ordered probe waves over a whole project — the
     reference's import loop (importProject.py:81-111: expressions become
     testable once their parameters' types are known; ≤20 waves).
 
-    Returns one report row per rule / relation / filter:
-    {kind, name, status, data_type, message}.
+    A wave is every unprobed rule whose parameters name no earlier rule
+    still unprobed (a rule whose probe errored counts as probed; its
+    dependents read it as ``string``); ``run_probe_wave`` fuses the
+    wave's cache misses.  Relations and
+    output filters form the last wave.  Returns the report (rules in
+    build order, then relations, then filters) and the datatypes-view
+    column of every raw attribute and typed rule, keyed by
+    ``(source_name, attr)``.
     """
-    from dataforge_core_spark.compiler import SourceCompiler
-    from dataforge_core_spark.parser import parse_expression
+    from dataforge_core_spark.runner import ProjectRunner
 
-    compiler = SourceCompiler(spark, project)
-    report: list[dict] = []
-    # (source_name, attr) -> datatypes-view column name
     types: dict[tuple[str, str], str] = {}
     for src in project.sources:
         for a in src.raw_attributes:
@@ -329,87 +443,98 @@ def validate_project(spark: SparkSession, project) -> list[dict]:
             else:
                 types[(src.source_name, a.name)] = "string"
 
-    by_name = project.source_by_name()
-
-    def param_types_for(src_name: str, expression: str) -> dict[str, str]:
+    def owners(src_name: str, expression: str) -> dict[str, tuple[str, str]]:
         parsed = parse_expression(expression, allow_this_agg=True)
-        out: dict[str, str] = {}
-        for t in parsed.all_tokens():
-            owner = src_name if t.source in ("This", "Related") else t.source
-            col = types.get((owner, t.attr), "string")
-            out[f"{t.source}.{t.attr}"] = col
-        return out
+        return {
+            f"{t.source}.{t.attr}": (
+                src_name if t.source in ("This", "Related") else t.source,
+                t.attr,
+            )
+            for t in parsed.all_tokens()
+        }
 
-    # probe rules wave-by-wave: a source's rules in level order, sources
-    # in topological order so cross-source lookups see inferred types
-    from dataforge_core_spark.runner import ProjectRunner
+    def param_types(refs: dict[str, tuple[str, str]]) -> dict[str, str]:
+        return {p: types.get(o, "string") for p, o in refs.items()}
 
+    # rules in build order: sources in topological order, each source's
+    # rules in level order
     runner = ProjectRunner(spark, project)
+    by_name = project.source_by_name()
+    rules: dict[tuple[str, str], str] = {}
     for level in runner.topo_order():
         for name in level:
             src = by_name[name]
-            plan = compiler.plan(src)
-            for lv in plan.levels:
+            for lv in runner.compiler.plan(src).levels:
                 for rule_name in lv:
                     rule = src.rule_by_name()[rule_name]
-                    res = run_probe(
-                        spark,
-                        rule.expression,
-                        param_types_for(name, rule.expression),
-                    )
-                    report.append(
-                        {
-                            "kind": "rule",
-                            "name": f"{name}.{rule_name}",
-                            "status": res.status,
-                            "data_type": res.data_type,
-                            "message": res.message,
-                        }
-                    )
-                    if res.data_type:
-                        types[(name, rule_name)] = _view_col_for(res.data_type)
+                    rules[(name, rule_name)] = rule.expression
+    refs = {k: owners(k[0], e) for k, e in rules.items()}
+    pos = {k: i for i, k in enumerate(rules)}
+    results: dict[tuple[str, str], ProbeResult] = {}
+    pending = set(rules)
+    while pending:
+        # only rules earlier in build order count as dependencies, so
+        # the first pending rule is always ready
+        wave = [
+            k for k in rules
+            if k in pending and not any(
+                o in pending and pos[o] < pos[k] for o in refs[k].values()
+            )
+        ]
+        probed = run_probe_wave(
+            spark, [(rules[k], param_types(refs[k])) for k in wave]
+        )
+        for k, res in zip(wave, probed):
+            results[k] = res
+            if res.data_type:
+                types[k] = _view_col_for(res.data_type)
+        pending -= set(wave)
+    report = [
+        {
+            "kind": "rule",
+            "name": f"{k[0]}.{k[1]}",
+            "status": results[k].status,
+            "data_type": results[k].data_type,
+            "message": results[k].message,
+        }
+        for k in rules
+    ]
 
+    checks: list[tuple[str, str, str, dict[str, str]]] = []
     for rel in project.relations:
         left, _, right = rel.decode()
-        ptypes: dict[str, str] = {}
         parsed = parse_expression(rel.expression, allow_this_agg=True)
-        for t in parsed.tokens:
-            owner = left if t.source == "This" else right
-            ptypes[f"{t.source}.{t.attr}"] = types.get((owner, t.attr), "string")
-        res = run_probe(spark, rel.expression, ptypes)
+        ptypes = {
+            f"{t.source}.{t.attr}": types.get(
+                (left if t.source == "This" else right, t.attr), "string"
+            )
+            for t in parsed.tokens
+        }
+        checks.append(("relation", rel.name, rel.expression, ptypes))
+    for out in project.outputs:
+        for ch in out.channels:
+            if ch.filter:
+                checks.append((
+                    "filter",
+                    f"{out.output_name}/{ch.source_name}",
+                    ch.filter,
+                    param_types(owners(ch.source_name, ch.filter)),
+                ))
+    probed = run_probe_wave(spark, [(c[2], c[3]) for c in checks])
+    for (kind, name, _, _), res in zip(checks, probed):
         ok = res.status != "error" and res.data_type == "boolean"
         report.append(
             {
-                "kind": "relation",
-                "name": rel.name,
+                "kind": kind,
+                "name": name,
                 "status": "success" if ok else "error",
                 "data_type": res.data_type,
                 "message": res.message
                 if res.status == "error"
-                else (None if ok else "relation must be boolean"),
+                else (None if ok else f"{kind} must be boolean"),
             }
         )
-
-    for out in project.outputs:
-        for ch in out.channels:
-            if not ch.filter:
-                continue
-            res = run_probe(
-                spark, ch.filter, param_types_for(ch.source_name, ch.filter)
-            )
-            ok = res.status != "error" and res.data_type == "boolean"
-            report.append(
-                {
-                    "kind": "filter",
-                    "name": f"{out.output_name}/{ch.source_name}",
-                    "status": "success" if ok else "error",
-                    "data_type": res.data_type,
-                    "message": res.message
-                    if res.status == "error"
-                    else (None if ok else "filter must be boolean"),
-                }
-            )
-    return report
+    return report, types
 
 
 # user-facing hive type -> simple Spark type for view-column mapping

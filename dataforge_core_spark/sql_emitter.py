@@ -52,7 +52,7 @@ class SqlEmitter:
         self.by_name = project.source_by_name()
         self.subs = substitutions or {}
         self.spark = spark
-        self._dtypes: dict[str, dict[str, str]] | None = None
+        self._types: dict[tuple[str, str], str] | None = None
         if bucket_by == "auto":
             from dataforge_core_spark.paths import derive_bucket_keys
 
@@ -60,19 +60,19 @@ class SqlEmitter:
         self.bucket_by = bucket_by or {}
         self.n_buckets = n_buckets
 
-    def _hub_dtypes(self, source_name: str) -> dict[str, str]:
-        """Inferred column types from the lazily-built DataFrame hubs —
-        the emitter's analogue of the reference's build-time local-Spark
-        type probes (importProject.py:81-111).  Empty without a session
+    def _rule_types(self) -> dict[tuple[str, str], str]:
+        """``(source, rule) -> datatypes-view column`` from the type
+        probes ``validate_project`` runs (cache hits after a validate),
+        as the reference emits from the types its import-time probes
+        stored (importProject.py:81-111).  Empty without a session
         (decimal normalization is then skipped in the artifact)."""
         if self.spark is None:
             return {}
-        if self._dtypes is None:
-            from dataforge_core_spark.runner import ProjectRunner
+        if self._types is None:
+            from dataforge_core_spark.probe import infer_types
 
-            hubs = ProjectRunner(self.spark, self.project, self.subs).build()
-            self._dtypes = {n: dict(df.dtypes) for n, df in hubs.items()}
-        return self._dtypes.get(source_name, {})
+            self._types = infer_types(self.spark, self.project)[1]
+        return self._types
 
     # ------------------------------------------------------------------
     def _table(self, source: Source) -> str:
@@ -122,7 +122,7 @@ class SqlEmitter:
                 joins_sql.append(jsql)
                 transit_cols.extend(jcols)
                 applied.add(pid)
-            dtypes = self._hub_dtypes(source.source_name)
+            types = self._rule_types()
             rule_cols = []
             for name in level:
                 el = plan.rules[name]
@@ -132,7 +132,7 @@ class SqlEmitter:
                         el.rule.cast_datatype, el.rule.cast_datatype
                     )
                     expr = f"CAST({expr} AS {ddl})"
-                elif dtypes.get(name, "").startswith("decimal"):
+                elif types.get((source.source_name, name)) == "decimal":
                     # P3 decimal normalization, as in the DataFrame path
                     expr = f"CAST({expr} AS decimal(38,12))"
                 rule_cols.append(f"{expr} AS `{name}`")

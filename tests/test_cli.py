@@ -88,3 +88,30 @@ def test_seed_initializes_and_resets_state(tmp_path, monkeypatch, capsys):
     monkeypatch.setattr("builtins.input", lambda *_: "y")
     assert main(["--seed", "--state", state]) == 0
     assert json.load(open(f"{state}/metastore.json"))["sources"] == {}
+
+
+def test_cli_build_matches_emitter(spark, sf_dir, tmp_path):
+    """`--build` (probe types from its state dir's ProbeStore, or new
+    probes) writes the run.sql the emitter gives on the live session."""
+    from dataforge_core_spark import probe
+    from dataforge_core_spark.loader import load_project
+    from dataforge_core_spark.sql_emitter import SqlEmitter
+
+    data = sf_dir
+    prev = probe.set_probe_store(None)
+    try:
+        for _ in range(2):  # the second build reads the stored probes
+            probe._probe_cache.pop(spark, None)
+            assert main([
+                "--build", "projects/tpch_demo",
+                "--target", str(tmp_path / "cli"),
+                "--state", str(tmp_path / "state"),
+                "--data-dir", data,
+            ]) == 0
+    finally:
+        probe.set_probe_store(prev)
+    want = SqlEmitter(
+        load_project("projects/tpch_demo"), {"DATA_DIR": data}, spark=spark
+    ).emit_all(str(tmp_path / "api"))
+    assert (tmp_path / "cli" / "run.sql").read_text() == want
+    assert "AS decimal(38,12)) AS `" in want

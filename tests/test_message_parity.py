@@ -11,6 +11,9 @@ including multi-statement injection attempts.
 
 from __future__ import annotations
 
+import dataclasses
+import re
+
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
@@ -119,6 +122,107 @@ def test_probe_adversarial_expressions(spark, parts):
     if res.status == "error":
         assert res.message  # spark analysis text or the verbatim guard
     assert spark.sql("SELECT COUNT(*) FROM datatypes").collect()[0][0] == 2
+
+
+# ordinary typed expressions to mix into fused waves: plain, aggregate,
+# NULL-in-row-0 (warning), NULL-only-in-row-1, and a window
+_TYPED = st.sampled_from(
+    [
+        "[This].int + 1",
+        "[This].decimal * 2",
+        "concat([This].string, '-x')",
+        "date_format([This].timestamp, 'yyyyMM')",
+        "nullif([This].string, [This].string)",
+        "IF([This].date > DATE '2018-01-01', NULL, [This].int)",
+        "sum([o].bigint) + [This].int",
+        "count(DISTINCT [o].string)",
+        "first_value([This].long) OVER (ORDER BY [This].date DESC)",
+    ]
+)
+_PTYPES = {c: c for c in ("int", "decimal", "string", "timestamp", "date",
+                          "bigint", "long")}
+
+
+def _solo_results(spark, exprs):
+    from dataforge_core_spark import probe
+
+    probe._probe_cache.pop(spark, None)
+    return [probe.run_probe(spark, e, _PTYPES) for e in exprs]
+
+
+def _canon(results):
+    """Spark analysis errors print the plan with per-query expression
+    ids (``#9896``), which differ between any two runs of one query."""
+    return [
+        dataclasses.replace(r, message=re.sub(r"#\d+", "#", r.message))
+        if r.message else r
+        for r in results
+    ]
+
+
+@settings(
+    max_examples=30,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    wave=st.lists(
+        st.one_of(
+            _TYPED,
+            st.lists(_FRAGMENTS, min_size=1, max_size=3).map(", ".join),
+        ),
+        min_size=2,
+        max_size=6,
+    )
+)
+def test_probe_wave_matches_solo_probes(spark, wave):
+    """A fused wave gives every expression exactly the ProbeResult
+    (status, type, schema JSON, message) of its solo probe, and leaves
+    the datatypes view at its 2 rows."""
+    from dataforge_core_spark import probe
+    from dataforge_core_spark.parser import ExpressionError
+
+    exprs = []
+    for e in wave:
+        try:
+            probe.build_probe_sql(e, _PTYPES)
+        except ExpressionError:
+            continue  # parser-level rejection: no probe runs at all
+        exprs.append(e)
+    prev = probe.set_probe_store(None)
+    try:
+        probe.ensure_datatypes_view(spark)
+        probe._probe_cache.pop(spark, None)
+        fused = probe.run_probe_wave(spark, [(e, _PTYPES) for e in exprs])
+        assert _canon(fused) == _canon(_solo_results(spark, exprs))
+    finally:
+        probe.set_probe_store(prev)
+    assert spark.sql("SELECT COUNT(*) FROM datatypes").collect()[0][0] == 2
+
+
+def test_probe_wave_window_keeps_row_one_null_a_success(spark):
+    """An expression NULL only in the view's second row is a success.
+    Fused with a window that sorts that row first it would read as the
+    NULL warning, so the window runs alone and the result is the solo
+    one."""
+    from dataforge_core_spark import probe
+
+    late_null = "IF([This].date > DATE '2018-01-01', NULL, [This].int)"
+    window = "first_value([This].long) OVER (ORDER BY [This].date DESC)"
+    pair = [(late_null, _PTYPES), (window, _PTYPES)]
+    probe.ensure_datatypes_view(spark)
+    # the hazard is real: forced into one query, the row order flips
+    forced = probe._run_fused(spark, pair)
+    assert forced is not None and forced[0].status == "warning"
+    prev = probe.set_probe_store(None)
+    try:
+        probe._probe_cache.pop(spark, None)
+        res = probe.run_probe_wave(spark, pair)
+        assert res == _solo_results(spark, [late_null, window])
+    finally:
+        probe.set_probe_store(prev)
+    assert res[0].status == "success" and res[0].data_type == "int"
+    assert res[1].status == "success"
 
 
 # -- relation-path message parity -------------------------------------------

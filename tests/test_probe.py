@@ -159,3 +159,161 @@ def test_validate_cli_second_run_zero_probes(spark, tmp_path):
         assert probe.probe_stats["runs"] == runs_after_first
     finally:
         probe.set_probe_store(prev)
+
+
+def _dtype_mismatches(spark, project, subs):
+    """For every rule without a cast, the DataFrame hub's column type
+    mapped to a datatypes-view column against the probes' view column.
+    Returns (rules compared, mismatches)."""
+    from dataforge_core_spark.probe import _view_col_for, infer_types
+    from dataforge_core_spark.runner import ProjectRunner
+
+    hubs = ProjectRunner(spark, project, subs, persist_hubs=False).build()
+    types = infer_types(spark, project)[1]
+    n, bad = 0, []
+    for name, df in hubs.items():
+        dtypes = dict(df.dtypes)
+        for rule in project.source_by_name()[name].rules:
+            if rule.cast_datatype:
+                continue
+            n += 1
+            want = _view_col_for(dtypes[rule.name])
+            got = types.get((name, rule.name))
+            if want != got:
+                bad.append((name, rule.name, dtypes[rule.name], got))
+    return n, bad
+
+
+def test_probe_types_match_dataframe_dtypes(spark, sf_dir, tmp_path):
+    """The emitter takes rule types from the probes instead of building
+    every hub DataFrame; the two agree on every uncast rule of the demo
+    project and of 30 generated wide projects."""
+    import sys
+
+    from dataforge_core_spark.loader import load_project
+
+    sys.path.insert(0, "perfbench")
+    try:
+        import wideproj
+    finally:
+        sys.path.remove("perfbench")
+
+    n, bad = _dtype_mismatches(
+        spark,
+        load_project("projects/tpch_demo"),
+        {"DATA_DIR": sf_dir},
+    )
+    assert n == 33 and not bad, bad
+    total = 0
+    for seed in range(30):
+        wp = wideproj.generate(
+            str(tmp_path / f"w{seed}"), seed, seed,
+            n_sources=6, rules_per_source=5,
+        )
+        n, bad = _dtype_mismatches(
+            spark, load_project(wp.project_dir), {"DATA_DIR": wp.data_dir}
+        )
+        assert not bad, (seed, bad)
+        total += n
+    assert total == 1080
+
+
+def test_validate_and_emit_never_list_the_catalog(
+    spark, sf_dir, tmp_path, monkeypatch
+):
+    """The datatypes-view check is one tableExists call, so neither
+    validation nor emission lists the session catalog."""
+    from dataforge_core_spark.loader import load_project
+    from dataforge_core_spark.probe import validate_project
+    from dataforge_core_spark.sql_emitter import SqlEmitter
+
+    def boom(*a, **k):
+        raise AssertionError("catalog listed")
+
+    monkeypatch.setattr(spark.catalog, "listTables", boom)
+    project = load_project("projects/tpch_demo")
+    report = validate_project(spark, project)
+    assert not [r for r in report if r["status"] == "error"]
+    run_sql = SqlEmitter(
+        project, {"DATA_DIR": sf_dir}, spark=spark
+    ).emit_all(str(tmp_path))
+    assert "CREATE TABLE" in run_sql
+
+
+def test_emit_with_warm_probe_cache_runs_no_spark_job(spark, sf_dir, tmp_path):
+    """After a validate, the emitter's type reads are cache hits: it
+    builds no DataFrame and launches no Spark job."""
+    from dataforge_core_spark.loader import load_project
+    from dataforge_core_spark.probe import validate_project
+    from dataforge_core_spark.sql_emitter import SqlEmitter
+
+    project = load_project("projects/tpch_demo")
+    validate_project(spark, project)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    run_sql = SqlEmitter(
+        project, {"DATA_DIR": sf_dir}, spark=spark
+    ).emit_all(str(tmp_path))
+    assert set(tracker.getJobIdsForGroup()) - before == set()
+    # the probe types still drive decimal normalization
+    assert "AS decimal(38,12)) AS `" in run_sql
+
+
+def test_probe_store_one_flush_per_wave(spark, tmp_path, monkeypatch):
+    """A wave's fresh results reach probe_cache.json in one
+    merge-and-replace, not one per expression."""
+    from dataforge_core_spark import probe
+
+    replaced = []
+    real_replace = probe.os.replace
+    monkeypatch.setattr(
+        probe.os, "replace",
+        lambda a, b: (replaced.append(b), real_replace(a, b)),
+    )
+    prev = probe.set_probe_store(probe.ProbeStore(str(tmp_path)))
+    try:
+        probe._probe_cache.pop(spark, None)
+        exprs = [f"[This].int + {i} || 'one-flush'" for i in range(5)]
+        exprs.append("count([o].string) + 7")
+        res = probe.run_probe_wave(spark, [(e, {"int": "int"}) for e in exprs])
+        assert all(r.status == "success" for r in res)
+        assert len(replaced) == 1
+        reread = probe.ProbeStore(str(tmp_path))
+        for e, r in zip(exprs, res):
+            assert reread.get(probe.build_probe_sql(e, {"int": "int"})) == r
+    finally:
+        probe.set_probe_store(prev)
+
+
+def test_probe_wave_fuses_misses_by_kind(spark):
+    """Cache misses of one wave run as one plain and one aggregate
+    query; a window expression runs alone; results equal the solo
+    probes'."""
+    from dataforge_core_spark import probe
+
+    ptypes = {"int": "int", "decimal": "decimal", "date": "date"}
+    exprs = [
+        "[This].int * 3 + 11",
+        "[This].decimal / 7",
+        "date_add([This].date, 13)",
+        "sum([o].int) + [This].int + 17",
+        "max([o].date)",
+        "rank() OVER (ORDER BY [This].int, 19)",
+    ]
+    items = [(e, ptypes) for e in exprs]
+    prev = probe.set_probe_store(None)
+    try:
+        probe._probe_cache.pop(spark, None)
+        runs = probe.probe_stats["runs"]
+        fused = probe.run_probe_wave(spark, items)
+        assert probe.probe_stats["runs"] - runs == 3
+        hits = probe.probe_stats["hits"]
+        assert probe.run_probe_wave(spark, items) == fused
+        assert probe.probe_stats["hits"] - hits == len(exprs)
+        probe._probe_cache.pop(spark, None)
+        assert [probe.run_probe(spark, e, p) for e, p in items] == fused
+    finally:
+        probe.set_probe_store(prev)
+    assert [r.data_type for r in fused] == [
+        "int", "decimal(14,6)", "date", "bigint", "date", "int",
+    ]
