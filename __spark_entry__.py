@@ -223,7 +223,10 @@ Coverage map (SURVEY.md §2 -> query):
 
 from __future__ import annotations
 
+import glob
+import json
 import os
+import re
 import sys
 from collections.abc import Callable
 
@@ -295,61 +298,69 @@ def entry(spark: SparkSession) -> DataFrame:
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """Every implemented query — the full inventory, oracle-tested
-    locally by tests/test_oracle.py."""
+    locally by tests/test_oracle.py.
+
+    The three deepest pipeline rows come first: hub_lineitem exercises
+    multi-hop lookups, theta keys and uniqueness guards (and builds on
+    every upstream hub); the two outputs exercise channel aggregation
+    and union.  Then the extension registry, then the six simple hubs
+    that hub_lineitem builds on."""
     from dataforge_core_spark.operators import extension_queries
 
-    # Pinned ahead of everything: the three DEEPEST pipeline rows
-    # (hub_lineitem exercises multi-hop lookups, theta keys and
-    # uniqueness guards; the two outputs exercise channel aggregation
-    # and union) — the §2 core stays driver-checked every round.  The
-    # six simpler hubs, driver-green since round 2 and transitively
-    # exercised by these three (lineitem builds on every upstream hub),
-    # are relegated to the tail so the driver's 50-row capture window
-    # has room for every not-yet-proven operator row.
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {
         "hub_lineitem": _hub("tpch_lineitem"),
         "output_feature_customer": _output("feature_customer"),
         "output_entity_union": _output("entity_union"),
     }
-    relegated_hubs = (
-        ("hub_region", "tpch_region"),
-        ("hub_nation", "tpch_nation"),
-        ("hub_supplier", "tpch_supplier"),
-        ("hub_orders", "tpch_orders"),
-        ("hub_customer", "tpch_customer"),
-        ("hub_part", "tpch_part"),
-    )
-    # Stale relegated hubs rotate into the capture window (every hub
-    # whose driver record is >= 2 rounds old — operators.stale_hubs,
-    # the hub-family counterpart of the extension registry's dynamic
-    # veteran slots), so the simple-hub §2 rows get periodically
-    # re-proven instead of riding on their old records forever.
-    from dataforge_core_spark.operators import stale_hubs
-
-    hub_tbl = dict(relegated_hubs)
-    for name in stale_hubs():
-        q[name] = _hub(hub_tbl[name])
     q.update(extension_queries())
-    for name, tbl in relegated_hubs:
-        q.setdefault(name, _hub(tbl))
+    for tbl in ("region", "nation", "supplier", "orders", "customer", "part"):
+        q[f"hub_{tbl}"] = _hub(f"tpch_{tbl}")
     return q
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """The full implemented inventory — identical to ``all_queries()``.
+def _driver_records() -> tuple[int, dict[str, int]]:
+    """``(highest round, {name: round of its latest record, or -1 if
+    that record failed})`` over the repo's ``CORRECTNESS_r{N}.json``."""
+    files = sorted(
+        (int(m.group(1)), p)
+        for p in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json"))
+        if (m := re.search(r"CORRECTNESS_r(\d+)", os.path.basename(p)))
+    )
+    latest: dict[str, int] = {}
+    for rnd, path in files:
+        try:
+            with open(path) as f:
+                rec = json.load(f)
+        except (OSError, ValueError):
+            continue
+        for name, row in rec.items() if isinstance(rec, dict) else ():
+            row = row if isinstance(row, dict) else {}
+            passed = (
+                row.get("rows_match") is True
+                and row.get("schema_match") is not False
+                and row.get("hash_match") is not False
+                and not row.get("err")
+            )
+            latest[name] = rnd if passed else -1
+    return max((rnd for rnd, _ in files), default=0), latest
 
-    NOTE for the harness: in rounds 2-5 the round driver recorded at most
-    50 CORRECTNESS rows (it truncates the per-query record at 50
-    entries).  This contract deliberately does NOT trim itself to fit;
-    every implemented query is exposed.  The registry is ordered
-    least-proven-first (hub pipeline, then engine-parity / streaming /
-    nested rows, then the long-driver-green operator suites — see
-    operators/__init__.py), so the rows truncated out of the capture
-    window are the ones with the longest driver-green history; all of
-    them are value-checked against the same oracles locally by
-    tests/test_oracle.py.
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """The full implemented inventory — ``all_queries()`` reordered.
+
+    The round driver records at most 50 CORRECTNESS rows per round.
+    This contract does not trim itself to fit; it orders instead: the
+    three pinned rows of ``all_queries()`` first, then every other name
+    by ``(latest passing record round, name)`` with -1 for a name never
+    recorded or whose latest record failed.  So unproven rows enter the
+    capture window first and the stalest proofs are refreshed next.
+    Every row is value-checked locally by tests/test_oracle.py.
     """
-    return all_queries()
+    q = all_queries()
+    names = list(q)
+    rounds = _driver_records()[1]
+    rest = sorted(names[3:], key=lambda n: (rounds.get(n, -1), n))
+    return {n: q[n] for n in names[:3] + rest}
 
 
 def queries_parameterized() -> dict[str, dict]:

@@ -49,17 +49,10 @@ def _next_round() -> int:
     """Round number this bench run belongs to: one past the highest
     recorded CORRECTNESS round (the driver writes CORRECTNESS_r{N}
     after the round's bench)."""
-    import glob
-    import re
+    import __spark_entry__ as entry
 
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json"))
-        if (m := re.search(r"CORRECTNESS_r(\d+)", os.path.basename(p)))
-    ]
-    return max(rounds, default=0) + 1
+    return entry._driver_records()[0] + 1
 
-EXCLUDE: set[str] = set()
 
 # Lanes whose recorded spread exceeded their median (r6 driver record;
 # ann_ivf_probe2 r7: runs [1.016, 0.903, 7.749] — one outlier polluted
@@ -273,7 +266,7 @@ def main() -> None:
     spark = get_spark(app_name="dataforge_bench")
     host_speed = _host_speed()
     sf = SF_DIR.rstrip("/").split("sf")[-1]
-    queries = {k: v for k, v in entry.queries().items() if k not in EXCLUDE}
+    queries = entry.queries()
 
     # Phase 1: session warmup (smallest table, noop sink) + one tiny
     # synthetic query exercising the engine machinery the index builds

@@ -28,12 +28,6 @@ def _modules():
         training,
     )
 
-    # Ordered least-proven-first: the round driver records at most 50
-    # CORRECTNESS rows, so the newest rows (engine-parity, streaming,
-    # nested) must land inside its capture window; the tail it truncates
-    # is then the rows that have been driver-green since rounds 2-3
-    # (text/training/multimodal) — all still value-checked locally by
-    # tests/test_oracle.py regardless of position.
     return [
         engine_rows,
         streaming_rows,
@@ -49,199 +43,15 @@ def _modules():
     ]
 
 
-def _latest_records() -> dict:
-    """name -> (latest round it appeared in, that round's row dict),
-    scanned over every CORRECTNESS_r*.json in the repo root.
-
-    The round driver truncates its per-query record at 50 rows, so the
-    registry orders least-proven-first: rows with no driver-recorded
-    history — and rows whose most recent driver appearance FAILED — are
-    hoisted ahead of driver-green rows, which are the ones safely
-    relegated past the capture window (all of them stay value-checked
-    locally by tests/test_oracle.py regardless of position).  Records
-    are ordered by the NUMERIC round in the filename (lexicographic
-    order breaks at r100), and a name counts as proven only if its
-    latest appearance passed every recorded check — a row that failed
-    last round must be re-captured, not relegated."""
-    import glob
-    import json
-    import os
-    import re
-
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-
-    def _round(path: str) -> int:
-        m = re.search(r"CORRECTNESS_r(\d+)", os.path.basename(path))
-        return int(m.group(1)) if m else -1
-
-    latest: dict[str, tuple[int, dict]] = {}
-    for path in sorted(
-        glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")), key=_round
-    ):
-        try:
-            with open(path) as f:
-                rec = json.load(f)
-        except Exception:
-            continue
-        if isinstance(rec, dict):
-            for name, row in rec.items():
-                latest[name] = (
-                    _round(path),
-                    row if isinstance(row, dict) else {},
-                )
-    return latest
-
-
-def _passed(row: dict) -> bool:
-    return (
-        row.get("rows_match") is True
-        and row.get("schema_match") is not False
-        and row.get("hash_match") is not False
-        and not row.get("err")
-    )
-
-
-def _recorded_names() -> set:
-    """Names PROVEN by the driver CORRECTNESS records (latest
-    appearance passed every recorded check) — see _latest_records."""
-    return {
-        name
-        for name, (_rnd, row) in _latest_records().items()
-        if _passed(row)
-    }
-
-
-def _max_recorded_round() -> int:
-    import glob
-    import os
-    import re
-
-    repo = os.path.dirname(os.path.dirname(os.path.dirname(__file__)))
-    rounds = [
-        int(m.group(1))
-        for p in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))
-        if (m := re.search(r"CORRECTNESS_r(\d+)", os.path.basename(p)))
-    ]
-    return max(rounds, default=0)
-
-
-# Stale-veteran rotation: with ~145 lanes and a 50-row capture window,
-# driver-green rows would otherwise ride on their last recorded round
-# forever (engine_sql_artifact's freshest driver evidence would stay
-# r6 for the rest of the project).  Each round the veterans with the
-# OLDEST latest-recorded round are hoisted right after the unproven
-# block.  The slot count is DYNAMIC (the r8 verdict item): the window
-# holds CAPTURE_WINDOW rows of which pinned_ahead() are the entry
-# contract's pinned rows (hub_lineitem + 2 outputs + the rotating
-# hub), so whatever the unproven block doesn't use goes to stale
-# veterans — with zero unproven lanes that's ~46 refreshed per round
-# and the whole registry re-proves in ~3 rounds; a round that adds
-# many new lanes automatically shrinks the veteran block instead of
-# pushing unproven rows out of the window.  ROTATION_SLOTS is the
-# floor so at least some refresh happens even in heavy-add rounds.
-ROTATION_SLOTS = 6
-CAPTURE_WINDOW = 50
-
-# The six simple hubs the entry module relegates past the extension
-# registry (transitively exercised by hub_lineitem every round).
-HUB_POOL = (
-    "hub_region",
-    "hub_nation",
-    "hub_supplier",
-    "hub_orders",
-    "hub_customer",
-    "hub_part",
-)
-
-
-def _window_plan() -> tuple[list[str], list[str]]:
-    """The ONE computation of the capture window's refresh block
-    (r13 advice: stale_hubs' budget and _merge's veteran slots were
-    computed separately — stale_hubs budgeted CAPTURE_WINDOW-3-unproven
-    while _merge floored its veterans at ROTATION_SLOTS, so in a
-    heavy-add round hubs that won budget slots pushed _merge's floor
-    veterans past the 50-row window and the floor's refresh guarantee
-    was silently defeated).  Returns ``(hubs, veterans)``: the stale
-    hubs pinned after the 3 entry rows, and the recorded extension
-    veterans _merge seats right after the unproven block.  Both
-    populations are ranked TOGETHER by record age (oldest record wins,
-    name tie-break) into one budget of
-    ``max(ROTATION_SLOTS, CAPTURE_WINDOW - 3 - len(unproven))`` —
-    exactly what fits the window in a normal round, exactly the floor
-    in a heavy-add round (where the floor rows sit first in line
-    behind the unproven block for the next round's window).  Floor of
-    one hub (the stalest) regardless, so hub evidence cannot age
-    unboundedly; a forced-in hub takes its seat out of the same
-    budget instead of adding on top of it."""
-    latest = _latest_records()
-    mx = _max_recorded_round()
-
-    def _age_key(n: str):
-        return (latest.get(n, (0, {}))[0], n)
-
-    pool = sorted(HUB_POOL, key=_age_key)
-    cands = [n for n in pool if latest.get(n, (0, {}))[0] <= mx - 2]
-    cands = cands or pool[:1]
-
-    names: set[str] = set()
-    for m in _modules():
-        names.update(m.queries().keys())
-    recorded = sorted(names & _recorded_names())
-    unproven = names - set(recorded)
-
-    budget = max(ROTATION_SLOTS, CAPTURE_WINDOW - 3 - len(unproven))
-    combined = sorted(cands + recorded, key=_age_key)[:budget]
-    hubs = [n for n in cands if n in combined] or cands[:1]
-    vets = [n for n in combined if n not in cands]
-    return hubs, vets[: max(0, budget - len(hubs))]
-
-
-def stale_hubs() -> list[str]:
-    """Relegated hubs to hoist INTO the capture window this round:
-    every hub whose latest driver record is >= 2 rounds stale, floor
-    of one (the stalest) so the hub family keeps refreshing even when
-    all are near-fresh.  Round-10 change: the previous
-    one-hub-per-round rotation left three hubs riding r6 records while
-    the rest of the registry re-proved — the staleness rule replaces
-    the fixed count.  Round-13 change: candidate hubs COMPETE with the
-    extension registry's veterans for window slots on record age
-    (oldest record wins, name tie-break), instead of being pinned
-    unconditionally.  Round-14 change: the hub/veteran split, the
-    budget, and the ROTATION_SLOTS floor all live in _window_plan,
-    shared verbatim with _merge (r13 advice)."""
-    return _window_plan()[0]
-
-
-def pinned_ahead() -> int:
-    """Entry rows ordered ahead of the extension registry: the three
-    deep pipeline rows (hub_lineitem + 2 outputs) plus this round's
-    hoisted stale hubs — derived, not duplicated (round-9 advice)."""
-    return 3 + len(stale_hubs())
-
-
-def _merge(items: dict) -> dict:
-    """Order the registry least-proven-first: unproven rows, then the
-    veteran refresh block _window_plan budgeted (shared with
-    stale_hubs so hubs and veterans cannot double-spend window slots —
-    r13 advice), then everything else."""
-    recorded = _recorded_names()
-    fresh = {k: v for k, v in items.items() if k not in recorded}
-    for k in _window_plan()[1]:
-        if k in items:
-            fresh[k] = items[k]
-    fresh.update(items)
-    return fresh
-
-
 def extension_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
     for m in _modules():
         q.update(m.queries())
-    return _merge(q)
+    return q
 
 
 def extension_oracles() -> dict[str, str]:
     o: dict[str, str] = {}
     for m in _modules():
         o.update(m.oracles())
-    return _merge(o)
+    return o

@@ -172,11 +172,7 @@ def index_width(n_rows: int, rows_per_part: int = 50_000) -> int:
     lane's wall time.  ``ceil(n / rows_per_part)`` keeps partitions at
     a size where per-task overhead is amortized; at 100 TB the same
     formula yields thousands of partitions — the width follows the
-    index, both directions.  ``SPARK_GRAFT_INDEX_WIDTH`` forces a
-    fixed width (measurement hook for A/B-ing the sizing itself)."""
-    forced = os.environ.get("SPARK_GRAFT_INDEX_WIDTH")
-    if forced:
-        return int(forced)
+    index, both directions."""
     return max(1, (int(n_rows) + rows_per_part - 1) // rows_per_part)
 
 

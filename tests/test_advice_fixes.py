@@ -507,102 +507,6 @@ def test_session_key_is_application_id(spark):
 # ---------------------------------------------------------------------------
 
 
-def test_capture_window_constants_tied_to_authority():
-    """CAPTURE_WINDOW / PINNED_AHEAD are duplicated facts about external
-    structures (the driver's 50-row CORRECTNESS truncation; the entry
-    module's pinned-row block).  Tie them to their authorities so a
-    drift in either silently breaking the veteran-slot math becomes a
-    test failure instead (round-9 advice)."""
-    import glob
-    import json
-    import os
-
-    import __spark_entry__ as e
-    from dataforge_core_spark import operators as ops
-
-    # the driver's observed record length IS the capture window: every
-    # record is <= CAPTURE_WINDOW rows and at least one hits it exactly
-    repo = os.path.dirname(os.path.abspath(e.__file__))
-    sizes = []
-    for p in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        with open(p) as f:
-            rec = json.load(f)
-        if isinstance(rec, dict):
-            sizes.append(len(rec))
-    assert sizes, "no CORRECTNESS records found"
-    assert max(sizes) == ops.CAPTURE_WINDOW, (
-        f"driver records max out at {max(sizes)} rows but "
-        f"CAPTURE_WINDOW={ops.CAPTURE_WINDOW}"
-    )
-
-    # the pinned block = leading queries() names that are NOT extension
-    # registry rows (hub_lineitem + 2 outputs + the rotating hub)
-    ext = set()
-    for m in ops._modules():
-        ext.update(m.queries())
-    names = list(e.queries())
-    lead = 0
-    while lead < len(names) and names[lead] not in ext:
-        lead += 1
-    assert lead == ops.pinned_ahead(), (
-        f"entry pins {lead} rows ahead of the extension registry but "
-        f"pinned_ahead()={ops.pinned_ahead()}"
-    )
-    assert set(names[3:lead]) == set(ops.stale_hubs())
-    assert names[:3] == [
-        "hub_lineitem",
-        "output_feature_customer",
-        "output_entity_union",
-    ]
-    assert names[3].startswith("hub_")
-
-
-def test_window_plan_unifies_hub_and_veteran_budget(monkeypatch):
-    """Hubs and veterans share ONE refresh budget with the
-    ROTATION_SLOTS floor applied to the union (r13 advice: stale_hubs
-    budgeted the window while _merge floored its veterans separately,
-    so a heavy-add round seated ROTATION_SLOTS veterans PLUS the
-    winning hubs and pushed the floor rows past the 50-row capture
-    window)."""
-    from dataforge_core_spark import operators as ops
-
-    all_names = set()
-    for m in ops._modules():
-        all_names.update(m.queries())
-
-    def _check():
-        hubs, vets = ops._window_plan()
-        recorded = all_names & ops._recorded_names()
-        unproven = all_names - recorded
-        budget = max(
-            ops.ROTATION_SLOTS, ops.CAPTURE_WINDOW - 3 - len(unproven)
-        )
-        # the seated refresh block never exceeds the shared budget ...
-        assert len(hubs) + len(vets) <= budget
-        # ... and fills it when enough recorded rows exist
-        if len(recorded) + len(hubs) >= budget:
-            assert len(hubs) + len(vets) == budget
-        assert len(hubs) >= 1  # the stalest-hub floor
-        # _merge seats exactly the plan's veterans right after the
-        # unproven block, in plan order
-        items = {n: n for n in all_names}
-        merged = list(ops._merge(items))
-        n_fresh = len([n for n in all_names if n not in recorded])
-        assert merged[n_fresh:n_fresh + len(vets)] == vets
-        return hubs, vets, budget
-
-    # today's real composition
-    _check()
-
-    # simulated heavy-add round: only 20 recorded rows remain, the rest
-    # unproven -> the floor governs and hubs take seats OUT of it
-    few = set(sorted(all_names & ops._recorded_names())[:20])
-    monkeypatch.setattr(ops, "_recorded_names", lambda: few)
-    hubs, vets, budget = _check()
-    assert budget == ops.ROTATION_SLOTS
-    assert len(hubs) + len(vets) == ops.ROTATION_SLOTS
-
-
 def test_sq8_zero_vector_quantizes_deterministically(spark):
     """An all-zero embedding must quantize to all-zero codes (not NaN ->
     engine-dependent casts): the max-abs divisor is clamped to 1e-30
@@ -707,67 +611,6 @@ def test_narrow_session_isolates_shuffle_width(spark):
     assert back.sparkSession is spark
     assert back.count() == 13
     assert {r["k"] for r in back.collect()} == set(range(13))
-
-
-def test_window_plan_invariants_over_random_histories():
-    """Property test: under ANY record history (which lanes are
-    proven, how old each record is),
-    _window_plan keeps its invariants — the refresh block never
-    exceeds the shared budget and fills it when enough recorded rows
-    exist, at least one hub always refreshes, hubs/veterans never
-    overlap, and veterans are served strictly oldest-record-first."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    from dataforge_core_spark import operators as ops
-
-    all_names = set()
-    for m in ops._modules():
-        all_names.update(m.queries())
-    universe = sorted(all_names)
-
-    @settings(max_examples=60, deadline=None)
-    @given(data=st.data())
-    def _run(data):
-        recorded = set(
-            data.draw(
-                st.lists(st.sampled_from(universe), unique=True),
-                label="recorded",
-            )
-        )
-        rounds = {
-            n: data.draw(st.integers(min_value=1, max_value=14),
-                         label=f"round_{n}")
-            for n in recorded | set(ops.HUB_POOL)
-        }
-        orig = (ops._recorded_names, ops._latest_records,
-                ops._max_recorded_round)
-        try:
-            ops._recorded_names = lambda: recorded
-            ops._latest_records = lambda: {
-                n: (r, {}) for n, r in rounds.items()
-            }
-            ops._max_recorded_round = lambda: max(rounds.values(), default=0)
-            hubs, vets = ops._window_plan()
-        finally:
-            (ops._recorded_names, ops._latest_records,
-             ops._max_recorded_round) = orig
-
-        unproven = all_names - recorded
-        budget = max(
-            ops.ROTATION_SLOTS, ops.CAPTURE_WINDOW - 3 - len(unproven)
-        )
-        assert len(hubs) >= 1
-        assert set(hubs) <= set(ops.HUB_POOL)
-        assert not set(hubs) & set(vets)
-        assert set(vets) <= recorded
-        assert len(hubs) + len(vets) <= budget
-        if len(recorded) + len(hubs) >= budget:
-            assert len(hubs) + len(vets) == budget
-        ages = [(rounds[v], v) for v in vets]
-        assert ages == sorted(ages), "veterans not oldest-first"
-
-    _run()
 
 
 # ---------------------------------------------------------------------------
@@ -888,9 +731,9 @@ def test_bench_stamp_schema_marker():
     ast.parse(src)
 
 
-def test_index_width_sizing(monkeypatch):
+def test_index_width_sizing():
     """index_width sizes a stored index to its relation: ceil over
-    rows_per_part, floor 1, env-forceable for A/B measurement (r15)."""
+    rows_per_part, floor 1 (r15)."""
     from dataforge_core_spark.session import index_width
 
     assert index_width(0) == 1
@@ -899,5 +742,3 @@ def test_index_width_sizing(monkeypatch):
     assert index_width(50_001) == 2
     assert index_width(5_000_000) == 100
     assert index_width(128_000, 32_000) == 4
-    monkeypatch.setenv("SPARK_GRAFT_INDEX_WIDTH", "7")
-    assert index_width(10**9) == 7
