@@ -58,6 +58,7 @@ from dataforge_core_spark.plans.planner import (
     SourcePlan,
     plan_source,
 )
+from dataforge_core_spark.session import sql_conf
 
 # aggregates whose LATERAL form returns a non-NULL value over an empty
 # correlated set; after the groupBy+join decorrelation the no-match rows
@@ -70,7 +71,7 @@ _BACKTICKED = re.compile(r"`([A-Za-z0-9_]+)`")
 
 
 def _prefix_all(df: DataFrame, prefix: str) -> DataFrame:
-    return df.select([F.col(c).alias(prefix + c) for c in df.columns])
+    return df.toDF(*[prefix + c for c in df.columns])
 
 
 def sub_source_sql(project: Project, graph: RelationGraph, sub: Source) -> str:
@@ -408,6 +409,34 @@ class SourceCompiler:
         self.project = project
         self.graph = RelationGraph(project.relations)
         self._by_name = project.source_by_name()
+        # hub name -> (frame, bytes) for the latest frame of each hub
+        # measured as it was materialized (ProjectRunner.build_checkpointed)
+        self._measured: dict[str, tuple[DataFrame, int]] = {}
+
+    def record_hub_size(self, name: str, hub: DataFrame, rows: int) -> None:
+        """Record a materialized hub's measured size: ``rows`` times the
+        schema's default row width, Spark's own ``rowCount ×
+        getSizePerRow`` estimate (8 bytes of row overhead plus each
+        column type's default size).  It applies to this exact frame
+        only; any frame derived from it keeps Catalyst's estimate."""
+        width = 8 + hub._jdf.schema().defaultSize()
+        self._measured[name] = (hub, rows * width)
+
+    def _broadcast_if_small(
+        self, side: DataFrame, reads: list[tuple[str, DataFrame]]
+    ) -> DataFrame:
+        """``side`` (the non-driving side of a join) with a broadcast
+        hint when every hub frame it reads (``(name, frame)`` pairs) is
+        the frame measured for that hub and the sizes sum to at most the session's ``autoBroadcastJoinThreshold`` (-1
+        disables broadcasting); otherwise unchanged, so the planner
+        decides from its own estimates."""
+        sizes = [self._measured.get(n, (None, 0)) for n, _ in reads]
+        if not reads or any(m[0] is not f for m, (_, f) in zip(sizes, reads)):
+            return side
+        limit = sql_conf(self.spark).autoBroadcastJoinThreshold()
+        if 0 <= sum(m[1] for m in sizes) <= limit:
+            return side.hint("broadcast")
+        return side
 
     # ------------------------------------------------------------------
     # source (hub) compilation
@@ -610,7 +639,7 @@ class SourceCompiler:
                 "recalculation requires every keep_current window rule to "
                 "partition by the same raw attribute columns"
             )
-        sel = changed_keys.select(*keys).distinct()
+        sel = changed_keys.select(*keys)  # a semi/anti build side only
         changed, unchanged = self._nullsafe_key_split(existing, sel, keys)
         return self.recalculate(source, changed, hubs).unionByName(unchanged)
 
@@ -640,24 +669,45 @@ class SourceCompiler:
         (old ∪ new) raw rows.
         """
         appended = self._compile(source, new_base, hubs)
-        merged = existing.unionByName(appended)
+        return self._merge_recompute(source, existing, appended, None, hubs)
+
+    def _merge_recompute(
+        self,
+        source: Source,
+        kept: DataFrame,
+        incoming: DataFrame,
+        displaced: DataFrame | None,
+        hubs: dict[str, DataFrame],
+    ) -> DataFrame:
+        """``kept ∪ incoming`` with the whole-table-scoped columns
+        (window closure + uniqueness flags) re-derived as a full rebuild
+        would.  When every recomputed window partitions by the same raw
+        columns, only the ``kept`` rows in a window partition that
+        ``incoming`` (or ``displaced``, the rows ``incoming`` replaces)
+        touches are recomputed, together with ``incoming``; every
+        ``incoming`` row is in a touched partition by construction, so
+        the split runs over ``kept`` alone.  The key sets are only the
+        build side of semi/anti joins, where duplicates change nothing,
+        so they are not de-duplicated."""
         affected = self.recalculation_closure(source)
         affected |= {r.name for r in source.rules if r.unique}
-        if not affected:
-            return merged
         status, keys = self._window_confinement(source, affected)
         if status == "none":
             # per-row semantics only — values computed on the new rows
             # alone equal a whole-table recompute
-            return merged
-        if status == "keys":
-            sel = appended.select(*keys).distinct()
-            changed, unchanged = self._nullsafe_key_split(merged, sel, keys)
-            changed = self.recalculate(
-                source, changed, hubs, affected=affected
+            return kept.unionByName(incoming)
+        if status == "unconfined":
+            return self.recalculate(
+                source, kept.unionByName(incoming), hubs, affected=affected
             )
-            return changed.unionByName(unchanged)
-        return self.recalculate(source, merged, hubs, affected=affected)
+        sel = incoming.select(*keys)
+        if displaced is not None:
+            sel = sel.unionByName(displaced.select(*keys))
+        touched, unchanged = self._nullsafe_key_split(kept, sel, keys)
+        changed = self.recalculate(
+            source, touched.unionByName(incoming), hubs, affected=affected
+        )
+        return changed.unionByName(unchanged)
 
     def incremental_upsert(
         self,
@@ -683,33 +733,13 @@ class SourceCompiler:
         the upserted raw input.
         """
         replaced = self._compile(source, new_base, hubs)
-        key_sel = replaced.select(*upsert_keys).distinct()
         # Null-safe match: a NULL-keyed incoming row REPLACES the
         # NULL-keyed existing rows (re-running the same upsert is a
         # no-op); plain ``=`` would append a fresh copy every run.
         displaced, kept = self._nullsafe_key_split(
-            existing, key_sel, upsert_keys
+            existing, replaced.select(*upsert_keys), upsert_keys
         )
-        merged = kept.unionByName(replaced)
-        affected = self.recalculation_closure(source)
-        affected |= {r.name for r in source.rules if r.unique}
-        if not affected:
-            return merged
-        status, keys = self._window_confinement(source, affected)
-        if status == "none":
-            return merged
-        if status == "keys":
-            sel = (
-                replaced.select(*keys)
-                .unionByName(displaced.select(*keys))
-                .distinct()
-            )
-            changed, unchanged = self._nullsafe_key_split(merged, sel, keys)
-            changed = self.recalculate(
-                source, changed, hubs, affected=affected
-            )
-            return changed.unionByName(unchanged)
-        return self.recalculate(source, merged, hubs, affected=affected)
+        return self._merge_recompute(source, kept, replaced, displaced, hubs)
 
     def compile_source(
         self, source: Source, base: DataFrame, hubs: dict[str, DataFrame]
@@ -870,8 +900,9 @@ class SourceCompiler:
         hubs: dict[str, DataFrame],
         df_self: DataFrame,
         upto: int,
-    ) -> DataFrame:
-        """LEFT-JOINed chain of hub h0..h{upto}, columns prefixed per hop."""
+    ) -> tuple[DataFrame, list[tuple[str, DataFrame]]]:
+        """LEFT-JOINed chain of hub h0..h{upto}, columns prefixed per
+        hop, and the (hub name, frame) pairs it reads."""
         hops = join.path.hops
         pid = join.pathid
 
@@ -881,17 +912,20 @@ class SourceCompiler:
             return self._hub(hop_dst, hubs)
 
         pref = lambda i: f"__{pid}_h{i}__"  # noqa: E731
-        chain = _prefix_all(hub_df(hops[0].dst), pref(0))
+        reads = [(hop.dst, hub_df(hop.dst)) for hop in hops[: upto + 1]]
+        chain = _prefix_all(reads[0][1], pref(0))
         for i in range(1, upto + 1):
             hop = hops[i]
-            nxt = _prefix_all(hub_df(hop.dst), pref(i))
+            nxt = self._broadcast_if_small(
+                _prefix_all(reads[i][1], pref(i)), [reads[i]]
+            )
             rules_dst = self._by_name[hop.dst].rule_by_name()
             # hop.src side carries pref(i-1); hop.dst side pref(i)
             this_pref = pref(i - 1) if hop.forward else pref(i)
             rel_pref = pref(i) if hop.forward else pref(i - 1)
             cond = _rewrite_relation(hop, this_pref, rel_pref, rules_dst)
             chain = chain.join(nxt, F.expr(cond), "left")
-        return chain
+        return chain, reads
 
     def _first_hop_cond(
         self, join: JoinElement, source: Source, related_prefix: str
@@ -912,7 +946,7 @@ class SourceCompiler:
         hops = join.path.hops
         pid = join.pathid
         last = len(hops) - 1
-        chain = self._chain(join, hubs, df, last)
+        chain, reads = self._chain(join, hubs, df, last)
         # project: first-hop related-side cols (for the outer predicate)
         # + needed target attrs under their final names
         keep = [
@@ -930,7 +964,7 @@ class SourceCompiler:
             F.col(f"__{pid}_h0__{a}")
             for a in sorted(set(first_cols) | set(guard_cols))
         ]
-        chain = chain.select(*keep)
+        chain = self._broadcast_if_small(chain.select(*keep), reads)
         cond = self._first_hop_cond(join, source, f"__{pid}_h0__")
         out = df.join(chain, F.expr(cond), "left")
         # drop the join-key helper columns; keep only the needed outputs
@@ -953,11 +987,12 @@ class SourceCompiler:
         join: JoinElement,
         hubs: dict[str, DataFrame],
         df_self: DataFrame | None = None,
-    ) -> DataFrame:
+    ) -> tuple[DataFrame, list[tuple[str, DataFrame]]]:
         """The aggregation input: the M-target hub with all transit
         sources pre-joined (SURVEY §7.3 — transit attrs referenced inside
         the aggregate come from cardinality-1 paths *from the target*),
-        exposed under the planner's `__TR__<src>__<attr>` names.
+        exposed under the planner's `__TR__<src>__<attr>` names, and the
+        (hub name, frame) pairs it reads.
 
         For self-relation aggregates the target is the in-flight frame
         (mirroring :meth:`_chain`'s ``df_self`` handling) — the hub for
@@ -987,6 +1022,7 @@ class SourceCompiler:
                     needed.setdefault(s, {})[m.group(1)] = (
                         f"__TR__{s}__{m.group(1)}"
                     )
+        reads = [(m_hop.dst, target)]
         for s, attrs in needed.items():
             tmp = JE(
                 path=paths[s],
@@ -995,7 +1031,8 @@ class SourceCompiler:
                 needed=attrs,
             )
             target = self._apply_lookup(target, tmp, target_src, hubs)
-        return target
+            reads += [(h.dst, self._hub(h.dst, hubs)) for h in paths[s].hops]
+        return target, reads
 
     def _apply_aggregate(
         self,
@@ -1014,7 +1051,7 @@ class SourceCompiler:
             # apply; fall back to join + group on a synthetic row key
             # (exact LATERAL semantics, more shuffle)
             return self._apply_aggregate_rowkey(df, join, source, hubs)
-        target = self._agg_target_side(join, hubs, df_self=df)
+        target, reads = self._agg_target_side(join, hubs, df_self=df)
         # group keys: the M-target side of each equi conjunct
         # (dst side of the hop); rewrite [This]/[Related] tokens to bare cols
         key_exprs: list[str] = []
@@ -1034,7 +1071,9 @@ class SourceCompiler:
                     spec.out_col
                 )
             )
-        aggdf = target.groupBy(*gb).agg(*aggs)
+        aggdf = self._broadcast_if_small(
+            target.groupBy(*gb).agg(*aggs), reads
+        )
 
         if len(hops) == 1:
             # join df directly on our-side exprs == group keys
@@ -1046,7 +1085,7 @@ class SourceCompiler:
             # chain h0..h{n-2} (all cardinality-1), then attach aggdf on the
             # M hop, then join df on the first hop
             upto = len(hops) - 2
-            chain = self._chain(join, hubs, df, upto)
+            chain, chain_reads = self._chain(join, hubs, df, upto)
             src_pref = f"__{pid}_h{upto}__"
             cond = " AND ".join(
                 f"({self._prefixed(src, src_pref)}) = `__{pid}__k{j}`"
@@ -1056,7 +1095,9 @@ class SourceCompiler:
             first_cols = self._hop_side_cols(hops[0], related=True)
             keep = [F.col(c) for c in aggdf.columns if c.startswith(f"__{pid}__a")]
             keep += [F.col(f"__{pid}_h0__{a}") for a in sorted(set(first_cols))]
-            chain = chain.select(*keep)
+            chain = self._broadcast_if_small(
+                chain.select(*keep), chain_reads + reads
+            )
             outer = self._first_hop_cond(join, source, f"__{pid}_h0__")
             out = df.join(chain, F.expr(outer), "left")
             out = out.drop(
@@ -1120,8 +1161,9 @@ class SourceCompiler:
         keyed = df.withColumn(
             rid, F.monotonically_increasing_id()
         ).localCheckpoint(eager=True)
-        target = _prefix_all(
-            self._agg_target_side(join, hubs, df_self=keyed), f"__{pid}_t__"
+        target, reads = self._agg_target_side(join, hubs, df_self=keyed)
+        target = self._broadcast_if_small(
+            _prefix_all(target, f"__{pid}_t__"), reads
         )
         rules_dst = self._by_name[m_hop.dst].rule_by_name()
         this_pref, rel_pref = (

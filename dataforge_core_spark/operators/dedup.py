@@ -32,6 +32,7 @@ from dataforge_core_spark.operators._store import stored
 from dataforge_core_spark.session import (
     free_local_checkpoint,
     session_key,
+    sql_conf,
 )
 
 MINHASH_N = 12  # signature length
@@ -1821,6 +1822,8 @@ def _substring_clean_sql(
     pos_src: str | None = None,
     lens_src: str | None = None,
     toks_src: str | None = None,
+    shuffle_hash: bool = False,
+    select: str | None = None,
 ) -> str:
     """The REMOVAL transform on top of the measurement: every
     duplicated window occurrence except the corpus-canonical one
@@ -1832,7 +1835,9 @@ def _substring_clean_sql(
     of another is removed (conservative by construction, documented
     semantics).  The canonical pick is one rank-1 window per hash over
     the position relation; the span cut is an equi-join on doc_id with
-    a range conjunct against the (few) spans of that doc."""
+    a range conjunct against the (few) spans of that doc.
+    ``shuffle_hash`` hints the final lens ⋈ agg join (Spark only);
+    ``select`` replaces the final statement over the CTEs."""
     w = SUBSTR_WIN
     mat = "MATERIALIZED " if dialect == "duck" else ""
     if dialect == "spark":
@@ -1858,17 +1863,9 @@ def _substring_clean_sql(
         # buffers cannot shrink map-side — the r15 pack rule); the
         # per-doc lens ⋈ agg join is a hash equi-join of two
         # corpus-cardinality relations, so SMJ's sorts are pure
-        # overhead (guide §3.1).  SCALE ASSUMPTION (r15 advice): the
-        # SHUFFLE_HASH build side is agg — one row per doc CARRYING
-        # cleaned_text, so per-partition build memory is
-        # (corpus bytes / shuffle partitions).  That holds as long as
-        # shuffle width scales with the corpus (the session derives it
-        # from cores locally; a 100 TB deployment sizes partitions to
-        # the 100 MB–1 GB band per guide §2.2, keeping each build-side
-        # partition bounded); where width cannot scale, drop the hint
-        # and let sort-merge spill.
+        # overhead (guide §3.1) where the caller's size check passes.
         rep_hint = "/*+ REPARTITION(doc_id) */ "
-        shj_hint = "/*+ SHUFFLE_HASH(a) */ "
+        shj_hint = "/*+ SHUFFLE_HASH(a) */ " if shuffle_hash else ""
     else:
         t = f"SELECT doc_id, {_DUCK_TOKENS} AS tok FROM documents"
         pos = f"""
@@ -1890,6 +1887,12 @@ def _substring_clean_sql(
     lens_cte = lens_src or (
         f"SELECT doc_id, CAST({szfn}(tok) AS BIGINT) AS n_tokens FROM t"
     )
+    final = f"""SELECT {shj_hint}l.doc_id, l.n_tokens,
+       l.n_tokens - COALESCE(a.n_kept, 0) AS n_removed,
+       CAST((1000000 * (l.n_tokens - COALESCE(a.n_kept, 0)))
+            {idiv} l.n_tokens AS BIGINT) AS removed_ppm,
+       COALESCE(a.cleaned_text, '') AS cleaned_text
+FROM lens l LEFT JOIN agg a ON l.doc_id = a.doc_id"""
     return f"""
 WITH t AS {mat}({t}),
 pos AS {mat}({pos}),
@@ -1929,12 +1932,7 @@ agg AS (
   FROM (SELECT {rep_hint}* FROM kept) kr GROUP BY doc_id
 ),
 lens AS ({lens_cte})
-SELECT {shj_hint}l.doc_id, l.n_tokens,
-       l.n_tokens - COALESCE(a.n_kept, 0) AS n_removed,
-       CAST((1000000 * (l.n_tokens - COALESCE(a.n_kept, 0)))
-            {idiv} l.n_tokens AS BIGINT) AS removed_ppm,
-       COALESCE(a.cleaned_text, '') AS cleaned_text
-FROM lens l LEFT JOIN agg a ON l.doc_id = a.doc_id
+{select or final}
 """
 
 
@@ -1955,8 +1953,9 @@ def dedup_substring_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pname, lname = _substr_views(spark, sf_dir)
     tname = _token_base_view(spark, sf_dir)
-    return spark.sql(
-        _substring_clean_sql(
+
+    def sql(**kw) -> str:
+        return _substring_clean_sql(
             "spark",
             pos_src=f"SELECT doc_id, i, h FROM {pname}",
             lens_src=(
@@ -1964,7 +1963,26 @@ def dedup_substring_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
                 f"FROM {lname}"
             ),
             toks_src=f"SELECT doc_id, pos AS j, tk FROM {tname}",
+            **kw,
         )
+
+    return spark.sql(sql(shuffle_hash=_fits_shuffled_hash(
+        spark.sql(sql(select="SELECT * FROM agg"))
+    )))
+
+
+def _fits_shuffled_hash(build: DataFrame) -> bool:
+    """Spark's own size rule for a shuffled hash join's build side
+    (JoinSelection's ``canBuildLocalHashMapBySize``): its estimated
+    bytes under ``autoBroadcastJoinThreshold × spark.sql.shuffle
+    .partitions``, so that each partition's hash map stays about one
+    broadcast's size.  The agg side of dedup_substring_clean carries
+    every doc's cleaned text; where the estimate fails the rule, the
+    join is left to the planner (sort-merge, which spills)."""
+    conf = sql_conf(build.sparkSession)
+    est = build._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return est < (
+        conf.autoBroadcastJoinThreshold() * conf.numShufflePartitions()
     )
 
 

@@ -22,7 +22,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from dataforge_core_spark.compiler import SourceCompiler
 from dataforge_core_spark.model import Project, ProjectError
@@ -98,15 +99,20 @@ class ProjectRunner:
 
     def build_checkpointed(self) -> dict[str, DataFrame]:
         """Compile AND materialize every hub as an eager local
-        checkpoint, level-parallel.
+        checkpoint, level-parallel, measuring each hub as it is stored.
 
         Downstream hubs compile against the already-checkpointed
         upstream frames (plain ``LogicalRDD`` scans), so each hub's
-        materialization job runs exactly its own pipeline — no persist /
-        double-store, no re-expansion of upstream plans — and hubs
-        within a topological level checkpoint concurrently (Spark's
-        scheduler interleaves the independent jobs across the local
-        cores; on a cluster, across executors).  This is the in-session
+        materialization job runs exactly its own pipeline, and hubs
+        within a topological level checkpoint concurrently.  A
+        checkpoint keeps Catalyst's estimate of the plan it came from,
+        which multiplies across joins (about 1e89 bytes for a 60k-row
+        lineitem hub), so every downstream lookup would shuffle its fact
+        side.  :meth:`materialize` avoids that through real file sizes;
+        here each checkpoint job also counts its rows through an
+        ``Observation`` (no extra job), and the compiler sizes later
+        lookup and aggregate joins from those counts
+        (``SourceCompiler.record_hub_size``).  This is the in-session
         equivalent of :meth:`materialize`'s parquet writes, for callers
         that want hot frames instead of files.
         """
@@ -119,7 +125,11 @@ class ProjectRunner:
                 src = by_name[name]
                 base = read_source(self.spark, src, self.substitutions)
                 df = self.compiler.compile_source(src, base, hubs)
-                return name, df.localCheckpoint(eager=True)
+                rows = Observation()
+                hub = df.observe(rows, F.count(F.lit(1)).alias("n"))
+                hub = hub.localCheckpoint(eager=True)
+                self.compiler.record_hub_size(name, hub, rows.get["n"])
+                return name, hub
 
             if len(level) == 1:
                 done = [_ckpt(level[0])]

@@ -65,6 +65,14 @@ def session_key(spark: SparkSession) -> str:
     return spark.sparkContext.applicationId
 
 
+def sql_conf(spark: SparkSession):
+    """The session's JVM ``SQLConf``, whose typed getters
+    (``autoBroadcastJoinThreshold()``, ``numShufflePartitions()``) give
+    the values the planner itself uses, with byte-size strings such as
+    ``64MB`` already parsed."""
+    return spark._jsparkSession.sessionState().conf()
+
+
 import contextlib as _contextlib
 import threading as _threading
 

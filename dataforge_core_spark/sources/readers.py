@@ -10,14 +10,21 @@ u_validate_output.sql:21-76.
 This module keeps those semantics but adds direct-path reading (parquet /
 csv / json / orc) so the engine also runs without a metastore.  All reads
 go through ``spark.read`` — scans are DataSource-v2, so Catalyst pushes
-filters and prunes columns into the file format.
+filters and prunes columns into the file format.  A local parquet read
+passes the schema read from its footer, so Spark runs no
+schema-inference job (:func:`footer_schema`).
 """
 
 from __future__ import annotations
 
+import json
 import os
+from urllib.parse import urlparse
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import types as T
 
 from dataforge_core_spark.model import ProjectError, Source
 
@@ -29,10 +36,107 @@ def resolve_table_ref(ref: str, substitutions: dict[str, str] | None) -> str:
     return out
 
 
+# Arrow types whose Spark parquet inference is unambiguous; decimal128
+# and timestamps are mapped in _footer_field, every other type leaves
+# the inference to Spark.
+_ARROW_TO_SPARK = {
+    pa.int32(): T.IntegerType(),
+    pa.int64(): T.LongType(),
+    pa.float32(): T.FloatType(),
+    pa.float64(): T.DoubleType(),
+    pa.bool_(): T.BooleanType(),
+    pa.string(): T.StringType(),
+    pa.date32(): T.DateType(),
+}
+# Spark stores its own schema under this footer key and prefers it to
+# the parquet types when inferring.
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _footer_field(f: pa.Field, column, ntz: bool) -> T.DataType | None:
+    """Spark's inferred type for one flat parquet column, or None."""
+    if f.metadata:  # field ids and the like carry into Spark's schema
+        return None
+    if pa.types.is_decimal128(f.type):
+        return T.DecimalType(f.type.precision, f.type.scale)
+    if pa.types.is_timestamp(f.type):
+        # the footer decides, not the Arrow type: INT96 always reads as
+        # timestamp, and nanoseconds do not read at all
+        lt = json.loads(column.logical_type.to_json())
+        if column.physical_type != "INT64" or lt["Type"] != "Timestamp":
+            return None
+        if lt["timeUnit"] == "nanoseconds":
+            return None
+        if lt["isAdjustedToUTC"] or not ntz:
+            return T.TimestampType()
+        return T.TimestampNTZType()
+    return _ARROW_TO_SPARK.get(f.type)
+
+
+def _file_schema(path: str, ntz: bool) -> T.StructType | None:
+    pf = pq.ParquetFile(path)
+    if _SPARK_SCHEMA_KEY in (pf.metadata.metadata or {}):
+        return None
+    arrow = pf.schema_arrow
+    if pf.metadata.num_columns != len(arrow):  # nested columns
+        return None
+    fields = []
+    for i, f in enumerate(arrow):
+        dt = _footer_field(f, pf.schema.column(i), ntz)
+        if dt is None:
+            return None
+        fields.append(T.StructField(f.name, dt, True))
+    return T.StructType(fields)
+
+
+def footer_schema(spark: SparkSession, ref: str) -> T.StructType | None:
+    """The schema ``spark.read.parquet(ref)`` infers, read in-process
+    from the footer of a local parquet file or directory, or None when
+    Spark's own inference must decide: a URI or a non-local default
+    file system, a type outside the fixed mapping, an unreadable footer,
+    a Spark-written file, or a directory with subdirectories, summary
+    files or part files whose schemas differ.  File sources read every
+    column as nullable, so every field here is nullable."""
+    if urlparse(ref).scheme or not str(
+        spark._jsc.hadoopConfiguration().get("fs.defaultFS", "file:///")
+    ).startswith("file:"):
+        return None
+    if os.path.isdir(ref):
+        # Spark skips names starting with "_" or "." except its summary
+        # files, which it reads in place of the part files
+        names = os.listdir(ref)
+        if any(n.startswith(("_metadata", "_common_metadata")) for n in names):
+            return None
+        paths = [
+            os.path.join(ref, n) for n in sorted(names)
+            if not n.startswith((".", "_"))
+        ]
+        if not paths or not all(map(os.path.isfile, paths)):
+            return None
+    elif os.path.isfile(ref):
+        paths = [ref]
+    else:
+        return None
+    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled")
+    try:
+        schemas = [_file_schema(p, ntz == "true") for p in paths]
+    except (OSError, pa.ArrowException):
+        return None
+    if schemas[0] is None or any(s != schemas[0] for s in schemas[1:]):
+        return None
+    return schemas[0]
+
+
+def _read_parquet(spark: SparkSession, ref: str) -> DataFrame:
+    schema = footer_schema(spark, ref)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(ref)
+
+
 def read_table(spark: SparkSession, ref: str) -> DataFrame:
     lower = ref.lower()
     if lower.endswith(".parquet") or lower.endswith(".pq"):
-        return spark.read.parquet(ref)
+        return _read_parquet(spark, ref)
     if lower.endswith(".csv"):
         return spark.read.option("header", "true").csv(ref)
     if lower.endswith(".json") or lower.endswith(".jsonl"):
@@ -42,7 +146,7 @@ def read_table(spark: SparkSession, ref: str) -> DataFrame:
     if lower.endswith(".avro"):
         return spark.read.format("avro").load(ref)
     if os.path.sep in ref and os.path.isdir(ref):
-        return spark.read.parquet(ref)
+        return _read_parquet(spark, ref)
     return spark.table(ref)
 
 
@@ -81,6 +185,11 @@ def read_source(
     Emits only declared columns (ReadSchema pruning reaches the scan) and
     casts each to the declared type — the reference trusts the catalog
     schema instead; the explicit cast makes local files behave the same.
+    A local parquet source is read with the schema from its footer
+    (:func:`footer_schema`), so the read starts no Spark job.  The
+    declared types cannot replace the file's: a declared ``timestamp``
+    is often ``timestamp_ntz`` in the file (the tpch sources are), so
+    the scan reads the file's type and the cast converts it.
     """
     from pyspark.sql import types as T
 

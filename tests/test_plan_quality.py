@@ -115,6 +115,57 @@ def test_dimension_lookup_broadcasts(project, spark, sf_dir):
             assert "orderkey" in line, f"dimension-key SMJ: {line}"
 
 
+def _lineitem_on_checkpointed_hubs(project, spark, sf_dir):
+    r = ProjectRunner(spark, project, {"DATA_DIR": sf_dir},
+                      persist_hubs=False)
+    hubs = r.build_checkpointed()
+    src = project.source_by_name()["tpch_lineitem"]
+    base = read_source(spark, src, {"DATA_DIR": sf_dir})
+    return r, hubs, src, base
+
+
+def test_checkpointed_hub_lookups_broadcast(project, spark, sf_dir):
+    """On build_checkpointed hubs, a hub's lookups are sized from the
+    measured upstream hubs, not from Catalyst's product-of-joins
+    estimate that a checkpoint keeps (about 1e89 bytes for lineitem at
+    sf0.01): no lookup or aggregate join of lineitem sort-merges."""
+    r, hubs, src, base = _lineitem_on_checkpointed_hubs(
+        project, spark, sf_dir
+    )
+    plan = _plan(r.compiler.compile_source(src, base, hubs))
+    assert "SortMergeJoin" not in plan
+    assert plan.count("BroadcastHashJoin") >= 4
+
+
+@pytest.mark.parametrize("threshold", ["-1", "1b"])
+def test_checkpointed_hub_hints_follow_threshold(project, spark, sf_dir,
+                                                 threshold):
+    """With broadcasting off (-1), or a threshold below every hub's
+    measured size, no hint is added: the plan is the one compiled
+    without any measured size."""
+    import re as _re
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    r, hubs, src, base = _lineitem_on_checkpointed_hubs(
+        project, spark, sf_dir
+    )
+
+    def optimized(compiler):
+        out = _optimized(compiler.compile_source(src, base, hubs))
+        return _re.sub(r"#\d+L?", "#", out)
+
+    spark.conf.set(key, threshold)
+    try:
+        measured = optimized(r.compiler)
+        r.compiler._measured.clear()
+        unmeasured = optimized(r.compiler)
+    finally:
+        spark.conf.set(key, prev)
+    assert "strategy=broadcast" not in measured
+    assert measured == unmeasured
+
+
 def test_rule_pipeline_stays_in_codegen(project, spark, sf_dir):
     """Derived-column rules compile to F.expr over built-ins — the hub
     projection must sit inside WholeStageCodegen spans (no Python/UDF
@@ -585,6 +636,37 @@ def test_corpus_pipeline_no_self_join(spark):
     assert "SortMergeJoin" not in sub, (
         "substring_clean lens ⋈ pack fell back to sort-merge"
     )
+
+
+def test_substring_clean_shuffle_hash_kept_under_size_rule(spark, sf_dir):
+    """dedup_substring_clean keeps its SHUFFLE_HASH(a) hint when the
+    agg build side's estimate is under autoBroadcastJoinThreshold ×
+    spark.sql.shuffle.partitions (Spark's own shuffled-hash size
+    rule)."""
+    from dataforge_core_spark.operators import dedup as D
+
+    df = D.dedup_substring_clean(spark, sf_dir)
+    assert "strategy=shuffle_hash" in _optimized(df)
+    assert "ShuffledHashJoin" in _plan(df)
+
+
+def test_substring_clean_shuffle_hash_dropped_over_size_rule(spark, sf_dir):
+    """Where the build side's estimate fails the rule, the hint is
+    dropped and the planner picks the join: here a 1-byte threshold
+    (times the session's shuffle partitions) is below any estimate."""
+    from dataforge_core_spark.operators import dedup as D
+
+    sf = sf_dir
+    D.dedup_substring_clean(spark, sf)  # indexes built at the defaults
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "1b")
+    try:
+        df = D.dedup_substring_clean(spark, sf)
+        assert "shuffle_hash" not in _optimized(df)
+        assert "SortMergeJoin" in _plan(df)
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_decon_shingles_are_scan_side(spark, sf_dir):

@@ -301,3 +301,32 @@ def test_incremental_append_equals_full_rebuild_windowed(spark, sf_dir):
     a = sorted(map(repr, updated.select(*cols).collect()))
     b = sorted(map(repr, full.select(*cols).collect()))
     assert a == b
+
+
+def test_upsert_plan_recomputes_window_once(spark, sf_dir):
+    """The upsert splits only the kept hub rows by the touched window
+    keys and recomputes them together with the incoming batch, so the
+    plan holds one Window: the batch's own window value is never used
+    (every incoming row is in a touched partition) and Catalyst prunes
+    it."""
+    from dataforge_core_spark.operators.engine_rows import (
+        _orders_only_project,
+    )
+    from dataforge_core_spark.runner import ProjectRunner
+    from dataforge_core_spark.sources.readers import read_source
+
+    project, orders = _orders_only_project()
+    runner = ProjectRunner(
+        spark, project, {"DATA_DIR": sf_dir}, persist_hubs=False
+    )
+    raw = read_source(spark, orders, {"DATA_DIR": sf_dir})
+    existing = runner.compiler.compile_source(orders, raw, {})
+    batch = raw.filter("o_orderkey % 97 = 0").withColumn(
+        "o_custkey", raw.o_custkey + 1
+    )
+    updated = runner.compiler.incremental_upsert(
+        orders, existing.localCheckpoint(eager=True), batch,
+        ["o_orderkey"], {},
+    )
+    plan = updated._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("Window [") == 1, plan
