@@ -34,6 +34,7 @@ from dataforge_core_spark.session import (
     session_key,
     sql_conf,
 )
+from dataforge_core_spark.sources.readers import read_table
 
 MINHASH_N = 12  # signature length
 MINHASH_BANDS = 4  # bands of r = N/BANDS rows
@@ -117,7 +118,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     The REPARTITION hint spreads the single-file local scan; the window's
     partition key is the digest, so group state is one shuffle wide."""
     par = spark.sparkContext.defaultParallelism
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
+    read_table(spark, f"{sf_dir}/documents.parquet").createOrReplaceTempView(
         "documents"
     )
     return spark.sql(
@@ -210,7 +211,7 @@ def _token_base(spark: SparkSession, sf_dir: str):
     from pyspark.sql import functions as F
 
     par = spark.sparkContext.defaultParallelism
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_table(spark, f"{sf_dir}/documents.parquet")
     return (
         docs.repartition(par, "doc_id")
         .select(
@@ -670,7 +671,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Disposition (exact_dup / near_dup / unique) for each new-batch doc."""
     pairs = _verified_pairs(spark, sf_dir, MAX_BAND_BUCKET)
     pairs.select("doc_a", "doc_b").createOrReplaceTempView("mh_pairs")
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
+    read_table(spark, f"{sf_dir}/documents.parquet").createOrReplaceTempView(
         "documents"
     )
     new_a = f"doc_a % {INCR_MOD} >= {INCR_NEW_GE}"
@@ -782,7 +783,7 @@ def _near_dedup_stored(
         .localCheckpoint(eager=True)
     )
     kdf = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_table(spark, f"{sf_dir}/documents.parquet")
         .filter(corp)
         .selectExpr(f"md5({_SPARK_NORM}) AS ck")
         .distinct()
@@ -1164,7 +1165,7 @@ def _cc_min_label_loop(pairs, pointer_doubling: bool):
 def _attach_singletons(spark, sf_dir, labels):
     from pyspark.sql import functions as F
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, f"{sf_dir}/documents.parquet").select("doc_id")
     return docs.join(labels, "doc_id", "left").select(
         "doc_id",
         F.coalesce("cluster_id", "doc_id").alias("cluster_id"),
@@ -1529,7 +1530,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from dataforge_core_spark.operators.text import _SPARK_TOK
 
     labels = dedup_cluster(spark, sf_dir)
-    toks = spark.read.parquet(f"{sf_dir}/documents.parquet").selectExpr(
+    toks = read_table(spark, f"{sf_dir}/documents.parquet").selectExpr(
         "doc_id", f"size({_SPARK_TOK}) AS n_tokens"
     )
     w = Window.partitionBy("cluster_id").orderBy(
@@ -1646,7 +1647,7 @@ def dedup_boilerplate(
 ) -> DataFrame:
     """Cross-document repeated span table (span_hash, occurrence
     stats); ``span`` is driver-sweepable via queries_parameterized."""
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
+    read_table(spark, f"{sf_dir}/documents.parquet").createOrReplaceTempView(
         "documents"
     )
     return spark.sql(_boilerplate_sql("spark", span))
@@ -1801,7 +1802,7 @@ def dedup_substring(spark: SparkSession, sf_dir: str) -> DataFrame:
     criterion; overlapping duplicated windows merged into maximal
     spans — windows whose starts differ by <= SUBSTR_WIN overlap or
     touch, and touching spans merge by definition here)."""
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
+    read_table(spark, f"{sf_dir}/documents.parquet").createOrReplaceTempView(
         "documents"
     )
     pname, lname = _substr_views(spark, sf_dir)
@@ -1948,7 +1949,7 @@ def dedup_substring_clean(spark: SparkSession, sf_dir: str) -> DataFrame:
     form re-tokenized the corpus per run; serving it from the base
     measured 0.87 -> 0.55s warm interleaved at sf0.1, values
     bit-identical.)"""
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
+    read_table(spark, f"{sf_dir}/documents.parquet").createOrReplaceTempView(
         "documents"
     )
     pname, lname = _substr_views(spark, sf_dir)

@@ -18,6 +18,8 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
 
+from dataforge_core_spark.sources.readers import read_table
+
 _PROJECT_DIR = os.path.normpath(
     os.path.join(os.path.dirname(__file__), "..", "..", "projects", "tpch_demo")
 )
@@ -799,10 +801,10 @@ def engine_output_sinks(spark: SparkSession, sf_dir: str) -> DataFrame:
     ProjectRunner(spark, project, persist_hubs=False).materialize(base)
 
     # S3: the materialized hub parquet itself, re-read from its sink
-    df_h = spark.read.parquet(os.path.join(base, "hub_docs_os")).select(
+    df_h = read_table(spark, os.path.join(base, "hub_docs_os")).select(
         "doc_id", F.col("doc_line").alias("hub_line")
     )
-    df_p = spark.read.parquet(os.path.join(base, "os_file"))
+    df_p = read_table(spark, os.path.join(base, "os_file"))
     df_t = (
         spark.read.text(os.path.join(base, "os_text"))
         .select(

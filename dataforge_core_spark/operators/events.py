@@ -24,6 +24,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from dataforge_core_spark.session import session_key
+from dataforge_core_spark.sources.readers import read_table
 
 SESSION_GAP_MIN = 30
 
@@ -46,13 +47,13 @@ def _views(spark: SparkSession, sf_dir: str) -> None:
 
     if _events_ts_is_nanos(sf_dir):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
+    ev = read_table(spark, f"{sf_dir}/events.parquet")
     if isinstance(ev.schema["ts"].dataType, T.LongType):
         ev = ev.withColumn(
             "ts", F.expr("timestamp_micros(ts div 1000)")
         )
     ev.createOrReplaceTempView("events")
-    spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView(
+    read_table(spark, f"{sf_dir}/orders.parquet").createOrReplaceTempView(
         "orders"
     )
 

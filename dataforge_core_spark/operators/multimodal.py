@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from dataforge_core_spark.operators._store import stored
 from dataforge_core_spark.session import free_local_checkpoint, session_key
+from dataforge_core_spark.sources.readers import read_table
 
 META_SCHEMA = (
     "doc_id bigint, source_bytes int, source_md5 string, fmt string, "
@@ -39,7 +40,7 @@ FRAME_SCHEMA = "doc_id bigint, frame_no int, frame_md5 string"
 
 def _payloads(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents -> (doc_id, payload binary).  encode() is JVM-side."""
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    df = read_table(spark, f"{sf_dir}/documents.parquet")
     return df.selectExpr("doc_id", "encode(text, 'utf-8') AS payload")
 
 
@@ -74,7 +75,7 @@ def multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             yield parsed
 
-    df = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    df = read_table(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
     return df.mapInPandas(extract, META_SCHEMA)
@@ -460,7 +461,7 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         return fn
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
     return docs.mapInPandas(
@@ -521,7 +522,7 @@ def multimodal_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         return fn
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
     return docs.mapInPandas(
@@ -663,7 +664,7 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         return fn
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
     return docs.mapInPandas(
@@ -827,7 +828,7 @@ def multimodal_patches(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         return fn
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id")
+    docs = read_table(spark, f"{sf_dir}/documents.parquet").select("doc_id")
     return docs.mapInPandas(
         fused(image_synth_fn(), image_patch_fn()), PATCHES_SCHEMA
     )
@@ -935,7 +936,7 @@ def multimodal_audio_vad(spark: SparkSession, sf_dir: str) -> DataFrame:
     def fused(batches):
         return audio_vad_fn()(audio_synth_fn()(batches))
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "text"
     )
     return docs.mapInPandas(
@@ -1047,7 +1048,7 @@ def _phash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     def fused(batches):
         return ph(synth(batches))
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id"
     )
     hashed = docs.mapInPandas(fused, "doc_id bigint, phash bigint")
@@ -1754,7 +1755,7 @@ def _afp_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     def fused(batches):
         return fp(synth(batches))
 
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id"
     )
     fps = docs.mapInPandas(fused, "doc_id bigint, afp bigint")

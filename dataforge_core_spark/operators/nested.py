@@ -24,12 +24,14 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+from dataforge_core_spark.sources.readers import read_table
+
 
 def _views(spark: SparkSession, sf_dir: str) -> None:
-    spark.read.parquet(f"{sf_dir}/orders.parquet").createOrReplaceTempView(
+    read_table(spark, f"{sf_dir}/orders.parquet").createOrReplaceTempView(
         "orders"
     )
-    spark.read.parquet(f"{sf_dir}/lineitem.parquet").createOrReplaceTempView(
+    read_table(spark, f"{sf_dir}/lineitem.parquet").createOrReplaceTempView(
         "lineitem"
     )
 

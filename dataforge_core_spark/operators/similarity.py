@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from dataforge_core_spark.operators._store import stored
 from dataforge_core_spark.session import session_key
+from dataforge_core_spark.sources.readers import read_table
 
 TOP_K = 10
 N_QUERIES = 8  # vec_id < N_QUERIES form the query set
@@ -108,7 +109,7 @@ def _normed_stored(
     # so the serving scans want the parallelism; only the
     # aggregate-shaped _xq consumers won, and _xq sizes itself)
     par = spark.sparkContext.defaultParallelism
-    spark.read.parquet(f"{sf_dir}/embeddings.parquet").repartition(
+    read_table(spark, f"{sf_dir}/embeddings.parquet").repartition(
         par
     ).createOrReplaceTempView("embeddings")
     v = spark.sql(
@@ -2443,7 +2444,7 @@ def dedup_semantic_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
 
     labels = _semantic_labels(spark, sf_dir)
-    vecs = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select("vec_id")
+    vecs = read_table(spark, f"{sf_dir}/embeddings.parquet").select("vec_id")
     return vecs.join(
         labels, vecs.vec_id == labels.doc_id, "left"
     ).select(
@@ -4609,7 +4610,7 @@ def ann_semantic_decontaminate(
     sa = _probe_sorted_expr(cent, "emb")
     picks = ", ".join(f"__sa[{j}].c" for j in range(nprobe))
     cos = _spark_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
+    read_table(spark, f"{sf_dir}/documents.parquet").createOrReplaceTempView(
         "documents"
     )
     return spark.sql(

@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from dataforge_core_spark.operators._store import stored
 from dataforge_core_spark.session import session_key
+from dataforge_core_spark.sources.readers import read_table
 
 KMV_K = 64
 # the stored bottom-K view keeps enough rows for every consumer: the
@@ -92,7 +93,7 @@ def _toks_stored(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
     from dataforge_core_spark.operators.dedup import _ex_df
 
     ex = _ex_df(spark, sf_dir)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+    docs = read_table(spark, f"{sf_dir}/documents.parquet").select(
         "doc_id", "source"
     )
     toks = (
@@ -993,7 +994,7 @@ FROM fq f JOIN sq s ON f.event_type = s.event_type
 def sketch_sample_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hash-sample quantile estimates vs exact, per
     event type."""
-    spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView(
+    read_table(spark, f"{sf_dir}/events.parquet").createOrReplaceTempView(
         "events"
     )
     return spark.sql(_sample_quantiles_sql("spark"))
@@ -1095,7 +1096,7 @@ FROM ranked GROUP BY scope
 def sketch_dd_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type + merged log-bucket histogram quantile sketch
     (p50/p90/p99 bucket lower bounds in milli-units, exact integers)."""
-    spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView(
+    read_table(spark, f"{sf_dir}/events.parquet").createOrReplaceTempView(
         "events"
     )
     return spark.sql(_dd_sql("spark"))
@@ -1362,7 +1363,7 @@ def sketch_accuracy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     Served from the same checkpointed indexes as the individual lanes
     (shingle-universe toks view, CMS matrix + top views); only the DD
     block re-scans events (est + exact sides)."""
-    spark.read.parquet(f"{sf_dir}/events.parquet").createOrReplaceTempView(
+    read_table(spark, f"{sf_dir}/events.parquet").createOrReplaceTempView(
         "events"
     )
     toks = _toks_view(spark, sf_dir)

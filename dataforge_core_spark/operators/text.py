@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from dataforge_core_spark.operators._store import stored
 from dataforge_core_spark.session import session_key
+from dataforge_core_spark.sources.readers import read_table
 
 # tiny per-language stopword lists for the heuristic language ID
 _LANGS: dict[str, list[str]] = {
@@ -26,7 +27,7 @@ _EN_STOP = _LANGS["en"] + ["in", "is", "it", "for", "on"]
 
 
 def _view(spark: SparkSession, sf_dir: str) -> None:
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
+    read_table(spark, f"{sf_dir}/documents.parquet").createOrReplaceTempView(
         "documents"
     )
 
@@ -590,7 +591,7 @@ def _lm_scores_stored(
 
     _view(spark, sf_dir)
     tb = _token_base_view(spark, sf_dir)
-    n_docs = spark.read.parquet(f"{sf_dir}/documents.parquet").count()
+    n_docs = read_table(spark, f"{sf_dir}/documents.parquet").count()
     tag = abs(hash((session_key(spark), sf_dir))) % 10**8
     # ONE bigram pass (r16): inlined, _bigram_lm_sql's dbg/cnt/uni
     # CTEs each re-derive the lead-window bigram stream over the

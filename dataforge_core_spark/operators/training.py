@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from dataforge_core_spark.operators.dedup import _duck_ex_sql, _ex_df
 from dataforge_core_spark.operators._store import stored
 from dataforge_core_spark.operators.text import _DUCK_TOK, _SPARK_TOK, _view
+from dataforge_core_spark.sources.readers import read_table
 
 TOKEN_BUDGET = 2048  # context-window size in tokens
 N_SHARDS = 32  # independent packing streams
@@ -885,7 +886,7 @@ def train_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ex = dedup_exact(spark, sf_dir).select("doc_id", "is_dup")
     labels = dedup_cluster(spark, sf_dir)
-    toks = spark.read.parquet(f"{sf_dir}/documents.parquet").selectExpr(
+    toks = read_table(spark, f"{sf_dir}/documents.parquet").selectExpr(
         "doc_id",
         f"size({_SPARK_TOK}) AS n_tokens",
         f"size(array_distinct({_SPARK_TOK})) AS n_distinct",

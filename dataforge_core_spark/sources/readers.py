@@ -40,12 +40,15 @@ def resolve_table_ref(ref: str, substitutions: dict[str, str] | None) -> str:
 # and timestamps are mapped in _footer_field, every other type leaves
 # the inference to Spark.
 _ARROW_TO_SPARK = {
+    pa.int8(): T.ByteType(),
+    pa.int16(): T.ShortType(),
     pa.int32(): T.IntegerType(),
     pa.int64(): T.LongType(),
     pa.float32(): T.FloatType(),
     pa.float64(): T.DoubleType(),
     pa.bool_(): T.BooleanType(),
     pa.string(): T.StringType(),
+    pa.large_string(): T.StringType(),
     pa.date32(): T.DateType(),
 }
 # Spark stores its own schema under this footer key and prefers it to

@@ -29,6 +29,7 @@ from dataforge_core_spark.compiler import SourceCompiler
 from dataforge_core_spark.model import Project, ProjectError, Source
 from dataforge_core_spark.paths import RelationGraph
 from dataforge_core_spark.plans.planner import plan_source
+from dataforge_core_spark.sources.readers import footer_schema, read_table
 
 
 def _events_schema(ts_type: T.DataType) -> T.StructType:
@@ -59,42 +60,6 @@ def _events_ts_is_nanos(sf_dir: str) -> bool:
         return str(field.type) == "timestamp[ns]"
     except Exception:
         return False
-
-
-def _events_schema_from_file(sf_dir: str) -> T.StructType:
-    """Derive the stream schema from the parquet footer (falling back to
-    the static EVENTS_SCHEMA).  A file stream source cannot infer its
-    schema per-batch, and the driver has changed physical types between
-    rounds — deriving every column from the footer means a regenerated
-    float32 `value` or int32 `user_id` reads correctly instead of
-    silently nulling out."""
-    _PA_TO_SPARK = {
-        "int8": T.ByteType(),
-        "int16": T.ShortType(),
-        "int32": T.IntegerType(),
-        "int64": T.LongType(),
-        "float": T.FloatType(),
-        "double": T.DoubleType(),
-        "string": T.StringType(),
-        "large_string": T.StringType(),
-        "bool": T.BooleanType(),
-        "date32[day]": T.DateType(),
-        "binary": T.BinaryType(),
-    }
-    try:
-        import pyarrow.parquet as pq
-
-        fields = []
-        for f in pq.read_schema(f"{sf_dir}/events.parquet"):
-            t = str(f.type)
-            if t.startswith("timestamp"):
-                spark_t: T.DataType = T.TimestampType()
-            else:
-                spark_t = _PA_TO_SPARK.get(t, T.StringType())
-            fields.append(T.StructField(f.name, spark_t))
-        return T.StructType(fields)
-    except Exception:
-        return EVENTS_SCHEMA
 
 
 def validate_stream_rules(project: Project, source: Source) -> None:
@@ -160,8 +125,18 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(sf_dir)
         )
         return raw.withColumn("ts", F.expr("timestamp_micros(ts div 1000)"))
+    # every column from the footer, so a regenerated float32 `value`
+    # or int32 `user_id` reads correctly instead of silently nulling out;
+    # timestamps read as TIMESTAMP whatever the NTZ-inference setting,
+    # since a watermark needs that type
+    footer = footer_schema(spark, f"{sf_dir}/events.parquet")
+    schema = T.StructType([
+        T.StructField(f.name, T.TimestampType())
+        if f.dataType == T.TimestampNTZType() else f
+        for f in footer or EVENTS_SCHEMA
+    ])
     return (
-        spark.readStream.schema(_events_schema_from_file(sf_dir))
+        spark.readStream.schema(schema)
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
@@ -169,38 +144,20 @@ def stream_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def stream_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the documents parquet (schema from the
-    footer — a file stream source cannot infer per-batch)."""
-    import glob
+    footer, or Spark's batch inference where the footer cannot decide —
+    a file stream source cannot infer per-batch)."""
     import os
-
-    import pyarrow.parquet as pq
 
     path = f"{sf_dir}/documents.parquet"
     is_dir = os.path.isdir(path)
-    sch = pq.read_schema(
-        # multi-file layout (e.g. the .scale10 fixture): the footer of
-        # any part file carries the shared schema
-        sorted(glob.glob(f"{path}/*.parquet"))[0] if is_dir else path
-    )
-    fields = []
-    for f in sch:
-        t = str(f.type)
-        spark_t = {
-            "int32": T.IntegerType(),
-            "int64": T.LongType(),
-            "string": T.StringType(),
-            "large_string": T.StringType(),
-        }.get(t)
-        if spark_t is None:
-            raise ValueError(f"unmapped documents dtype {t} for {f.name}")
-        fields.append(T.StructField(f.name, spark_t))
+    schema = read_table(spark, path).schema
     if is_dir:
         # stream straight off the directory (pathGlobFilter matches
         # FILE names only, so it cannot select a directory-shaped table
         # from its parent)
-        return spark.readStream.schema(T.StructType(fields)).parquet(path)
+        return spark.readStream.schema(schema).parquet(path)
     return (
-        spark.readStream.schema(T.StructType(fields))
+        spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")
         .parquet(sf_dir)
     )

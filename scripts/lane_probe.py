@@ -1,8 +1,12 @@
 #!/usr/bin/env python
 """Isolate bench lanes: replicate bench.py's warmup + index phases,
 then time the requested lanes N times each (noop sink), printing
-per-run seconds.  For adjudicating whether a lane's bench number is a
-lane property or a phase/position artifact.
+per-run seconds, Spark jobs started, and the CPU of the JVM's reaped
+child processes (cutime + cstime in /proc/<jvm>/stat: the chmod and
+readlink forks Hadoop's local file system makes without libhadoop).
+For adjudicating whether a lane's bench number is a lane property or a
+phase/position artifact, and for spotting a schema-inference job or a
+fork cost without a custom harness.
 
 Usage: python scripts/lane_probe.py [--runs N] [--sleep S] lane [lane ...]
   --runs N    runs per lane (default 6)
@@ -54,18 +58,31 @@ def main() -> None:
     if settle:
         time.sleep(settle)
 
+    tracker = spark.sparkContext.statusTracker()
+    jvm_pid = spark._jvm.java.lang.ProcessHandle.current().pid()
+    jvm_stat = f"/proc/{jvm_pid}/stat"
+    tick = os.sysconf("SC_CLK_TCK")
+
+    def reaped_child_cpu() -> float:
+        with open(jvm_stat) as f:
+            fields = f.read().rsplit(")", 1)[1].split()
+        return (int(fields[13]) + int(fields[14])) / tick  # cutime, cstime
+
     out = {}
     for name in lanes:
         q = qs[name]
-        rs = []
+        rs, jobs, child = [], [], []
         for _ in range(runs):
+            ids, c = set(tracker.getJobIdsForGroup()), reaped_child_cpu()
             t = time.perf_counter()
             q(spark, sf_dir).write.format("noop").mode(
                 "overwrite"
             ).save()
             rs.append(round(time.perf_counter() - t, 3))
-        out[name] = rs
-        print(name, rs, flush=True)
+            jobs.append(len(set(tracker.getJobIdsForGroup()) - ids))
+            child.append(round(reaped_child_cpu() - c, 2))
+        out[name] = {"s": rs, "jobs": jobs, "child_cpu_s": child}
+        print(name, rs, "jobs", jobs, "child_cpu_s", child, flush=True)
     print(json.dumps(out))
 
 

@@ -82,16 +82,59 @@ def test_read_source_starts_no_spark_job(spark, sf_dir):
     assert dict(df.dtypes)["l_shipdate"] == "timestamp"
 
 
+def test_operators_read_parquet_through_read_table():
+    """Every operators module reads parquet through ``read_table``, so
+    a local file passes its footer schema instead of starting Spark's
+    schema-inference job."""
+    pkg = os.path.join(ROOT, "dataforge_core_spark", "operators")
+    offenders = [
+        f"{name}:{i}"
+        for name in sorted(os.listdir(pkg)) if name.endswith(".py")
+        for i, line in enumerate(
+            open(os.path.join(pkg, name), encoding="utf-8"), 1)
+        if "spark.read.parquet(" in line
+    ]
+    assert not offenders
+
+
+# warm-pool lanes that read parquet: (operators module, lane)
+_PARQUET_LANES = [
+    ("dedup", "dedup_exact"),
+    ("sketches", "sketch_dd_quantiles"),
+    ("text", "text_tokens"),
+    ("training", "train_sample_stratified"),
+    ("multimodal", "multimodal_meta"),
+    ("nested", "nested_aggregate"),
+]
+
+
+@pytest.mark.parametrize("module,lane", _PARQUET_LANES,
+                         ids=[lane for _, lane in _PARQUET_LANES])
+def test_warm_lane_build_starts_no_spark_job(spark, sf_dir, module, lane):
+    """Once a lane's stored indexes exist, building its DataFrame again
+    starts no Spark job: its parquet reads take the footer schema."""
+    import importlib
+
+    fn = importlib.import_module(
+        f"dataforge_core_spark.operators.{module}").queries()[lane]
+    fn(spark, sf_dir)
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    fn(spark, sf_dir)
+    assert set(tracker.getJobIdsForGroup()) == before
+
+
 _MAPPED = [
-    pa.int32(), pa.int64(), pa.float32(), pa.float64(), pa.bool_(),
-    pa.string(), pa.date32(), pa.decimal128(10, 2), pa.decimal128(30, 5),
+    pa.int8(), pa.int16(), pa.int32(), pa.int64(), pa.float32(),
+    pa.float64(), pa.bool_(), pa.string(), pa.large_string(), pa.date32(),
+    pa.decimal128(10, 2), pa.decimal128(30, 5),
     pa.timestamp("us"), pa.timestamp("ms"), pa.timestamp("us", tz="UTC"),
     pa.timestamp("ms", tz="America/New_York"),
 ]
 _UNMAPPED = [
-    pa.int8(), pa.int16(), pa.uint32(), pa.binary(), pa.large_string(),
-    pa.list_(pa.int32()), pa.struct([("a", pa.int32())]),
-    pa.timestamp("ns"), pa.dictionary(pa.int32(), pa.string()),
+    pa.uint8(), pa.uint32(), pa.binary(), pa.list_(pa.int32()),
+    pa.struct([("a", pa.int32())]), pa.timestamp("ns"),
+    pa.dictionary(pa.int32(), pa.string()),
 ]
 _types = st.sampled_from(_MAPPED + _UNMAPPED)
 _schemas = st.lists(_types, min_size=1, max_size=4)

@@ -413,6 +413,9 @@ def test_stream_schema_derived_from_footer(spark, tmp_path):
     d.mkdir()
     pq.write_table(t, str(d / "events.parquet"))
     stream = stream_events(spark, str(d))
+    # an unzoned footer timestamp still streams as TIMESTAMP, the type
+    # a watermark needs, under Spark's default NTZ inference
+    assert dict(stream.dtypes)["ts"] == "timestamp"
     q = (
         stream.writeStream.format("memory")
         .queryName("variant_stream")
@@ -426,6 +429,90 @@ def test_stream_schema_derived_from_footer(spark, tmp_path):
     r = rows[0]
     assert r["user_id"] == 7 and abs(r["value"] - 1.5) < 1e-6
     assert r["ts"] == base
+
+
+_FS_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def test_checkpoint_manager_follows_master(spark, tmp_path):
+    """A local session checkpoints through Spark's FileSystem manager;
+    any other master keeps Spark's default (FileContext) manager."""
+    from dataforge_core_spark.session import checkpoint_manager
+
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    assert spark.conf.get(key) == _FS_MANAGER
+    managers = (spark._jvm.org.apache.spark.sql.execution.streaming
+                .checkpointing.CheckpointFileManager)
+    path = spark._jvm.org.apache.hadoop.fs.Path(str(tmp_path))
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    assert managers.create(path, conf).getClass().getName() == _FS_MANAGER
+    for master in ("local", "local[4]", "local[*]"):
+        assert checkpoint_manager(master) == _FS_MANAGER
+    for master in ("yarn", "spark://host:7077", "k8s://https://host:443",
+                   "local-cluster[2,1,1024]"):
+        assert checkpoint_manager(master) is None
+    conf.unset(key)
+    assert managers.create(path, conf).getClass().getSimpleName() == (
+        "FileContextBasedCheckpointFileManager")
+
+
+def test_checkpoint_restart_counts_each_file_once(spark, tmp_path):
+    """A windowed count over a file stream, run to completion with a
+    persistent checkpoint, then restarted from that checkpoint after a
+    second file arrives: the sink equals the batch count over both
+    files, so the offset and commit logs and the state files written
+    through the session's checkpoint manager resume exactly."""
+    import datetime
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    src = tmp_path / "events"
+    src.mkdir()
+    ckpt = str(tmp_path / "ckpt")
+    base = datetime.datetime(2024, 5, 1, 12, 0, 0)
+
+    def write(name, minutes, types):
+        pq.write_table(pa.table({
+            "ts": pa.array([base + datetime.timedelta(minutes=m)
+                            for m in minutes], type=pa.timestamp("us")),
+            "event_type": types,
+        }), str(src / name))
+
+    def counts(df):
+        return df.groupBy(F.window("ts", "1 hour"), "event_type").agg(
+            F.count("*").alias("n"))
+
+    def run():
+        """(sink rows, rows read by this run)"""
+        stream = spark.readStream.schema("ts timestamp, event_type string")
+        q = (
+            counts(stream.parquet(str(src))).writeStream.format("memory")
+            .queryName("restart_counts")
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt)
+            .trigger(availableNow=True)
+            .start()
+        )
+        assert q.awaitTermination(120)
+        read = sum(p["numInputRows"] for p in q.recentProgress)
+        return sorted(spark.table("restart_counts").collect()), read
+
+    def batch():
+        return sorted(counts(spark.read.parquet(str(src))).collect())
+
+    write("part-0.parquet", [0, 10, 70], ["click", "click", "view"])
+    assert run() == (batch(), 3)
+    write("part-1.parquet", [20, 80, 200], ["click", "view", "click"])
+    # the restart reads only the new file and adds to the saved state
+    got, read = run()
+    assert read == 3
+    assert got == batch()
+    assert sum(r["n"] for r in got) == 6
 
 
 def test_rocksdb_state_store_option(spark, sf_dir, monkeypatch):
