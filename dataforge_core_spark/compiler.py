@@ -46,359 +46,28 @@ from dataforge_core_spark.model import (
     ProjectError,
     Source,
 )
-from dataforge_core_spark.parser import (
-    equi_conjuncts,
-    parse_expression,
-    parse_relation_expression,
-    rewrite as _rewrite_spans,
-)
+from dataforge_core_spark.parser import parse_relation_expression
 from dataforge_core_spark.paths import Hop, RelationGraph
+from dataforge_core_spark.plans.outputs import plan_output
 from dataforge_core_spark.plans.planner import (
+    EMPTY_ARRAY,
+    EMPTY_ZERO,
     JoinElement,
     SourcePlan,
     plan_source,
+    status_case_sql,
 )
+from dataforge_core_spark.plans.predicates import (
+    equi_keys,
+    render_relation,
+    render_tokens,
+)
+from dataforge_core_spark.plans.subsource import BACKTICKED, sub_source_sql
 from dataforge_core_spark.session import sql_conf
-
-# aggregates whose LATERAL form returns a non-NULL value over an empty
-# correlated set; after the groupBy+join decorrelation the no-match rows
-# are NULL and must be backfilled for parity with the reference's
-# LEFT JOIN LATERAL (u_enr_query_generate_many_joins.sql:15-39)
-_EMPTY_ZERO = {"count", "count_if", "approx_count_distinct"}
-_EMPTY_ARRAY = {"collect_list", "collect_set", "array_agg"}
-
-_BACKTICKED = re.compile(r"`([A-Za-z0-9_]+)`")
 
 
 def _prefix_all(df: DataFrame, prefix: str) -> DataFrame:
     return df.toDF(*[prefix + c for c in df.columns])
-
-
-def sub_source_sql(project: Project, graph: RelationGraph, sub: Source) -> str:
-    """SQL expression enriching the parent's array<struct> attribute:
-    ``transform(arr, x -> named_struct(raw fields..., rules...))`` —
-    the native form of the reference's sub-source generation
-    (ARRAY_AGG(STRUCT(...)) over inline(parent_expr) —
-    u_enr_query_generate_query.sql:52, u_enr_query_add_enrichment.sql:
-    80-117).  Element rules are [This]-only scalar expressions
-    (lookups/aggregates/windows inside array elements are rejected);
-    rule composition is resolved by textual substitution in level order
-    (lambda scopes have no lateral aliases).  Shared by the DataFrame
-    compiler and the SQL emitter — identical artifact semantics.
-
-    Sub-source CHAINS (a sub-source whose parent is itself a
-    sub-source — the reference resolves these with a recursive parent
-    walk, u_enr_query_get_top_most_parent_source_id.sql:19-21) nest as
-    inner ``transform`` lambdas: each child appends a
-    ``'<child_name>', transform(<element array field>, x<d> -> ...)``
-    item to its parent element's named_struct, with one lambda variable
-    per depth so scopes never shadow.  The whole chain stays a single
-    scan-side expression — no explode/re-aggregate, no shuffle, safe at
-    any fan-out.
-    """
-    return _sub_source_transform(
-        project,
-        graph,
-        sub,
-        f"`{sub.sub_source_attribute}`",
-        0,
-        scopes={sub.sub_source_parent or "": None},
-    )
-
-
-def _sub_ancestors(project: Project, sub: Source) -> dict[str, Source]:
-    """{source_name: Source} for every ancestor up the sub-source parent
-    chain (nearest first; terminates at the top-most real source —
-    cycles are rejected at load time)."""
-    by_name = project.source_by_name()
-    out: dict[str, Source] = {}
-    cur = by_name.get(sub.sub_source_parent or "")
-    while cur is not None and cur.source_name not in out:
-        out[cur.source_name] = cur
-        cur = by_name.get(cur.sub_source_parent or "")
-    return out
-
-
-_anc_marker_seq = __import__("itertools").count()
-
-
-def _sub_siblings(project: Project, sub: Source) -> dict[str, Source]:
-    """{source_name: Source} for the OTHER sub-sources sharing this
-    sub-source's parent."""
-    return {
-        s.source_name: s
-        for s in project.sources
-        if s.sub_source_parent == (sub.sub_source_parent or "")
-        and s.source_name != sub.source_name
-    }
-
-
-def _rewrite_ancestor_refs(
-    project: Project, sub: Source
-) -> tuple[Source, dict[str, tuple[str, str]]]:
-    """Element rules may reference ANCESTOR attributes —
-    ``[parent_name].attr`` — because every enclosing scope (the parent
-    hub's columns, and each outer lambda's element fields) is lexically
-    visible inside a nested ``transform`` lambda.  They may also
-    reference SIBLING sub-sources of the same parent — ``[sibling].attr``
-    yields the ARRAY of that attribute over the sibling's enriched
-    elements (the sibling's whole transform is a pure expression over
-    the shared parent scope, so it is embeddable wherever the rule's
-    own lambda body lives).
-
-    Each such token is rewritten to a unique backticked MARKER before
-    planning (the planner would otherwise demand a relation path); the
-    returned ``markers`` map records which (source, attribute) every
-    marker names, so :func:`_sub_source_transform` resolves it against
-    THAT ancestor's scope (or sibling's transform) specifically — a
-    same-named field in a nearer scope can never capture an explicitly
-    qualified reference."""
-    ancestors = _sub_ancestors(project, sub)
-    siblings = _sub_siblings(project, sub)
-    markers: dict[str, tuple[str, str]] = {}
-    new_rules = []
-    changed = False
-    for r in sub.rules:
-        parsed = parse_expression(r.expression, allow_this_agg=True)
-        spans: list[tuple[int, int, str]] = []
-        # only tokens OUTSIDE aggregate calls: an aggregate over an
-        # ancestor ref must keep its tokens so the planner's normal
-        # element-scope rejection still fires (element rules are scalar)
-        for tok in parsed.tokens:
-            if tok.source in ("This", "Related"):
-                continue
-            anc = ancestors.get(tok.source) or siblings.get(tok.source)
-            if anc is None:
-                continue  # planner raises its element-scope error
-            if (
-                tok.attr not in anc.raw_by_name()
-                and tok.attr not in anc.rule_by_name()
-            ):
-                raise ProjectError(
-                    f"Rule {r.name!r}: source [{tok.source}] has no "
-                    f"attribute {tok.attr!r}"
-                )
-            mk = f"__anc_{next(_anc_marker_seq)}"
-            markers[mk] = (tok.source, tok.attr)
-            spans.append((tok.start, tok.end, f"`{mk}`"))
-        if spans:
-            import dataclasses
-
-            r = dataclasses.replace(
-                r, expression=_rewrite_spans(r.expression, spans)
-            )
-            changed = True
-        new_rules.append(r)
-    if not changed:
-        return sub, markers
-    import dataclasses
-
-    return dataclasses.replace(sub, rules=new_rules), markers
-
-
-_sib_var_seq = __import__("itertools").count()
-
-# bound on [sibling].attr reference chains (A -> B -> C -> ...): each hop
-# embeds the referenced sibling's complete transform inline (SQL lambdas
-# have no let-binding), so expression size grows with chain depth — the
-# same class of bound as dedup.CC_MAX_ITERS
-SIB_CHAIN_MAX = 8
-
-
-def _sub_source_transform(
-    project: Project,
-    graph: RelationGraph,
-    sub: Source,
-    coll_expr: str,
-    depth: int,
-    scopes: dict[str, dict[str, str] | None] | None = None,
-    visiting: frozenset = frozenset(),
-) -> str:
-    """One level of sub-source enrichment over the collection expression
-    ``coll_expr`` (a column at depth 0, an element field reference
-    inside the enclosing lambda otherwise); recurses into sub-sources of
-    ``sub``.  ``scopes`` maps each ancestor source name to its lambda
-    scope's field expressions (``None`` for the top-level real source,
-    whose columns resolve by plain SQL name inside the lambdas) —
-    ancestor references resolve against the NAMED ancestor, never a
-    same-named field of a nearer scope."""
-    sub, anc_markers = _rewrite_ancestor_refs(project, sub)
-    plan = plan_source(project, graph, sub)
-    if plan.joins:
-        raise ProjectError(
-            f"Sub-source {sub.source_name!r}: element rules may only "
-            "reference [This] element attributes"
-        )
-    for el in plan.rules.values():
-        if el.parsed.window:
-            raise ProjectError(
-                f"Sub-source {sub.source_name!r}: window rules are not "
-                f"allowed in element scope ({el.rule.name!r})"
-            )
-        if el.parsed.aggs:
-            # previously rejected implicitly via the path resolver; the
-            # ancestor-ref rewrite can erase an aggregate's tokens, so
-            # ban it explicitly — element rules are scalar
-            raise ProjectError(
-                f"Sub-source {sub.source_name!r}: aggregate rules are not "
-                f"allowed in element scope ({el.rule.name!r})"
-            )
-    var = "x" if depth == 0 else f"x{depth}"
-    scopes = dict(scopes or {})
-    field_exprs: dict[str, str] = {
-        a.name: f"{var}.`{a.name}`" for a in sub.raw_attributes
-    }
-    # the embedded transform of each referenced sibling, memoized per
-    # rule-set compile: N references to one sibling (or a chain where
-    # several rules hop through the same intermediate) build the
-    # recursive embedding ONCE instead of re-deriving it per occurrence
-    sib_memo: dict[str, str] = {}
-
-    def _resolve(m: "re.Match[str]") -> str:
-        n = m.group(1)
-        if n in anc_markers:  # qualified ancestor or sibling reference
-            src, attr = anc_markers[n]
-            if src in scopes:  # ancestor
-                outer = scopes.get(src)
-                if outer is None:
-                    # real top-level source: its columns are in plain SQL
-                    # scope inside the lambdas
-                    return f"`{attr}`"
-                return f"({outer[attr]})"
-            # sibling sub-source of the same parent: embed the sibling's
-            # full transform (a pure expression over the shared parent
-            # scope, lexically visible here) and project the attribute —
-            # the reference yields array<attr-type> over the sibling's
-            # enriched elements.  The sibling's inner lambda vars shadow
-            # this rule's only inside the embedded expression, so no
-            # capture is possible.
-            if src in visiting or src == sub.source_name:
-                chain = " -> ".join([*sorted(visiting), sub.source_name, src])
-                raise ProjectError(
-                    f"Circular sibling reference: {chain}"
-                )
-            if len(visiting) >= SIB_CHAIN_MAX:
-                raise ProjectError(
-                    f"Sibling-reference chain deeper than "
-                    f"{SIB_CHAIN_MAX} (at {sub.source_name!r} -> "
-                    f"{src!r}): each hop embeds the referenced "
-                    "sibling's full transform inline, so deep chains "
-                    "grow the generated expression multiplicatively — "
-                    "flatten the rule chain or materialize an "
-                    "intermediate source"
-                )
-            sib_expr = sib_memo.get(src)
-            if sib_expr is None:
-                sib = project.source_by_name()[src]
-                parent_scope = scopes.get(sub.sub_source_parent or "")
-                if parent_scope is None:
-                    sib_coll = f"`{sib.sub_source_attribute}`"
-                else:
-                    sib_coll_expr = parent_scope.get(
-                        sib.sub_source_attribute
-                    )
-                    if sib_coll_expr is None:
-                        raise ProjectError(
-                            f"Sub-source {src!r}: parent attribute "
-                            f"{sib.sub_source_attribute!r} not found on "
-                            f"{sub.sub_source_parent!r}"
-                        )
-                    sib_coll = f"({sib_coll_expr})"
-                sib_expr = _sub_source_transform(
-                    project,
-                    graph,
-                    sib,
-                    sib_coll,
-                    depth,
-                    scopes=scopes,
-                    visiting=visiting | {sub.source_name},
-                )
-                sib_memo[src] = sib_expr
-            sv = f"sb{next(_sib_var_seq)}"
-            return f"transform({sib_expr}, {sv} -> {sv}.`{attr}`)"
-        if n in field_exprs:  # own element fields ([This] tokens)
-            return f"({field_exprs[n]})"
-        return m.group(0)
-
-    for level in plan.levels:
-        for name in level:
-            el = plan.rules[name]
-            expr = _BACKTICKED.sub(_resolve, el.compiled_sql)
-            if el.rule.cast_datatype:
-                ddl = HIVE_TO_SPARK_DDL.get(
-                    el.rule.cast_datatype, el.rule.cast_datatype
-                )
-                expr = f"CAST({expr} AS {ddl})"
-            field_exprs[name] = expr
-    items = list(field_exprs.items())
-    for child in project.sources:
-        if child.sub_source_parent != sub.source_name:
-            continue
-        if child.source_name in field_exprs:
-            # the child's struct field would duplicate an existing
-            # element field name — Spark builds the duplicate-field
-            # struct silently and by-name access resolves to the first
-            raise ProjectError(
-                f"Sub-source {child.source_name!r}: name collides with "
-                f"a field of parent {sub.source_name!r}"
-            )
-        inner_coll = field_exprs.get(child.sub_source_attribute)
-        if inner_coll is None:
-            raise ProjectError(
-                f"Sub-source {child.source_name!r}: parent attribute "
-                f"{child.sub_source_attribute!r} not found on "
-                f"{sub.source_name!r}"
-            )
-        items.append(
-            (
-                child.source_name,
-                _sub_source_transform(
-                    project,
-                    graph,
-                    child,
-                    inner_coll,
-                    depth + 1,
-                    scopes={**scopes, sub.source_name: field_exprs},
-                ),
-            )
-        )
-    items_sql = ", ".join(f"'{n}', {e}" for n, e in items)
-    return f"transform({coll_expr}, {var} -> named_struct({items_sql}))"
-
-
-def _rewrite_relation(
-    hop: Hop,
-    this_prefix: str | None,
-    related_prefix: str | None,
-    related_source_rules=None,
-) -> str:
-    """Rewrite a hop's relation predicate into executable SQL.
-
-    ``this_prefix``/``related_prefix`` apply to the relation's [This] (left
-    source) and [Related] (right source) tokens respectively; None = bare
-    column name.  Appends uniqueness-guard conjuncts for unique-flagged
-    rule keys (J7 — u_enr_query_add_join.sql:101-117).
-    """
-    parsed = parse_relation_expression(hop.relation.expression)
-    spans = []
-    guards = []
-    for t in parsed.tokens:
-        pref = this_prefix if t.source == "This" else related_prefix
-        col = f"`{(pref or '') + t.attr}`"
-        spans.append((t.start, t.end, col))
-        if related_source_rules is not None and t.source == (
-            "This" if not hop.forward else "Related"
-        ):
-            rule = related_source_rules.get(t.attr)
-            if rule is not None and rule.unique:
-                rpref = this_prefix if not hop.forward else related_prefix
-                guards.append(f"`{(rpref or '') + t.attr}_uv_flag`")
-    out = hop.relation.expression
-    for start, end, repl in sorted(spans, key=lambda x: -x[0]):
-        out = out[:start] + repl + out[end:]
-    for g in sorted(set(guards)):
-        out = f"({out}) AND {g}"
-    return out
 
 
 class SourceCompiler:
@@ -443,16 +112,6 @@ class SourceCompiler:
     # ------------------------------------------------------------------
     def plan(self, source: Source) -> SourcePlan:
         return plan_source(self.project, self.graph, source)
-
-    def sub_sources_of(self, source: Source) -> list[Source]:
-        return [
-            s
-            for s in self.project.sources
-            if s.sub_source_parent == source.source_name
-        ]
-
-    def sub_source_sql(self, sub: Source) -> str:
-        return sub_source_sql(self.project, self.graph, sub)
 
     def recalculation_closure(self, source: Source) -> set[str]:
         """Rules recomputed in 'recalculation' mode: keep_current rules +
@@ -834,44 +493,24 @@ class SourceCompiler:
                 f"Internal: joins never became applicable: {missing}"
             )
 
-        # validation status column (V2) — CASE chain over V-rules
-        v_fail = [
-            r.name
-            for r in source.rules
-            if r.rule_type == "V" and r.validation_action == "F"
-        ]
-        v_warn = [
-            r.name
-            for r in source.rules
-            if r.rule_type == "V" and r.validation_action == "W"
-        ]
         final_cols = [a.name for a in source.raw_attributes] + [
             r.name for r in source.rules
         ]
         # sub-source enrichments: per-element rules over array<struct>
         # attributes, re-packed in place (§2.11)
-        for sub in self.sub_sources_of(source):
-            if only_rules is not None and sub.source_name in df.columns:
-                final_cols.append(sub.source_name)
+        for sub in self.project.sources:
+            if sub.sub_source_parent != source.source_name:
                 continue
-            df = df.withColumn(
-                sub.source_name, F.expr(self.sub_source_sql(sub))
-            )
+            if only_rules is None or sub.source_name not in df.columns:
+                sql = sub_source_sql(self.project, self.graph, sub)
+                df = df.withColumn(sub.source_name, F.expr(sql))
             final_cols.append(sub.source_name)
         final_cols += [
             f"{r.name}_uv_flag" for r in source.rules if r.unique
         ]
-        if v_fail or v_warn:
-            clauses = []
-            if v_fail:
-                clauses.append(
-                    "WHEN NOT (" + " AND ".join(v_fail) + ") THEN 'F'"
-                )
-            if v_warn:
-                clauses.append(
-                    "WHEN NOT (" + " AND ".join(v_warn) + ") THEN 'W'"
-                )
-            status = "CAST(CASE " + " ".join(clauses) + " ELSE 'P' END AS string)"
+        # validation status column (V2) — CASE chain over V-rules
+        status = status_case_sql(source)
+        if status is not None:
             df = df.withColumn("s_validation_status_code", F.expr(status))
             final_cols.append("s_validation_status_code")
 
@@ -919,22 +558,30 @@ class SourceCompiler:
             nxt = self._broadcast_if_small(
                 _prefix_all(reads[i][1], pref(i)), [reads[i]]
             )
-            rules_dst = self._by_name[hop.dst].rule_by_name()
             # hop.src side carries pref(i-1); hop.dst side pref(i)
             this_pref = pref(i - 1) if hop.forward else pref(i)
             rel_pref = pref(i) if hop.forward else pref(i - 1)
-            cond = _rewrite_relation(hop, this_pref, rel_pref, rules_dst)
+            cond = self._relation_cond(hop, this_pref, rel_pref)
             chain = chain.join(nxt, F.expr(cond), "left")
         return chain, reads
+
+    def _relation_cond(
+        self, hop: Hop, this_prefix: str, related_prefix: str
+    ) -> str:
+        """The hop's predicate over prefixed columns: ``this_prefix`` on
+        the relation's [This] side, ``related_prefix`` on [Related]."""
+        pref = {"This": this_prefix, "Related": related_prefix}
+        return render_relation(
+            hop, lambda side, a: f"`{pref[side]}{a}`", self._by_name[hop.dst]
+        )
 
     def _first_hop_cond(
         self, join: JoinElement, source: Source, related_prefix: str
     ) -> str:
         hop = join.path.hops[0]
-        rules_dst = self._by_name[hop.dst].rule_by_name()
         if hop.forward:
-            return _rewrite_relation(hop, None, related_prefix, rules_dst)
-        return _rewrite_relation(hop, related_prefix, None, rules_dst)
+            return self._relation_cond(hop, "", related_prefix)
+        return self._relation_cond(hop, related_prefix, "")
 
     def _apply_lookup(
         self,
@@ -997,8 +644,6 @@ class SourceCompiler:
         For self-relation aggregates the target is the in-flight frame
         (mirroring :meth:`_chain`'s ``df_self`` handling) — the hub for
         the source being built does not exist yet."""
-        from dataforge_core_spark.plans.planner import JoinElement as JE
-
         m_hop = join.path.hops[-1]
         if (
             join.is_self
@@ -1024,7 +669,7 @@ class SourceCompiler:
                     )
         reads = [(m_hop.dst, target)]
         for s, attrs in needed.items():
-            tmp = JE(
+            tmp = JoinElement(
                 path=paths[s],
                 pathid=f"tr_{re.sub(r'[^A-Za-z0-9_]', '_', paths[s].id())}",
                 kind="lookup",
@@ -1044,33 +689,23 @@ class SourceCompiler:
         hops = join.path.hops
         pid = join.pathid
         m_hop = hops[-1]
-        conj = equi_conjuncts(m_hop.relation.expression)
-        if conj is None or join.needs_row_fallback:
+        keys = equi_keys(m_hop)
+        if keys is None or join.needs_row_fallback:
             # arbitrary boolean M-hop predicate, or [This] values inside
             # the aggregate: the groupBy-on-foreign-key rewrite doesn't
             # apply; fall back to join + group on a synthetic row key
             # (exact LATERAL semantics, more shuffle)
             return self._apply_aggregate_rowkey(df, join, source, hubs)
         target, reads = self._agg_target_side(join, hubs, df_self=df)
-        # group keys: the M-target side of each equi conjunct
-        # (dst side of the hop); rewrite [This]/[Related] tokens to bare cols
-        key_exprs: list[str] = []
-        our_exprs: list[str] = []
-        for this_text, rel_text in conj:
-            dst_text = rel_text if m_hop.forward else this_text
-            src_text = this_text if m_hop.forward else rel_text
-            key_exprs.append(self._bare(dst_text))
-            our_exprs.append(self._bare(src_text))
-        gb = [F.expr(k).alias(f"__{pid}__k{j}") for j, k in enumerate(key_exprs)]
-        aggs = []
-        for spec in join.aggs:
-            distinct = "DISTINCT " if spec.call.distinct else ""
-            inner = re.sub(r"(?i)^\s*distinct\s+", "", spec.inner_sql.strip())
-            aggs.append(
-                F.expr(f"{spec.call.func}({distinct}{inner})").alias(
-                    spec.out_col
-                )
-            )
+        # group keys: the M-target side of each equi conjunct (dst side
+        # of the hop) over the target's bare columns
+        gb = [
+            F.expr(render_tokens(dst)).alias(f"__{pid}__k{j}")
+            for j, (_, dst) in enumerate(keys)
+        ]
+        aggs = [
+            F.expr(spec.call_sql()).alias(spec.out_col) for spec in join.aggs
+        ]
         aggdf = self._broadcast_if_small(
             target.groupBy(*gb).agg(*aggs), reads
         )
@@ -1078,7 +713,8 @@ class SourceCompiler:
         if len(hops) == 1:
             # join df directly on our-side exprs == group keys
             cond = " AND ".join(
-                f"({e}) = `__{pid}__k{j}`" for j, e in enumerate(our_exprs)
+                f"({render_tokens(src)}) = `__{pid}__k{j}`"
+                for j, (src, _) in enumerate(keys)
             )
             out = df.join(aggdf, F.expr(cond), "left")
         else:
@@ -1088,8 +724,9 @@ class SourceCompiler:
             chain, chain_reads = self._chain(join, hubs, df, upto)
             src_pref = f"__{pid}_h{upto}__"
             cond = " AND ".join(
-                f"({self._prefixed(src, src_pref)}) = `__{pid}__k{j}`"
-                for j, src in enumerate(our_exprs)
+                f"({render_tokens(src, lambda a: f'`{src_pref}{a}`')}) "
+                f"= `__{pid}__k{j}`"
+                for j, (src, _) in enumerate(keys)
             )
             chain = chain.join(aggdf, F.expr(cond), "left")
             first_cols = self._hop_side_cols(hops[0], related=True)
@@ -1110,12 +747,12 @@ class SourceCompiler:
         # LATERAL parity: empty correlated set -> 0 / [] instead of NULL
         fixes: dict[str, Column] = {}
         for spec in join.aggs:
-            if spec.call.func in _EMPTY_ZERO:
+            if spec.call.func in EMPTY_ZERO:
                 fixes[spec.out_col] = F.coalesce(
                     F.col(spec.out_col),
                     F.lit(0).cast(dict(out.dtypes)[spec.out_col]),
                 )
-            elif spec.call.func in _EMPTY_ARRAY:
+            elif spec.call.func in EMPTY_ARRAY:
                 dt = out.schema[spec.out_col].dataType
                 fixes[spec.out_col] = F.coalesce(
                     F.col(spec.out_col), F.from_json(F.lit("[]"), dt)
@@ -1165,11 +802,10 @@ class SourceCompiler:
         target = self._broadcast_if_small(
             _prefix_all(target, f"__{pid}_t__"), reads
         )
-        rules_dst = self._by_name[m_hop.dst].rule_by_name()
         this_pref, rel_pref = (
-            (None, f"__{pid}_t__") if m_hop.forward else (f"__{pid}_t__", None)
+            ("", f"__{pid}_t__") if m_hop.forward else (f"__{pid}_t__", "")
         )
-        cond = _rewrite_relation(m_hop, this_pref, rel_pref, rules_dst)
+        cond = self._relation_cond(m_hop, this_pref, rel_pref)
         joined = keyed.join(target, F.expr(cond), "left")
         aggs = []
         for spec in join.aggs:
@@ -1181,30 +817,11 @@ class SourceCompiler:
                     return f"`{name[len('__THIS__'):]}`"
                 return f"`__{pid}_t__{name}`"
 
-            inner = _BACKTICKED.sub(sub, spec.inner_sql)
-            inner = re.sub(r"(?i)^\s*distinct\s+", "", inner.strip())
-            distinct = "DISTINCT " if spec.call.distinct else ""
-            aggs.append(
-                F.expr(f"{spec.call.func}({distinct}{inner})").alias(
-                    spec.out_col
-                )
-            )
+            inner = BACKTICKED.sub(sub, spec.inner_sql)
+            aggs.append(F.expr(spec.call_sql(inner)).alias(spec.out_col))
         aggdf = joined.groupBy(rid).agg(*aggs)
         out = keyed.join(aggdf, rid, "left").drop(rid)
         return self._agg_empty_fixes(out, join)
-
-    def _bare(self, text: str) -> str:
-        """Rewrite [This]/[Related] tokens in a predicate side to bare
-        backticked column names."""
-        parsed = parse_expression(text, allow_this_agg=True)
-        spans = [(t.start, t.end, f"`{t.attr}`") for t in parsed.tokens]
-        out = text
-        for start, end, repl in sorted(spans, key=lambda x: -x[0]):
-            out = out[:start] + repl + out[end:]
-        return out
-
-    def _prefixed(self, bare_sql: str, prefix: str) -> str:
-        return _BACKTICKED.sub(lambda m: f"`{prefix}{m.group(1)}`", bare_sql)
 
     # ------------------------------------------------------------------
     # output compilation
@@ -1212,50 +829,19 @@ class SourceCompiler:
     def compile_output(self, output, hubs: dict[str, DataFrame]) -> DataFrame:
         """Channels -> filter -> (aggregate) -> typed select -> UNION ALL.
 
-        Mirrors u_output_generate_query.sql:88-155: per-channel SELECT with
-        ``WHERE true AND <filter>``, GROUP BY all non-aggregate mapped
-        columns when operation_type='Aggregate', typed-NULL fill for
-        unmapped columns, UNION ALL across channels.
+        Renders :func:`plan_output` (u_output_generate_query.sql:88-155):
+        per-channel ``WHERE true AND <filter>``, GROUP BY all non-aggregate
+        mapped columns when operation_type='Aggregate', typed-NULL fill
+        for unmapped columns, UNION ALL across channels.
         """
-        from dataforge_core_spark.functions.aggregates import (
-            AGGREGATE_WHITELIST,
-        )
-
+        plans = plan_output(self.project, output)
         parts: list[DataFrame] = []
-        for ch in output.channels:
-            if ch.unpivot:
-                # u_output_generate_query.sql:101 — verbatim
-                raise ProjectError("Unpivot not supported yet!")
-            src = self._by_name.get(ch.source_name)
-            if src is None:
-                raise ProjectError(
-                    f"Output {output.output_name!r}: unknown source "
-                    f"{ch.source_name!r}"
-                )
+        for ch, cp in zip(output.channels, plans):
             df = self._hub(ch.source_name, hubs)
-            # validation-status routing (V3)
-            if "s_validation_status_code" in df.columns:
-                codes = [
-                    c
-                    for c, inc in (
-                        ("P", ch.include_pass),
-                        ("W", ch.include_warn),
-                        ("F", ch.include_fail),
-                    )
-                    if inc
-                ]
-                if not codes:
-                    raise ProjectError(
-                        f"Output {output.output_name!r}: channel must "
-                        "include at least one of pass/warn/fail"
-                    )
-                if set(codes) != {"P", "W", "F"}:
-                    df = df.filter(
-                        F.col("s_validation_status_code").isin(codes)
-                    )
-            if ch.filter:
-                fexpr = self._channel_filter_sql(ch.filter, src)
-                col = F.expr(fexpr)
+            if cp.codes is not None:  # validation-status routing (V3)
+                df = df.filter(F.col("s_validation_status_code").isin(cp.codes))
+            if cp.filter_sql is not None:
+                col = F.expr(cp.filter_sql)
                 # boolean type check (P5 — impc_update_test_results.sql:65-76)
                 if df.select(col.alias("f")).schema["f"].dataType != T.BooleanType():
                     raise ProjectError(
@@ -1263,60 +849,27 @@ class SourceCompiler:
                         f"boolean: {ch.filter!r}"
                     )
                 df = df.filter(col)
-
-            out_types = {c.name: HIVE_TO_SPARK_DDL[c.hive_type] for c in output.columns}
-            mapped: dict[str, Column] = {}
-            if (ch.operation_type or "").lower() == "aggregate":
-                dims = []
-                aggs = []
-                for mp in ch.mappings:
-                    path = ".".join([mp.attribute] + mp.keys)
-                    if mp.aggregate:
-                        if mp.aggregate not in AGGREGATE_WHITELIST:
-                            raise ProjectError(
-                                f"Output {output.output_name!r}: "
-                                f"{mp.aggregate!r} is not an allowed aggregate"
-                            )
-                        d = "DISTINCT " if mp.distinct else ""
-                        aggs.append(
-                            F.expr(f"{mp.aggregate}({d}{path})").alias(mp.column)
-                        )
-                    else:
-                        dims.append(F.expr(path).alias(mp.column))
-                if not aggs:
-                    raise ProjectError(
-                        f"Output {output.output_name!r}: Aggregate channel "
-                        "has no aggregate mappings"
-                    )
+            if cp.group_by is not None:
+                dims = [F.expr(cp.select[c]).alias(c) for c in cp.group_by]
+                aggs = [
+                    F.expr(sql).alias(c)
+                    for c, sql in cp.select.items()
+                    if c not in cp.group_by
+                ]
                 df = df.groupBy(*dims).agg(*aggs) if dims else df.agg(*aggs)
-                for mp in ch.mappings:
-                    mapped[mp.column] = F.col(mp.column)
+                mapped = {c: F.col(c) for c in cp.select}
             else:
-                for mp in ch.mappings:
-                    if mp.aggregate:
-                        raise ProjectError(
-                            f"Output {output.output_name!r}: aggregate "
-                            "mapping requires operation_type: Aggregate"
-                        )
-                    path = ".".join([mp.attribute] + mp.keys)
-                    mapped[mp.column] = F.expr(path)
-
-            sel = []
-            for c in output.columns:
-                if c.name in mapped:
-                    sel.append(
-                        mapped[c.name].cast(out_types[c.name]).alias(c.name)
-                    )
-                else:
-                    # typed NULL fill — u_output_query_column_select.sql:13-21
-                    sel.append(
-                        F.lit(None).cast(out_types[c.name]).alias(c.name)
-                    )
-            parts.append(df.select(*sel))
-
-        if not parts:
-            raise ProjectError(
-                f"Output {output.output_name!r} has no channels"
+                mapped = {c: F.expr(sql) for c, sql in cp.select.items()}
+            # typed NULL fill — u_output_query_column_select.sql:13-21
+            parts.append(
+                df.select(
+                    *[
+                        (mapped[c.name] if c.name in mapped else F.lit(None))
+                        .cast(HIVE_TO_SPARK_DDL[c.hive_type])
+                        .alias(c.name)
+                        for c in output.columns
+                    ]
+                )
             )
         # channels combine left-associatively in declared order: UNION ALL
         # (O2) by default, INTERSECT / EXCEPT (both DISTINCT — O3
@@ -1325,38 +878,11 @@ class SourceCompiler:
         # same left-associative grouping (bare SQL would bind INTERSECT
         # tighter).
         out = parts[0]
-        for ch, p in zip(output.channels[1:], parts[1:]):
-            op = (ch.set_operation or "").lower()
-            if op == "intersect":
+        for cp, p in zip(plans[1:], parts[1:]):
+            if cp.set_op == "intersect":
                 out = out.intersect(p)
-            elif op == "except":
+            elif cp.set_op == "except":
                 out = out.subtract(p)
             else:
                 out = out.unionByName(p)
-        return out
-
-    def _channel_filter_sql(self, filter_expr: str, src: Source) -> str:
-        parsed = parse_expression(filter_expr)
-        if parsed.aggs:
-            raise ProjectError(
-                f"Channel filter cannot contain aggregates: {filter_expr!r}"
-            )
-        raw = src.raw_by_name()
-        rules = src.rule_by_name()
-        spans = []
-        for t in parsed.tokens:
-            if t.source != "This":
-                raise ProjectError(
-                    "Channel filters may only reference [This]: "
-                    f"{filter_expr!r}"
-                )
-            if t.attr not in raw and t.attr not in rules:
-                raise ProjectError(
-                    f"Channel filter references unknown attribute "
-                    f"{t.attr!r}"
-                )
-            spans.append((t.start, t.end, f"`{t.attr}`"))
-        out = filter_expr
-        for start, end, repl in sorted(spans, key=lambda x: -x[0]):
-            out = out[:start] + repl + out[end:]
         return out

@@ -29,6 +29,7 @@ from dataforge_core_spark.parser import (
     ParsedExpression,
     parse_expression,
     parse_relation_expression,
+    rewrite,
 )
 from dataforge_core_spark.paths import Path, RelationGraph
 
@@ -55,6 +56,21 @@ class AggSpec:
     inner_sql: str
     transits: dict[str, "Path"] = field(default_factory=dict)  # src -> path
     this_attrs: set[str] = field(default_factory=set)
+
+    def call_sql(self, inner: str | None = None) -> str:
+        """``func([DISTINCT ]inner)`` over ``inner`` (default: inner_sql)."""
+        body = (inner or self.inner_sql).strip()
+        body = re.sub(r"(?i)^\s*distinct\s+", "", body)
+        distinct = "DISTINCT " if self.call.distinct else ""
+        return f"{self.call.func}({distinct}{body})"
+
+
+# aggregates whose LATERAL form returns a non-NULL value over an empty
+# correlated set; after the groupBy+join decorrelation the no-match rows
+# are NULL and must be backfilled for parity with the reference's
+# LEFT JOIN LATERAL (u_enr_query_generate_many_joins.sql:15-39)
+EMPTY_ZERO = {"count", "count_if", "approx_count_distinct"}
+EMPTY_ARRAY = {"collect_list", "collect_set", "array_agg"}
 
 
 @dataclass
@@ -281,7 +297,7 @@ def plan_source(
                         repl,
                     )
                 )
-            inner_sql = _rewrite(call.inner, inner_spans)
+            inner_sql = rewrite(call.inner, inner_spans)
             out_col = _agg_out_col(join.pathid, len(join.aggs))
             existing = next(
                 (
@@ -308,7 +324,7 @@ def plan_source(
             el.join_deps.add(join.pathid)
             spans.append((call.start, call.end, f"`{out_col}`"))
 
-        el.compiled_sql = _rewrite(rule.expression, spans)
+        el.compiled_sql = rewrite(rule.expression, spans)
         plan.rules[rule.name] = el
 
     # -- join deps: [This]-side attrs of first-hop predicates -------------
@@ -329,13 +345,6 @@ def plan_source(
     _check_cycles(plan)
     _assign_levels(plan)
     return plan
-
-
-def _rewrite(expr: str, spans: list[tuple[int, int, str]]) -> str:
-    out = expr
-    for start, end, repl in sorted(spans, key=lambda x: -x[0]):
-        out = out[:start] + repl + out[end:]
-    return out
 
 
 def _get_join(plan: SourcePlan, path: Path, kind: str) -> JoinElement:
@@ -438,3 +447,63 @@ def _assign_levels(plan: SourcePlan) -> None:
     order = {r.name: i for i, r in enumerate(plan.source.rules)}
     for lv in plan.levels:
         lv.sort(key=lambda n: order[n])
+
+
+def status_case_sql(source: Source) -> str | None:
+    """The ``s_validation_status_code`` CASE over the source's V rules
+    (u_enr_query_add_validation_status.sql:38-58): 'F' when a fail rule
+    is false, else 'W' when a warn rule is, else 'P'; None without V
+    rules."""
+    clauses = []
+    for action in ("F", "W"):
+        names = [
+            r.name
+            for r in source.rules
+            if r.rule_type == "V" and r.validation_action == action
+        ]
+        if names:
+            clauses.append(
+                f"WHEN NOT ({' AND '.join(names)}) THEN '{action}'"
+            )
+    if not clauses:
+        return None
+    return "CAST(CASE " + " ".join(clauses) + " ELSE 'P' END AS string)"
+
+
+def build_levels(project: Project, graph: RelationGraph) -> list[list[str]]:
+    """Hub build levels (svc_generate_queries.sql:18-53): each level's
+    hubs read only hubs of earlier levels; names sorted within a level.
+
+    Sub-sources are not standalone hubs — their element rules compile
+    into the parent hub's array enrichment (§2.11).  Stream sources run
+    via streaming/, outside the batch build (the reference routes them
+    to meta.process, outside run.sql — u_enr_query_generate_query.sql:
+    101-104), so a batch hub that reads one cannot be built."""
+    streams = {
+        s.source_name for s in project.sources if s.processing_type == "stream"
+    }
+    deps: dict[str, set[str]] = {}
+    for s in project.sources:
+        if s.sub_source_parent or s.source_name in streams:
+            continue
+        deps[s.source_name] = plan_source(project, graph, s).hub_deps
+        read = sorted(deps[s.source_name] & streams)
+        if read:
+            raise ProjectError(
+                f"Source {s.source_name!r} reads stream source(s) "
+                f"{', '.join(read)}: a batch hub cannot read a stream hub"
+            )
+    placed: set[str] = set()
+    levels: list[list[str]] = []
+    remaining = set(deps)
+    while remaining:
+        level = sorted(n for n in remaining if deps[n] <= placed)
+        if not level:
+            raise ProjectError(
+                "Circular dependencies in sources: "
+                + ", ".join(sorted(remaining))
+            )
+        levels.append(level)
+        placed |= set(level)
+        remaining -= set(level)
+    return levels

@@ -28,6 +28,8 @@ from pyspark.sql import SparkSession
 
 from dataforge_core_spark.model import ProjectError
 from dataforge_core_spark.parser import parse_expression, rewrite
+from dataforge_core_spark.paths import RelationGraph
+from dataforge_core_spark.plans.planner import build_levels, plan_source
 
 # 2-row literal fixture, verbatim from miniSparky.py:32-36 (FIXTURES.md §2)
 _DATATYPES_SQL = """
@@ -431,8 +433,6 @@ def infer_types(
     column of every raw attribute and typed rule, keyed by
     ``(source_name, attr)``.
     """
-    from dataforge_core_spark.runner import ProjectRunner
-
     types: dict[tuple[str, str], str] = {}
     for src in project.sources:
         for a in src.raw_attributes:
@@ -458,13 +458,13 @@ def infer_types(
 
     # rules in build order: sources in topological order, each source's
     # rules in level order
-    runner = ProjectRunner(spark, project)
+    graph = RelationGraph(project.relations)
     by_name = project.source_by_name()
     rules: dict[tuple[str, str], str] = {}
-    for level in runner.topo_order():
+    for level in build_levels(project, graph):
         for name in level:
             src = by_name[name]
-            for lv in runner.compiler.plan(src).levels:
+            for lv in plan_source(project, graph, src).levels:
                 for rule_name in lv:
                     rule = src.rule_by_name()[rule_name]
                     rules[(name, rule_name)] = rule.expression

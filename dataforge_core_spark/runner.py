@@ -21,13 +21,16 @@ Two execution modes:
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
+from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from dataforge_core_spark.compiler import SourceCompiler
-from dataforge_core_spark.model import Project, ProjectError
+from dataforge_core_spark.model import Project, Source
 from dataforge_core_spark.paths import derive_bucket_keys
+from dataforge_core_spark.plans.planner import build_levels
 from dataforge_core_spark.sources.readers import read_source, write_output
 
 
@@ -51,51 +54,37 @@ class ProjectRunner:
         self.persist_hubs = persist_hubs
 
     # ------------------------------------------------------------------
-    def topo_order(self) -> list[list[str]]:
-        """Source build levels (svc_generate_queries.sql:18-53).
-
-        Sub-sources are not standalone hubs — their element rules compile
-        into the parent hub's array enrichment (§2.11)."""
-        deps: dict[str, set[str]] = {}
-        for s in self.project.sources:
-            if s.sub_source_parent:
-                continue
-            if s.processing_type == "stream":
-                # stream sources run via streaming/, not the batch runner
-                # (the reference routes them to meta.process, outside
-                # run.sql — u_enr_query_generate_query.sql:101-104)
-                continue
-            plan = self.compiler.plan(s)
-            deps[s.source_name] = set(plan.hub_deps)
-        placed: set[str] = set()
-        levels: list[list[str]] = []
-        remaining = set(deps)
-        while remaining:
-            level = sorted(
-                n for n in remaining if deps[n] <= placed
-            )
-            if not level:
-                raise ProjectError(
-                    "Circular dependencies in sources: "
-                    + ", ".join(sorted(remaining))
-                )
-            levels.append(level)
-            placed |= set(level)
-            remaining -= set(level)
-        return levels
-
-    # ------------------------------------------------------------------
-    def build(self) -> dict[str, DataFrame]:
-        """Compile all hubs as lazy DataFrames, in dependency order."""
+    def _walk(
+        self, finish: Callable[[Source, DataFrame], DataFrame]
+    ) -> dict[str, DataFrame]:
+        """Read and compile every hub level by level
+        (:func:`build_levels`); ``finish(source, df)`` turns a compiled
+        hub into the frame later levels read.  Hubs within a level are
+        independent, so they run on a thread pool (Spark's scheduler
+        interleaves their jobs; svc_generate_queries.sql orders only
+        across levels)."""
         by_name = self.project.source_by_name()
         hubs: dict[str, DataFrame] = {}
-        for level in self.topo_order():
-            for name in level:
-                src = by_name[name]
-                base = read_source(self.spark, src, self.substitutions)
-                df = self.compiler.compile_source(src, base, hubs)
-                hubs[name] = df.persist() if self.persist_hubs else df
+
+        def one(name: str) -> tuple[str, DataFrame]:
+            src = by_name[name]
+            base = read_source(self.spark, src, self.substitutions)
+            return name, finish(src, self.compiler.compile_source(src, base, hubs))
+
+        for level in build_levels(self.project, self.compiler.graph):
+            if len(level) == 1:
+                done = [one(level[0])]
+            else:
+                with ThreadPoolExecutor(max_workers=len(level)) as pool:
+                    done = list(pool.map(one, level))
+            hubs.update(done)
         return hubs
+
+    def build(self) -> dict[str, DataFrame]:
+        """Compile all hubs as lazy DataFrames, in dependency order."""
+        return self._walk(
+            lambda src, df: df.persist() if self.persist_hubs else df
+        )
 
     def build_checkpointed(self) -> dict[str, DataFrame]:
         """Compile AND materialize every hub as an eager local
@@ -116,28 +105,15 @@ class ProjectRunner:
         equivalent of :meth:`materialize`'s parquet writes, for callers
         that want hot frames instead of files.
         """
-        from concurrent.futures import ThreadPoolExecutor
 
-        by_name = self.project.source_by_name()
-        hubs: dict[str, DataFrame] = {}
-        for level in self.topo_order():
-            def _ckpt(name: str) -> tuple[str, DataFrame]:
-                src = by_name[name]
-                base = read_source(self.spark, src, self.substitutions)
-                df = self.compiler.compile_source(src, base, hubs)
-                rows = Observation()
-                hub = df.observe(rows, F.count(F.lit(1)).alias("n"))
-                hub = hub.localCheckpoint(eager=True)
-                self.compiler.record_hub_size(name, hub, rows.get["n"])
-                return name, hub
+        def checkpoint(src: Source, df: DataFrame) -> DataFrame:
+            rows = Observation()
+            hub = df.observe(rows, F.count(F.lit(1)).alias("n"))
+            hub = hub.localCheckpoint(eager=True)
+            self.compiler.record_hub_size(src.source_name, hub, rows.get["n"])
+            return hub
 
-            if len(level) == 1:
-                done = [_ckpt(level[0])]
-            else:
-                with ThreadPoolExecutor(max_workers=len(level)) as pool:
-                    done = list(pool.map(_ckpt, level))
-            hubs.update(done)
-        return hubs
+        return self._walk(checkpoint)
 
     def build_outputs(
         self, hubs: dict[str, DataFrame] | None = None
@@ -177,57 +153,31 @@ class ProjectRunner:
         ``spark.table`` so downstream joins/groupBys on the key reuse the
         write-time partitioning without an exchange.
         """
-        from concurrent.futures import ThreadPoolExecutor
-
         if bucket_by == "auto":
             bucket_by = self.bucket_keys()
         bucket_by = bucket_by or {}
-
-        by_name = self.project.source_by_name()
-        paths: dict[str, str] = {}
-        hubs: dict[str, DataFrame] = {}
-        bucketed: set[str] = set()
         os.makedirs(base_dir, exist_ok=True)
-        for level in self.topo_order():
-            # hubs within a topological level are independent — submit
-            # their writes concurrently (Spark's scheduler interleaves
-            # the jobs; svc_generate_queries.sql orders only across
-            # levels)
-            def _write(name: str) -> None:
-                src = by_name[name]
-                base = read_source(self.spark, src, self.substitutions)
-                df = self.compiler.compile_source(src, base, hubs)
-                path = os.path.join(base_dir, src.target_table)
-                keys = bucket_by.get(name)
-                if keys and set(keys) <= set(df.columns):
-                    self.spark.sql(
-                        f"DROP TABLE IF EXISTS `{src.target_table}`"
-                    )
-                    (
-                        df.write.mode("overwrite")
-                        .option("path", path)
-                        .bucketBy(n_buckets, *keys)
-                        .sortBy(*keys)
-                        .saveAsTable(src.target_table)
-                    )
-                    bucketed.add(name)
-                else:
-                    df.write.mode("overwrite").parquet(path)
 
-            if len(level) == 1:
-                _write(level[0])
-            else:
-                with ThreadPoolExecutor(max_workers=len(level)) as pool:
-                    list(pool.map(_write, level))
-            for name in level:
-                src = by_name[name]
-                path = os.path.join(base_dir, src.target_table)
-                paths[src.target_table] = path
-                hubs[name] = (
-                    self.spark.table(src.target_table)
-                    if name in bucketed
-                    else self.spark.read.parquet(path)
+        def write(src: Source, df: DataFrame) -> DataFrame:
+            path = os.path.join(base_dir, src.target_table)
+            keys = bucket_by.get(src.source_name)
+            if keys and set(keys) <= set(df.columns):
+                self.spark.sql(f"DROP TABLE IF EXISTS `{src.target_table}`")
+                (
+                    df.write.mode("overwrite")
+                    .option("path", path)
+                    .bucketBy(n_buckets, *keys)
+                    .sortBy(*keys)
+                    .saveAsTable(src.target_table)
                 )
+                return self.spark.table(src.target_table)
+            df.write.mode("overwrite").parquet(path)
+            return self.spark.read.parquet(path)
+
+        hubs = self._walk(write)
+        by_name = self.project.source_by_name()
+        tables = [by_name[name].target_table for name in hubs]
+        paths = {t: os.path.join(base_dir, t) for t in tables}
         for out in self.project.outputs:
             df = self.compiler.compile_output(out, hubs)
             write_output(

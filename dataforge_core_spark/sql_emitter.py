@@ -23,19 +23,32 @@ unquoted ';' (databricks_sql.py:49) and runs each on the session.
 from __future__ import annotations
 
 import os
-import re
 
 from pyspark.sql import SparkSession
 
+from dataforge_core_spark.backends import STMT_SPLIT
 from dataforge_core_spark.model import (
     HIVE_TO_SPARK_DDL,
     Output,
     Project,
     Source,
 )
-from dataforge_core_spark.parser import equi_conjuncts, parse_expression
 from dataforge_core_spark.paths import RelationGraph
-from dataforge_core_spark.plans.planner import JoinElement, plan_source
+from dataforge_core_spark.plans.outputs import plan_output
+from dataforge_core_spark.plans.planner import (
+    EMPTY_ARRAY,
+    EMPTY_ZERO,
+    JoinElement,
+    build_levels,
+    plan_source,
+    status_case_sql,
+)
+from dataforge_core_spark.plans.predicates import (
+    equi_keys,
+    render_relation,
+    render_tokens,
+)
+from dataforge_core_spark.plans.subsource import sub_source_sql
 
 
 class SqlEmitter:
@@ -151,37 +164,13 @@ class SqlEmitter:
         final_cols = [f"`{a.name}`" for a in source.raw_attributes]
         final_cols += [f"`{r.name}`" for r in source.rules]
         # sub-source enrichments (§2.11) — shared SQL with the compiler
-        from dataforge_core_spark.compiler import sub_source_sql
-
         for sub in self.project.sources:
             if sub.sub_source_parent == source.source_name:
                 final_cols.append(
                     f"{sub_source_sql(self.project, self.graph, sub)} "
                     f"AS `{sub.source_name}`"
                 )
-        v_fail = [
-            r.name
-            for r in source.rules
-            if r.rule_type == "V" and r.validation_action == "F"
-        ]
-        v_warn = [
-            r.name
-            for r in source.rules
-            if r.rule_type == "V" and r.validation_action == "W"
-        ]
-        uv = [f"`{r.name}_uv_flag`" for r in source.rules if r.unique]
-        status = ""
-        if v_fail or v_warn:
-            clauses = []
-            if v_fail:
-                clauses.append("WHEN NOT (" + " AND ".join(v_fail) + ") THEN 'F'")
-            if v_warn:
-                clauses.append("WHEN NOT (" + " AND ".join(v_warn) + ") THEN 'W'")
-            status = (
-                ",\n  CAST(CASE "
-                + " ".join(clauses)
-                + " ELSE 'P' END AS string) AS s_validation_status_code"
-            )
+        status = status_case_sql(source)
         # uv flags are window exprs — emit in the final select
         uv_sql = "".join(
             f",\n  (COUNT(1) OVER (PARTITION BY `{r.name}`) = 1) "
@@ -195,7 +184,7 @@ class SqlEmitter:
             + "\nSELECT\n  "
             + ",\n  ".join(final_cols)
             + uv_sql
-            + status
+            + (f",\n  {status} AS s_validation_status_code" if status else "")
             + f"\nFROM {prev}"
         )
         keys = self.bucket_by.get(source.source_name)
@@ -223,13 +212,14 @@ class SqlEmitter:
 
         def hop_clause(i: int, hop, left_alias: str, alias: str) -> str:
             hub = self._hub(hop.dst) if not join.is_self else prev
-            rules_dst = self.by_name[hop.dst].rule_by_name()
-            this_pref, rel_pref = (
-                (f"{left_alias}.", f"{alias}.")
+            pref = (
+                {"This": left_alias, "Related": alias}
                 if hop.forward
-                else (f"{alias}.", f"{left_alias}.")
+                else {"This": alias, "Related": left_alias}
             )
-            pred = _rewrite_relation_alias(hop, this_pref, rel_pref, rules_dst)
+            pred = render_relation(
+                hop, lambda side, a: f"{pref[side]}.`{a}`", self.by_name[hop.dst]
+            )
             return f"LEFT JOIN {hub} {alias} ON {pred}"
 
         if join.kind == "lookup":
@@ -248,8 +238,8 @@ class SqlEmitter:
 
         # aggregate join: decorrelated GROUP BY subquery (J5 rewrite)
         m_hop = hops[-1]
-        conj = equi_conjuncts(m_hop.relation.expression)
-        if conj is None:
+        keys = equi_keys(m_hop)
+        if keys is None:
             # the DataFrame compiler has a row-key fallback; the SQL
             # artifact keeps the decorrelated GROUP BY form only
             raise RuntimeError(
@@ -257,29 +247,18 @@ class SqlEmitter:
                 f"{m_hop.relation.name!r} is not supported; use the "
                 "DataFrame runner for theta aggregates"
             )
-        target_hub = self._hub(m_hop.dst)
-        key_sql, our_sql, group_sql = [], [], []
-        for j, (this_text, rel_text) in enumerate(conj):
-            dst_text = rel_text if m_hop.forward else this_text
-            src_text = this_text if m_hop.forward else rel_text
-            key_sql.append(f"{_bare(dst_text)} AS k{j}")
-            group_sql.append(_bare(dst_text))
-            our_sql.append(_bare(src_text))
-        agg_parts = []
-        for k, spec in enumerate(join.aggs):
-            if spec.transits or spec.this_attrs:
-                raise RuntimeError(
-                    "SQL emission for aggregates with transit/[This] "
-                    "attributes is not supported; use the DataFrame runner"
-                )
-            inner_clean = re.sub(
-                r"(?i)^\s*distinct\s+", "", spec.inner_sql.strip()
+        if any(spec.transits or spec.this_attrs for spec in join.aggs):
+            raise RuntimeError(
+                "SQL emission for aggregates with transit/[This] "
+                "attributes is not supported; use the DataFrame runner"
             )
-            d = "DISTINCT " if spec.call.distinct else ""
-            agg_parts.append(f"{spec.call.func}({d}{inner_clean}) AS `a{k}`")
-        aggs = ", ".join(agg_parts)
+        group_sql = [render_tokens(dst) for _, dst in keys]
+        key_sql = [f"{g} AS k{j}" for j, g in enumerate(group_sql)]
+        aggs = ", ".join(
+            f"{spec.call_sql()} AS `a{k}`" for k, spec in enumerate(join.aggs)
+        )
         sub = (
-            f"(SELECT {', '.join(key_sql)}, {aggs} FROM {target_hub} "
+            f"(SELECT {', '.join(key_sql)}, {aggs} FROM {self._hub(m_hop.dst)} "
             f"GROUP BY {', '.join(group_sql)})"
         )
         clauses = []
@@ -292,98 +271,60 @@ class SqlEmitter:
                 clauses.append(hop_clause(i, hop, left_alias, alias))
             src_alias = f"J_{pid}_h{len(hops) - 2}"
         conds = " AND ".join(
-            f"({_prefix_cols(e, src_alias)}) = J_{pid}.k{j}"
-            for j, e in enumerate(our_sql)
+            f"({render_tokens(src, lambda a: f'{src_alias}.`{a}`')}) "
+            f"= J_{pid}.k{j}"
+            for j, (src, _) in enumerate(keys)
         )
         clauses.append(f"LEFT JOIN {sub} J_{pid} ON {conds}")
         # transits: expose agg results under the planner's helper names,
         # with LATERAL empty-set parity (compiler._agg_empty_fixes):
         # count-family -> 0, array-family -> [] (Spark coerces the bare
         # array() literal to the column's element type in coalesce)
-        from dataforge_core_spark.compiler import _EMPTY_ARRAY, _EMPTY_ZERO
-
         transits = []
         for k, spec in enumerate(join.aggs):
             expr = f"J_{pid}.`a{k}`"
-            if spec.call.func in _EMPTY_ZERO:
+            if spec.call.func in EMPTY_ZERO:
                 expr = f"coalesce({expr}, 0)"
-            elif spec.call.func in _EMPTY_ARRAY:
+            elif spec.call.func in EMPTY_ARRAY:
                 expr = f"coalesce({expr}, array())"
             transits.append(f"{expr} AS `{spec.out_col}`")
         return ("\n  ".join(clauses), transits)
 
     # ------------------------------------------------------------------
     def emit_output(self, output: Output) -> str:
+        """Renders :func:`plan_output` as one CTAS."""
+        plans = plan_output(self.project, output)
         parts = []
-        for ch in output.channels:
-            src = self.by_name[ch.source_name]
-            hub = self._hub(ch.source_name)
+        for cp in plans:
             where = ["true"]
-            has_v = any(r.rule_type == "V" for r in src.rules)
-            if has_v:
-                codes = [
-                    c
-                    for c, inc in (
-                        ("P", ch.include_pass),
-                        ("W", ch.include_warn),
-                        ("F", ch.include_fail),
-                    )
-                    if inc
-                ]
-                if not codes:
-                    # matches compile_output's validation — otherwise the
-                    # artifact silently contains `IN ()` (invalid SQL)
-                    from dataforge_core_spark.model import ProjectError
-
-                    raise ProjectError(
-                        f"Output {output.output_name!r}: channel must "
-                        "include at least one of pass/warn/fail"
-                    )
-                if set(codes) != {"P", "W", "F"}:
-                    quoted = ", ".join(f"'{c}'" for c in codes)
-                    where.append(f"s_validation_status_code IN ({quoted})")
-            if ch.filter:
-                parsed = parse_expression(ch.filter)
-                f = ch.filter
-                for t in sorted(parsed.tokens, key=lambda t: -t.start):
-                    f = f[: t.start] + f"`{t.attr}`" + f[t.end :]
-                where.append(f"({f})")
-            mapped = {}
-            group_by = []
-            is_agg = (ch.operation_type or "").lower() == "aggregate"
-            for mp in ch.mappings:
-                path = ".".join([mp.attribute] + mp.keys)
-                if mp.aggregate:
-                    d = "DISTINCT " if mp.distinct else ""
-                    mapped[mp.column] = f"{mp.aggregate}({d}{path})"
-                else:
-                    mapped[mp.column] = path
-                    if is_agg:
-                        group_by.append(path)
-            sel = []
-            for c in output.columns:
-                t = HIVE_TO_SPARK_DDL[c.hive_type]
-                if c.name in mapped:
-                    sel.append(f"CAST({mapped[c.name]} AS {t}) AS `{c.name}`")
-                else:
-                    sel.append(f"CAST(null AS {t}) AS `{c.name}`")
+            if cp.codes is not None:
+                quoted = ", ".join(f"'{c}'" for c in cp.codes)
+                where.append(f"s_validation_status_code IN ({quoted})")
+            if cp.filter_sql is not None:
+                where.append(f"({cp.filter_sql})")
+            sel = [
+                f"CAST({cp.select.get(c.name, 'null')} AS "
+                f"{HIVE_TO_SPARK_DDL[c.hive_type]}) AS `{c.name}`"
+                for c in output.columns
+            ]
             q = (
                 "SELECT\n    "
                 + ",\n    ".join(sel)
-                + f"\n  FROM {hub}\n  WHERE "
+                + f"\n  FROM {cp.source.target_table}\n  WHERE "
                 + " AND ".join(where)
             )
-            if is_agg and group_by:
-                q += "\n  GROUP BY " + ", ".join(group_by)
+            if cp.group_by:
+                q += "\n  GROUP BY " + ", ".join(
+                    cp.select[c] for c in cp.group_by
+                )
             parts.append(q)
         # left-associative like compile_output: every operand is
         # parenthesized because bare SQL binds INTERSECT tighter than
         # UNION/EXCEPT, which would regroup mixed chains
         _OPS = {"intersect": "INTERSECT", "except": "EXCEPT"}
         body = parts[0]
-        for ch, part in zip(output.channels[1:], parts[1:]):
-            op = _OPS.get((ch.set_operation or "").lower(), "UNION ALL")
-            body = f"({body})\n  {op}\n  ({part})"
+        for cp, part in zip(plans[1:], parts[1:]):
+            body = f"({body})\n  {_OPS.get(cp.set_op, 'UNION ALL')}\n  ({part})"
         part_cols = output.partition_columns()
         if part_cols:
             # partition hint ("9 outputColumnTable.sql":18) -> Spark
@@ -403,44 +344,19 @@ class SqlEmitter:
         (importProject.py:80-90 directory layout).  Returns run.sql text."""
         os.makedirs(os.path.join(target_dir, "sources"), exist_ok=True)
         os.makedirs(os.path.join(target_dir, "outputs"), exist_ok=True)
-        # topological source order (svc_generate_queries.sql:18-53)
-        from dataforge_core_spark.compiler import SourceCompiler  # noqa: F401
-
-        deps = {}
-        for s in self.project.sources:
-            if s.sub_source_parent:
-                continue  # compiled into the parent hub (§2.11)
-            plan = plan_source(self.project, self.graph, s)
-            deps[s.source_name] = set(plan.hub_deps)
-        placed: set[str] = set()
-        ordered: list[str] = []
-        remaining = set(deps)
-        while remaining:
-            level = sorted(n for n in remaining if deps[n] <= placed)
-            if not level:
-                raise RuntimeError("Circular dependencies in sources")
-            ordered.extend(level)
-            placed |= set(level)
-            remaining -= set(level)
-
-        run_parts = []
-        for name in ordered:
-            src = self.by_name[name]
-            sql = self.emit_source(src)
-            with open(
-                os.path.join(target_dir, "sources", f"{name}.sql"), "w"
-            ) as f:
+        # hubs in build order (svc_generate_queries.sql:18-53), then outputs
+        files = [
+            ("sources", name, self.emit_source(self.by_name[name]))
+            for level in build_levels(self.project, self.graph)
+            for name in level
+        ] + [
+            ("outputs", out.output_name, self.emit_output(out))
+            for out in self.project.outputs
+        ]
+        for kind, name, sql in files:
+            with open(os.path.join(target_dir, kind, f"{name}.sql"), "w") as f:
                 f.write(sql)
-            run_parts.append(sql)
-        for out in self.project.outputs:
-            sql = self.emit_output(out)
-            with open(
-                os.path.join(target_dir, "outputs", f"{out.output_name}.sql"),
-                "w",
-            ) as f:
-                f.write(sql)
-            run_parts.append(sql)
-        run_sql = "\n".join(run_parts)
+        run_sql = "\n".join(sql for _, _, sql in files)
         with open(os.path.join(target_dir, "run.sql"), "w") as f:
             f.write(run_sql)
         return run_sql
@@ -448,50 +364,12 @@ class SqlEmitter:
 
 # -- helpers ---------------------------------------------------------------
 
-_STMT_SPLIT = re.compile(r";(?=(?:[^']*'[^']*')*[^']*$)")
-
-
 def run_statements(spark: SparkSession, sql_text: str) -> int:
     """Split on ';' outside quotes and execute sequentially
     (databricks_sql.py:47-60).  Returns the statement count."""
     n = 0
-    for stmt in _STMT_SPLIT.split(sql_text):
+    for stmt in STMT_SPLIT.findall(sql_text):
         if stmt.strip():
             spark.sql(stmt)
             n += 1
     return n
-
-
-def _bare(text: str) -> str:
-    parsed = parse_expression(text, allow_this_agg=True)
-    out = text
-    for t in sorted(parsed.tokens, key=lambda t: -t.start):
-        out = out[: t.start] + f"`{t.attr}`" + out[t.end :]
-    return out
-
-
-def _prefix_cols(bare_sql: str, alias: str) -> str:
-    return re.sub(r"`([A-Za-z0-9_]+)`", rf"{alias}.`\1`", bare_sql)
-
-
-def _rewrite_relation_alias(hop, this_prefix, related_prefix, rules_dst):
-    """Like compiler._rewrite_relation but with table-alias prefixes."""
-    from dataforge_core_spark.parser import parse_relation_expression
-
-    parsed = parse_relation_expression(hop.relation.expression)
-    spans = []
-    guards = []
-    for t in parsed.tokens:
-        pref = this_prefix if t.source == "This" else related_prefix
-        spans.append((t.start, t.end, f"{pref}`{t.attr}`"))
-        if t.source == ("Related" if hop.forward else "This"):
-            rule = rules_dst.get(t.attr)
-            if rule is not None and rule.unique:
-                rpref = related_prefix if hop.forward else this_prefix
-                guards.append(f"{rpref}`{t.attr}_uv_flag`")
-    out = hop.relation.expression
-    for start, end, repl in sorted(spans, key=lambda x: -x[0]):
-        out = out[:start] + repl + out[end:]
-    for g in sorted(set(guards)):
-        out = f"({out}) AND {g}"
-    return out

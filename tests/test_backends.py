@@ -60,6 +60,16 @@ def test_spark_backend_validate_and_quoted_semicolons(spark, tmp_path):
         "SELECT v FROM semi_t"
     )
     assert spark.sql("SELECT v FROM semi_t").collect()[0][0] == "a;b"
+    # run_statements splits with the same pattern, '' escapes included
+    from dataforge_core_spark.sql_emitter import run_statements
+
+    n = run_statements(
+        spark,
+        "CREATE OR REPLACE TEMP VIEW semi_t AS SELECT 'it''s;x' AS v;\n"
+        "SELECT v FROM semi_t;",
+    )
+    assert n == 2
+    assert spark.sql("SELECT v FROM semi_t").collect()[0][0] == "it's;x"
 
 
 def test_databricks_backend_config_surface(tmp_path):

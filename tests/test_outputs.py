@@ -101,6 +101,76 @@ def test_aggregate_mapping_requires_aggregate_op(spark, sf_dir):
         runner.build_outputs()
 
 
+_BAD_CHANNELS = {
+    "filter_on_other_source": (
+        {"filter": "[orders_o].o_totalprice > 0"},
+        "may only reference \\[This\\]",
+    ),
+    "unknown_attribute": ({"filter": "[This].nope > 0"}, "unknown attribute"),
+    "aggregate_in_filter": (
+        {"filter": "sum([orders_o].o_totalprice) > 0"},
+        "cannot contain aggregates",
+    ),
+    "aggregate_without_operation": (
+        {"mappings": ["count(c_custkey) n"]},
+        "requires operation_type: Aggregate",
+    ),
+    "aggregate_not_whitelisted": (
+        {"operation_type": "Aggregate", "mappings": ["nosuchagg(c_custkey) n"]},
+        "not an allowed aggregate",
+    ),
+    "aggregate_without_aggregates": (
+        {"operation_type": "Aggregate", "mappings": ["c_custkey n"]},
+        "has no aggregate mappings",
+    ),
+    "unknown_source": ({"source_name": "nope"}, "unknown source"),
+    "unpivot": ({"unpivot": "c_custkey"}, "Unpivot not supported"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_BAD_CHANNELS))
+def test_invalid_channel_same_error_in_both_back_ends(spark, sf_dir, case):
+    """The DataFrame compiler and the SQL emitter reject the same output
+    channels with the same message."""
+    from dataforge_core_spark.loader import parse_output_dict, parse_source_dict
+    from dataforge_core_spark.model import Project, ProjectError
+    from dataforge_core_spark.runner import ProjectRunner
+    from dataforge_core_spark.sql_emitter import SqlEmitter
+
+    cust = parse_source_dict(
+        {
+            "source_name": "cust_o",
+            "source_table": f"{sf_dir}/customer.parquet",
+            "target_table": "hub_cust_o",
+            "raw_attributes": ["c_custkey long", "c_acctbal double"],
+        }
+    )
+    orders = parse_source_dict(
+        {
+            "source_name": "orders_o",
+            "source_table": f"{sf_dir}/orders.parquet",
+            "target_table": "hub_orders_o",
+            "raw_attributes": ["o_custkey long", "o_totalprice double"],
+        }
+    )
+    overrides, match = _BAD_CHANNELS[case]
+    channel = {"source_name": "cust_o", "mappings": ["c_custkey n"]}
+    out = parse_output_dict(
+        {
+            "output_name": "bad",
+            "columns": ["n long"],
+            "channels": [{**channel, **overrides}],
+        }
+    )
+    project = Project(sources=[cust, orders])
+    runner = ProjectRunner(spark, project, persist_hubs=False)
+    with pytest.raises(ProjectError, match=match) as df_err:
+        runner.compiler.compile_output(out, runner.build())
+    with pytest.raises(ProjectError) as sql_err:
+        SqlEmitter(project).emit_output(out)
+    assert str(sql_err.value) == str(df_err.value)
+
+
 def test_set_operation_channels_dataframe_and_sql_parity(spark, sf_dir):
     """O3 extension: INTERSECT/EXCEPT channels must produce the same
     result through the DataFrame compiler and the emitted SQL artifact

@@ -98,3 +98,109 @@ def test_cli_build(tmp_path):
     )
     assert rc == 0
     assert (tmp_path / "target" / "run.sql").is_file()
+
+
+def _stream_project(batch_reads_stream: bool):
+    """A batch source ``b`` and a stream source ``s``; with
+    ``batch_reads_stream`` a rule of ``b`` looks ``s`` up."""
+    from dataforge_core_spark.loader import (
+        parse_relations_list,
+        parse_source_dict,
+    )
+    from dataforge_core_spark.model import Project
+
+    b = parse_source_dict(
+        {
+            "source_name": "b",
+            "source_table": "t_b",
+            "target_table": "hub_b",
+            "raw_attributes": ["k long"],
+            "rules": [
+                {"name": "s_v", "expression": "[s].v"}
+                if batch_reads_stream
+                else {"name": "k2", "expression": "[This].k * 2"}
+            ],
+        }
+    )
+    s = parse_source_dict(
+        {
+            "source_name": "s",
+            "source_table": "stream",
+            "target_table": "enriched_events_stream",
+            "processing_type": "stream",
+            "raw_attributes": ["k long", "v double"],
+        }
+    )
+    rels = parse_relations_list(
+        [
+            {
+                "name": "[b]- kv -[s]",
+                "expression": "[This].k = [Related].k",
+                "cardinality": "M-1",
+            }
+        ]
+    )
+    return Project(sources=[b, s], relations=rels)
+
+
+def test_stream_sources_leave_run_sql(tmp_path):
+    """A ``processing_type: stream`` source runs via streaming/, as the
+    runner skips it: run.sql must not create its hub."""
+    from dataforge_core_spark.sql_emitter import SqlEmitter
+
+    run_sql = SqlEmitter(_stream_project(False)).emit_all(str(tmp_path))
+    assert "CREATE TABLE hub_b" in run_sql
+    assert "enriched_events_stream" not in run_sql
+    assert not (tmp_path / "sources" / "s.sql").exists()
+
+
+def test_batch_hub_reading_stream_source_is_named(tmp_path):
+    """A batch hub that reads a stream source cannot be built; both
+    back ends say which hub reads which stream (not a bogus cycle)."""
+    from dataforge_core_spark.model import ProjectError
+    from dataforge_core_spark.runner import ProjectRunner
+    from dataforge_core_spark.sql_emitter import SqlEmitter
+
+    project = _stream_project(True)
+    msg = r"Source 'b' reads stream source\(s\) s"
+    with pytest.raises(ProjectError, match=msg):
+        SqlEmitter(project).emit_all(str(tmp_path))
+    with pytest.raises(ProjectError, match=msg):
+        ProjectRunner(None, project).build()
+
+
+def test_compile_front_end_has_one_implementation():
+    """The emitter and the probe render the shared plans/ decisions:
+    neither imports the DataFrame runner (nor the emitter the compiler),
+    and only parser.rewrite applies character spans right to left."""
+    import glob
+    import re
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "dataforge_core_spark",
+    )
+
+    def imports(path):
+        with open(path) as f:
+            return re.findall(
+                r"^\s*(?:from|import)\s+dataforge_core_spark\.(\w+)",
+                f.read(),
+                re.M,
+            )
+
+    assert not {"compiler", "runner"} & set(
+        imports(os.path.join(pkg, "sql_emitter.py"))
+    )
+    assert "runner" not in imports(os.path.join(pkg, "probe.py"))
+    span_loop = re.compile(r"key=lambda \w+: -(?:\w+\[0\]|\w+\.start)")
+    files = [
+        os.path.join(pkg, "compiler.py"),
+        os.path.join(pkg, "sql_emitter.py"),
+        *glob.glob(os.path.join(pkg, "plans", "*.py")),
+    ]
+    for path in files:
+        with open(path) as f:
+            assert not span_loop.search(f.read()), path
+    with open(os.path.join(pkg, "parser.py")) as f:
+        assert len(span_loop.findall(f.read())) == 1

@@ -86,11 +86,13 @@ def _project(path):
 
 
 def test_sub_source_enrichment(spark, nested_parquet):
+    from dataforge_core_spark.plans.planner import build_levels
     from dataforge_core_spark.runner import ProjectRunner
 
     project = _project(nested_parquet)
     runner = ProjectRunner(spark, project, persist_hubs=False)
-    assert runner.topo_order() == [["orders_n"]]  # sub not a hub
+    # sub not a hub
+    assert build_levels(project, runner.compiler.graph) == [["orders_n"]]
     hubs = runner.build()
     hub = hubs["orders_n"]
     assert "order_items" in hub.columns
