@@ -233,6 +233,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from dataforge_core_spark.operators._store import stored
+from dataforge_core_spark.operators.engine_rows import canonicalize
 
 _REPO = os.path.dirname(os.path.abspath(__file__))
 if _REPO not in sys.path:  # robust under by-path module loading
@@ -267,26 +268,16 @@ def _build(spark: SparkSession, sf_dir: str):
     return hubs, outs
 
 
-def _canonical(df: DataFrame) -> DataFrame:
-    """Comparison-boundary canonicalization — see
-    ``operators.engine_rows.canonicalize`` (DECIMAL -> DOUBLE,
-    array<string> -> sorted joined string; oracles mirror with
-    ``CAST(CAST(x AS VARCHAR) AS DOUBLE)`` / ``array_to_string``)."""
-    from dataforge_core_spark.operators.engine_rows import canonicalize
-
-    return canonicalize(df)
-
-
 def _hub(name: str):
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return _canonical(_build(spark, sf_dir)[0][name])
+        return canonicalize(_build(spark, sf_dir)[0][name])
 
     return q
 
 
 def _output(name: str):
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        return _canonical(_build(spark, sf_dir)[1][name])
+        return canonicalize(_build(spark, sf_dir)[1][name])
 
     return q
 

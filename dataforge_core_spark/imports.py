@@ -47,10 +47,10 @@ from __future__ import annotations
 import copy
 import json
 import os
-import re
 from typing import Any
 
 from dataforge_core_spark.model import (
+    NAME_RE,
     Mapping,
     Project,
     Relation,
@@ -58,9 +58,6 @@ from dataforge_core_spark.model import (
 )
 from dataforge_core_spark.parser import parse_expression
 from dataforge_core_spark.paths import RelationGraph
-
-# impc_execute.sql:97 — rule-name validation regex, verbatim
-RULE_NAME_RE = re.compile(r"^[a-z_]+[a-z0-9_]*$")
 
 # impc_execute.sql:100-101 — verbatim message
 _INVALID_RULE_NAME_MSG = (
@@ -443,7 +440,7 @@ def import_project(store: MetaStore, project: Project) -> dict:
         {"source_name": s.source_name, "attribute_name": r.name}
         for s in project.sources
         for r in s.rules
-        if not RULE_NAME_RE.match(r.name)
+        if not NAME_RE.match(r.name)
     ]
     if bad_names:
         return {"error": _INVALID_RULE_NAME_MSG, "error_detail": bad_names}

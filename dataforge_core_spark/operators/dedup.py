@@ -847,7 +847,7 @@ def dedup_index_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
     pb = (
         MM._phash_df(spark, sf_dir)
         .selectExpr(
-            f"posexplode(array({MM._phash_blocks_expr()})) AS (bno, bv)"
+            f"posexplode(array({MM.PHASH.blocks()})) AS (bno, bv)"
         )
         .selectExpr(
             "'phash_bands' AS index_name",

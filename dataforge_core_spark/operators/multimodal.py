@@ -23,6 +23,7 @@ at real media bytes with the same schema.
 from __future__ import annotations
 
 from collections.abc import Callable, Iterator
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -1043,27 +1044,13 @@ def _phash_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     the group-count lane and the banded near-dup lane both serve from
     the checkpointed frame (at 100 TB the image decode is the dominant
     cost, so every consumer must ride one pass over the bytes)."""
-    synth, ph = image_synth_fn(), image_phash_fn()
-
-    def fused(batches):
-        return ph(synth(batches))
-
-    docs = read_table(spark, f"{sf_dir}/documents.parquet").select(
-        "doc_id"
-    )
-    hashed = docs.mapInPandas(fused, "doc_id bigint, phash bigint")
-    return hashed.localCheckpoint(eager=True)
+    return _hash_index(spark, sf_dir, PHASH)
 
 
 def multimodal_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """dHash per image + duplicate-group size, served from the
     checkpointed hash index (one fused Python pass per session)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    return _phash_df(spark, sf_dir).withColumn(
-        "n_dups", F.count("*").over(Window.partitionBy("phash"))
-    )
+    return _dup_groups(spark, sf_dir, PHASH)
 
 
 def _phash_h_ctes() -> str:
@@ -1129,6 +1116,65 @@ PHASH_HAMMING_MAX = PHASH_BANDS - 1  # pigeonhole-guaranteed recall
 MAX_PHASH_BUCKET = 1000
 
 
+@dataclass(frozen=True)
+class HashFamily:
+    """One media-hash family of the near-dup lanes (image dHash, audio
+    fingerprint): the hash column, the pigeonhole banding (``bands``
+    blocks of ``band_bits`` bits, exact up to ``ham_max`` differing
+    bits), the default bucket cap, the two mapInPandas stages that
+    synthesize and hash a document, and the family's stored indexes
+    (hash index, salted band table, corpus probe index), which are
+    thin ``@stored`` wrappers over the shared builders below."""
+
+    col: str
+    bands: int
+    band_bits: int
+    ham_max: int
+    cap: int
+    synth: Callable
+    hasher: Callable
+    index: Callable[[SparkSession, str], DataFrame]
+    salted: Callable[..., DataFrame]
+    probe: Callable[[SparkSession, str], tuple[str, DataFrame]]
+
+    def blocks(self) -> str:
+        return _hash_blocks_expr(self.col, self.bands, self.band_bits)
+
+    def hash_fn(self):
+        """The fused synth+hash stage: (doc_id) -> (doc_id, <col>)."""
+        synth, h = self.synth(), self.hasher()
+
+        def fused(batches):
+            return h(synth(batches))
+
+        return fused
+
+
+def _hash_index(
+    spark: SparkSession, sf_dir: str, fam: HashFamily
+) -> DataFrame:
+    docs = read_table(spark, f"{sf_dir}/documents.parquet").select(
+        "doc_id"
+    )
+    hashed = docs.mapInPandas(
+        fam.hash_fn(), f"doc_id bigint, {fam.col} bigint"
+    )
+    return hashed.localCheckpoint(eager=True)
+
+
+def _dup_groups(
+    spark: SparkSession, sf_dir: str, fam: HashFamily
+) -> DataFrame:
+    """The stored hash index plus each hash's exact-duplicate group
+    size."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    return fam.index(spark, sf_dir).withColumn(
+        "n_dups", F.count("*").over(Window.partitionBy(fam.col))
+    )
+
+
 def _hash_blocks_expr(
     col: str = "phash",
     bands: int = PHASH_BANDS,
@@ -1142,10 +1188,6 @@ def _hash_blocks_expr(
         f"(shiftright({col}, {band_bits * i}) & {mask})"
         for i in range(bands)
     )
-
-
-def _phash_blocks_expr() -> str:
-    return _hash_blocks_expr()
 
 
 def _hash_pairs_ctes(
@@ -1198,10 +1240,6 @@ pairs AS (
        AND a.doc_id < b.doc_id
   WHERE {ham} <= {ham_max}
 )"""
-
-
-def _phash_pairs_ctes(dialect: str, src: str, cap: int) -> str:
-    return _hash_pairs_ctes(dialect, src, cap)
 
 
 def _check_hash_ham(ham_max: int, bands: int) -> None:
@@ -1279,46 +1317,48 @@ def _phash_neardup_body(dialect: str, src: str, cap: int) -> str:
     return _hash_neardup_body(dialect, src, cap)
 
 
-@stored("phash_probe_index")
-def _phash_probe_stored(
-    spark: SparkSession, sf_dir: str
+def _hash_probe_index(
+    spark: SparkSession, sf_dir: str, fam: HashFamily
 ) -> tuple[str, DataFrame]:
-    """Checkpointed CORPUS-side band table (bno, blk, cphash) for the
-    streaming image gate — corpus docs only (the dedup_incremental
-    doc_id split), per-bucket membership rn-capped at MAX_PHASH_BUCKET
+    """Checkpointed CORPUS-side band table (bno, blk, c<col>) for the
+    streaming media gates — corpus docs only (the dedup_incremental
+    doc_id split), per-bucket membership rn-capped at the family's cap
     like the minhash probe index (stream_near_dedup's corpb), so an
-    incoming image probes at most PHASH_BANDS * cap candidates."""
+    incoming document probes at most bands * cap candidates."""
     from dataforge_core_spark.operators.dedup import INCR_MOD, INCR_NEW_GE
+    c = fam.col
     tag = abs(hash((session_key(spark), sf_dir))) % 10**8
-    view = f"phash_src_{tag}"
-    _phash_df(spark, sf_dir).createOrReplaceTempView(view)
+    view = f"{c}_src_{tag}"
+    fam.index(spark, sf_dir).createOrReplaceTempView(view)
     df = spark.sql(
         f"""
-        SELECT bno, blk, cphash FROM (
-          SELECT bno, blk, phash AS cphash,
+        SELECT bno, blk, c{c} FROM (
+          SELECT bno, blk, {c} AS c{c},
                  ROW_NUMBER() OVER (PARTITION BY bno, blk
                       ORDER BY doc_id) AS rn
           FROM (
-            SELECT doc_id, phash,
-                   posexplode(array({_phash_blocks_expr()}))
-                     AS (bno, blk)
+            SELECT doc_id, {c},
+                   posexplode(array({fam.blocks()})) AS (bno, blk)
             FROM {view}
             WHERE doc_id % {INCR_MOD} < {INCR_NEW_GE}
           ) b
-        ) t WHERE rn <= {MAX_PHASH_BUCKET}
+        ) t WHERE rn <= {fam.cap}
         """
     ).localCheckpoint(eager=True)
-    name = f"phash_probe_{tag}"
+    name = f"{c}_probe_{tag}"
     df.createOrReplaceTempView(name)
     return name, df
 
 
-def _phash_probe_index(spark: SparkSession, sf_dir: str) -> str:
-    return _phash_probe_stored(spark, sf_dir)[0]
+@stored("phash_probe_index")
+def _phash_probe_stored(
+    spark: SparkSession, sf_dir: str
+) -> tuple[str, DataFrame]:
+    return _hash_probe_index(spark, sf_dir, PHASH)
 
 
 def _salted_hash_bands(
-    spark: SparkSession, sf_dir: str, col: str, cap: int
+    spark: SparkSession, sf_dir: str, fam: HashFamily, cap: int
 ) -> DataFrame:
     """Checkpointed banded+salted media-hash table — the stored LSH
     band table of the image/audio hash index (the treatment
@@ -1330,17 +1370,10 @@ def _salted_hash_bands(
     a media-dedup deployment probes."""
     from pyspark.sql import functions as F
 
-    bands_n, bits = (
-        (PHASH_BANDS, _PHASH_BAND_BITS)
-        if col == "phash"
-        else (AFP_BANDS, _AFP_BAND_BITS)
-    )
-    src = _phash_df if col == "phash" else _afp_df
-    bands = src(spark, sf_dir).selectExpr(
+    bands = fam.index(spark, sf_dir).selectExpr(
         "doc_id",
-        col,
-        f"posexplode(array({_hash_blocks_expr(col, bands_n, bits)}))"
-        " AS (bno, blk)",
+        fam.col,
+        f"posexplode(array({fam.blocks()})) AS (bno, blk)",
     )
     heavy = (
         bands.groupBy("bno", "blk")
@@ -1356,7 +1389,7 @@ def _salted_hash_bands(
         "bno",
         "blk",
         "doc_id",
-        col,
+        fam.col,
         F.expr("doc_id % coalesce(nsalt, 1)").alias("salt"),
     )
     return salted.localCheckpoint(eager=True)
@@ -1366,7 +1399,7 @@ def _salted_hash_bands(
 def _phash_salted_bands(
     spark: SparkSession, sf_dir: str, cap: int = MAX_PHASH_BUCKET
 ) -> DataFrame:
-    return _salted_hash_bands(spark, sf_dir, "phash", cap)
+    return _salted_hash_bands(spark, sf_dir, PHASH, cap)
 
 
 def _neardup_from_salted_sql(
@@ -1408,24 +1441,24 @@ FROM {src_view} s LEFT JOIN agg a ON s.doc_id = a.doc_id
 def _hash_neardup_served(
     spark: SparkSession,
     sf_dir: str,
-    col: str,
-    cap: int,
-    ham_max: int,
-    bands_n: int,
+    fam: HashFamily,
+    max_bucket: int | None,
+    ham_max: int | None,
 ) -> DataFrame:
     """Spark side of the two media near-dup lanes: validate the dial
     (same guards as the oracle body), then run the remainder over the
     stored salted band table."""
-    _check_hash_ham(ham_max, bands_n)
+    cap = fam.cap if max_bucket is None else max_bucket
+    ham = fam.ham_max if ham_max is None else ham_max
+    _check_hash_ham(ham, fam.bands)
+    col = fam.col
     tag = abs(hash((session_key(spark), sf_dir, col, cap))) % 10**8
     salted_view = f"{col}_salted_{tag}"
     src_view = f"{col}_idx_{tag}"
-    salted = _phash_salted_bands if col == "phash" else _afp_salted_bands
-    salted(spark, sf_dir, cap).createOrReplaceTempView(salted_view)
-    src = _phash_df if col == "phash" else _afp_df
-    src(spark, sf_dir).createOrReplaceTempView(src_view)
+    fam.salted(spark, sf_dir, cap).createOrReplaceTempView(salted_view)
+    fam.index(spark, sf_dir).createOrReplaceTempView(src_view)
     return spark.sql(
-        _neardup_from_salted_sql(salted_view, src_view, col, ham_max)
+        _neardup_from_salted_sql(salted_view, src_view, col, ham)
     )
 
 
@@ -1443,11 +1476,7 @@ def multimodal_phash_neardup(
     the strictness knob a media-dedup pipeline sweeps; values above
     the band count's exactness bound are rejected (see
     ``_check_hash_ham``)."""
-    cap = MAX_PHASH_BUCKET if max_bucket is None else max_bucket
-    ham = PHASH_HAMMING_MAX if ham_max is None else ham_max
-    return _hash_neardup_served(
-        spark, sf_dir, "phash", cap, ham, PHASH_BANDS
-    )
+    return _hash_neardup_served(spark, sf_dir, PHASH, max_bucket, ham_max)
 
 
 def _phash_neardup_oracle(
@@ -1461,44 +1490,33 @@ WITH {_phash_h_ctes()},
 """
 
 
-@stored("phash_cluster_labels")
-def multimodal_phash_clusters(
-    spark: SparkSession, sf_dir: str
+def _hash_clusters(
+    spark: SparkSession, sf_dir: str, fam: HashFamily
 ) -> DataFrame:
-    """Image duplicate CLUSTERS: connected components over the phash
-    near-dup graph, run in HASH SPACE — identical images (same 56-bit
-    hash) collapse to one node BEFORE the CC, so the propagation works
-    on distinct hashes, not documents (this corpus has ~138k exact-dup
-    doc pairs at sf0.1 that would otherwise all be CC edges; the
-    hash-level graph is ~30x smaller and the design holds at 100 TB,
-    where exact-dup multiplicity only grows).  Same min-label
-    machinery as the text/embedding cluster lanes; cluster_id = min
-    doc_id over the component's documents, singletons map to
-    themselves.  Hash-level banding reuses _phash_pairs_ctes with the
-    hash value as the node id (the salt guard keys on it
-    deterministically).  Labels cached per (session, sf)."""
+    """Connected components over a family's near-dup graph, run in
+    hash space (see multimodal_phash_clusters); cluster_id = min doc_id
+    over the component's documents."""
     from pyspark.sql import functions as F
 
     from dataforge_core_spark.operators.dedup import _cc_min_label
-    view = f"phash_cl_{abs(hash((session_key(spark), sf_dir))) % 10**8}"
-    _phash_df(spark, sf_dir).createOrReplaceTempView(view)
-    hsrc = (
-        f"(SELECT DISTINCT phash AS doc_id, phash FROM {view})"
+    c = fam.col
+    view = f"{c}_cl_{abs(hash((session_key(spark), sf_dir))) % 10**8}"
+    fam.index(spark, sf_dir).createOrReplaceTempView(view)
+    hsrc = f"(SELECT DISTINCT {c} AS doc_id, {c} FROM {view})"
+    pairs_ctes = _hash_pairs_ctes(
+        "spark", hsrc, fam.cap, c, fam.bands, fam.band_bits, fam.ham_max
     )
-    pairs = spark.sql(
-        f"WITH {_phash_pairs_ctes('spark', hsrc, MAX_PHASH_BUCKET)}"
-        " SELECT doc_a, doc_b FROM pairs"
-    )
+    pairs = spark.sql(f"WITH {pairs_ctes} SELECT doc_a, doc_b FROM pairs")
     labels = _cc_min_label(pairs)[0]
-    docs = _phash_df(spark, sf_dir)
+    docs = fam.index(spark, sf_dir)
     # hash -> component root (min hash), then min doc_id per root;
     # the finished doc-level frame is the cached artifact (the
     # rooted relation is referenced twice below)
     rooted = docs.join(
-        labels, docs.phash == labels.doc_id, "left"
+        labels, docs[c] == labels.doc_id, "left"
     ).select(
         docs.doc_id.alias("d"),
-        F.coalesce("cluster_id", docs.phash).alias("root"),
+        F.coalesce("cluster_id", docs[c]).alias("root"),
     )
     out = (
         rooted.join(
@@ -1514,11 +1532,38 @@ def multimodal_phash_clusters(
     return out
 
 
+@stored("phash_cluster_labels")
+def multimodal_phash_clusters(
+    spark: SparkSession, sf_dir: str
+) -> DataFrame:
+    """Image duplicate CLUSTERS: connected components over the phash
+    near-dup graph, run in HASH SPACE — identical images (same 56-bit
+    hash) collapse to one node BEFORE the CC, so the propagation works
+    on distinct hashes, not documents (this corpus has ~138k exact-dup
+    doc pairs at sf0.1 that would otherwise all be CC edges; the
+    hash-level graph is ~30x smaller and the design holds at 100 TB,
+    where exact-dup multiplicity only grows).  Same min-label
+    machinery as the text/embedding cluster lanes; cluster_id = min
+    doc_id over the component's documents, singletons map to
+    themselves.  Hash-level banding reuses _hash_pairs_ctes with the
+    hash value as the node id (the salt guard keys on it
+    deterministically).  Labels cached per (session, sf)."""
+    return _hash_clusters(spark, sf_dir, PHASH)
+
+
+# declared after its stored wrappers, which read it when called
+PHASH = HashFamily(
+    "phash", PHASH_BANDS, _PHASH_BAND_BITS, PHASH_HAMMING_MAX,
+    MAX_PHASH_BUCKET, image_synth_fn, image_phash_fn,
+    _phash_df, _phash_salted_bands, _phash_probe_stored,
+)
+
+
 def _phash_clusters_oracle() -> str:
     hsrc = "(SELECT DISTINCT phash AS doc_id, phash FROM h)"
     return f"""
 WITH RECURSIVE {_phash_h_ctes()},
-{_phash_pairs_ctes('duck', hsrc, MAX_PHASH_BUCKET)},
+{_hash_pairs_ctes('duck', hsrc, MAX_PHASH_BUCKET)},
 edges AS (
   SELECT doc_a AS a, doc_b AS b FROM pairs
   UNION ALL
@@ -1750,24 +1795,14 @@ def _afp_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpointed (doc_id, afp) relation — the stored audio
     fingerprint index (one fused synth+parse+fingerprint Arrow pass
     per session, like the image hash index)."""
-    synth, fp = afp_synth_fn(), afp_fp_fn()
-
-    def fused(batches):
-        return fp(synth(batches))
-
-    docs = read_table(spark, f"{sf_dir}/documents.parquet").select(
-        "doc_id"
-    )
-    fps = docs.mapInPandas(fused, "doc_id bigint, afp bigint")
-    return fps.localCheckpoint(eager=True)
+    return _hash_index(spark, sf_dir, AFP)
 
 
 @stored("afp_salted_bands")
 def _afp_salted_bands(
     spark: SparkSession, sf_dir: str, cap: int = MAX_AFP_BUCKET
 ) -> DataFrame:
-    return _salted_hash_bands(spark, sf_dir, "afp", cap)
-
+    return _salted_hash_bands(spark, sf_dir, AFP, cap)
 
 
 def multimodal_audio_fingerprint(
@@ -1775,12 +1810,7 @@ def multimodal_audio_fingerprint(
 ) -> DataFrame:
     """Acoustic fingerprint per doc + exact-duplicate group size,
     served from the checkpointed fingerprint index."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    return _afp_df(spark, sf_dir).withColumn(
-        "n_dups", F.count("*").over(Window.partitionBy("afp"))
-    )
+    return _dup_groups(spark, sf_dir, AFP)
 
 
 def _afp_h_ctes() -> str:
@@ -1829,11 +1859,7 @@ def multimodal_audio_neardup(
     output contract as multimodal_phash_neardup (n_near, min_hamming,
     canonical nearest) over the audio hash; same ``ham_max``
     strictness dial (exact up to AFP_BANDS - 1)."""
-    cap = MAX_AFP_BUCKET if max_bucket is None else max_bucket
-    ham = AFP_HAMMING_MAX if ham_max is None else ham_max
-    return _hash_neardup_served(
-        spark, sf_dir, "afp", cap, ham, AFP_BANDS
-    )
+    return _hash_neardup_served(spark, sf_dir, AFP, max_bucket, ham_max)
 
 
 def _afp_neardup_oracle(
@@ -1852,38 +1878,7 @@ WITH {_afp_h_ctes()},
 def _afp_probe_stored(
     spark: SparkSession, sf_dir: str
 ) -> tuple[str, DataFrame]:
-    """Checkpointed CORPUS-side band table (bno, blk, cafp) for the
-    streaming audio gate — corpus docs only (the dedup_incremental
-    doc_id split), per-bucket membership rn-capped at MAX_AFP_BUCKET
-    like the image probe index, so an incoming track probes at most
-    AFP_BANDS * cap candidates."""
-    from dataforge_core_spark.operators.dedup import INCR_MOD, INCR_NEW_GE
-    tag = abs(hash((session_key(spark), sf_dir))) % 10**8
-    view = f"afp_src_{tag}"
-    _afp_df(spark, sf_dir).createOrReplaceTempView(view)
-    blocks = _hash_blocks_expr("afp", AFP_BANDS, _AFP_BAND_BITS)
-    df = spark.sql(
-        f"""
-        SELECT bno, blk, cafp FROM (
-          SELECT bno, blk, afp AS cafp,
-                 ROW_NUMBER() OVER (PARTITION BY bno, blk
-                      ORDER BY doc_id) AS rn
-          FROM (
-            SELECT doc_id, afp,
-                   posexplode(array({blocks})) AS (bno, blk)
-            FROM {view}
-            WHERE doc_id % {INCR_MOD} < {INCR_NEW_GE}
-          ) b
-        ) t WHERE rn <= {MAX_AFP_BUCKET}
-        """
-    ).localCheckpoint(eager=True)
-    name = f"afp_probe_{tag}"
-    df.createOrReplaceTempView(name)
-    return name, df
-
-
-def _afp_probe_index(spark: SparkSession, sf_dir: str) -> str:
-    return _afp_probe_stored(spark, sf_dir)[0]
+    return _hash_probe_index(spark, sf_dir, AFP)
 
 
 @stored("afp_cluster_labels")
@@ -1899,40 +1894,14 @@ def multimodal_audio_clusters(
     similarity chains along the slope continuum merge, but no giant
     component swallows the corpus, so the artifact stays
     informative."""
-    from pyspark.sql import functions as F
+    return _hash_clusters(spark, sf_dir, AFP)
 
-    from dataforge_core_spark.operators.dedup import _cc_min_label
-    view = f"afp_cl_{abs(hash((session_key(spark), sf_dir))) % 10**8}"
-    _afp_df(spark, sf_dir).createOrReplaceTempView(view)
-    hsrc = f"(SELECT DISTINCT afp AS doc_id, afp FROM {view})"
-    pairs = spark.sql(
-        "WITH "
-        + _hash_pairs_ctes(
-            "spark", hsrc, MAX_AFP_BUCKET, "afp",
-            AFP_BANDS, _AFP_BAND_BITS, AFP_HAMMING_MAX,
-        )
-        + " SELECT doc_a, doc_b FROM pairs"
-    )
-    labels = _cc_min_label(pairs)[0]
-    docs = _afp_df(spark, sf_dir)
-    rooted = docs.join(
-        labels, docs.afp == labels.doc_id, "left"
-    ).select(
-        docs.doc_id.alias("d"),
-        F.coalesce("cluster_id", docs.afp).alias("root"),
-    )
-    out = (
-        rooted.join(
-            rooted.groupBy("root").agg(
-                F.min("d").alias("cluster_id")
-            ),
-            "root",
-        )
-        .select(F.col("d").alias("doc_id"), "cluster_id")
-        .localCheckpoint(eager=True)
-    )
-    free_local_checkpoint(labels)  # folded into the checkpoint above
-    return out
+
+AFP = HashFamily(
+    "afp", AFP_BANDS, _AFP_BAND_BITS, AFP_HAMMING_MAX,
+    MAX_AFP_BUCKET, afp_synth_fn, afp_fp_fn,
+    _afp_df, _afp_salted_bands, _afp_probe_stored,
+)
 
 
 def _afp_clusters_oracle() -> str:

@@ -108,18 +108,6 @@ def _sig_sql(dialect: str, flat_src: str | None = None) -> str:
     """
 
 
-def _hamming(dialect: str, a: str, b: str) -> str:
-    terms = []
-    for j in range(1, 17):
-        da = _digit(dialect, a, j)
-        db = _digit(dialect, b, j)
-        if dialect == "spark":
-            terms.append(f"bit_count({da} ^ {db})")
-        else:
-            terms.append(f"bit_count(xor(CAST({da} AS BIGINT), CAST({db} AS BIGINT)))")
-    return " + ".join(terms)
-
-
 def _parse_halves(dialect: str) -> str:
     """(h_hi, h_lo) 32-bit halves of the 16-hex simhash — parsed ONCE
     per band row so the pair verify is two integer xor+popcounts

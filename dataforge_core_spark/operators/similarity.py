@@ -57,10 +57,6 @@ def _unrolled_dot(a: str, b: str, dialect: str) -> str:
     return terms[0]
 
 
-_SPARK_DOT = None  # built per use via _unrolled_dot
-_DUCK_DOT = None
-
-
 # norms are precomputed once per vector (a "v" CTE) — cosine per pair is
 # then a single dot product, 3x less arithmetic than norm-per-pair
 def _spark_norm(a: str) -> str:
@@ -152,16 +148,24 @@ v AS MATERIALIZED (
 )"""
 
 
-def ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    v = _normed(spark, sf_dir)
+def _topk_sql(
+    corpus: str, on: str, queries: str | None = None, top_k: int = TOP_K
+) -> str:
+    """The one top-K shape of the ANN search lanes: exact cosine of
+    every candidate pair (``queries`` q joined to ``corpus`` c on the
+    candidate predicate ``on``), ROW_NUMBER per query by (score desc,
+    neighbor_id), ranks 1..``top_k``.  The lanes differ only in the
+    candidate join; ``queries`` defaults to the first N_QUERIES rows
+    of ``corpus``."""
+    if queries is None:
+        queries = f"(SELECT * FROM {corpus} WHERE vec_id < {N_QUERIES})"
     cos = _spark_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
-    return spark.sql(
-        f"""
+    return f"""
         WITH scored AS (
           SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
                  {cos} AS score
-          FROM (SELECT * FROM {v} WHERE vec_id < {N_QUERIES}) q
-          JOIN {v} c ON q.vec_id <> c.vec_id
+          FROM {queries} q
+          JOIN {corpus} c ON {on}
         ),
         ranked AS (
           SELECT query_id, neighbor_id,
@@ -170,9 +174,12 @@ def ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM scored
         )
         SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id
-        FROM ranked WHERE rank <= {TOP_K}
+        FROM ranked WHERE rank <= {top_k}
         """
-    )
+
+
+def ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return spark.sql(_topk_sql(_normed(spark, sf_dir), "q.vec_id <> c.vec_id"))
 
 
 def _bruteforce_oracle() -> str:
@@ -202,26 +209,11 @@ def ann_ivf_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     At scale: corpus pre-partitioned by bucket (one shuffle at build
     time), probes shuffle only to their bucket's partition.
     """
-    v = _normed(spark, sf_dir)
-    cos = _spark_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
     return spark.sql(
-        f"""
-        WITH scored AS (
-          SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                 {cos} AS score
-          FROM (SELECT * FROM {v} WHERE vec_id < {N_QUERIES}) q
-          JOIN {v} c
-            ON q.label = c.label AND q.vec_id <> c.vec_id
-        ),
-        ranked AS (
-          SELECT query_id, neighbor_id,
-                 ROW_NUMBER() OVER (PARTITION BY query_id
-                      ORDER BY score DESC, neighbor_id) AS rank
-          FROM scored
+        _topk_sql(
+            _normed(spark, sf_dir),
+            "q.label = c.label AND q.vec_id <> c.vec_id",
         )
-        SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id
-        FROM ranked WHERE rank <= {TOP_K}
-        """
     )
 
 
@@ -298,25 +290,11 @@ def ann_lsh_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH-bucketed top-k: candidates share the 12-bit hyperplane bucket,
     exact cosine re-ranks within the bucket.  At 100 TB the bucket id is
     the shuffle/partition key; each probe touches one bucket."""
-    v = _normed(spark, sf_dir)
-    cos = _spark_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
     return spark.sql(
-        f"""
-        WITH scored AS (
-          SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                 {cos} AS score
-          FROM (SELECT * FROM {v} WHERE vec_id < {N_QUERIES}) q
-          JOIN {v} c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
-        ),
-        ranked AS (
-          SELECT query_id, neighbor_id,
-                 ROW_NUMBER() OVER (PARTITION BY query_id
-                      ORDER BY score DESC, neighbor_id) AS rank
-          FROM scored
+        _topk_sql(
+            _normed(spark, sf_dir),
+            "q.bucket = c.bucket AND q.vec_id <> c.vec_id",
         )
-        SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id
-        FROM ranked WHERE rank <= {TOP_K}
-        """
     )
 
 
@@ -714,26 +692,7 @@ def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF with a real k-means coarse quantizer: search only the query's
     centroid cell.  nprobe=1 here; raising nprobe = OR-ing more cids into
     the join key (recall dial, same plan shape)."""
-    af = _kmeans_assignments(spark, sf_dir)
-    cos = _spark_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
-    return spark.sql(
-        f"""
-        WITH scored AS (
-          SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                 {cos} AS score
-          FROM (SELECT * FROM {af} WHERE vec_id < {N_QUERIES}) q
-          JOIN {af} c ON q.cid = c.cid AND c.cellrn <= {IVF_CELL_CAP} AND q.vec_id <> c.vec_id
-        ),
-        ranked AS (
-          SELECT query_id, neighbor_id,
-                 ROW_NUMBER() OVER (PARTITION BY query_id
-                      ORDER BY score DESC, neighbor_id) AS rank
-          FROM scored
-        )
-        SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id
-        FROM ranked WHERE rank <= {TOP_K}
-        """
-    )
+    return ann_ivf_search(spark, sf_dir)
 
 
 def ann_ivf_search(
@@ -763,12 +722,10 @@ def ann_ivf_search(
         raise ValueError(f"nprobe must be in [1, {KMEANS_K}]")
     if top_k < 1:
         raise ValueError("top_k must be >= 1")
-    af, _cv = _kmeans_index(spark, sf_dir)
-    cos = _spark_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
+    af = _kmeans_assignments(spark, sf_dir)
     cf = f" AND ({corpus_filter})" if corpus_filter else ""
-    if nprobe == 1:
-        qsrc = f"(SELECT * FROM {af} WHERE vec_id < {N_QUERIES})"
-    else:
+    qsrc = None  # nprobe=1: the assigned cell is the nearest one
+    if nprobe > 1:
         sa = _probe_sorted_expr(_kmeans_centroids(spark, sf_dir), "emb")
         picks = ", ".join(f"__sa[{j}].c" for j in range(nprobe))
         qsrc = f"""(
@@ -777,24 +734,11 @@ def ann_ivf_search(
             FROM {af} WHERE vec_id < {N_QUERIES}
           ) t LATERAL VIEW explode(array({picks})) p AS pcid
         )"""
-    return spark.sql(
-        f"""
-        WITH scored AS (
-          SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                 {cos} AS score
-          FROM {qsrc} q
-          JOIN {af} c ON q.cid = c.cid AND c.cellrn <= {IVF_CELL_CAP} AND q.vec_id <> c.vec_id{cf}
-        ),
-        ranked AS (
-          SELECT query_id, neighbor_id,
-                 ROW_NUMBER() OVER (PARTITION BY query_id
-                      ORDER BY score DESC, neighbor_id) AS rank
-          FROM scored
-        )
-        SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id
-        FROM ranked WHERE rank <= {top_k}
-        """
+    on = (
+        f"q.cid = c.cid AND c.cellrn <= {IVF_CELL_CAP}"
+        f" AND q.vec_id <> c.vec_id{cf}"
     )
+    return spark.sql(_topk_sql(af, on, qsrc, top_k))
 
 
 def ann_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2511,19 +2455,25 @@ SELECT node AS vec_id, MIN(lab) AS cluster_id FROM reach GROUP BY node
 # ---------------------------------------------------------------------------
 
 
-def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-query recall@K of the IVF (k-means, nprobe=1) search vs the
-    exact brute-force top-K."""
+def _recall_vs_bruteforce(
+    spark: SparkSession,
+    sf_dir: str,
+    search: Callable[[SparkSession, str], DataFrame],
+) -> DataFrame:
+    """Per-query recall@K of an approximate top-K ``search`` vs the
+    exact brute-force top-K: the broadcast overlap join keyed
+    (query_id, neighbor_id) and two exact counts per query, shared by
+    every recall lane (they differ only in the search they score)."""
     from pyspark.sql import functions as F
 
     brute = ann_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-    ivf = (
-        ann_ivf_search(spark, sf_dir, nprobe=1)
+    hits = (
+        search(spark, sf_dir)
         .select("query_id", "neighbor_id")
         .withColumn("hit", F.lit(1))
     )
     return (
-        brute.join(F.broadcast(ivf), ["query_id", "neighbor_id"], "left")
+        brute.join(F.broadcast(hits), ["query_id", "neighbor_id"], "left")
         .groupBy("query_id")
         .agg(
             F.count(F.lit(1)).alias("n_exact"),
@@ -2533,6 +2483,12 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("recall"),
         )
     )
+
+
+def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Per-query recall@K of the IVF (k-means, nprobe=1) search vs the
+    exact brute-force top-K."""
+    return _recall_vs_bruteforce(spark, sf_dir, ann_ivf_search)
 
 
 def _recall_eval_oracle() -> str:
@@ -4257,40 +4213,30 @@ def ann_mrl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     is needed.  Prefix cosine = prefix dot / prefix norms; sqrt is
     IEEE-correctly-rounded on both engines, so ranks are
     engine-identical."""
-    from pyspark.sql import functions as F
-
-    v = _normed(spark, sf_dir)
     pd_ = _prefix_dot("q.emb", "c.emb", "spark")
     pq_ = _prefix_dot("q.emb", "q.emb", "spark")
     pc_ = _prefix_dot("c.emb", "c.emb", "spark")
-    brute = ann_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-    mrl = spark.sql(
-        f"""
-        WITH scored AS (
-          SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                 ({pd_}) / (sqrt({pq_}) * sqrt({pc_})) AS score
-          FROM (SELECT * FROM {v} WHERE vec_id < {N_QUERIES}) q
-          JOIN {v} c ON q.vec_id <> c.vec_id
+
+    def prefix_search(spark: SparkSession, sf_dir: str) -> DataFrame:
+        v = _normed(spark, sf_dir)
+        return spark.sql(
+            f"""
+            WITH scored AS (
+              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+                     ({pd_}) / (sqrt({pq_}) * sqrt({pc_})) AS score
+              FROM (SELECT * FROM {v} WHERE vec_id < {N_QUERIES}) q
+              JOIN {v} c ON q.vec_id <> c.vec_id
+            )
+            SELECT query_id, neighbor_id FROM (
+              SELECT query_id, neighbor_id,
+                     ROW_NUMBER() OVER (PARTITION BY query_id
+                          ORDER BY score DESC, neighbor_id) AS rank
+              FROM scored
+            ) t WHERE rank <= {TOP_K}
+            """
         )
-        SELECT query_id, neighbor_id FROM (
-          SELECT query_id, neighbor_id,
-                 ROW_NUMBER() OVER (PARTITION BY query_id
-                      ORDER BY score DESC, neighbor_id) AS rank
-          FROM scored
-        ) t WHERE rank <= {TOP_K}
-        """
-    ).withColumn("hit", F.lit(1))
-    return (
-        brute.join(F.broadcast(mrl), ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.count("hit").alias("n_hits"),
-            (
-                F.count("hit").cast("double") / F.count(F.lit(1))
-            ).alias("recall"),
-        )
-    )
+
+    return _recall_vs_bruteforce(spark, sf_dir, prefix_search)
 
 
 # ---------------------------------------------------------------------------
@@ -4430,25 +4376,7 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the acceptance metric of any quantized index (how much accuracy the
     8-byte codes cost).  Same join/aggregate shape as ann_recall_eval;
     the ratio is one division of two exact counts."""
-    from pyspark.sql import functions as F
-
-    brute = ann_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-    pq = (
-        ann_pq_search(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        brute.join(F.broadcast(pq), ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.count("hit").alias("n_hits"),
-            (
-                F.count("hit").cast("double") / F.count(F.lit(1))
-            ).alias("recall"),
-        )
-    )
+    return _recall_vs_bruteforce(spark, sf_dir, ann_pq_search)
 
 
 def _pq_recall_oracle() -> str:
@@ -4488,25 +4416,7 @@ def ann_sq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the acceptance metric of the 8-bit compression (same shape as
     ann_pq_recall; the PQ/SQ recall pair is how a deployment picks its
     compression point)."""
-    from pyspark.sql import functions as F
-
-    brute = ann_bruteforce(spark, sf_dir).select("query_id", "neighbor_id")
-    sq = (
-        ann_sq_search(spark, sf_dir)
-        .select("query_id", "neighbor_id")
-        .withColumn("hit", F.lit(1))
-    )
-    return (
-        brute.join(F.broadcast(sq), ["query_id", "neighbor_id"], "left")
-        .groupBy("query_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_exact"),
-            F.count("hit").alias("n_hits"),
-            (
-                F.count("hit").cast("double") / F.count(F.lit(1))
-            ).alias("recall"),
-        )
-    )
+    return _recall_vs_bruteforce(spark, sf_dir, ann_sq_search)
 
 
 def _sq_recall_oracle() -> str:

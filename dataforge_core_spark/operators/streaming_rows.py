@@ -46,21 +46,6 @@ def rocksdb_available(spark: SparkSession) -> bool:
         return False
 
 
-def _state_provider_override(spark: SparkSession) -> str | None:
-    """Large-state deployments (multi-day stream-stream join state,
-    high-cardinality sessionization) overflow the default HDFS-backed
-    in-memory store; ``DATAFORGE_STREAM_STATE_PROVIDER=rocksdb`` swaps
-    in the RocksDB provider for every streaming driver row.  Off by
-    default: at driver-testdata scale the in-memory store's per-batch
-    commit is faster than RocksDB's SST churn."""
-    import os
-
-    choice = os.environ.get("DATAFORGE_STREAM_STATE_PROVIDER", "").lower()
-    if choice == "rocksdb" and rocksdb_available(spark):
-        return _ROCKSDB_PROVIDER
-    return None
-
-
 def _run_to_memory(df: DataFrame, name: str, spark: SparkSession,
                    mode: str, partitions: int = 4) -> DataFrame:
     # State-store partition count is fixed at query start from
@@ -79,36 +64,62 @@ def _run_to_memory(df: DataFrame, name: str, spark: SparkSession,
     # override elsewhere would strand the session at the narrow width
     from dataforge_core_spark.session import shuffle_override
 
-    pkey = "spark.sql.streaming.stateStore.providerClass"
-    prev_provider = spark.conf.get(pkey, None)
-    provider = _state_provider_override(spark)
-    if provider:
-        spark.conf.set(pkey, provider)
-    try:
-        with shuffle_override(spark, partitions):
-            q = (
-                df.writeStream.format("memory")
-                .queryName(name)
-                .outputMode(mode)
-                .trigger(availableNow=True)
-                .start()
+    with shuffle_override(spark, partitions):
+        q = (
+            df.writeStream.format("memory")
+            .queryName(name)
+            .outputMode(mode)
+            .trigger(availableNow=True)
+            .start()
+        )
+        # awaitTermination(timeout) returns False while the query
+        # is still running — reading the memory sink then would
+        # silently compare a partially-populated table; fail
+        # loudly instead
+        if not q.awaitTermination(300):
+            q.stop()
+            raise RuntimeError(
+                f"streaming query {name!r} did not finish within 300s"
             )
-            # awaitTermination(timeout) returns False while the query
-            # is still running — reading the memory sink then would
-            # silently compare a partially-populated table; fail
-            # loudly instead
-            if not q.awaitTermination(300):
-                q.stop()
-                raise RuntimeError(
-                    f"streaming query {name!r} did not finish within 300s"
-                )
-    finally:
-        if provider:
-            if prev_provider is None:
-                spark.conf.unset(pkey)
-            else:
-                spark.conf.set(pkey, prev_provider)
     return spark.table(name)
+
+
+def _incoming_docs(
+    spark: SparkSession, sf_dir: str, batch: bool
+) -> DataFrame:
+    """The incoming documents of the ingest gates: the "new batch" half
+    of the dedup_incremental doc_id split, read as a table in batch
+    mode and as a file stream otherwise."""
+    from dataforge_core_spark.operators.dedup import INCR_MOD, INCR_NEW_GE
+    from dataforge_core_spark.streaming import stream_documents
+
+    src = (
+        read_table(spark, f"{sf_dir}/documents.parquet")
+        if batch
+        else stream_documents(spark, sf_dir)
+    )
+    return src.where(f"doc_id % {INCR_MOD} >= {INCR_NEW_GE}")
+
+
+def _gate_result(
+    df: DataFrame, name: str, spark: SparkSession, batch: bool
+) -> DataFrame:
+    """A gate's verdict frame itself in batch mode (the components of
+    train_ingest_decision), else its streaming query run to the memory
+    sink ``name``."""
+    return df if batch else _run_to_memory(df, name, spark, "complete")
+
+
+def _dup_status(probed: DataFrame) -> DataFrame:
+    """Per-doc exact_dup / near_dup / unique from probe rows carrying
+    the exf / nearf match flags."""
+    return probed.groupBy("doc_id").agg(
+        F.expr(
+            "CASE WHEN MAX(exf) = 1 THEN 'exact_dup' "
+            "WHEN MAX(nearf) = 1 THEN 'near_dup' "
+            "ELSE 'unique' END"
+        ).alias("status")
+    )
 
 
 def stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -894,8 +905,6 @@ def stream_near_dedup(
     tokens) probe a NULL sentinel band that can never match and are
     classified by the exact key alone, like the batch lane."""
     from dataforge_core_spark.operators.dedup import (
-        INCR_MOD,
-        INCR_NEW_GE,
         JACCARD_THRESHOLD,
         MINHASH_BANDS,
         MINHASH_R,
@@ -907,20 +916,13 @@ def stream_near_dedup(
         _SPARK_TOKENS,
         scalar_sig_exprs,
     )
-    from dataforge_core_spark.streaming import stream_documents
 
     thr = JACCARD_THRESHOLD if threshold is None else threshold
     bname, kname = _near_dedup_index(spark, sf_dir)
     hs_expr, sig_cols = scalar_sig_exprs()
     bk_arr = "array(" + ", ".join(_band_keys(MINHASH_BANDS, MINHASH_R)) + ")"
-    src = (
-        read_table(spark, f"{sf_dir}/documents.parquet")
-        if batch
-        else stream_documents(spark, sf_dir)
-    )
     new = (
-        src
-        .where(f"doc_id % {INCR_MOD} >= {INCR_NEW_GE}")
+        _incoming_docs(spark, sf_dir, batch)
         .selectExpr(
             "doc_id", f"md5({_SPARK_NORM}) AS k", f"{_SPARK_TOKENS} AS tok"
         )
@@ -955,16 +957,9 @@ def stream_near_dedup(
                 THEN 1 ELSE 0 END AS nearf""",
         )
     )
-    agg = probed.groupBy("doc_id").agg(
-        F.expr(
-            "CASE WHEN MAX(exf) = 1 THEN 'exact_dup' "
-            "WHEN MAX(nearf) = 1 THEN 'near_dup' "
-            "ELSE 'unique' END"
-        ).alias("status")
+    return _gate_result(
+        _dup_status(probed), "drv_stream_near_dedup", spark, batch
     )
-    if batch:
-        return agg
-    return _run_to_memory(agg, "drv_stream_near_dedup", spark, "complete")
 
 
 def stream_phash_gate(
@@ -975,63 +970,44 @@ def stream_phash_gate(
     split) are dHashed per micro-batch by the same fused Arrow
     synth+hash pass the batch lanes use (mapInPandas is stateless, so
     it streams), then probe the STORED corpus band index
-    (multimodal._phash_probe_index) via a stream-static join and are
+    (multimodal._phash_probe_stored) via a stream-static join and are
     classified exact_dup (hamming 0) / near_dup (<= PHASH_HAMMING_MAX)
     / unique.  No stateful operator except the final per-doc aggregate
     — the continuous-ingest shape of an image-corpus pipeline, with
     the index built once by the batch side."""
-    from dataforge_core_spark.operators.dedup import INCR_MOD, INCR_NEW_GE
-    from dataforge_core_spark.operators.multimodal import (
-        PHASH_HAMMING_MAX,
-        _phash_probe_index,
-        image_phash_fn,
-        image_synth_fn,
-    )
-    from dataforge_core_spark.streaming import stream_documents
+    from dataforge_core_spark.operators.multimodal import PHASH
 
-    idx = _phash_probe_index(spark, sf_dir)
-    synth, ph = image_synth_fn(), image_phash_fn()
+    return _hash_gate(spark, sf_dir, PHASH, batch)
 
-    def fused(batches):
-        return ph(synth(batches))
 
-    from dataforge_core_spark.operators.multimodal import (
-        _phash_blocks_expr,
-    )
-
-    src = (
-        read_table(spark, f"{sf_dir}/documents.parquet")
-        if batch
-        else stream_documents(spark, sf_dir)
-    )
+def _hash_gate(
+    spark: SparkSession, sf_dir: str, fam, batch: bool
+) -> DataFrame:
+    """The media ingest gate of one multimodal.HashFamily: hash the
+    incoming documents with the family's fused Arrow stage, probe its
+    stored corpus band index on every band, verify by popcount."""
+    c, cc = fam.col, f"c{fam.col}"
+    idx = fam.probe(spark, sf_dir)[0]
     new = (
-        src
-        .where(f"doc_id % {INCR_MOD} >= {INCR_NEW_GE}")
+        _incoming_docs(spark, sf_dir, batch)
         .selectExpr("doc_id")
-        .mapInPandas(fused, "doc_id bigint, phash bigint")
+        .mapInPandas(fam.hash_fn(), f"doc_id bigint, {c} bigint")
         .selectExpr(
-            "doc_id", "phash",
-            f"posexplode(array({_phash_blocks_expr()})) AS (bno, blk)",
+            "doc_id", c,
+            f"posexplode(array({fam.blocks()})) AS (bno, blk)",
         )
     )
     probed = new.join(spark.table(idx), ["bno", "blk"], "left").selectExpr(
         "doc_id",
-        "CASE WHEN cphash IS NOT NULL"
-        " AND bit_count(phash ^ cphash) = 0 THEN 1 ELSE 0 END AS exf",
-        "CASE WHEN cphash IS NOT NULL"
-        f" AND bit_count(phash ^ cphash) <= {PHASH_HAMMING_MAX}"
+        f"CASE WHEN {cc} IS NOT NULL"
+        f" AND bit_count({c} ^ {cc}) = 0 THEN 1 ELSE 0 END AS exf",
+        f"CASE WHEN {cc} IS NOT NULL"
+        f" AND bit_count({c} ^ {cc}) <= {fam.ham_max}"
         " THEN 1 ELSE 0 END AS nearf",
     )
-    agg = probed.groupBy("doc_id").agg(
-        F.expr(
-            "CASE WHEN MAX(exf) = 1 THEN 'exact_dup' "
-            "WHEN MAX(nearf) = 1 THEN 'near_dup' "
-            "ELSE 'unique' END"
-        ).alias("status")
+    return _gate_result(
+        _dup_status(probed), f"drv_stream_{c}_gate", spark, batch
     )
-    if batch:
-        return agg
-    return _run_to_memory(agg, "drv_stream_phash_gate", spark, "complete")
 
 
 def _phash_gate_oracle() -> str:
@@ -1086,62 +1062,13 @@ def stream_afp_gate(
     dedup_incremental doc_id split) are fingerprinted per micro-batch
     by the same fused Arrow synth+parse pass the batch lanes use
     (mapInPandas is stateless, so it streams), then probe the STORED
-    corpus band index (multimodal._afp_probe_index) via a
+    corpus band index (multimodal._afp_probe_stored) via a
     stream-static join and are classified exact_dup (hamming 0) /
     near_dup (<= AFP_HAMMING_MAX) / unique.  No stateful operator
     except the final per-doc aggregate."""
-    from dataforge_core_spark.operators.dedup import INCR_MOD, INCR_NEW_GE
-    from dataforge_core_spark.operators.multimodal import (
-        _AFP_BAND_BITS,
-        _afp_probe_index,
-        _hash_blocks_expr,
-        AFP_BANDS,
-        AFP_HAMMING_MAX,
-        afp_fp_fn,
-        afp_synth_fn,
-    )
-    from dataforge_core_spark.streaming import stream_documents
+    from dataforge_core_spark.operators.multimodal import AFP
 
-    idx = _afp_probe_index(spark, sf_dir)
-    synth, fp = afp_synth_fn(), afp_fp_fn()
-
-    def fused(batches):
-        return fp(synth(batches))
-
-    blocks = _hash_blocks_expr("afp", AFP_BANDS, _AFP_BAND_BITS)
-    src = (
-        read_table(spark, f"{sf_dir}/documents.parquet")
-        if batch
-        else stream_documents(spark, sf_dir)
-    )
-    new = (
-        src
-        .where(f"doc_id % {INCR_MOD} >= {INCR_NEW_GE}")
-        .selectExpr("doc_id")
-        .mapInPandas(fused, "doc_id bigint, afp bigint")
-        .selectExpr(
-            "doc_id", "afp",
-            f"posexplode(array({blocks})) AS (bno, blk)",
-        )
-    )
-    probed = new.join(spark.table(idx), ["bno", "blk"], "left").selectExpr(
-        "doc_id",
-        "CASE WHEN cafp IS NOT NULL"
-        " AND bit_count(afp ^ cafp) = 0 THEN 1 ELSE 0 END AS exf",
-        "CASE WHEN cafp IS NOT NULL"
-        f" AND bit_count(afp ^ cafp) <= {AFP_HAMMING_MAX}"
-        " THEN 1 ELSE 0 END AS nearf",
-    )
-    agg = probed.groupBy("doc_id").agg(
-        F.expr(
-            "CASE WHEN MAX(exf) = 1 THEN 'exact_dup' "
-            "WHEN MAX(nearf) = 1 THEN 'near_dup' "
-            "ELSE 'unique' END"
-        ).alias("status")
-    )
-    if batch:
-        return agg
-    return _run_to_memory(agg, "drv_stream_afp_gate", spark, "complete")
+    return _hash_gate(spark, sf_dir, AFP, batch)
 
 
 def _afp_gate_oracle() -> str:
@@ -1207,19 +1134,11 @@ def stream_ppl_gate(
     this with an explicit ungated-passthrough channel if short docs
     must be classified).  The oracle mirrors the same exclusion, so
     parity covers exactly the gated population."""
-    from dataforge_core_spark.operators.dedup import INCR_MOD, INCR_NEW_GE
     from dataforge_core_spark.operators.text import _ppl_model, _SPARK_TOK
-    from dataforge_core_spark.streaming import stream_documents
 
     mname, uname, ql_v, thr = _ppl_model(spark, sf_dir)
-    src = (
-        read_table(spark, f"{sf_dir}/documents.parquet")
-        if batch
-        else stream_documents(spark, sf_dir)
-    )
     bg = (
-        src
-        .where(f"doc_id % {INCR_MOD} >= {INCR_NEW_GE}")
+        _incoming_docs(spark, sf_dir, batch)
         .selectExpr("doc_id", f"{_SPARK_TOK} AS tok")
         .where("size(tok) >= 2")
         .selectExpr(
@@ -1251,9 +1170,7 @@ def stream_ppl_gate(
         "doc_id", "n_bigrams", "mean_nll_q",
         f"mean_nll_q <= {thr} AS ppl_keep",
     )
-    if batch:
-        return out
-    return _run_to_memory(out, "drv_stream_ppl_gate", spark, "complete")
+    return _gate_result(out, "drv_stream_ppl_gate", spark, batch)
 
 
 def _ppl_gate_oracle() -> str:
@@ -1415,11 +1332,7 @@ def stream_semantic_gate(
             f" THEN 1 ELSE 0 END AS INT)"
         ).alias("contaminated"),
     )
-    if batch:
-        return agg
-    return _run_to_memory(
-        agg, "drv_stream_semantic_gate", spark, "complete"
-    )
+    return _gate_result(agg, "drv_stream_semantic_gate", spark, batch)
 
 
 def _semantic_gate_oracle(

@@ -308,9 +308,6 @@ FROM t
 # sides arrive pre-aggregated so no row explosion is possible.
 # ---------------------------------------------------------------------------
 
-_LM_SCALE = _QL_SCALE
-
-
 def _bigram_lm_sql(dialect: str, bg_src: str | None = None) -> str:
     """Add-one bigram LM score, all-integer output.
 

@@ -1556,9 +1556,6 @@ def _ingest_reason_sql(media_policy: str = "flag") -> str:
   ELSE NULL END"""
 
 
-_INGEST_REASON_SQL = _ingest_reason_sql()
-
-
 @stored("ingest_gate_base")
 def _ingest_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpointed five-gate VERDICT relation (doc_id, text_status,

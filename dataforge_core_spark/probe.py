@@ -26,7 +26,7 @@ from dataclasses import dataclass
 
 from pyspark.sql import SparkSession
 
-from dataforge_core_spark.model import ProjectError
+from dataforge_core_spark.model import HIVE_TO_SPARK_DDL, ProjectError
 from dataforge_core_spark.parser import parse_expression, rewrite
 from dataforge_core_spark.paths import RelationGraph
 from dataforge_core_spark.plans.planner import build_levels, plan_source
@@ -438,7 +438,7 @@ def infer_types(
         for a in src.raw_attributes:
             if a.hive_type is not None:
                 types[(src.source_name, a.name)] = _view_col_for(
-                    HIVE_TO_SPARK_DDL_SIMPLE.get(a.hive_type, a.hive_type)
+                    HIVE_TO_SPARK_DDL.get(a.hive_type, a.hive_type)
                 )
             else:
                 types[(src.source_name, a.name)] = "string"
@@ -535,22 +535,6 @@ def infer_types(
             }
         )
     return report, types
-
-
-# user-facing hive type -> simple Spark type for view-column mapping
-HIVE_TO_SPARK_DDL_SIMPLE = {
-    "string": "string",
-    "decimal": "decimal(38,12)",
-    "timestamp": "timestamp",
-    "boolean": "boolean",
-    "int": "int",
-    "integer": "int",
-    "long": "bigint",
-    "float": "float",
-    "double": "double",
-    "date": "date",
-    "binary": "string",
-}
 
 
 def check_boolean(

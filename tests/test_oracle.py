@@ -116,6 +116,8 @@ NAMES, _Q, _O = _pairs()
 # hubs and 2 outputs, one lane per operators module that reads a stored
 # index, and the events, nested and streaming lanes — so every module
 # and the stored-index registry are oracle-checked on a plain `pytest`.
+# A lane family built by one shared builder has two members here, so a
+# builder bug that breaks only one of them still fails the default run.
 DEFAULT_PAIRS = {
     "hub_region",
     "hub_nation",
@@ -134,6 +136,10 @@ DEFAULT_PAIRS = {
     "text_bigram_lm",
     "train_ingest_decision",
     "multimodal_phash_clusters",
+    "multimodal_audio_clusters",
+    "stream_afp_gate",
+    "ann_lsh_hyperplane",
+    "ann_sq_recall",
     "events_sessionize",
     "nested_aggregate",
     "stream_topk",

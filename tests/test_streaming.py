@@ -515,10 +515,10 @@ def test_checkpoint_restart_counts_each_file_once(spark, tmp_path):
     assert sum(r["n"] for r in got) == 6
 
 
-def test_rocksdb_state_store_option(spark, sf_dir, monkeypatch):
-    """DATAFORGE_STREAM_STATE_PROVIDER=rocksdb swaps the state store for
-    the streaming driver rows and produces the identical result; the
-    session provider config is restored afterward."""
+def test_rocksdb_state_store_option(spark, sf_dir):
+    """Spark's own ``spark.sql.streaming.stateStore.providerClass`` set
+    to the RocksDB provider runs the streaming driver rows on RocksDB
+    state and produces the identical result to the default store."""
     from dataforge_core_spark.operators import streaming_rows as SR
 
     if not SR.rocksdb_available(spark):
@@ -528,11 +528,17 @@ def test_rocksdb_state_store_option(spark, sf_dir, monkeypatch):
         return sorted(tuple(r) for r in df.collect())
 
     base = rows(SR.stream_hourly(spark, sf_dir))
-    monkeypatch.setenv("DATAFORGE_STREAM_STATE_PROVIDER", "rocksdb")
-    got = rows(SR.stream_hourly(spark, sf_dir))
-    assert got == base
     pkey = "spark.sql.streaming.stateStore.providerClass"
-    assert spark.conf.get(pkey, None) in (None, "")
+    prev = spark.conf.get(pkey, None)
+    spark.conf.set(pkey, SR._ROCKSDB_PROVIDER)
+    try:
+        got = rows(SR.stream_hourly(spark, sf_dir))
+    finally:
+        if prev is None:
+            spark.conf.unset(pkey)
+        else:
+            spark.conf.set(pkey, prev)
+    assert got == base
 
 
 def test_late_data_actually_dropped(spark, sf_dir):
