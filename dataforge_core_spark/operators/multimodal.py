@@ -1204,6 +1204,15 @@ def _hash_pairs_ctes(
     by the image report, the cluster lane and the audio-fingerprint
     report (pigeonhole: two hashes within ``ham_max`` = bands - 1
     differing bits MUST agree on at least one whole block)."""
+    salted = _hash_salted_ctes(dialect, src, cap, col, bands, band_bits)
+    return f"{salted},\n{_hash_pairs_cte(dialect, 'salted', col, ham_max)}"
+
+
+def _hash_salted_ctes(
+    dialect: str, src: str, cap: int, col: str, bands: int, band_bits: int
+) -> str:
+    """bands/heavy/salted: every hash's blocks, heavy buckets salted
+    into ceil(n/cap) doc_id residue groups."""
     mask = (1 << band_bits) - 1
     if dialect == "spark":
         band = (
@@ -1212,7 +1221,6 @@ def _hash_pairs_ctes(
             f"{_hash_blocks_expr(col, bands, band_bits)})) AS (bno, blk)"
             f" FROM {src}"
         )
-        ham = f"CAST(bit_count(a.{col} ^ b.{col}) AS INT)"
     else:
         band = " UNION ALL ".join(
             f"SELECT doc_id, {col}, {i} AS bno,"
@@ -1220,7 +1228,6 @@ def _hash_pairs_ctes(
             f" AS blk FROM {src}"
             for i in range(bands)
         )
-        ham = f"CAST(bit_count(xor(a.{col}, b.{col})) AS INTEGER)"
     return f"""bands AS ({band}),
 heavy AS (
   SELECT bno, blk,
@@ -1231,15 +1238,59 @@ salted AS (
   SELECT b.doc_id, b.{col}, b.bno, b.blk,
          b.doc_id % COALESCE(hv.nsalt, 1) AS salt
   FROM bands b LEFT JOIN heavy hv ON b.bno = hv.bno AND b.blk = hv.blk
-),
-pairs AS (
+)"""
+
+
+def _hash_pairs_cte(dialect: str, salted: str, col: str, ham_max: int) -> str:
+    """``pairs`` (doc_a, doc_b, hamming): the verified near pairs of a
+    salted band table — the oracles' inline ``salted`` CTE or the
+    Spark lanes' stored one (_salted_hash_bands)."""
+    if dialect == "spark":
+        ham = f"CAST(bit_count(a.{col} ^ b.{col}) AS INT)"
+    else:
+        ham = f"CAST(bit_count(xor(a.{col}, b.{col})) AS INTEGER)"
+    return f"""pairs AS (
   SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
          {ham} AS hamming
-  FROM salted a JOIN salted b
+  FROM {salted} a JOIN {salted} b
     ON a.bno = b.bno AND a.blk = b.blk AND a.salt = b.salt
        AND a.doc_id < b.doc_id
   WHERE {ham} <= {ham_max}
 )"""
+
+
+def _neardup_tail(
+    dialect: str,
+    salted: str,
+    src: str,
+    col: str,
+    ham_max: int,
+    hint: str = "",
+) -> str:
+    """pairs/sym/agg and the per-document report of the media near-dup
+    lanes — one tail for the DuckDB oracles (inline salted CTE) and the
+    Spark lanes (the stored salted band table)."""
+    return f"""{_hash_pairs_cte(dialect, salted, col, ham_max)},
+sym AS (
+  SELECT doc_a AS doc_id, doc_b AS nb, hamming FROM pairs
+  UNION ALL
+  SELECT doc_b AS doc_id, doc_a AS nb, hamming FROM pairs
+),
+agg AS (
+  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_near,
+         MIN(hamming) AS min_hamming,
+         -- (min hamming, then min doc_id): hamming <= 60 packs into
+         -- the top bits (60 * 2^57 < 2^63) and doc_id < 2^57 fills the
+         -- rest — the full bigint doc_id range a 100 TB corpus uses,
+         -- unlike a decimal multiplier that silently reorders past 1e9
+         MIN_BY(nb, CAST(hamming AS BIGINT) * {1 << 57} + nb) AS nearest
+  FROM sym GROUP BY doc_id
+)
+SELECT {hint}s.doc_id, s.{col},
+       COALESCE(a.n_near, 0) AS n_near,
+       a.min_hamming, a.nearest
+FROM {src} s LEFT JOIN agg a ON s.doc_id = a.doc_id
+"""
 
 
 def _check_hash_ham(ham_max: int, bands: int) -> None:
@@ -1285,32 +1336,13 @@ def _hash_neardup_body(
     """Shared band/salt/join/aggregate SQL over any (doc_id, <hash>)
     relation ``src`` — the DuckDB oracles pass the recomputed ``h``
     CTE and the constructive test a planted literal table; the Spark
-    lanes serve the same semantics from the stored salted band table
-    (_hash_neardup_served), sharing this body's guards via
-    _check_hash_ham."""
+    lanes run this body's tail (_neardup_tail) over the stored salted
+    band table (_hash_neardup_served), with the same guards
+    (_check_hash_ham)."""
     _check_hash_ham(ham_max, bands)
     return f"""
-{_hash_pairs_ctes(dialect, src, cap, col, bands, band_bits, ham_max)},
-sym AS (
-  SELECT doc_a AS doc_id, doc_b AS nb, hamming FROM pairs
-  UNION ALL
-  SELECT doc_b AS doc_id, doc_a AS nb, hamming FROM pairs
-),
-agg AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_near,
-         MIN(hamming) AS min_hamming,
-         -- (min hamming, then min doc_id): hamming <= 60 packs into
-         -- the top bits (60 * 2^57 < 2^63) and doc_id < 2^57 fills the
-         -- rest — the full bigint doc_id range a 100 TB corpus uses,
-         -- unlike a decimal multiplier that silently reorders past 1e9
-         MIN_BY(nb, CAST(hamming AS BIGINT) * {1 << 57} + nb) AS nearest
-  FROM sym GROUP BY doc_id
-)
-SELECT s.doc_id, s.{col},
-       COALESCE(a.n_near, 0) AS n_near,
-       a.min_hamming, a.nearest
-FROM {src} s LEFT JOIN agg a ON s.doc_id = a.doc_id
-"""
+{_hash_salted_ctes(dialect, src, cap, col, bands, band_bits)},
+{_neardup_tail(dialect, "salted", src, col, ham_max)}"""
 
 
 def _phash_neardup_body(dialect: str, src: str, cap: int) -> str:
@@ -1402,42 +1434,6 @@ def _phash_salted_bands(
     return _salted_hash_bands(spark, sf_dir, PHASH, cap)
 
 
-def _neardup_from_salted_sql(
-    salted_view: str, src_view: str, col: str, ham_max: int
-) -> str:
-    """The verify/aggregate remainder of the near-dup report over the
-    STORED salted band table — same pairs/sym/agg semantics as
-    ``_hash_neardup_body`` (which the DuckDB oracles and the
-    constructive literal test still run end-to-end), minus the band
-    construction the checkpoint already paid."""
-    ham = f"CAST(bit_count(a.{col} ^ b.{col}) AS INT)"
-    return f"""
-WITH pairs AS (
-  SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         {ham} AS hamming
-  FROM {salted_view} a JOIN {salted_view} b
-    ON a.bno = b.bno AND a.blk = b.blk AND a.salt = b.salt
-       AND a.doc_id < b.doc_id
-  WHERE {ham} <= {ham_max}
-),
-sym AS (
-  SELECT doc_a AS doc_id, doc_b AS nb, hamming FROM pairs
-  UNION ALL
-  SELECT doc_b AS doc_id, doc_a AS nb, hamming FROM pairs
-),
-agg AS (
-  SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_near,
-         MIN(hamming) AS min_hamming,
-         MIN_BY(nb, CAST(hamming AS BIGINT) * {1 << 57} + nb) AS nearest
-  FROM sym GROUP BY doc_id
-)
-SELECT /*+ SHUFFLE_HASH(a) */ s.doc_id, s.{col},
-       COALESCE(a.n_near, 0) AS n_near,
-       a.min_hamming, a.nearest
-FROM {src_view} s LEFT JOIN agg a ON s.doc_id = a.doc_id
-"""
-
-
 def _hash_neardup_served(
     spark: SparkSession,
     sf_dir: str,
@@ -1446,8 +1442,9 @@ def _hash_neardup_served(
     ham_max: int | None,
 ) -> DataFrame:
     """Spark side of the two media near-dup lanes: validate the dial
-    (same guards as the oracle body), then run the remainder over the
-    stored salted band table."""
+    (same guards as the oracle body), then run the oracle body's tail
+    (_neardup_tail) over the stored salted band table — the band
+    construction is what the checkpoint already paid."""
     cap = fam.cap if max_bucket is None else max_bucket
     ham = fam.ham_max if ham_max is None else ham_max
     _check_hash_ham(ham, fam.bands)
@@ -1458,7 +1455,10 @@ def _hash_neardup_served(
     fam.salted(spark, sf_dir, cap).createOrReplaceTempView(salted_view)
     fam.index(spark, sf_dir).createOrReplaceTempView(src_view)
     return spark.sql(
-        _neardup_from_salted_sql(salted_view, src_view, col, ham)
+        "WITH "
+        + _neardup_tail(
+            "spark", salted_view, src_view, col, ham, "/*+ SHUFFLE_HASH(a) */ "
+        )
     )
 
 

@@ -31,48 +31,97 @@ N_QUERIES = 8  # vec_id < N_QUERIES form the query set
 DIM = 64  # embedding dimensionality of the testdata corpus
 
 
-def _unrolled_dot(a: str, b: str, dialect: str) -> str:
-    """Fully-unrolled dot product as a *balanced* addition tree over
+# ---------------------------------------------------------------------------
+# The SQL vocabulary every lane below renders through, for Spark and for
+# its DuckDB oracle alike: one balanced reducer, the dialect spellings
+# (row enumeration, integer type, array literal), the unrolled dot /
+# norm / cosine, the centroid-distance rank and the ADC pivot list.
+# Spark arrays are 0-based, DuckDB lists 1-based.
+# ---------------------------------------------------------------------------
+
+
+def _tree(terms: list, combine=lambda a, b: f"({a} + {b})"):
+    """The one balanced pairwise reducer: adjacent terms combine level
+    by level and an odd tail carries up unchanged, so a 64-term sum is
+    depth 6.  ``combine`` defaults to SQL addition; the GREATEST trees
+    pass their own, and _py_tree_dot reduces Python floats with the
+    same association (hence bit-identical results)."""
+    while len(terms) > 1:
+        terms = [
+            combine(terms[i], terms[i + 1]) if i + 1 < len(terms) else terms[i]
+            for i in range(0, len(terms), 2)
+        ]
+    return terms[0]
+
+
+def _greatest(terms: list[str]) -> str:
+    return _tree(terms, lambda a, b: f"GREATEST({a}, {b})")
+
+
+def _enum(n: int, dialect: str) -> str:
+    """The integers 0..n-1 as a generator call (a SELECT-list column or
+    a lateral FROM item)."""
+    if dialect == "spark":
+        return f"explode(sequence(0, {n - 1}))"
+    return f"unnest(generate_series(0, {n - 1}))"
+
+
+def _int_t(dialect: str) -> str:
+    return "INT" if dialect == "spark" else "INTEGER"
+
+
+def _array(elems: list[str], dialect: str, sep: str = ", ") -> str:
+    body = sep.join(elems)
+    return f"array({body})" if dialect == "spark" else f"[{body}]"
+
+
+def _unrolled_dot(a: str, b: str, dialect: str, dim: int = DIM) -> str:
+    """Fully-unrolled dot product over the first ``dim`` components of
     already-double arrays (the ``emb`` column of :func:`_normed`).
 
     Unrolled (vs higher-order lambdas): stays in whole-stage codegen —
-    Spark interprets lambda folds row-at-a-time.  Balanced (vs
+    Spark interprets lambda folds row-at-a-time.  Balanced (_tree, vs
     left-leaning): a 64-deep nested add tree takes seconds of Janino
     compilation; the balanced tree is depth 6.  Operands are cast to
     double *once per vector* (a whole-array cast in ``_normed``), not per
     term — float->double is exact, and halving the expression node count
     halves Janino compile time.  The exact same tree shape is emitted for
     DuckDB, so the floating-point result is bit-deterministic across
-    engines.  Spark arrays are 0-based, DuckDB lists 1-based."""
+    engines."""
     off = 0 if dialect == "spark" else 1
-    terms = [
-        f"({a}[{i + off}] * {b}[{i + off}])"
-        for i in range(DIM)
-    ]
-    while len(terms) > 1:
-        terms = [
-            f"({terms[i]} + {terms[i + 1]})" if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    return terms[0]
+    return _tree([f"({a}[{i + off}] * {b}[{i + off}])" for i in range(dim)])
 
 
 # norms are precomputed once per vector (a "v" CTE) — cosine per pair is
 # then a single dot product, 3x less arithmetic than norm-per-pair
-def _spark_norm(a: str) -> str:
-    return f"sqrt({_unrolled_dot(a, a, 'spark')})"
+def _norm(a: str, dialect: str) -> str:
+    return f"sqrt({_unrolled_dot(a, a, dialect)})"
 
 
-def _duck_norm(a: str) -> str:
-    return f"sqrt({_unrolled_dot(a, a, 'duck')})"
+def _cosine(a: str, b: str, dialect: str) -> str:
+    """Cosine of the rows aliased ``a`` and ``b`` (emb + stored nrm)."""
+    dot = _unrolled_dot(f"{a}.emb", f"{b}.emb", dialect)
+    return f"({dot}) / ({a}.nrm * {b}.nrm)"
 
 
-def _spark_cosine(a: str, b: str, na: str, nb: str) -> str:
-    return f"({_unrolled_dot(a, b, 'spark')}) / ({na} * {nb})"
+def _cell_rank(dialect: str) -> str:
+    """Rank of centroid row ``c`` for vector row ``a`` by squared L2
+    (cc - 2 a.c; the |a|^2 term is constant per vector), cid
+    tie-break — the k-means assignment and every probe order."""
+    dot = _unrolled_dot("a.emb", "c.emb", dialect)
+    return (
+        "ROW_NUMBER() OVER (PARTITION BY a.vec_id\n"
+        f"                ORDER BY (c.cc - (2 * ({dot}))) ASC, c.cid)"
+    )
 
 
-def _duck_cosine(a: str, b: str, na: str, nb: str) -> str:
-    return f"({_unrolled_dot(a, b, 'duck')}) / ({na} * {nb})"
+def _pivots(pq_m: int, alias: str) -> str:
+    """The pq_m ADC partial distances pivoted into columns s0.. by the
+    subspace key of ``alias`` (conditional MAX over m)."""
+    return ",\n         ".join(
+        f"MAX(CASE WHEN {alias}.m = {i} THEN l.d END) AS s{i}"
+        for i in range(pq_m)
+    )
 
 
 @stored("ann_normed")
@@ -111,7 +160,7 @@ def _normed_stored(
     v = spark.sql(
         f"""
         SELECT vec_id, label, emb,
-               {_spark_norm('emb')} AS nrm,
+               {_norm('emb', 'spark')} AS nrm,
                {_bucket_expr('emb', 'spark')} AS bucket
         FROM (
           SELECT vec_id, label,
@@ -139,7 +188,7 @@ def _duck_v_cte() -> str:
     return f"""
 v AS MATERIALIZED (
   SELECT vec_id, label, emb,
-         {_duck_norm('emb')} AS nrm,
+         {_norm('emb', 'duck')} AS nrm,
          {_bucket_expr('emb', 'duck')} AS bucket
   FROM (
     SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb
@@ -148,59 +197,64 @@ v AS MATERIALIZED (
 )"""
 
 
-def _topk_sql(
-    corpus: str, on: str, queries: str | None = None, top_k: int = TOP_K
+def _rank_sql(
+    scored: str, top_k: int = TOP_K, key: str = "score", emit: bool = False
 ) -> str:
-    """The one top-K shape of the ANN search lanes: exact cosine of
-    every candidate pair (``queries`` q joined to ``corpus`` c on the
-    candidate predicate ``on``), ROW_NUMBER per query by (score desc,
-    neighbor_id), ranks 1..``top_k``.  The lanes differ only in the
-    candidate join; ``queries`` defaults to the first N_QUERIES rows
-    of ``corpus``."""
+    """The one top-K tail, as the end of a WITH list: ROW_NUMBER per
+    query over ``scored`` (query_id, neighbor_id, ``key``) by (``key``
+    desc, neighbor_id), ranks 1..``top_k``; ``emit`` carries the key
+    out as a column."""
+    keep = f", {key}" if emit else ""
+    return f"""ranked AS (
+  SELECT query_id, neighbor_id{keep},
+         ROW_NUMBER() OVER (PARTITION BY query_id
+              ORDER BY {key} DESC, neighbor_id) AS rank
+  FROM {scored}
+)
+SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id{keep}
+FROM ranked WHERE rank <= {top_k}"""
+
+
+def _topk_sql(
+    corpus: str,
+    on: str,
+    queries: str | None = None,
+    top_k: int = TOP_K,
+    dialect: str = "spark",
+    score: str | None = None,
+    key: str = "score",
+    emit: bool = False,
+) -> str:
+    """The one top-K shape of the ANN searches (a WITH list, callers
+    prefix ``WITH``): ``score`` (default the exact cosine) of every
+    candidate pair — ``queries`` q joined to ``corpus`` c on the
+    candidate predicate ``on`` — ranked by :func:`_rank_sql`.  The
+    lanes differ only in the candidate join and the score; ``queries``
+    defaults to the first N_QUERIES rows of ``corpus``."""
     if queries is None:
         queries = f"(SELECT * FROM {corpus} WHERE vec_id < {N_QUERIES})"
-    cos = _spark_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
-    return f"""
-        WITH scored AS (
-          SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                 {cos} AS score
-          FROM {queries} q
-          JOIN {corpus} c ON {on}
-        ),
-        ranked AS (
-          SELECT query_id, neighbor_id,
-                 ROW_NUMBER() OVER (PARTITION BY query_id
-                      ORDER BY score DESC, neighbor_id) AS rank
-          FROM scored
-        )
-        SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id
-        FROM ranked WHERE rank <= {top_k}
-        """
+    score = score or _cosine("q", "c", dialect)
+    return f"""scored AS (
+  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
+         {score} AS {key}
+  FROM {queries} q
+  JOIN {corpus} c ON {on}
+),
+{_rank_sql("scored", top_k, key, emit)}"""
+
+
+def _topk_oracle(on: str, ctes: str = "", corpus: str = "v", **kw) -> str:
+    """DuckDB mirror of a :func:`_topk_sql` lane over the oracle's
+    normed ``v`` CTE (``ctes`` adds the lane's index CTEs)."""
+    return f"WITH {_duck_v_cte()}{ctes},\n" + _topk_sql(
+        corpus, on, dialect="duck", **kw
+    )
 
 
 def ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.sql(_topk_sql(_normed(spark, sf_dir), "q.vec_id <> c.vec_id"))
-
-
-def _bruteforce_oracle() -> str:
-    cos = _duck_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
-    return f"""
-WITH {_duck_v_cte()},
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {cos} AS score
-  FROM (SELECT * FROM v WHERE vec_id < {N_QUERIES}) q
-  JOIN v c ON q.vec_id <> c.vec_id
-),
-ranked AS (
-  SELECT query_id, neighbor_id,
-         CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY score DESC, neighbor_id) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id FROM ranked
-WHERE rank <= {TOP_K}
-"""
+    return spark.sql(
+        "WITH " + _topk_sql(_normed(spark, sf_dir), "q.vec_id <> c.vec_id")
+    )
 
 
 def ann_ivf_label(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -210,33 +264,12 @@ def ann_ivf_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     time), probes shuffle only to their bucket's partition.
     """
     return spark.sql(
-        _topk_sql(
+        "WITH "
+        + _topk_sql(
             _normed(spark, sf_dir),
             "q.label = c.label AND q.vec_id <> c.vec_id",
         )
     )
-
-
-def _ivf_oracle() -> str:
-    cos = _duck_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
-    return f"""
-WITH {_duck_v_cte()},
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {cos} AS score
-  FROM (SELECT * FROM v WHERE vec_id < {N_QUERIES}) q
-  JOIN v c
-    ON q.label = c.label AND q.vec_id <> c.vec_id
-),
-ranked AS (
-  SELECT query_id, neighbor_id,
-         CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY score DESC, neighbor_id) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id FROM ranked
-WHERE rank <= {TOP_K}
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -271,18 +304,11 @@ def _bucket_expr(col: str, dialect: str) -> str:
     off = 0 if dialect == "spark" else 1
     bits = []
     for p, row in enumerate(_plane_signs()):
-        terms = [
+        proj = _tree([
             f"({'' if s > 0 else '-'}{col}[{d + off}])"
             for d, s in enumerate(row)
-        ]
-        while len(terms) > 1:
-            terms = [
-                f"({terms[i]} + {terms[i + 1]})"
-                if i + 1 < len(terms)
-                else terms[i]
-                for i in range(0, len(terms), 2)
-            ]
-        bits.append(f"(CASE WHEN {terms[0]} >= 0 THEN {1 << p} ELSE 0 END)")
+        ])
+        bits.append(f"(CASE WHEN {proj} >= 0 THEN {1 << p} ELSE 0 END)")
     return "(" + " + ".join(bits) + ")"
 
 
@@ -291,32 +317,12 @@ def ann_lsh_hyperplane(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact cosine re-ranks within the bucket.  At 100 TB the bucket id is
     the shuffle/partition key; each probe touches one bucket."""
     return spark.sql(
-        _topk_sql(
+        "WITH "
+        + _topk_sql(
             _normed(spark, sf_dir),
             "q.bucket = c.bucket AND q.vec_id <> c.vec_id",
         )
     )
-
-
-def _lsh_oracle() -> str:
-    cos = _duck_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
-    return f"""
-WITH {_duck_v_cte()},
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {cos} AS score
-  FROM (SELECT * FROM v WHERE vec_id < {N_QUERIES}) q
-  JOIN v c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
-),
-ranked AS (
-  SELECT query_id, neighbor_id,
-         CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY score DESC, neighbor_id) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id FROM ranked
-WHERE rank <= {TOP_K}
-"""
 
 
 # ---------------------------------------------------------------------------
@@ -377,55 +383,24 @@ def ann_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         _score_batches, "query_id long, neighbor_id long, score double"
     )
     scored.createOrReplaceTempView("ann_rerank_scored")
-    return spark.sql(
-        f"""
-        SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id
-        FROM (
-          SELECT query_id, neighbor_id,
-                 ROW_NUMBER() OVER (PARTITION BY query_id
-                      ORDER BY score DESC, neighbor_id) AS rank
-          FROM ann_rerank_scored
-        )
-        WHERE rank <= {RERANK_K}
-        """
-    )
+    return spark.sql("WITH " + _rank_sql("ann_rerank_scored", RERANK_K))
 
 
 def _rerank_oracle() -> str:
-    cos = _duck_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
     dot = _unrolled_dot("q.emb", "n.emb", "duck")
+    short = _topk_sql(
+        "v", "q.bucket = c.bucket AND q.vec_id <> c.vec_id", dialect="duck"
+    )
     return f"""
 WITH {_duck_v_cte()},
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {cos} AS score
-  FROM (SELECT * FROM v WHERE vec_id < {N_QUERIES}) q
-  JOIN v c ON q.bucket = c.bucket AND q.vec_id <> c.vec_id
-),
-shortlist AS (
-  SELECT query_id, neighbor_id
-  FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                ORDER BY score DESC, neighbor_id) AS rank
-    FROM scored
-  )
-  WHERE rank <= {TOP_K}
-),
+shortlist AS (WITH {short}),
 re AS (
   SELECT s.query_id, s.neighbor_id, {dot} AS score
   FROM shortlist s
   JOIN v q ON q.vec_id = s.query_id
   JOIN v n ON n.vec_id = s.neighbor_id
-)
-SELECT query_id, rank, neighbor_id
-FROM (
-  SELECT query_id, neighbor_id,
-         CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY score DESC, neighbor_id) AS INTEGER) AS rank
-  FROM re
-)
-WHERE rank <= {RERANK_K}
+),
+{_rank_sql("re", RERANK_K)}
 """
 
 
@@ -467,19 +442,31 @@ _FP_SCALE = "4294967296.0"  # 2^32 — exact double multiply
 IVF_CELL_CAP = 100_000
 
 
+def _fp_means(
+    dialect: str,
+    src: str,
+    keys: str,
+    col: str = "emb",
+    n: int = DIM,
+    out: str = "emb",
+) -> str:
+    """Fixed-point group means of the ``n``-component array ``col``
+    per ``keys``: exact integer sums per component — the k-means
+    centroid update, the per-label centroids and the trained-codebook
+    update."""
+    off = 0 if dialect == "spark" else 1
+    elems = [
+        f"CAST(SUM(CAST(FLOOR({col}[{d + off}] * {_FP_SCALE}) AS BIGINT))"
+        f" AS DOUBLE) / (COUNT(*) * {_FP_SCALE})"
+        for d in range(n)
+    ]
+    arr = _array(elems, dialect, ",\n       ")
+    return f"SELECT {keys}, {arr} AS {out} FROM {src} GROUP BY {keys}"
+
+
 def _kmeans_update(src: str, dialect: str) -> str:
     """Fixed-point centroid recompute: exact integer sums per dimension."""
-    off = 0 if dialect == "spark" else 1
-    arr_open, arr_close = ("array(", ")") if dialect == "spark" else ("[", "]")
-    elems = ",\n       ".join(
-        f"CAST(SUM(CAST(FLOOR(emb[{d + off}] * {_FP_SCALE}) AS BIGINT))"
-        f" AS DOUBLE) / (COUNT(*) * {_FP_SCALE})"
-        for d in range(DIM)
-    )
-    return (
-        f"SELECT cid, {arr_open}{elems}{arr_close} AS emb"
-        f" FROM {src} GROUP BY cid"
-    )
+    return _fp_means(dialect, src, "cid")
 
 
 def _kmeans_assign(
@@ -492,13 +479,11 @@ def _kmeans_assign(
     IVF index carries the filterable attributes alongside the vectors so
     filtered search never joins back to the corpus (see
     ann_filtered_search)."""
-    dot = _unrolled_dot("a.emb", "c.emb", dialect)
     lab_out = ", label" if with_label else ""
     lab_in = ", a.label" if with_label else ""
     return f"""SELECT vec_id, emb, nrm, cid{lab_out} FROM (
     SELECT a.vec_id, a.emb, a.nrm{lab_in}, c.cid,
-           ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                ORDER BY (c.cc - (2 * ({dot}))) ASC, c.cid) AS rn
+           {_cell_rank(dialect)} AS rn
     FROM {v} a CROSS JOIN {csrc} c) t WHERE rn = 1"""
 
 
@@ -640,30 +625,7 @@ def _py_tree_dot(a: list[float], b: list[float]) -> float:
     """Python replica of _unrolled_dot's balanced tree — same operand
     order, same IEEE binary64 round-to-nearest ops, so the result is
     bit-identical to the SQL expression over the same values."""
-    terms = [x * y for x, y in zip(a, b)]
-    while len(terms) > 1:
-        terms = [
-            terms[i] + terms[i + 1] if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    return terms[0]
-
-
-def _lit_dot(a: str, vals: list[float], dialect: str) -> str:
-    """_unrolled_dot with the right operand inlined as exact double
-    literals (repr = shortest round-trip decimal; both engines parse it
-    correctly rounded, so the binary64 centroid survives exactly)."""
-    off = 0 if dialect == "spark" else 1
-    terms = [
-        f"({a}[{i + off}] * CAST({v!r} AS DOUBLE))"
-        for i, v in enumerate(vals)
-    ]
-    while len(terms) > 1:
-        terms = [
-            f"({terms[i]} + {terms[i + 1]})" if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    return terms[0]
+    return _tree([x * y for x, y in zip(a, b)], lambda x, y: x + y)
 
 
 def _probe_sorted_expr(
@@ -679,13 +641,52 @@ def _probe_sorted_expr(
     (cc - 2*dot, then cid; cc is computed in Python with the same
     balanced tree as the SQL self-dot, so it is the same binary64 the
     oracle's inlined chain produces): the struct array sorts by
-    (d, c) lexicographically == ORDER BY dist ASC, cid ASC."""
+    (d, c) lexicographically == ORDER BY dist ASC, cid ASC.  The
+    centroid is inlined as exact double literals (repr = shortest
+    round-trip decimal, parsed correctly rounded)."""
+
+    def dot(v: list[float]) -> str:
+        return _tree([
+            f"({emb}[{i}] * CAST({x!r} AS DOUBLE))" for i, x in enumerate(v)
+        ])
+
     structs = ", ".join(
         f"named_struct('d', CAST({_py_tree_dot(v, v)!r} AS DOUBLE)"
-        f" - (2 * ({_lit_dot(emb, v, 'spark')})), 'c', {cid})"
+        f" - (2 * ({dot(v)})), 'c', {cid})"
         for cid, v in cent
     )
     return f"array_sort(array({structs}))"
+
+
+def _probed_cells(
+    spark: SparkSession,
+    sf_dir: str,
+    af: str,
+    out: str,
+    cols: str,
+    nprobe: int | None = None,
+    where: str = f" WHERE vec_id < {N_QUERIES}",
+) -> str:
+    """SELECT ``out`` over the ``af`` rows (columns ``cols``) fanned out
+    to their probed cells ``pcid``: the ``nprobe`` nearest, or with
+    nprobe None every cell with its 0-based distance rank ``idx``.  A
+    pure literal projection over the K driver-side centroids
+    (_probe_sorted_expr): no cross join, no BroadcastNestedLoopJoin."""
+    sa = _probe_sorted_expr(_kmeans_centroids(spark, sf_dir), "emb")
+    if nprobe is None:
+        fan = "posexplode(transform(__sa, s -> s.c)) p AS idx, pcid"
+    else:
+        picks = ", ".join(f"__sa[{j}].c" for j in range(nprobe))
+        fan = f"explode(array({picks})) p AS pcid"
+    return f"""
+  SELECT {out} FROM (
+    SELECT {cols}, {sa} AS __sa FROM {af}{where}
+  ) t LATERAL VIEW {fan}"""
+
+
+def _check_nprobe(nprobe: int) -> None:
+    if nprobe < 1 or nprobe > KMEANS_K:
+        raise ValueError(f"nprobe must be in [1, {KMEANS_K}]")
 
 
 def ann_ivf_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -718,27 +719,23 @@ def ann_ivf_search(
     parameterized contract (__spark_entry__.queries_parameterized);
     ann_ivf_probe2 / ann_ivf_probe3_k5 are the driver-proven
     instantiations."""
-    if nprobe < 1 or nprobe > KMEANS_K:
-        raise ValueError(f"nprobe must be in [1, {KMEANS_K}]")
+    _check_nprobe(nprobe)
     if top_k < 1:
         raise ValueError("top_k must be >= 1")
     af = _kmeans_assignments(spark, sf_dir)
     cf = f" AND ({corpus_filter})" if corpus_filter else ""
     qsrc = None  # nprobe=1: the assigned cell is the nearest one
     if nprobe > 1:
-        sa = _probe_sorted_expr(_kmeans_centroids(spark, sf_dir), "emb")
-        picks = ", ".join(f"__sa[{j}].c" for j in range(nprobe))
-        qsrc = f"""(
-          SELECT vec_id, emb, nrm, pcid AS cid FROM (
-            SELECT vec_id, emb, nrm, {sa} AS __sa
-            FROM {af} WHERE vec_id < {N_QUERIES}
-          ) t LATERAL VIEW explode(array({picks})) p AS pcid
-        )"""
+        cells = _probed_cells(
+            spark, sf_dir, af, "vec_id, emb, nrm, pcid AS cid",
+            "vec_id, emb, nrm", nprobe,
+        )
+        qsrc = f"({cells})"
     on = (
         f"q.cid = c.cid AND c.cellrn <= {IVF_CELL_CAP}"
         f" AND q.vec_id <> c.vec_id{cf}"
     )
-    return spark.sql(_topk_sql(af, on, qsrc, top_k))
+    return spark.sql("WITH " + _topk_sql(af, on, qsrc, top_k))
 
 
 def ann_filtered_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -766,37 +763,25 @@ def _ivf_search_oracle(
     nprobe form for every nprobe (for nprobe=1 the rank-1 pick IS the
     assigned cell, bit-identically, so it matches Spark's
     short-circuit)."""
-    qdot = _unrolled_dot("a.emb", "c.emb", "duck")
-    cos = _duck_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
     cf = f" AND ({corpus_filter})" if corpus_filter else ""
-    return f"""
-WITH {_duck_v_cte()},
-{_kmeans_ctes('v', 'duck')},
+    qp = f"""
 afm AS MATERIALIZED (SELECT * FROM af),
 qp AS (
   SELECT vec_id, emb, nrm, cid FROM (
     SELECT a.vec_id, a.emb, a.nrm, c.cid,
-           ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                ORDER BY (c.cc - (2 * ({qdot}))) ASC, c.cid) AS rn
+           {_cell_rank('duck')} AS rn
     FROM (SELECT * FROM afm WHERE vec_id < {N_QUERIES}) a
     CROSS JOIN c{KMEANS_ITERS} c
   ) t WHERE rn <= {nprobe}
-),
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {cos} AS score
-  FROM qp q JOIN afm c ON q.cid = c.cid AND c.cellrn <= {IVF_CELL_CAP}
-   AND q.vec_id <> c.vec_id{cf}
-),
-ranked AS (
-  SELECT query_id, neighbor_id,
-         CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY score DESC, neighbor_id) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id FROM ranked
-WHERE rank <= {top_k}
-"""
+)"""
+    return _topk_oracle(
+        f"q.cid = c.cid AND c.cellrn <= {IVF_CELL_CAP}"
+        f" AND q.vec_id <> c.vec_id{cf}",
+        f",\n{_kmeans_ctes('v', 'duck')},{qp}",
+        corpus="afm",
+        queries="qp",
+        top_k=top_k,
+    )
 
 
 def _filtered_search_oracle() -> str:
@@ -828,28 +813,6 @@ def _ivf_probe3_k5_oracle() -> str:
     return _ivf_search_oracle(nprobe=3, top_k=5)
 
 
-def _ivf_kmeans_oracle() -> str:
-    cos = _duck_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
-    return f"""
-WITH {_duck_v_cte()},
-{_kmeans_ctes('v', 'duck')},
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {cos} AS score
-  FROM (SELECT * FROM af WHERE vec_id < {N_QUERIES}) q
-  JOIN af c ON q.cid = c.cid AND c.cellrn <= {IVF_CELL_CAP} AND q.vec_id <> c.vec_id
-),
-ranked AS (
-  SELECT query_id, neighbor_id,
-         CAST(ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY score DESC, neighbor_id) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, neighbor_id FROM ranked
-WHERE rank <= {TOP_K}
-"""
-
-
 # real deployments use ~0.95+; the synthetic corpus has no planted
 # near-dups (max pairwise cosine ~0.51), so the demo threshold sits where
 # the operator produces verifiable pairs
@@ -879,27 +842,20 @@ def _emb_pairs_sql(
     same candidate join with the cosine carried along and a lower
     verification floor (defaults emit the historical pair shape
     verbatim)."""
-    cosf = _spark_cosine if dialect == "spark" else _duck_cosine
-    cos = cosf("a.emb", "b.emb", "a.nrm", "b.nrm")
+    cos = _cosine("a", "b", dialect)
     sel = select or "a.vec_id AS vec_a, b.vec_id AS vec_b"
     sel = sel.replace("{cos}", cos)
+    side = f"""(
+  SELECT vv.*, vv.vec_id % COALESCE(h.nsalt, 1) AS salt
+  FROM {v} vv LEFT JOIN (
+    SELECT bucket,
+           CAST(CEIL(CAST(COUNT(*) AS DOUBLE) / {cap}) AS BIGINT) AS nsalt
+    FROM {v} GROUP BY bucket HAVING COUNT(*) > {cap}
+  ) h ON vv.bucket = h.bucket
+)"""
     return f"""
 SELECT {sel}
-FROM (
-  SELECT vv.*, vv.vec_id % COALESCE(h.nsalt, 1) AS salt
-  FROM {v} vv LEFT JOIN (
-    SELECT bucket,
-           CAST(CEIL(CAST(COUNT(*) AS DOUBLE) / {cap}) AS BIGINT) AS nsalt
-    FROM {v} GROUP BY bucket HAVING COUNT(*) > {cap}
-  ) h ON vv.bucket = h.bucket
-) a JOIN (
-  SELECT vv.*, vv.vec_id % COALESCE(h.nsalt, 1) AS salt
-  FROM {v} vv LEFT JOIN (
-    SELECT bucket,
-           CAST(CEIL(CAST(COUNT(*) AS DOUBLE) / {cap}) AS BIGINT) AS nsalt
-    FROM {v} GROUP BY bucket HAVING COUNT(*) > {cap}
-  ) h ON vv.bucket = h.bucket
-) b
+FROM {side} a JOIN {side} b
   ON a.bucket = b.bucket AND a.salt = b.salt AND a.vec_id < b.vec_id
 WHERE {cos} >= {min_cos}
 """
@@ -1012,38 +968,25 @@ SELECT * FROM curve
 # ---------------------------------------------------------------------------
 
 
+def _q8_codes(a: str, dialect: str) -> tuple[list[str], list[str]]:
+    """(components, int8 codes) of array ``a``; codes need __m bound."""
+    off = 0 if dialect == "spark" else 1
+    els = [f"{a}[{i + off}]" for i in range(DIM)]
+    codes = [
+        f"CAST(FLOOR({e} * (127.0 / __m)) AS {_int_t(dialect)})" for e in els
+    ]
+    return els, codes
+
+
 def _q8_exprs(a: str, dialect: str) -> tuple[str, str, str]:
     """(max_abs, code_sum, max_err) unrolled expression trees."""
-    off = 0 if dialect == "spark" else 1
-    cast_int = "INT" if dialect == "spark" else "INTEGER"
-    els = [f"{a}[{i + off}]" for i in range(DIM)]
-
-    def tree(terms, op):
-        while len(terms) > 1:
-            terms = [
-                f"{op}({terms[i]}, {terms[i + 1]})"
-                if i + 1 < len(terms) else terms[i]
-                for i in range(0, len(terms), 2)
-            ]
-        return terms[0]
-
-    max_abs = tree([f"ABS({e})" for e in els], "GREATEST")
-    code = [
-        f"CAST(FLOOR({e} * (127.0 / __m)) AS {cast_int})" for e in els
-    ]
+    els, code = _q8_codes(a, dialect)
+    max_abs = _greatest([f"ABS({e})" for e in els])
     # sum tree: plain + over bigints
-    terms = [f"CAST({c} AS BIGINT)" for c in code]
-    while len(terms) > 1:
-        terms = [
-            f"({terms[i]} + {terms[i + 1]})"
-            if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    code_sum = terms[0]
-    err = [
-        f"ABS({e} - {c} * (__m / 127.0))" for e, c in zip(els, code)
-    ]
-    max_err = tree(err, "GREATEST")
+    code_sum = _tree([f"CAST({c} AS BIGINT)" for c in code])
+    max_err = _greatest(
+        [f"ABS({e} - {c} * (__m / 127.0))" for e, c in zip(els, code)]
+    )
     return max_abs, code_sum, max_err
 
 
@@ -1136,67 +1079,32 @@ FROM (
 
 def _sq_exprs(a: str, dialect: str) -> tuple[str, str, str]:
     """(max_abs, code_array, scale_q) over ``a`` (needs __m bound)."""
-    off = 0 if dialect == "spark" else 1
-    cast_int = "INT" if dialect == "spark" else "INTEGER"
-    els = [f"{a}[{i + off}]" for i in range(DIM)]
-
-    def tree(terms, op):
-        while len(terms) > 1:
-            terms = [
-                f"{op}({terms[i]}, {terms[i + 1]})"
-                if i + 1 < len(terms) else terms[i]
-                for i in range(0, len(terms), 2)
-            ]
-        return terms[0]
-
+    els, codes = _q8_codes(a, dialect)
     # GREATEST(.., 1e-30): an all-zero embedding would make 127.0 / __m
     # infinite and 0 * inf = NaN, whose integer cast is engine-dependent
     # (Spark CAST(NaN AS INT) = 0, DuckDB errors).  Clamping the divisor
     # to a tiny epsilon makes zero vectors quantize to all-zero codes
     # deterministically on both engines; any vector with a non-degenerate
     # component (>= 1e-30) is untouched.
-    max_abs = (
-        f"GREATEST({tree([f'ABS({e})' for e in els], 'GREATEST')}, 1e-30)"
-    )
-    codes = [
-        f"CAST(FLOOR({e} * (127.0 / __m)) AS {cast_int})" for e in els
-    ]
-    arr = (
-        f"array({', '.join(codes)})"
-        if dialect == "spark"
-        else f"[{', '.join(codes)}]"
-    )
+    max_abs = f"GREATEST({_greatest([f'ABS({e})' for e in els])}, 1e-30)"
     scale = "CAST(FLOOR(__m * 1000000) AS BIGINT)"
-    return max_abs, arr, scale
+    return max_abs, _array(codes, dialect), scale
 
 
 def _sq_dot(qa: str, ca: str, dialect: str) -> str:
     """Exact-integer code dot product, balanced sum tree."""
     off = 0 if dialect == "spark" else 1
-    terms = [
+    return _tree([
         f"(CAST({qa}[{i + off}] AS BIGINT) * {ca}[{i + off}])"
         for i in range(DIM)
-    ]
-    while len(terms) > 1:
-        terms = [
-            f"({terms[i]} + {terms[i + 1]})"
-            if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    return terms[0]
+    ])
 
 
 @stored("ann_sq_codes")
 def _sq_stored(spark: SparkSession, sf_dir: str) -> tuple[str, DataFrame]:
     """(view name, frame) of the checkpointed SQ8 code table."""
     v = _normed(spark, sf_dir)
-    max_abs, arr, scale = _sq_exprs("emb", "spark")
-    idx = spark.sql(
-        f"""
-        SELECT vec_id, {arr} AS code, {scale} AS scale_q
-        FROM (SELECT vec_id, emb, {max_abs} AS __m FROM {v})
-        """
-    ).localCheckpoint(eager=True)
+    idx = spark.sql(_sq_codes_sql("spark", v)).localCheckpoint(eager=True)
     name = f"sq_index_{abs(hash((session_key(spark), sf_dir))) % 10**8}"
     idx.createOrReplaceTempView(name)
     return name, idx
@@ -1210,52 +1118,32 @@ def ann_sq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-K per query over the stored SQ8 code table; integer-exact
     ranking key (candidate scale x code dot)."""
     idx = _sq_index_view(spark, sf_dir)
-    dot = _sq_dot("q.code", "c.code", "spark")
-    return spark.sql(
-        f"""
-        WITH scored AS (
-          SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                 c.scale_q * ({dot}) AS score_q
-          FROM (SELECT * FROM {idx} WHERE vec_id < {N_QUERIES}) q
-          JOIN {idx} c ON q.vec_id <> c.vec_id
-        ),
-        ranked AS (
-          SELECT query_id, neighbor_id, score_q,
-                 ROW_NUMBER() OVER (PARTITION BY query_id
-                      ORDER BY score_q DESC, neighbor_id) AS rank
-          FROM scored
-        )
-        SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id,
-               score_q
-        FROM ranked WHERE rank <= {TOP_K}
-        """
+    return spark.sql("WITH " + _sq_topk_sql(idx, "spark"))
+
+
+def _sq_topk_sql(sq: str, dialect: str) -> str:
+    """Top-K over an SQ8 code relation by the integer score_q key."""
+    dot = _sq_dot("q.code", "c.code", dialect)
+    return _topk_sql(
+        sq, "q.vec_id <> c.vec_id", dialect=dialect,
+        score=f"c.scale_q * ({dot})", key="score_q", emit=True,
     )
 
 
+def _sq_codes_sql(dialect: str, v: str) -> str:
+    """The SQ8 code relation (vec_id, code, scale_q) over normed ``v``."""
+    max_abs, arr, scale = _sq_exprs("emb", dialect)
+    return f"""
+  SELECT vec_id, {arr} AS code, {scale} AS scale_q
+  FROM (SELECT vec_id, emb, {max_abs} AS __m FROM {v})
+"""
+
+
 def _sq_search_oracle() -> str:
-    max_abs, arr, scale = _sq_exprs("emb", "duck")
-    dot = _sq_dot("q.code", "c.code", "duck")
     return f"""
 WITH {_duck_v_cte()},
-sq AS MATERIALIZED (
-  SELECT vec_id, {arr} AS code, {scale} AS scale_q
-  FROM (SELECT vec_id, emb, {max_abs} AS __m FROM v)
-),
-scored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         c.scale_q * ({dot}) AS score_q
-  FROM (SELECT * FROM sq WHERE vec_id < {N_QUERIES}) q
-  JOIN sq c ON q.vec_id <> c.vec_id
-),
-ranked AS (
-  SELECT query_id, neighbor_id, score_q,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY score_q DESC, neighbor_id) AS rank
-  FROM scored
-)
-SELECT query_id, CAST(rank AS INTEGER) AS rank, neighbor_id,
-       CAST(score_q AS BIGINT) AS score_q
-FROM ranked WHERE rank <= {TOP_K}
+sq AS MATERIALIZED ({_sq_codes_sql("duck", "v")}),
+{_sq_topk_sql("sq", "duck")}
 """
 
 
@@ -1305,24 +1193,7 @@ def _knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _knn_graph_raw(
     spark: SparkSession, sf_dir: str, cap: int
 ) -> DataFrame:
-    v = _normed(spark, sf_dir)
-    cos = _spark_cosine("a.emb", "b.emb", "a.nrm", "b.nrm")
-    return spark.sql(
-        f"""
-        SELECT src, CAST(rank AS INTEGER) AS rank, dst FROM (
-          SELECT a.vec_id AS src, b.vec_id AS dst,
-                 ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                      ORDER BY ({cos}) DESC, b.vec_id) AS rank
-          FROM {v} a JOIN (
-            SELECT * FROM (
-              SELECT *, ROW_NUMBER() OVER (PARTITION BY label
-                   ORDER BY vec_id) AS lrn FROM {v}
-            ) cb WHERE lrn <= {cap}
-          ) b
-            ON a.label = b.label AND a.vec_id <> b.vec_id
-        ) t WHERE rank <= {KNN_K}
-        """
-    )
+    return spark.sql(_knn_graph_body(cap, "spark", _normed(spark, sf_dir)))
 
 
 # ---------------------------------------------------------------------------
@@ -1340,7 +1211,9 @@ def _knn_graph_raw(
 # ---------------------------------------------------------------------------
 
 
-def _mrr_sql(v: str, cos: str, idiv: str) -> str:
+def _mrr_sql(v: str, dialect: str) -> str:
+    cos = _cosine("q", "c", dialect)
+    idiv = "DIV" if dialect == "spark" else "//"
     return f"""
 WITH ranked AS (
   SELECT q.vec_id AS query_id, c.label AS nlab, q.label AS qlab,
@@ -1363,30 +1236,31 @@ GROUP BY query_id
 def ann_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query first-relevant rank + reciprocal rank (ppm) in the
     brute-force top-K."""
-    v = _normed(spark, sf_dir)
-    cos = _spark_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
-    return spark.sql(_mrr_sql(v, cos, "DIV"))
+    return spark.sql(_mrr_sql(_normed(spark, sf_dir), "spark"))
 
 
 def _mrr_oracle() -> str:
-    cos = _duck_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
-    return f"WITH {_duck_v_cte()}" + _mrr_sql("v", cos, "//").replace(
+    return f"WITH {_duck_v_cte()}" + _mrr_sql("v", "duck").replace(
         "WITH ranked AS", ", ranked AS", 1
     )
 
 
-def _knn_graph_body(cell_cap: int | None = None) -> str:
-    """The DuckDB kNN-edge SELECT over relation ``v`` (no WITH)."""
+def _knn_graph_body(
+    cell_cap: int | None = None, dialect: str = "duck", v: str = "v"
+) -> str:
+    """The kNN-edge SELECT over the normed relation ``v`` (no WITH):
+    every vector's KNN_K nearest in its label cell, the candidate side
+    capped per cell (see KNN_CELL_CAP)."""
     cap = KNN_CELL_CAP if cell_cap is None else cell_cap
-    cos = _duck_cosine("a.emb", "b.emb", "a.nrm", "b.nrm")
-    return f"""SELECT src, rank, dst FROM (
+    cos = _cosine("a", "b", dialect)
+    return f"""SELECT src, CAST(rank AS INTEGER) AS rank, dst FROM (
   SELECT a.vec_id AS src, b.vec_id AS dst,
-         CAST(ROW_NUMBER() OVER (PARTITION BY a.vec_id
-              ORDER BY ({cos}) DESC, b.vec_id) AS INTEGER) AS rank
-  FROM v a JOIN (
+         ROW_NUMBER() OVER (PARTITION BY a.vec_id
+              ORDER BY ({cos}) DESC, b.vec_id) AS rank
+  FROM {v} a JOIN (
     SELECT * FROM (
       SELECT *, ROW_NUMBER() OVER (PARTITION BY label
-           ORDER BY vec_id) AS lrn FROM v
+           ORDER BY vec_id) AS lrn FROM {v}
     ) cb WHERE lrn <= {cap}
   ) b
     ON a.label = b.label AND a.vec_id <> b.vec_id
@@ -1427,19 +1301,13 @@ def _triplet_sql(dialect: str, edges: str, v: str) -> str:
     engine-identical either way).  The draw maps into [0, n_vecs) and
     assumes dense vec_ids (true of the testdata; a production corpus
     keeps a ROW_NUMBER side table and joins the draw through it)."""
+    probes = _enum(TRIPLET_PROBES, dialect)
     if dialect == "spark":
-        mx, contains = "max_by(dst, rank)", "array_contains(arr, cand)"
-        arr_agg = "collect_set(dst)"
-        fan = (
-            f"LATERAL VIEW explode(sequence(0, {TRIPLET_PROBES - 1}))"
-            " s AS j"
-        )
-        icast = "INT"
+        contains, arr_agg = "array_contains(arr, cand)", "collect_set(dst)"
+        fan = f"LATERAL VIEW {probes} s AS j"
     else:
-        mx, contains = "max_by(dst, rank)", "list_contains(arr, cand)"
-        arr_agg = "list(dst)"
-        fan = f", unnest(generate_series(0, {TRIPLET_PROBES - 1})) AS s(j)"
-        icast = "INTEGER"
+        contains, arr_agg = "list_contains(arr, cand)", "list(dst)"
+        fan = f", {probes} AS s(j)"
     cand = (
         f"((anchor_id % {_TRI_M}) * 2654435761 + j * 40503 + 17)"
         f" % (SELECT n FROM nv)"
@@ -1449,7 +1317,7 @@ nv AS (SELECT CAST(COUNT(*) AS BIGINT) AS n FROM {v}),
 agg AS (
   SELECT src AS anchor_id,
          MAX(CASE WHEN rank = 1 THEN dst END) AS pos_id,
-         {mx} AS hard_neg_id,
+         max_by(dst, rank) AS hard_neg_id,
          {arr_agg} AS arr
   FROM {edges} GROUP BY src
 ),
@@ -1468,7 +1336,7 @@ p AS (
   FROM c
 )
 SELECT anchor_id, pos_id, hard_neg_id, cand AS easy_neg_id,
-       CAST(CASE WHEN ok THEN 1 ELSE 0 END AS {icast}) AS neg_valid
+       CAST(CASE WHEN ok THEN 1 ELSE 0 END AS {_int_t(dialect)}) AS neg_valid
 FROM p WHERE rn = 1
 """
 
@@ -1874,12 +1742,34 @@ def _power_iter_chain(op: str, src: str = "x", pfx: str = "") -> str:
     return ",\n".join(parts)
 
 
-def _power_iter_tail(op: str) -> str:
+def _lit_dir(q: list[int]) -> str:
+    """A fitted direction (one int per dim) as a literal array looked
+    up by the row's dim ``i`` — the centroid pattern: no join."""
     return (
-        _power_iter_chain(op)
-        + f"\nSELECT CAST(i AS INT) AS dim,"
-        f" CAST(vq AS BIGINT) AS pc_q FROM v{PI_ITERS}"
+        f"element_at(array({', '.join(str(x) for x in q)}),"
+        " CAST(i AS INT) + 1)"
     )
+
+
+def _lit_proj(q: list[int], scale: int) -> str:
+    """Each vector's component along the literal direction ``q`` over
+    (vec_id, i, eq) rows: a vec_id-window sum, sign-split divided by
+    ``scale`` (window SUM == GROUP BY SUM for integer multisets, so it
+    equals the oracles' join form bit for bit)."""
+    return _sidiv(
+        f"CAST(SUM(eq * {_lit_dir(q)}) OVER (PARTITION BY vec_id) AS BIGINT)",
+        str(scale),
+        "DIV",
+    )
+
+
+def _duck_x_cte(mat: str = "MATERIALIZED ") -> str:
+    """The oracles' exploded quantized matrix x(vec_id, i, eq)."""
+    return f"""x AS {mat}(
+  SELECT v.vec_id, u.i - 1 AS i,
+         CAST(trunc(v.emb[u.i] * {PI_SCALE}) AS BIGINT) AS eq
+  FROM v, (SELECT unnest(generate_series(1, {DIM})) AS i) u
+)"""
 
 
 def _power_iter_fit(spark: SparkSession, src: str) -> list[tuple[int, int]]:
@@ -1894,15 +1784,7 @@ def _power_iter_fit(spark: SparkSession, src: str) -> list[tuple[int, int]]:
     form planned 6 shuffles and a deep codegen DAG per fit."""
     v = [PI_SCALE] * DIM  # v0
     for _ in range(PI_ITERS):
-        u = (
-            f"element_at(array({', '.join(str(q) for q in v)}),"
-            " CAST(i AS INT) + 1)"
-        )
-        sp = _sidiv(
-            f"CAST(SUM(eq * {u}) OVER (PARTITION BY vec_id) AS BIGINT)",
-            str(PI_RESCALE),
-            "DIV",
-        )
+        sp = _lit_proj(v, PI_RESCALE)
         rows = spark.sql(
             f"SELECT i, CAST(SUM(sp * eq) AS BIGINT) AS w FROM"
             f" (SELECT i, eq, {sp} AS sp FROM {src}) t GROUP BY i"
@@ -1989,26 +1871,25 @@ def _deflate_ctes(op: str, x: str, v1: str, pfx: str = "") -> str:
 )"""
 
 
-def _deflate_projection(fit: list[tuple[int, int]], src: str) -> str:
-    """Spark-side deflation as a JOIN-FREE window projection (the abtt
-    pattern): the fitted direction is a 64-int literal array, cp is a
-    vec_id-window sum, n1 is computed in Python — one exchange instead
-    of a 64-way literal-union join.  Integer sums are order-free, so
-    the values are bit-identical to the oracle's join-CTE deflation
-    (_deflate_ctes) — the equality embeddings_abtt's oracle already
-    proves for this exact shape."""
-    arr = ", ".join(str(q) for _d, q in fit)
-    n1 = max(sum(q * q for _d, q in fit) // PI_SCALE, 1)
-    u = f"element_at(array({arr}), CAST(i AS INT) + 1)"
-    cp = _sidiv(
-        f"CAST(SUM(eq * {u}) OVER (PARTITION BY vec_id) AS BIGINT)",
-        str(PI_SCALE),
-        "DIV",
-    )
+def _deflate_projection(
+    fit: list[tuple[int, int]], src: str, k: int = 0, carry: str = ""
+) -> str:
+    """The literal-direction window projection: subtract each vector's
+    component along the fitted direction from matrix ``src``,
+    JOIN-FREE — the direction is a 64-int literal array, cp a vec_id
+    window sum, n1 computed in Python; one exchange instead of a
+    64-way literal-union join.  Integer sums are order-free, so the
+    values are bit-identical to the oracle's join-CTE deflation
+    (_deflate_ctes).  ``k`` > 0 also keeps cp as column cp{k} (plus
+    the ``carry`` columns) — one link of the whitening chain."""
+    q = [x for _d, x in fit]
+    cp = _lit_proj(q, PI_SCALE)
+    n1 = max(sum(x * x for x in q) // PI_SCALE, 1)
+    keep = f", {cp} AS cp{k}{carry}" if k else ""
     return (
         f"SELECT vec_id, i,"
-        f" eq - {_sidiv(f'({cp}) * {u}', str(n1), 'DIV')} AS eq"
-        f" FROM {src}"
+        f" eq - {_sidiv(f'({cp}) * {_lit_dir(q)}', str(n1), 'DIV')}"
+        f" AS eq{keep} FROM {src}"
     )
 
 
@@ -2049,11 +1930,7 @@ def embeddings_top_pc2(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _top_pc2_oracle() -> str:
     return f"""
 WITH {_duck_v_cte()},
-x AS MATERIALIZED (
-  SELECT v.vec_id, u.i - 1 AS i,
-         CAST(trunc(v.emb[u.i] * {PI_SCALE}) AS BIGINT) AS eq
-  FROM v, (SELECT unnest(generate_series(1, {DIM})) AS i) u
-),
+{_duck_x_cte()},
 {_power_iter_chain('//')},
 {_deflate_ctes('//', 'x', f'v{PI_ITERS}')},
 x2m AS MATERIALIZED (SELECT * FROM x2),
@@ -2066,52 +1943,11 @@ FROM bv{PI_ITERS}
 def embeddings_abtt(spark: SparkSession, sf_dir: str) -> DataFrame:
     """All-but-the-top post-processing (Mu & Viswanath, ICLR 2018):
     remove the top TWO principal directions from every embedding —
-    the standard isotropy fix before cosine retrieval.  Sequential
-    integer deflation: cp1 = component along the fitted PC1, residual
-    r1 = e - proj1, cp2 = component of r1 along the fitted PC2,
-    r2 = r1 - proj2; emits (vec_id, proj1_q, proj2_q, resid_ssq_q)
-    with resid_ssq_q = SUM(r2^2) DIV 1e6 — all in the shared 1e6
-    fixed-point ledger, so integer sums are order-free and the oracle
-    value-hashes.  Plan shape: the fitted directions are 64-int
-    LITERAL arrays (the centroid pattern) — two vec_id-partitioned
-    window sums + one aggregate over the checkpointed component
-    relation, one exchange, no joins."""
-    fitted1 = _fit_top_pc(spark, sf_dir)
-    fitted2 = _fit_top_pc2(spark, sf_dir)
-    a1 = ", ".join(str(q) for _d, q in fitted1)
-    a2 = ", ".join(str(q) for _d, q in fitted2)
-    n1 = max(sum(q * q for _d, q in fitted1) // PI_SCALE, 1)
-    n2 = max(sum(q * q for _d, q in fitted2) // PI_SCALE, 1)
-    x = _xq_view(spark, sf_dir)
-    u1 = f"element_at(array({a1}), CAST(i AS INT) + 1)"
-    u2 = f"element_at(array({a2}), CAST(i AS INT) + 1)"
-    w = "OVER (PARTITION BY vec_id)"
-    cp1 = _sidiv(f"CAST(SUM(eq * {u1}) {w} AS BIGINT)", str(PI_SCALE), "DIV")
-    return spark.sql(
-        f"""
-        WITH r1 AS (
-          SELECT vec_id, i,
-                 eq - {_sidiv(f'({cp1}) * {u1}', str(n1), 'DIV')} AS eq,
-                 {cp1} AS cp1
-          FROM {x}
-        ),
-        r2 AS (
-          SELECT vec_id, cp1,
-                 {_sidiv(f"CAST(SUM(eq * {u2}) {w} AS BIGINT)",
-                         str(PI_SCALE), 'DIV')} AS cp2,
-                 eq, i
-          FROM r1
-        ),
-        res AS (
-          SELECT vec_id, cp1, cp2,
-                 eq - {_sidiv(f'cp2 * {u2}', str(n2), 'DIV')} AS r
-          FROM r2
-        )
-        SELECT vec_id, MIN(cp1) AS proj1_q, MIN(cp2) AS proj2_q,
-               CAST(SUM(r * r) DIV {PI_SCALE} AS BIGINT) AS resid_ssq_q
-        FROM res GROUP BY vec_id
-        """
-    )
+    the standard isotropy fix before cosine retrieval; emits (vec_id,
+    proj1_q, proj2_q, resid_ssq_q).  The whitening builder at n_pc=2
+    (embeddings_whiten); its oracle re-derives the two sequential
+    deflations independently (_abtt_oracle)."""
+    return embeddings_whiten(spark, sf_dir, n_pc=2)
 
 
 def _abtt_oracle() -> str:
@@ -2122,11 +1958,7 @@ def _abtt_oracle() -> str:
     op = "//"
     return f"""
 WITH {_duck_v_cte()},
-x AS MATERIALIZED (
-  SELECT v.vec_id, u.i - 1 AS i,
-         CAST(trunc(v.emb[u.i] * {PI_SCALE}) AS BIGINT) AS eq
-  FROM v, (SELECT unnest(generate_series(1, {DIM})) AS i) u
-),
+{_duck_x_cte()},
 {_power_iter_chain(op)},
 {_deflate_ctes(op, 'x', f'v{PI_ITERS}')},
 x2m AS MATERIALIZED (SELECT * FROM x2),
@@ -2197,11 +2029,7 @@ def _pcs_oracle_base(n_pc: int = N_PC) -> tuple[str, list, list, str]:
     chain_pfx = ["", "b", "d", "f", "h"]
     parts = [
         _duck_v_cte(),
-        f"""x AS MATERIALIZED (
-  SELECT v.vec_id, u.i - 1 AS i,
-         CAST(trunc(v.emb[u.i] * {PI_SCALE}) AS BIGINT) AS eq
-  FROM v, (SELECT unnest(generate_series(1, {DIM})) AS i) u
-)""",
+        _duck_x_cte(),
     ]
     fit_names, cf_names = [], []
     src = "x"
@@ -2256,23 +2084,10 @@ def embeddings_whiten(
     ledger: |eq| <= ~1e6, DIM=64 => |sum(eq*u)| <= 6.4e13,
     |cp| <= ~6.4e7, |cp*vq| <= 6.4e13 — int64-safe at every step."""
     fits = _fit_top_pcs(spark, sf_dir, N_PC if n_pc is None else n_pc)
-    x = _xq_view(spark, sf_dir)
-    w = "OVER (PARTITION BY vec_id)"
-    ctes = []
-    src = x
+    ctes, src = [], _xq_view(spark, sf_dir)
     for k, f in enumerate(fits, 1):
-        arr = ", ".join(str(q) for _d, q in f)
-        nk = max(sum(q * q for _d, q in f) // PI_SCALE, 1)
-        uk = f"element_at(array({arr}), CAST(i AS INT) + 1)"
-        cpk = _sidiv(
-            f"CAST(SUM(eq * {uk}) {w} AS BIGINT)", str(PI_SCALE), "DIV"
-        )
         carry = "".join(f", cp{j}" for j in range(1, k))
-        ctes.append(
-            f"r{k} AS (SELECT vec_id, i,"
-            f" eq - {_sidiv(f'({cpk}) * {uk}', str(nk), 'DIV')} AS eq,"
-            f" {cpk} AS cp{k}{carry} FROM {src})"
-        )
+        ctes.append(f"r{k} AS ({_deflate_projection(f, src, k, carry)})")
         src = f"r{k}"
     projs = ", ".join(
         f"MIN(cp{k}) AS proj{k}_q" for k in range(1, len(fits) + 1)
@@ -2316,12 +2131,9 @@ def embeddings_top_pc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _top_pc_oracle() -> str:
     return f"""
 WITH {_duck_v_cte()},
-x AS (
-  SELECT v.vec_id, u.i - 1 AS i,
-         CAST(trunc(v.emb[u.i] * {PI_SCALE}) AS BIGINT) AS eq
-  FROM v, (SELECT unnest(generate_series(1, {DIM})) AS i) u
-),
-{_power_iter_tail('//')}
+{_duck_x_cte('')},
+{_power_iter_chain('//')}
+SELECT CAST(i AS INT) AS dim, CAST(vq AS BIGINT) AS pc_q FROM v{PI_ITERS}
 """
 
 
@@ -2334,26 +2146,15 @@ x AS (
 # ---------------------------------------------------------------------------
 
 
-def _pc_project_select(op: str) -> str:
-    return f"""pj AS (
-  SELECT x.vec_id, CAST(SUM(x.eq * v.vq) AS BIGINT) AS s
-  FROM x JOIN v{PI_ITERS} v ON v.i = x.i GROUP BY x.vec_id
-)
-SELECT vec_id,
-       CAST({_sidiv('s', str(PI_SCALE), op)} AS BIGINT) AS proj_q
-FROM pj"""
-
-
 def embeddings_pc_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector quantized projection onto the power-iterated top PC.
 
     The fitted direction is a 64-int literal array (the centroid
     pattern), so the projection is ONE map-side-combinable aggregate
     over the checkpointed component relation — no joins at all."""
-    fitted = _fit_top_pc(spark, sf_dir)
-    arr = ", ".join(str(q) for _d, q in fitted)
+    u = _lit_dir([q for _d, q in _fit_top_pc(spark, sf_dir)])
     x = _xq_view(spark, sf_dir)
-    s = f"SUM(eq * element_at(array({arr}), CAST(i AS INT) + 1))"
+    s = f"SUM(eq * {u})"
     return spark.sql(
         f"""
         SELECT vec_id,
@@ -2367,13 +2168,15 @@ def embeddings_pc_project(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _pc_project_oracle() -> str:
     return f"""
 WITH {_duck_v_cte()},
-x AS (
-  SELECT v.vec_id, u.i - 1 AS i,
-         CAST(trunc(v.emb[u.i] * {PI_SCALE}) AS BIGINT) AS eq
-  FROM v, (SELECT unnest(generate_series(1, {DIM})) AS i) u
-),
+{_duck_x_cte('')},
 {_power_iter_chain('//')},
-{_pc_project_select('//')}
+pj AS (
+  SELECT x.vec_id, CAST(SUM(x.eq * v.vq) AS BIGINT) AS s
+  FROM x JOIN v{PI_ITERS} v ON v.i = x.i GROUP BY x.vec_id
+)
+SELECT vec_id,
+       CAST({_sidiv('s', str(PI_SCALE), '//')} AS BIGINT) AS proj_q
+FROM pj
 """
 
 
@@ -2491,46 +2294,38 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _recall_vs_bruteforce(spark, sf_dir, ann_ivf_search)
 
 
-def _recall_eval_oracle() -> str:
-    cos = _duck_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
+def _recall_oracle(approx: str, ctes: str = "") -> str:
+    """DuckDB mirror of :func:`_recall_vs_bruteforce`: per-query
+    overlap of the approximate top-K ``approx`` (a SELECT over the
+    oracle's CTEs, ``ctes`` adding the lane's index CTEs) with the
+    exact brute-force top-K."""
+    brute = _topk_sql("v", "q.vec_id <> c.vec_id", dialect="duck")
     return f"""
-WITH {_duck_v_cte()},
-{_kmeans_ctes('v', 'duck')},
-bscored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {cos} AS score
-  FROM (SELECT * FROM v WHERE vec_id < {N_QUERIES}) q
-  JOIN v c ON q.vec_id <> c.vec_id
-),
-brute AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                ORDER BY score DESC, neighbor_id) AS rank
-    FROM bscored
-  ) t WHERE rank <= {TOP_K}
-),
-iscored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {cos} AS score
-  FROM (SELECT * FROM af WHERE vec_id < {N_QUERIES}) q
-  JOIN af c ON q.cid = c.cid AND c.cellrn <= {IVF_CELL_CAP} AND q.vec_id <> c.vec_id
-),
-ivf AS (
-  SELECT query_id, neighbor_id, 1 AS hit FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                ORDER BY score DESC, neighbor_id) AS rank
-    FROM iscored
-  ) t WHERE rank <= {TOP_K}
-)
+WITH {_duck_v_cte()},{ctes}
+brute AS (WITH {brute}),
+approx AS ({approx})
 SELECT b.query_id,
        COUNT(*) AS n_exact,
-       COUNT(i.hit) AS n_hits,
-       CAST(COUNT(i.hit) AS DOUBLE) / COUNT(*) AS recall
+       COUNT(p.neighbor_id) AS n_hits,
+       CAST(COUNT(p.neighbor_id) AS DOUBLE) / COUNT(*) AS recall
 FROM brute b
-LEFT JOIN ivf i
-  ON b.query_id = i.query_id AND b.neighbor_id = i.neighbor_id
+LEFT JOIN approx p
+  ON b.query_id = p.query_id AND b.neighbor_id = p.neighbor_id
 GROUP BY b.query_id
 """
+
+
+def _recall_eval_oracle() -> str:
+    return _recall_oracle(
+        "WITH "
+        + _topk_sql(
+            "af",
+            f"q.cid = c.cid AND c.cellrn <= {IVF_CELL_CAP}"
+            " AND q.vec_id <> c.vec_id",
+            dialect="duck",
+        ),
+        f"\n{_kmeans_ctes('v', 'duck')},",
+    )
 
 
 # nprobe settings the recall-curve eval sweeps — the IVF tuning grid
@@ -2539,13 +2334,11 @@ PROBE_GRID = (1, 2, 4, 8)
 
 def _nprobe_qp_sql(dialect: str, af: str, cv: str) -> str:
     """qp body: the K centroid cells ranked by distance per query."""
-    dot = _unrolled_dot("a.emb", "c.emb", dialect)
     hint = "/*+ BROADCAST(c) */ " if dialect == "spark" else ""
     return f"""
   SELECT vec_id, emb, nrm, cid, rn AS cellrank FROM (
     SELECT {hint}a.vec_id, a.emb, a.nrm, c.cid,
-           ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                ORDER BY (c.cc - (2 * ({dot}))) ASC, c.cid) AS rn
+           {_cell_rank(dialect)} AS rn
     FROM (SELECT * FROM {af} WHERE vec_id < {N_QUERIES}) a
     CROSS JOIN {cv} c
   ) t"""
@@ -2556,8 +2349,7 @@ def _nprobe_scored_body(dialect: str, af: str) -> str:
     the vector's cell among the query's centroid distances.  One
     probe-assignment pass + one cid equi-join serve the exact baseline
     AND every probe depth."""
-    cosf = _spark_cosine if dialect == "spark" else _duck_cosine
-    cos = cosf("q.emb", "c.emb", "q.nrm", "c.nrm")
+    cos = _cosine("q", "c", dialect)
     return f"""
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          q.cellrank, c.cellrn <= {IVF_CELL_CAP} AS capped, {cos} AS score
@@ -2571,11 +2363,10 @@ def _nprobe_curve_blocks(dialect: str, scored: str) -> str:
     vector's cell has exactly one rank per query, so the unfiltered
     relation IS the all-pairs set); found at nprobe=np = rank over
     cellrank <= np (cell-cap conjunct as in the probed searches)."""
-    np_cast = "INT" if dialect == "spark" else "INTEGER"
     blocks = []
     for np in PROBE_GRID:
         blocks.append(f"""
-  SELECT CAST({np} AS {np_cast}) AS nprobe, b.query_id,
+  SELECT CAST({np} AS {_int_t(dialect)}) AS nprobe, b.query_id,
          COUNT(*) AS n_exact, COUNT(h.hit) AS n_hits,
          CAST(COUNT(h.hit) AS DOUBLE) / COUNT(*) AS recall
   FROM brute b LEFT JOIN (
@@ -2636,17 +2427,12 @@ def _nprobe_scored_stored(
     (one probe-assignment pass + one cid equi-join serve the exact
     baseline and every probe depth / K)."""
     af, _cv = _kmeans_index(spark, sf_dir)
-    # literal-projection probe (no cross join, like ann_ivf_search):
     # cellrank = 1 + position in the sorted (dist, cid) struct array
-    sa = _probe_sorted_expr(_kmeans_centroids(spark, sf_dir), "emb")
-    qp = f"""
-      SELECT vec_id, emb, nrm, pcid AS cid, idx + 1 AS cellrank
-      FROM (
-        SELECT vec_id, emb, nrm, {sa} AS __sa
-        FROM {af} WHERE vec_id < {N_QUERIES}
-      ) t LATERAL VIEW posexplode(transform(__sa, s -> s.c))
-        p AS idx, pcid
-    """
+    qp = _probed_cells(
+        spark, sf_dir, af,
+        "vec_id, emb, nrm, pcid AS cid, idx + 1 AS cellrank",
+        "vec_id, emb, nrm",
+    )
     sc = spark.sql(
         f"WITH qp AS ({qp})"
         f"{_nprobe_scored_body('spark', af)}"
@@ -2686,11 +2472,9 @@ def _k_recall_sql(dialect: str, scored: str, nprobe: int) -> str:
     if dialect == "spark":
         fan = f"LATERAL VIEW explode(array({grid})) g AS k"
         idiv = "DIV"
-        kcast = "INT"
     else:
         fan = f", unnest([{grid}]) AS g(k)"
         idiv = "//"
-        kcast = "INTEGER"
     return f"""
 brute AS (
   SELECT query_id, neighbor_id,
@@ -2718,7 +2502,7 @@ fan AS (
   FROM j
   {fan}
 )
-SELECT CAST(k AS {kcast}) AS k, query_id,
+SELECT CAST(k AS {_int_t(dialect)}) AS k, query_id,
        CAST(SUM(ex) AS BIGINT) AS n_exact,
        CAST(SUM(hit) AS BIGINT) AS n_hits,
        CAST((1000000 * SUM(hit)) {idiv} GREATEST(SUM(ex), 1) AS BIGINT)
@@ -2756,22 +2540,6 @@ scored AS MATERIALIZED ({_nprobe_scored_body('duck', 'afm')}),
 OUTLIER_TOP_K = 5
 
 
-def _centroid_by_label(src: str, dialect: str) -> str:
-    """Per-label fixed-point centroid: exact integer sums per dimension
-    (same construction as :func:`_kmeans_update`, keyed by label)."""
-    off = 0 if dialect == "spark" else 1
-    arr_open, arr_close = ("array(", ")") if dialect == "spark" else ("[", "]")
-    elems = ",\n       ".join(
-        f"CAST(SUM(CAST(FLOOR(emb[{d + off}] * {_FP_SCALE}) AS BIGINT))"
-        f" AS DOUBLE) / (COUNT(*) * {_FP_SCALE})"
-        for d in range(DIM)
-    )
-    return (
-        f"SELECT label, {arr_open}{elems}{arr_close} AS emb"
-        f" FROM {src} GROUP BY label"
-    )
-
-
 @stored("ann_outlier_centroids")
 def _label_centroids(spark: SparkSession, sf_dir: str) -> str:
     """Cached |labels|-row centroid view (label, emb, cc) — the outlier
@@ -2781,7 +2549,7 @@ def _label_centroids(spark: SparkSession, sf_dir: str) -> str:
     of constants, not a re-aggregation plus a fresh 64-wide codegen."""
     v = _normed(spark, sf_dir)
     rows = spark.sql(
-        f"SELECT label AS cid, emb FROM ({_centroid_by_label(v, 'spark')})"
+        f"SELECT label AS cid, emb FROM ({_fp_means('spark', v, 'label')})"
     ).collect()
     name = f"outlier_cent_{abs(hash((session_key(spark), sf_dir))) % 10**8}"
     spark.sql(
@@ -2820,7 +2588,7 @@ def _outliers_oracle() -> str:
 WITH {_duck_v_cte()},
 cent AS (
   SELECT label, emb, {cc} AS cc
-  FROM ({_centroid_by_label('v', 'duck')})
+  FROM ({_fp_means('duck', 'v', 'label')})
 )
 SELECT label, rank, vec_id FROM (
   SELECT a.label, a.vec_id,
@@ -2863,50 +2631,59 @@ def _pq_subdim(pq_m: int) -> int:
     return DIM // pq_m
 
 
-def _pq_dist(dialect: str, a: str, c: str, m: str, pq_m: int = PQ_M) -> str:
-    """Unrolled squared L2 between subvectors m of ``a`` and ``c``."""
+def _pq_dist(
+    dialect: str,
+    a: str,
+    c: str,
+    m: str | None = None,
+    pq_m: int = PQ_M,
+    ctr: str | None = None,
+) -> str:
+    """Unrolled squared L2 between subvectors m of ``a`` and ``c`` (of
+    the residual ``a`` - ``ctr`` when a centroid is given; ``m`` None =
+    two whole subvector-wide arrays)."""
     off = 0 if dialect == "spark" else 1
     subdim = _pq_subdim(pq_m)
-    terms = [
-        f"(({a}[{m} * {subdim} + {i + off}]"
-        f" - {c}[{m} * {subdim} + {i + off}])"
-        f" * ({a}[{m} * {subdim} + {i + off}]"
-        f" - {c}[{m} * {subdim} + {i + off}]))"
+    at = "" if m is None else f"{m} * {subdim} + "
+
+    def diff(ix: str) -> str:
+        x = f"{a}[{ix}]" if ctr is None else f"({a}[{ix}] - {ctr}[{ix}])"
+        return f"({x} - {c}[{ix}])"
+
+    return _tree([
+        f"({diff(f'{at}{i + off}')} * {diff(f'{at}{i + off}')})"
         for i in range(subdim)
-    ]
-    while len(terms) > 1:
-        terms = [
-            f"({terms[i]} + {terms[i + 1]})"
-            if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    return terms[0]
+    ])
+
+
+def _argmin_codes(
+    dialect: str, p: str, pq_m: int, ctr: str | None = None
+) -> str:
+    """``{p}codes`` (vec_id, m, code): every (vector, subspace) row of
+    ``{p}sub`` encoded to its nearest ``{p}cb`` codeword (squared-L2
+    argmin, code tie-break)."""
+    dist = _pq_dist(dialect, "s.emb", f"{p}cb.cemb", "s.m", pq_m, ctr)
+    return f"""{p}codes AS (
+  SELECT vec_id, m, code FROM (
+    SELECT s.vec_id, s.m, {p}cb.code,
+           ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
+                ORDER BY ({dist}) ASC, {p}cb.code) AS rn
+    FROM {p}sub s CROSS JOIN {p}cb
+  ) t WHERE rn = 1
+)"""
 
 
 def _pq_codes_ctes(dialect: str, v: str, pq_m: int = PQ_M) -> str:
     """The shared ``cb`` / ``sub`` / ``codes`` CTE chain: per-subspace
     squared-L2 argmin of every vector's subvectors over the codebook.
     ``codes`` has raw (vec_id, m, code) — callers cast for output."""
-    dist = _pq_dist(dialect, "s.emb", "cb.cemb", "s.m", pq_m)
-    enum = (
-        f"explode(sequence(0, {pq_m - 1}))"
-        if dialect == "spark"
-        else f"unnest(generate_series(0, {pq_m - 1}))"
-    )
     return f"""cb AS (
   SELECT vec_id AS code, emb AS cemb FROM {v} WHERE vec_id < {PQ_K}
 ),
 sub AS (
-  SELECT vec_id, emb, {enum} AS m FROM {v}
+  SELECT vec_id, emb, {_enum(pq_m, dialect)} AS m FROM {v}
 ),
-codes AS (
-  SELECT vec_id, m, code FROM (
-    SELECT s.vec_id, s.m, cb.code,
-           ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
-                ORDER BY ({dist}) ASC, cb.code) AS rn
-    FROM sub s CROSS JOIN cb
-  ) t WHERE rn = 1
-)"""
+{_argmin_codes(dialect, "", pq_m)}"""
 
 
 @stored("pq_codes")
@@ -3005,52 +2782,100 @@ FROM codes
 
 def _pq_adc_tree(pq_m: int = PQ_M) -> str:
     """Fixed balanced-tree sum of the pq_m pivoted partials."""
-    terms = [f"s{i}" for i in range(pq_m)]
-    while len(terms) > 1:
-        terms = [
-            f"({terms[i]} + {terms[i + 1]})"
-            if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    return terms[0]
+    return _tree([f"s{i}" for i in range(pq_m)])
 
 
-def _pq_search_body(dialect: str) -> str:
-    """Shared post-``codes`` SQL: LUT, pivot, ADC rank, top-K."""
-    qdist = _pq_dist(dialect, "q.qemb", "cb.cemb", "mm.m")
-    enum = (
-        f"explode(sequence(0, {PQ_M - 1}))"
-        if dialect == "spark"
-        else f"unnest(generate_series(0, {PQ_M - 1}))"
-    )
-    pivots = ",\n         ".join(
-        f"MAX(CASE WHEN c.m = {i} THEN l.d END) AS s{i}"
-        for i in range(PQ_M)
-    )
-    int_t = "INT" if dialect == "spark" else "INTEGER"
-    return f"""qs AS (
-  SELECT vec_id AS query_id, emb AS qemb FROM {{v}}
-  WHERE vec_id < {N_QUERIES}
-),
-mm AS (SELECT {enum} AS m),
-lut AS (
-  SELECT q.query_id, mm.m, cb.code, ({qdist}) AS d
-  FROM qs q CROSS JOIN mm CROSS JOIN cb
-),
-adc AS (
-  SELECT {"/*+ BROADCAST(l) */" if dialect == "spark" else ""} l.query_id, c.vec_id,
-         {pivots}
-  FROM codes c JOIN lut l ON c.m = l.m AND c.code = l.code
-  WHERE c.vec_id <> l.query_id
-  GROUP BY l.query_id, c.vec_id
-)
-SELECT query_id, CAST(rank AS {int_t}) AS rank, vec_id AS neighbor_id
+def _adc_rank(dialect: str, src: str, pq_m: int = PQ_M) -> str:
+    """The one ADC top-K tail: rank ``src``'s (query_id, vec_id, s0..)
+    rows per query by the summed distance ascending, vec_id
+    tie-break."""
+    return f"""SELECT query_id, CAST(rank AS {_int_t(dialect)}) AS rank,
+       vec_id AS neighbor_id
 FROM (
   SELECT query_id, vec_id,
          ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY ({_pq_adc_tree()}) ASC, vec_id) AS rank
-  FROM adc
+              ORDER BY ({_pq_adc_tree(pq_m)}) ASC, vec_id) AS rank
+  FROM {src}
 ) t WHERE rank <= {TOP_K}"""
+
+
+def _adc_agg(
+    dialect: str,
+    pairs: str,
+    codes: str,
+    lut: str,
+    pq_m: int,
+    cid: bool,
+    hint: str,
+) -> str:
+    """Per (query, candidate) ADC partials: the candidate ``pairs`` ca
+    join their codes and the query's LUT rows (same cell too when the
+    LUT is cell-relative, ``cid``), pivoted to s0..s{pq_m-1}."""
+    h = f"/*+ BROADCAST({hint}) */ " if dialect == "spark" else ""
+    lk = " AND l.cid = ca.cid" if cid else ""
+    return f"""
+  SELECT {h}ca.query_id, ca.vec_id,
+         {_pivots(pq_m, 'co')}
+  FROM {pairs} ca
+  JOIN {codes} co ON co.vec_id = ca.vec_id
+  JOIN {lut} l ON l.query_id = ca.query_id{lk}
+            AND l.m = co.m AND l.code = co.code
+  GROUP BY ca.query_id, ca.vec_id"""
+
+
+def _adc_body(
+    dialect: str,
+    af: str,
+    codes: str,
+    lut: str,
+    probe: str | None,
+    pq_m: int = PQ_M,
+    cid: bool = False,
+    pfx: str = "",
+    out: str | None = None,
+) -> str:
+    """The one ADC search body of the raw, residual and trained
+    searches.  The variants differ only in their codes relation
+    ``codes`` and in ``lut`` — the CTEs ending in ``{pfx}lut``
+    (query_id[, cid], m, code, d): raw codewords, the residual against
+    each probed centroid, or the trained residual codebook; a residual
+    LUT is cell-relative, so it carries ``cid`` and the ADC join
+    matches the candidate's cell.  ``probe`` is the ``{pfx}qp`` CTE of
+    probed (query, cell) pairs: candidates are those cells' capped
+    members (a corpus vector lives in exactly one cell, so distinct
+    cells never duplicate a candidate); None scores every corpus
+    vector (the flat search).  Ends in the ADC-ranked top-K, or in an
+    ``out`` CTE holding it (flat CTE chains — see
+    _ivf_pq_trained_body)."""
+    if probe is None:
+        hint = "/*+ BROADCAST(l) */ " if dialect == "spark" else ""
+        ctes = f"""{lut},
+{pfx}adc AS (
+  SELECT {hint}l.query_id, c.vec_id,
+         {_pivots(pq_m, 'c')}
+  FROM {codes} c JOIN {pfx}lut l ON c.m = l.m AND c.code = l.code
+  WHERE c.vec_id <> l.query_id
+  GROUP BY l.query_id, c.vec_id
+)"""
+    else:
+        hint = "/*+ BROADCAST(q) */ " if dialect == "spark" else ""
+        agg = _adc_agg(
+            dialect, f"{pfx}cand", codes, f"{pfx}lut", pq_m, cid, "ca, l"
+        )
+        ctes = f"""{probe},
+{lut},
+{pfx}cand AS (
+  SELECT {hint}q.query_id{", q.cid" if cid else ""}, c.vec_id
+  FROM {pfx}qp q JOIN {af} c
+    ON q.cid = c.cid AND c.cellrn <= {IVF_CELL_CAP}
+   AND c.vec_id <> q.query_id
+),
+{pfx}adc AS ({agg}
+)"""
+    rank = _adc_rank(dialect, f"{pfx}adc", pq_m)
+    if out is None:
+        return f"{ctes}\n{rank}"
+    return f"{ctes},\n{out} AS (\n{rank}\n)"
 
 
 def _probe_cte(
@@ -3068,9 +2893,7 @@ def _probe_cte(
     caller-supplied literal probe projection on Spark (``probe_sql``,
     built from the driver-side centroids — no join) and the
     rn<=nprobe cross-join form on DuckDB (mirroring
-    _ivf_search_oracle's qp).  ``name`` lets the trained body emit a
-    collision-free CTE in the combined recall eval (parameter, not
-    string surgery — a r12 review fix)."""
+    _ivf_search_oracle's qp)."""
     if nprobe == 1:
         return f"""{name} AS (
   SELECT vec_id AS query_id, cid FROM {af} WHERE vec_id < {N_QUERIES}
@@ -3081,12 +2904,10 @@ def _probe_cte(
         return f"{name} AS ({probe_sql})"
     if cv is None:
         raise ValueError("duck nprobe>1 needs the centroid relation")
-    qdot = _unrolled_dot("a.emb", "c.emb", "duck")
     return f"""{name} AS (
   SELECT query_id, cid FROM (
     SELECT a.vec_id AS query_id, c.cid,
-           ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                ORDER BY (c.cc - (2 * ({qdot}))) ASC, c.cid) AS rn
+           {_cell_rank('duck')} AS rn
     FROM (SELECT * FROM {af} WHERE vec_id < {N_QUERIES}) a
     CROSS JOIN {cv} c
   ) t WHERE rn <= {nprobe}
@@ -3095,16 +2916,44 @@ def _probe_cte(
 
 def _spark_probe_sql(
     spark: SparkSession, sf_dir: str, af: str, nprobe: int
-) -> str:
+) -> str | None:
     """Spark-side qp(query_id, cid) at nprobe>1: the sorted-centroid
     literal projection (_probe_sorted_expr) + explode of the first
-    nprobe cells — no join, no BroadcastNestedLoopJoin."""
-    sa = _probe_sorted_expr(_kmeans_centroids(spark, sf_dir), "emb")
-    picks = ", ".join(f"__sa[{j}].c" for j in range(nprobe))
-    return f"""
-  SELECT vec_id AS query_id, pcid AS cid FROM (
-    SELECT vec_id, {sa} AS __sa FROM {af} WHERE vec_id < {N_QUERIES}
-  ) t LATERAL VIEW explode(array({picks})) p AS pcid"""
+    nprobe cells — no join, no BroadcastNestedLoopJoin.  None at
+    nprobe=1 (the assignment column answers it)."""
+    if nprobe == 1:
+        return None
+    return _probed_cells(
+        spark, sf_dir, af, "vec_id AS query_id, pcid AS cid", "vec_id", nprobe
+    )
+
+
+def _query_lut(
+    dialect: str, src: str, pq_m: int = PQ_M, cv: str | None = None
+) -> str:
+    """qs / mm / lut: every query subvector's distance to every
+    codeword — the raw codebook ``cb``, or with the centroid relation
+    ``cv`` the residual codebook ``rcb`` against the query's residual
+    in each probed cell (keyed by cid)."""
+    if cv is None:
+        cb, key, via = "cb", "", ""
+        d = _pq_dist(dialect, "q.qemb", "cb.cemb", "mm.m", pq_m)
+    else:
+        cb, key = "rcb", " p.cid,"
+        via = (
+            " JOIN qp p ON q.query_id = p.query_id\n"
+            f"  JOIN {cv} c ON p.cid = c.cid\n "
+        )
+        d = _pq_dist(dialect, "q.qemb", "rcb.cemb", "mm.m", pq_m, "c.emb")
+    return f"""qs AS (
+  SELECT vec_id AS query_id, emb AS qemb FROM {src}
+  WHERE vec_id < {N_QUERIES}
+),
+mm AS (SELECT {_enum(pq_m, dialect)} AS m),
+lut AS (
+  SELECT q.query_id,{key} mm.m, {cb}.code, ({d}) AS d
+  FROM qs q{via} CROSS JOIN mm CROSS JOIN {cb}
+)"""
 
 
 def _ivf_pq_body(
@@ -3115,58 +2964,16 @@ def _ivf_pq_body(
     pq_m: int = PQ_M,
     probe_sql: str | None = None,
 ) -> str:
-    """Shared post-``codes`` SQL for IVF+ADC: probe the query's
-    ``nprobe`` nearest cells, then score ONLY those cells' candidates
-    by ADC lookups.  The LUT is probe-independent (raw-PQ codewords
-    are global, not cell-relative), so nprobe only widens ``cand``; a
-    corpus vector lives in exactly one cell, so probing distinct cells
-    cannot duplicate candidates.  ``nprobe``/``pq_m`` are the
-    driver-visible dials (queries_parameterized)."""
-    qdist = _pq_dist(dialect, "q.qemb", "cb.cemb", "mm.m", pq_m)
-    enum = (
-        f"explode(sequence(0, {pq_m - 1}))"
-        if dialect == "spark"
-        else f"unnest(generate_series(0, {pq_m - 1}))"
+    """IVF+ADC over the raw-PQ ``codes`` (the caller's prelude): probe
+    the query's ``nprobe`` nearest cells, score only their candidates.
+    The LUT is probe-independent (raw-PQ codewords are global, not
+    cell-relative), so nprobe only widens the candidates.
+    ``nprobe``/``pq_m`` are the driver-visible dials
+    (queries_parameterized)."""
+    return _adc_body(
+        dialect, af, "codes", _query_lut(dialect, af, pq_m),
+        _probe_cte(dialect, af, cv, nprobe, probe_sql), pq_m,
     )
-    pivots = ",\n         ".join(
-        f"MAX(CASE WHEN co.m = {i} THEN l.d END) AS s{i}"
-        for i in range(pq_m)
-    )
-    hint_q = "/*+ BROADCAST(q) */ " if dialect == "spark" else ""
-    hint_l = "/*+ BROADCAST(ca, l) */ " if dialect == "spark" else ""
-    int_t = "INT" if dialect == "spark" else "INTEGER"
-    return f"""qs AS (
-  SELECT vec_id AS query_id, emb AS qemb FROM {af}
-  WHERE vec_id < {N_QUERIES}
-),
-{_probe_cte(dialect, af, cv, nprobe, probe_sql)},
-mm AS (SELECT {enum} AS m),
-lut AS (
-  SELECT q.query_id, mm.m, cb.code, ({qdist}) AS d
-  FROM qs q CROSS JOIN mm CROSS JOIN cb
-),
-cand AS (
-  SELECT {hint_q}q.query_id, c.vec_id
-  FROM qp q JOIN {af} c
-    ON q.cid = c.cid AND c.cellrn <= {IVF_CELL_CAP}
-   AND c.vec_id <> q.query_id
-),
-adc AS (
-  SELECT {hint_l}ca.query_id, ca.vec_id,
-         {pivots}
-  FROM cand ca
-  JOIN codes co ON co.vec_id = ca.vec_id
-  JOIN lut l ON l.query_id = ca.query_id
-            AND l.m = co.m AND l.code = co.code
-  GROUP BY ca.query_id, ca.vec_id
-)
-SELECT query_id, CAST(rank AS {int_t}) AS rank, vec_id AS neighbor_id
-FROM (
-  SELECT query_id, vec_id,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY ({_pq_adc_tree(pq_m)}) ASC, vec_id) AS rank
-  FROM adc
-) t WHERE rank <= {TOP_K}"""
 
 
 def ann_ivf_pq(
@@ -3191,14 +2998,11 @@ def ann_ivf_pq(
     at query time); an off-default ``pq_m`` re-encodes inline, which
     is the value-check path for the dial, not a deployment shape — a
     deployment re-builds the stored index at the new m."""
-    if nprobe < 1 or nprobe > KMEANS_K:
-        raise ValueError(f"nprobe must be in [1, {KMEANS_K}]")
+    _check_nprobe(nprobe)
     _pq_subdim(pq_m)
     v = _normed(spark, sf_dir)
     af = _kmeans_assignments(spark, sf_dir)
-    probe_sql = (
-        _spark_probe_sql(spark, sf_dir, af, nprobe) if nprobe > 1 else None
-    )
+    probe_sql = _spark_probe_sql(spark, sf_dir, af, nprobe)
     if pq_m == PQ_M:
         prelude = _pq_stored_prelude(v, _pq_codes_view(spark, sf_dir))
     else:
@@ -3254,68 +3058,31 @@ cvm AS MATERIALIZED (SELECT * FROM c{KMEANS_ITERS}),
 # ---------------------------------------------------------------------------
 
 
-def _pq_rdist(
-    dialect: str, a: str, ctr: str, c: str, m: str, pq_m: int = PQ_M
-) -> str:
-    """Unrolled squared L2 between subvector m of the residual
-    (``a`` - ``ctr``) and codeword subvector m of ``c``."""
+def _res_cb_cte(dialect: str, af: str, cv: str) -> str:
+    """The residual codebook CTE: the first PQ_K vectors' residuals
+    against their centroids."""
     off = 0 if dialect == "spark" else 1
-    subdim = _pq_subdim(pq_m)
-    idx = [f"{m} * {subdim} + {i + off}" for i in range(subdim)]
-    terms = [
-        f"((({a}[{ix}] - {ctr}[{ix}]) - {c}[{ix}])"
-        f" * (({a}[{ix}] - {ctr}[{ix}]) - {c}[{ix}]))"
-        for ix in idx
-    ]
-    while len(terms) > 1:
-        terms = [
-            f"({terms[i]} + {terms[i + 1]})"
-            if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    return terms[0]
+    res = _array(
+        [f"(a.emb[{i + off}] - c.emb[{i + off}])" for i in range(DIM)],
+        dialect,
+    )
+    return f"""rcb AS (
+  SELECT a.vec_id AS code, {res} AS cemb
+  FROM {af} a JOIN {cv} c ON a.cid = c.cid
+  WHERE a.vec_id < {PQ_K}
+)"""
 
 
 def _res_codes_ctes(
     dialect: str, af: str, cv: str, pq_m: int = PQ_M
 ) -> str:
     """rcb + rsub + rcodes — the untrained-residual encode chain."""
-    enum = (
-        f"explode(sequence(0, {pq_m - 1}))"
-        if dialect == "spark"
-        else f"unnest(generate_series(0, {pq_m - 1}))"
-    )
-    rdist = _pq_rdist(dialect, "s.emb", "s.ctr", "rcb.cemb", "s.m", pq_m)
     return f"""{_res_cb_cte(dialect, af, cv)},
 rsub AS (
-  SELECT a.vec_id, a.emb, c.emb AS ctr, {enum} AS m
+  SELECT a.vec_id, a.emb, c.emb AS ctr, {_enum(pq_m, dialect)} AS m
   FROM {af} a JOIN {cv} c ON a.cid = c.cid
 ),
-rcodes AS (
-  SELECT vec_id, m, code FROM (
-    SELECT s.vec_id, s.m, rcb.code,
-           ROW_NUMBER() OVER (PARTITION BY s.vec_id, s.m
-                ORDER BY ({rdist}) ASC, rcb.code) AS rn
-    FROM rsub s CROSS JOIN rcb
-  ) t WHERE rn = 1
-)"""
-
-
-def _res_cb_cte(dialect: str, af: str, cv: str) -> str:
-    """Just the residual codebook CTE (the LUT build needs it even
-    when codes come from the stored index)."""
-    off = 0 if dialect == "spark" else 1
-    res_elems = ", ".join(
-        f"(a.emb[{i + off}] - c.emb[{i + off}])" for i in range(DIM)
-    )
-    res_arr = (
-        f"array({res_elems})" if dialect == "spark" else f"[{res_elems}]"
-    )
-    return f"""rcb AS (
-  SELECT a.vec_id AS code, {res_arr} AS cemb
-  FROM {af} a JOIN {cv} c ON a.cid = c.cid
-  WHERE a.vec_id < {PQ_K}
-)"""
+{_argmin_codes(dialect, "r", pq_m, "s.ctr")}"""
 
 
 def _ivf_pq_residual_body(
@@ -3327,71 +3094,25 @@ def _ivf_pq_residual_body(
     pq_m: int = PQ_M,
     probe_sql: str | None = None,
 ) -> str:
-    """Residual codebook + residual encode + residual-ADC search, shared
+    """Residual codebook + residual codes + residual-ADC search, shared
     between the Spark lane (checkpointed ``af``/literal ``cv`` views,
     codes served from the STORED code table via ``codes_src``) and the
-    DuckDB oracle (fully inlined chain, ``codes_src=None``).
-
-    Unlike raw PQ, the residual LUT is CELL-RELATIVE (the query's
-    residual is taken against each probed centroid — IVFADC proper),
-    so at nprobe>1 the LUT carries a cid key and the ADC join matches
-    the candidate's cell; at nprobe=1 the cid join is degenerate and
-    the plan is unchanged from the single-probe form."""
-    enum = (
-        f"explode(sequence(0, {pq_m - 1}))"
-        if dialect == "spark"
-        else f"unnest(generate_series(0, {pq_m - 1}))"
-    )
-    qrdist = _pq_rdist(dialect, "q.qemb", "c.emb", "rcb.cemb", "mm.m", pq_m)
-    pivots = ",\n         ".join(
-        f"MAX(CASE WHEN co.m = {i} THEN l.d END) AS s{i}"
-        for i in range(pq_m)
-    )
-    hint_q = "/*+ BROADCAST(q) */ " if dialect == "spark" else ""
-    hint_l = "/*+ BROADCAST(ca, l) */ " if dialect == "spark" else ""
-    int_t = "INT" if dialect == "spark" else "INTEGER"
-    codes_part = (
+    DuckDB oracle (fully inlined chain, ``codes_src=None``).  The LUT
+    is cell-relative (IVFADC proper: the query's residual is taken
+    against each probed centroid)."""
+    codes = (
         _res_codes_ctes(dialect, af, cv, pq_m)
         if codes_src is None
         else f"{_res_cb_cte(dialect, af, cv)},\n"
         f"rcodes AS (SELECT vec_id, m, code FROM {codes_src})"
     )
-    return f"""{codes_part},
-qs AS (
-  SELECT vec_id AS query_id, emb AS qemb FROM {af}
-  WHERE vec_id < {N_QUERIES}
-),
-{_probe_cte(dialect, af, cv if dialect == 'duck' else None,
-            nprobe, probe_sql)},
-mm AS (SELECT {enum} AS m),
-lut AS (
-  SELECT q.query_id, p.cid, mm.m, rcb.code, ({qrdist}) AS d
-  FROM qs q JOIN qp p ON q.query_id = p.query_id
-  JOIN {cv} c ON p.cid = c.cid
-  CROSS JOIN mm CROSS JOIN rcb
-),
-cand AS (
-  SELECT {hint_q}q.query_id, q.cid, c.vec_id
-  FROM qp q JOIN {af} c
-    ON q.cid = c.cid AND c.cellrn <= {IVF_CELL_CAP}
-   AND c.vec_id <> q.query_id
-),
-adc AS (
-  SELECT {hint_l}ca.query_id, ca.vec_id,
-         {pivots}
-  FROM cand ca
-  JOIN rcodes co ON co.vec_id = ca.vec_id
-  JOIN lut l ON l.query_id = ca.query_id AND l.cid = ca.cid
-            AND l.m = co.m AND l.code = co.code
-  GROUP BY ca.query_id, ca.vec_id
-)
-SELECT query_id, CAST(rank AS {int_t}) AS rank, vec_id AS neighbor_id
-FROM (
-  SELECT query_id, vec_id,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-              ORDER BY ({_pq_adc_tree(pq_m)}) ASC, vec_id) AS rank
-  FROM adc
-) t WHERE rank <= {TOP_K}"""
+    probe = _probe_cte(
+        dialect, af, cv if dialect == "duck" else None, nprobe, probe_sql
+    )
+    return f"{codes},\n" + _adc_body(
+        dialect, af, "rcodes", _query_lut(dialect, af, pq_m, cv), probe,
+        pq_m, cid=True,
+    )
 
 
 def ann_ivf_pq_residual(
@@ -3406,13 +3127,10 @@ def ann_ivf_pq_residual(
     (the dial's value-check path — a deployment re-builds the stored
     index instead).  ``nprobe`` probes more cells with per-cell query
     residuals (IVFADC multi-probe)."""
-    if nprobe < 1 or nprobe > KMEANS_K:
-        raise ValueError(f"nprobe must be in [1, {KMEANS_K}]")
+    _check_nprobe(nprobe)
     _pq_subdim(pq_m)
     af, cv = _kmeans_index(spark, sf_dir)
-    probe_sql = (
-        _spark_probe_sql(spark, sf_dir, af, nprobe) if nprobe > 1 else None
-    )
+    probe_sql = _spark_probe_sql(spark, sf_dir, af, nprobe)
     codes_src = (
         _rpq_codes_view(spark, sf_dir) if pq_m == PQ_M else None
     )
@@ -3443,14 +3161,7 @@ def _pq_full_l2(dialect: str, a: str, b: str) -> str:
     trees combined by the same balanced reduce as the ADC sum, so the
     exact baseline ranks with bit-identical arithmetic on both
     engines."""
-    terms = [f"({_pq_dist(dialect, a, b, str(m))})" for m in range(PQ_M)]
-    while len(terms) > 1:
-        terms = [
-            f"({terms[i]} + {terms[i + 1]})"
-            if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    return terms[0]
+    return _tree([f"({_pq_dist(dialect, a, b, str(m))})" for m in range(PQ_M)])
 
 
 def _recall_arms_sql(dialect: str = "duck") -> str:
@@ -3541,40 +3252,42 @@ exact AS (
 TRAINED_PQ_ITERS = 2
 
 
-def _rsub_sql(dialect: str, af: str, cv: str) -> str:
-    """(vec_id, m, r[8]) residual subvectors of every corpus vector."""
+def _res_sub_sql(
+    dialect: str, keys: str, vec: str, cols: str, frm: str
+) -> str:
+    """(keys.., m, r[8]): the PQ_M residual subvectors ``vec`` - ctr of
+    every row of ``SELECT cols frm`` (``cols`` names ``vec`` and its
+    centroid ``ctr``)."""
     off = 0 if dialect == "spark" else 1
-    elems = ", ".join(
-        f"(emb[m * {_PQ_SUBDIM} + {i + off}]"
+    r = _array([
+        f"({vec}[m * {_PQ_SUBDIM} + {i + off}]"
         f" - ctr[m * {_PQ_SUBDIM} + {i + off}])"
         for i in range(_PQ_SUBDIM)
-    )
+    ], dialect)
     if dialect == "spark":
-        return f"""SELECT vec_id, m, array({elems}) AS r FROM (
-  SELECT a.vec_id, a.emb, c.emb AS ctr,
-         explode(sequence(0, {PQ_M - 1})) AS m
-  FROM {af} a JOIN {cv} c ON a.cid = c.cid)"""
-    return f"""SELECT a.vec_id, s.m, [{elems}] AS r FROM
-  (SELECT a.vec_id, a.emb, c.emb AS ctr FROM {af} a
-   JOIN {cv} c ON a.cid = c.cid) a,
-  unnest(generate_series(0, {PQ_M - 1})) AS s(m)"""
+        return f"""SELECT {keys}, m, {r} AS r FROM (
+  SELECT {cols},
+         {_enum(PQ_M, dialect)} AS m
+  {frm})"""
+    akeys = ", ".join(f"a.{k}" for k in keys.split(", "))
+    return f"""SELECT {akeys}, s.m, {r} AS r FROM
+  (SELECT {cols}
+   {frm}) a,
+  {_enum(PQ_M, dialect)} AS s(m)"""
+
+
+def _rsub_sql(dialect: str, af: str, cv: str) -> str:
+    """(vec_id, m, r[8]) residual subvectors of every corpus vector."""
+    return _res_sub_sql(
+        dialect, "vec_id", "emb", "a.vec_id, a.emb, c.emb AS ctr",
+        f"FROM {af} a JOIN {cv} c ON a.cid = c.cid",
+    )
 
 
 def _r8_dist(dialect: str, r: str, c: str) -> str:
     """Unrolled squared L2 between two 8-component arrays."""
-    off = 0 if dialect == "spark" else 1
-    terms = [
-        f"(({r}[{i + off}] - {c}[{i + off}])"
-        f" * ({r}[{i + off}] - {c}[{i + off}]))"
-        for i in range(_PQ_SUBDIM)
-    ]
-    while len(terms) > 1:
-        terms = [
-            f"({terms[i]} + {terms[i + 1]})"
-            if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    return terms[0]
+    return _pq_dist(dialect, r, c)
+
 
 
 def _tcb_assign_sql(dialect: str, rsub: str, cb: str) -> str:
@@ -3605,17 +3318,7 @@ def _tcb_assign_sql(dialect: str, rsub: str, cb: str) -> str:
 
 def _tcb_update_sql(dialect: str, assigned: str) -> str:
     """Fixed-point-exact codeword means (mirrors _kmeans_update)."""
-    off = 0 if dialect == "spark" else 1
-    arr_open, arr_close = ("array(", ")") if dialect == "spark" else ("[", "]")
-    elems = ",\n       ".join(
-        f"CAST(SUM(CAST(FLOOR(r[{i + off}] * {_FP_SCALE}) AS BIGINT))"
-        f" AS DOUBLE) / (COUNT(*) * {_FP_SCALE})"
-        for i in range(_PQ_SUBDIM)
-    )
-    return (
-        f"SELECT m, code, {arr_open}{elems}{arr_close} AS cemb"
-        f" FROM {assigned} GROUP BY m, code"
-    )
+    return _fp_means(dialect, assigned, "m, code", "r", _PQ_SUBDIM, "cemb")
 
 
 def _tcb_literal_sql(rows) -> str:
@@ -3743,76 +3446,37 @@ def _ivf_pq_trained_body(
     (FAISS's index factory works the same way) — re-training at a new
     m is an index build, exercised through the raw/untrained lanes'
     pq_m dial which shares these generators."""
-    off = 0 if dialect == "spark" else 1
-    qr_elems = ", ".join(
-        f"(qemb[m * {_PQ_SUBDIM} + {i + off}]"
-        f" - ctr[m * {_PQ_SUBDIM} + {i + off}])"
-        for i in range(_PQ_SUBDIM)
-    )
-    probe = _probe_cte(
-        dialect, af, cv if dialect == "duck" else None, nprobe,
-        probe_sql, name="tqp",
-    )
-    if dialect == "spark":
-        qr = f"""SELECT query_id, cid, m, array({qr_elems}) AS r FROM (
-    SELECT q.vec_id AS query_id, q.emb AS qemb, c.emb AS ctr, p.cid,
-           explode(sequence(0, {PQ_M - 1})) AS m
-    FROM {af} q JOIN tqp p ON q.vec_id = p.query_id
-    JOIN {cv} c ON p.cid = c.cid
-    WHERE q.vec_id < {N_QUERIES})"""
-    else:
-        qr = f"""SELECT a.query_id, a.cid, s.m, [{qr_elems}] AS r FROM
-    (SELECT q.vec_id AS query_id, q.emb AS qemb, c.emb AS ctr, p.cid
-     FROM {af} q JOIN tqp p ON q.vec_id = p.query_id
-     JOIN {cv} c ON p.cid = c.cid
-     WHERE q.vec_id < {N_QUERIES}) a,
-    unnest(generate_series(0, {PQ_M - 1})) AS s(m)"""
-    ldist = _r8_dist(dialect, "q.r", "cb.cemb")
-    pivots = ",\n         ".join(
-        f"MAX(CASE WHEN co.m = {i} THEN l.d END) AS s{i}"
-        for i in range(PQ_M)
-    )
-    hint_q = "/*+ BROADCAST(q) */ " if dialect == "spark" else ""
-    hint_l = "/*+ BROADCAST(ca, l) */ " if dialect == "spark" else ""
-    int_t = "INT" if dialect == "spark" else "INTEGER"
     tcodes = (
         f"SELECT vec_id, m, code FROM {codes_src}"
         if codes_src
         else f"SELECT vec_id, m, code"
         f" FROM ({_tcb_assign_sql(dialect, rsub, cb)}) asg"
     )
-    return f"""tcodes AS (
-  {tcodes}
-),
-{probe},
-tqr AS ({qr}),
-tlut AS (
-  SELECT q.query_id, q.cid, q.m, cb.code, ({ldist}) AS d
-  FROM tqr q JOIN {cb} cb ON q.m = cb.m
-),
-tcand AS (
-  SELECT {hint_q}q.query_id, q.cid, c.vec_id
-  FROM tqp q JOIN {af} c
-    ON q.cid = c.cid AND c.cellrn <= {IVF_CELL_CAP}
-   AND c.vec_id <> q.query_id
-),
-tadc AS (
-  SELECT {hint_l}ca.query_id, ca.vec_id,
-         {pivots}
-  FROM tcand ca
-  JOIN tcodes co ON co.vec_id = ca.vec_id
-  JOIN tlut l ON l.query_id = ca.query_id AND l.cid = ca.cid
-            AND l.m = co.m AND l.code = co.code
-  GROUP BY ca.query_id, ca.vec_id
-),
-{out} AS (
-  SELECT query_id, CAST(rank AS {int_t}) AS rank, vec_id AS neighbor_id
-  FROM (
-    SELECT query_id, vec_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                ORDER BY ({_pq_adc_tree()}) ASC, vec_id) AS rank
-    FROM tadc
-  ) t WHERE rank <= {TOP_K}
+    probe = _probe_cte(
+        dialect, af, cv if dialect == "duck" else None, nprobe,
+        probe_sql, name="tqp",
+    )
+    lut = _trained_lut(
+        dialect, cb, "t",
+        "q.vec_id AS query_id, q.emb AS qemb, c.emb AS ctr, p.cid",
+        f"FROM {af} q JOIN tqp p ON q.vec_id = p.query_id\n"
+        f"  JOIN {cv} c ON p.cid = c.cid\n"
+        f"  WHERE q.vec_id < {N_QUERIES}",
+    )
+    return f"tcodes AS (\n  {tcodes}\n),\n" + _adc_body(
+        dialect, af, "tcodes", lut, probe, cid=True, pfx="t", out=out
+    )
+
+
+def _trained_lut(dialect: str, cb: str, pfx: str, cols: str, frm: str) -> str:
+    """{pfx}qr + {pfx}lut: the trained-codebook LUT over the query
+    residual subvectors of ``SELECT cols frm`` (per probed cell)."""
+    qr = _res_sub_sql(dialect, "query_id, cid", "qemb", cols, frm)
+    d = _r8_dist(dialect, "q.r", "cb.cemb")
+    return f"""{pfx}qr AS ({qr}),
+{pfx}lut AS (
+  SELECT q.query_id, q.cid, q.m, cb.code, ({d}) AS d
+  FROM {pfx}qr q JOIN {cb} cb ON q.m = cb.m
 )"""
 
 
@@ -3824,13 +3488,10 @@ def ann_ivf_pq_trained(
     ``nprobe`` is the query-time recall dial (per-cell query
     residuals); the codebook's subspace count is fixed at train time
     (see _ivf_pq_trained_body)."""
-    if nprobe < 1 or nprobe > KMEANS_K:
-        raise ValueError(f"nprobe must be in [1, {KMEANS_K}]")
+    _check_nprobe(nprobe)
     af, cv = _kmeans_index(spark, sf_dir)
     rsub, cb, codes = _trained_rcb(spark, sf_dir)
-    probe_sql = (
-        _spark_probe_sql(spark, sf_dir, af, nprobe) if nprobe > 1 else None
-    )
+    probe_sql = _spark_probe_sql(spark, sf_dir, af, nprobe)
     return spark.sql(
         "WITH "
         + _ivf_pq_trained_body(
@@ -3888,41 +3549,21 @@ def _pq_curve_scored_sql(
     the probed searches never score them).  ``qp`` must yield
     (query_id, qemb, cid, cellrank) covering ALL {KMEANS_K} cells.
     Emitted as a FLAT CTE chain ending in the ``pqscored`` relation
-    (duckdb 1.0 binder: no nested WITH around windows + unnest)."""
-    off = 0 if dialect == "spark" else 1
-    enum = (
-        f"explode(sequence(0, {PQ_M - 1}))"
-        if dialect == "spark"
-        else f"unnest(generate_series(0, {PQ_M - 1}))"
+    (duckdb 1.0 binder: no nested WITH around windows + unnest).
+    The LUT and the ADC aggregate are the trained search's
+    (_trained_lut, _adc_agg), over every capped pair instead of the
+    probed cells' candidates."""
+    lut = _trained_lut(
+        dialect, cb, "p", "p.query_id, p.qemb, c.emb AS ctr, p.cid",
+        f"FROM pcqp p JOIN {cv} c ON p.cid = c.cid",
     )
-    qr_elems = ", ".join(
-        f"(qemb[m * {_PQ_SUBDIM} + {i + off}]"
-        f" - ctr[m * {_PQ_SUBDIM} + {i + off}])"
-        for i in range(_PQ_SUBDIM)
-    )
-    if dialect == "spark":
-        pqr = f"""SELECT query_id, cid, m, array({qr_elems}) AS r FROM (
-    SELECT p.query_id, p.qemb, c.emb AS ctr, p.cid,
-           explode(sequence(0, {PQ_M - 1})) AS m
-    FROM pcqp p JOIN {cv} c ON p.cid = c.cid)"""
-    else:
-        pqr = f"""SELECT a.query_id, a.cid, s.m, [{qr_elems}] AS r FROM
-    (SELECT p.query_id, p.qemb, c.emb AS ctr, p.cid
-     FROM pcqp p JOIN {cv} c ON p.cid = c.cid) a,
-    unnest(generate_series(0, {PQ_M - 1})) AS s(m)"""
-    ldist = _r8_dist(dialect, "q.r", "cb.cemb")
     exd = _pq_full_l2(dialect, "p.qemb", "c.emb")
-    pivots = ",\n         ".join(
-        f"MAX(CASE WHEN co.m = {i} THEN l.d END) AS s{i}"
-        for i in range(PQ_M)
+    agg = _adc_agg(
+        dialect, "(SELECT * FROM pqpairs WHERE capped)", tcodes, "plut",
+        PQ_M, True, "l",
     )
-    hint_l = "/*+ BROADCAST(l) */ " if dialect == "spark" else ""
     return f"""pcqp AS ({qp}),
-pqr AS ({pqr}),
-plut AS (
-  SELECT q.query_id, q.cid, q.m, cb.code, ({ldist}) AS d
-  FROM pqr q JOIN {cb} cb ON q.m = cb.m
-),
+{lut},
 pqpairs AS (
   SELECT p.query_id, c.vec_id, p.cid, p.cellrank,
          c.cellrn <= {IVF_CELL_CAP} AS capped, ({exd}) AS exd
@@ -3931,14 +3572,7 @@ pqpairs AS (
 ),
 pqadc AS (
   SELECT query_id, vec_id, ({_pq_adc_tree()}) AS adcd
-  FROM (
-    SELECT {hint_l}pa.query_id, pa.vec_id,
-           {pivots}
-    FROM (SELECT * FROM pqpairs WHERE capped) pa
-    JOIN {tcodes} co ON co.vec_id = pa.vec_id
-    JOIN plut l ON l.query_id = pa.query_id AND l.cid = pa.cid
-               AND l.m = co.m AND l.code = co.code
-    GROUP BY pa.query_id, pa.vec_id
+  FROM ({agg}
   ) px
 ),
 pqscored AS (
@@ -3952,12 +3586,11 @@ def _pq_curve_blocks(dialect: str, scored: str) -> str:
     """Brute exact-L2 baseline + per-nprobe trained-ADC recall blocks
     over the shared scored relation (ADC ranks ascending — it is a
     distance, unlike the cosine curve's score)."""
-    np_cast = "INT" if dialect == "spark" else "INTEGER"
     hint_h = "/*+ BROADCAST(h) */ " if dialect == "spark" else ""
     blocks = []
     for np in PROBE_GRID:
         blocks.append(f"""
-  SELECT {hint_h}CAST({np} AS {np_cast}) AS nprobe, b.query_id,
+  SELECT {hint_h}CAST({np} AS {_int_t(dialect)}) AS nprobe, b.query_id,
          COUNT(*) AS n_exact, COUNT(h.hit) AS n_hits,
          CAST(COUNT(h.hit) AS DOUBLE) / COUNT(*) AS recall
   FROM pqbrute b LEFT JOIN (
@@ -3991,16 +3624,11 @@ def _pq_curve_stored(
     every probe depth."""
     af, cv = _kmeans_index(spark, sf_dir)
     _rsub, cb, codes = _trained_rcb(spark, sf_dir)
-    sa = _probe_sorted_expr(_kmeans_centroids(spark, sf_dir), "emb")
-    qp = f"""
-      SELECT vec_id AS query_id, emb AS qemb, pcid AS cid,
-             idx + 1 AS cellrank
-      FROM (
-        SELECT vec_id, emb, {sa} AS __sa
-        FROM {af} WHERE vec_id < {N_QUERIES}
-      ) t LATERAL VIEW posexplode(transform(__sa, s -> s.c))
-        p AS idx, pcid
-    """
+    qp = _probed_cells(
+        spark, sf_dir, af,
+        "vec_id AS query_id, emb AS qemb, pcid AS cid, idx + 1 AS cellrank",
+        "vec_id, emb",
+    )
     sc = spark.sql(
         "WITH "
         + _pq_curve_scored_sql("spark", af, cv, cb, codes, qp)
@@ -4041,13 +3669,11 @@ def ann_pq_nprobe_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_nprobe_curve_oracle() -> str:
-    qdot = _unrolled_dot("a.emb", "c.emb", "duck")
     cvn = f"c{KMEANS_ITERS}"
     qp = f"""
   SELECT query_id, qemb, cid, cellrank FROM (
     SELECT a.vec_id AS query_id, a.emb AS qemb, c.cid,
-           ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                ORDER BY (c.cc - (2 * ({qdot}))) ASC, c.cid) AS cellrank
+           {_cell_rank('duck')} AS cellrank
     FROM (SELECT * FROM afm WHERE vec_id < {N_QUERIES}) a
     CROSS JOIN cvm c
   ) t"""
@@ -4097,12 +3723,7 @@ def _pq_m_curve_block(dialect: str, v: str, pq_m: int) -> str:
     subspace distortions (codes' argmin distance IS the subspace
     distortion — no second lookup needed)."""
     dist = _pq_dist(dialect, "s.emb", "cb.cemb", "s.m", pq_m)
-    enum = (
-        f"explode(sequence(0, {pq_m - 1}))"
-        if dialect == "spark"
-        else f"unnest(generate_series(0, {pq_m - 1}))"
-    )
-    int_t = "INT" if dialect == "spark" else "INTEGER"
+    enum, int_t = _enum(pq_m, dialect), _int_t(dialect)
     return f"""
   SELECT CAST({pq_m} AS {int_t}) AS pq_m,
          CAST({pq_m * _PQ_CODE_BITS} AS {int_t}) AS bits_per_vec,
@@ -4189,19 +3810,16 @@ cvm AS MATERIALIZED (SELECT * FROM c{KMEANS_ITERS}),
 MRL_DIM = 16  # Matryoshka prefix length
 
 
-def _prefix_dot(a: str, b: str, dialect: str, dim: int = MRL_DIM) -> str:
-    """Balanced unrolled dot over the first ``dim`` components — the
-    Matryoshka-truncated score (same tree discipline as _unrolled_dot,
-    so it is bit-deterministic across engines)."""
-    off = 0 if dialect == "spark" else 1
-    terms = [f"({a}[{i + off}] * {b}[{i + off}])" for i in range(dim)]
-    while len(terms) > 1:
-        terms = [
-            f"({terms[i]} + {terms[i + 1]})"
-            if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    return terms[0]
+def _prefix_cosine(a: str, b: str, dialect: str) -> str:
+    """Matryoshka prefix cosine of rows ``a``/``b``: the balanced dot
+    over the first MRL_DIM components over the prefix norms (sqrt is
+    IEEE-correctly-rounded on both engines, so ranks are
+    engine-identical)."""
+
+    def dot(x: str, y: str) -> str:
+        return _unrolled_dot(f"{x}.emb", f"{y}.emb", dialect, MRL_DIM)
+
+    return f"({dot(a, b)}) / (sqrt({dot(a, a)}) * sqrt({dot(b, b)}))"
 
 
 def ann_mrl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4210,30 +3828,16 @@ def ann_mrl_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps.  This is the evaluation behind MRL-style embedding
     deployments: score candidates on a short prefix (4x less I/O and
     compute per pair at 100 TB), then decide whether a full-dim rerank
-    is needed.  Prefix cosine = prefix dot / prefix norms; sqrt is
-    IEEE-correctly-rounded on both engines, so ranks are
-    engine-identical."""
-    pd_ = _prefix_dot("q.emb", "c.emb", "spark")
-    pq_ = _prefix_dot("q.emb", "q.emb", "spark")
-    pc_ = _prefix_dot("c.emb", "c.emb", "spark")
+    is needed."""
 
     def prefix_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-        v = _normed(spark, sf_dir)
         return spark.sql(
-            f"""
-            WITH scored AS (
-              SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-                     ({pd_}) / (sqrt({pq_}) * sqrt({pc_})) AS score
-              FROM (SELECT * FROM {v} WHERE vec_id < {N_QUERIES}) q
-              JOIN {v} c ON q.vec_id <> c.vec_id
+            "WITH "
+            + _topk_sql(
+                _normed(spark, sf_dir),
+                "q.vec_id <> c.vec_id",
+                score=_prefix_cosine("q", "c", "spark"),
             )
-            SELECT query_id, neighbor_id FROM (
-              SELECT query_id, neighbor_id,
-                     ROW_NUMBER() OVER (PARTITION BY query_id
-                          ORDER BY score DESC, neighbor_id) AS rank
-              FROM scored
-            ) t WHERE rank <= {TOP_K}
-            """
         )
 
     return _recall_vs_bruteforce(spark, sf_dir, prefix_search)
@@ -4259,17 +3863,12 @@ def _mrl_rerank_body(dialect: str, v: str, c_short: int) -> str:
     # both eval sides are N_QUERIES * TOP_K rows; the stats-less stored
     # scan otherwise falls back to sort-merge (guide §3.1)
     hint_t = "/*+ BROADCAST(t, p) */ " if dialect == "spark" else ""
-    cosf = (_spark_cosine if dialect == "spark" else _duck_cosine)(
-        "q.emb", "c.emb", "q.nrm", "c.nrm"
-    )
-    pd_ = _prefix_dot("q.emb", "c.emb", dialect)
-    pq_ = _prefix_dot("q.emb", "q.emb", dialect)
-    pc_ = _prefix_dot("c.emb", "c.emb", dialect)
+    cosf = _cosine("q", "c", dialect)
     return f"""qv AS (SELECT * FROM {v} WHERE vec_id < {N_QUERIES}),
 pscored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
          ROW_NUMBER() OVER (PARTITION BY q.vec_id
-              ORDER BY ({pd_}) / (sqrt({pq_}) * sqrt({pc_})) DESC,
+              ORDER BY {_prefix_cosine("q", "c", dialect)} DESC,
                        c.vec_id) AS prank
   FROM qv q JOIN {v} c ON q.vec_id <> c.vec_id
 ),
@@ -4327,48 +3926,13 @@ WITH {_duck_v_cte()},
 
 
 def _mrl_recall_oracle() -> str:
-    cos = _duck_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
-    pd_ = _prefix_dot("q.emb", "c.emb", "duck")
-    pq_ = _prefix_dot("q.emb", "q.emb", "duck")
-    pc_ = _prefix_dot("c.emb", "c.emb", "duck")
-    return f"""
-WITH {_duck_v_cte()},
-bscored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {cos} AS score
-  FROM (SELECT * FROM v WHERE vec_id < {N_QUERIES}) q
-  JOIN v c ON q.vec_id <> c.vec_id
-),
-brute AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                ORDER BY score DESC, neighbor_id) AS rank
-    FROM bscored
-  ) t WHERE rank <= {TOP_K}
-),
-mscored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         ({pd_}) / (sqrt({pq_}) * sqrt({pc_})) AS score
-  FROM (SELECT * FROM v WHERE vec_id < {N_QUERIES}) q
-  JOIN v c ON q.vec_id <> c.vec_id
-),
-mrl AS (
-  SELECT query_id, neighbor_id, 1 AS hit FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                ORDER BY score DESC, neighbor_id) AS rank
-    FROM mscored
-  ) t WHERE rank <= {TOP_K}
-)
-SELECT b.query_id,
-       COUNT(*) AS n_exact,
-       COUNT(m.hit) AS n_hits,
-       CAST(COUNT(m.hit) AS DOUBLE) / COUNT(*) AS recall
-FROM brute b
-LEFT JOIN mrl m
-  ON b.query_id = m.query_id AND b.neighbor_id = m.neighbor_id
-GROUP BY b.query_id
-"""
+    return _recall_oracle(
+        "WITH "
+        + _topk_sql(
+            "v", "q.vec_id <> c.vec_id", dialect="duck",
+            score=_prefix_cosine("q", "c", "duck"),
+        )
+    )
 
 
 def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4380,35 +3944,10 @@ def ann_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _pq_recall_oracle() -> str:
-    cos = _duck_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
-    return f"""
-WITH {_duck_v_cte()},
-{_pq_codes_ctes('duck', 'v')},
-bscored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {cos} AS score
-  FROM (SELECT * FROM v WHERE vec_id < {N_QUERIES}) q
-  JOIN v c ON q.vec_id <> c.vec_id
-),
-brute AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                ORDER BY score DESC, neighbor_id) AS rank
-    FROM bscored
-  ) t WHERE rank <= {TOP_K}
-),
-pq AS (
-  WITH {_pq_search_body('duck').format(v='v')}
-)
-SELECT b.query_id,
-       COUNT(*) AS n_exact,
-       COUNT(p.hit) AS n_hits,
-       CAST(COUNT(p.hit) AS DOUBLE) / COUNT(*) AS recall
-FROM brute b
-LEFT JOIN (SELECT query_id, neighbor_id, 1 AS hit FROM pq) p
-  ON b.query_id = p.query_id AND b.neighbor_id = p.neighbor_id
-GROUP BY b.query_id
-"""
+    return _recall_oracle(
+        f"\n  WITH {_pq_flat_sql('duck', 'v')}\n",
+        f"\n{_pq_codes_ctes('duck', 'v')},",
+    )
 
 
 def ann_sq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4420,46 +3959,10 @@ def ann_sq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sq_recall_oracle() -> str:
-    cos = _duck_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
-    max_abs, arr, scale = _sq_exprs("emb", "duck")
-    dot = _sq_dot("q.code", "c.code", "duck")
-    return f"""
-WITH {_duck_v_cte()},
-bscored AS (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id, {cos} AS score
-  FROM (SELECT * FROM v WHERE vec_id < {N_QUERIES}) q
-  JOIN v c ON q.vec_id <> c.vec_id
-),
-brute AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT query_id, neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY query_id
-                ORDER BY score DESC, neighbor_id) AS rank
-    FROM bscored
-  ) t WHERE rank <= {TOP_K}
-),
-sqc AS MATERIALIZED (
-  SELECT vec_id, {arr} AS code, {scale} AS scale_q
-  FROM (SELECT vec_id, emb, {max_abs} AS __m FROM v)
-),
-sq AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (PARTITION BY q.vec_id
-                ORDER BY c.scale_q * ({dot}) DESC, c.vec_id) AS rank
-    FROM (SELECT * FROM sqc WHERE vec_id < {N_QUERIES}) q
-    JOIN sqc c ON q.vec_id <> c.vec_id
-  ) t WHERE rank <= {TOP_K}
-)
-SELECT b.query_id,
-       COUNT(*) AS n_exact,
-       COUNT(p.hit) AS n_hits,
-       CAST(COUNT(p.hit) AS DOUBLE) / COUNT(*) AS recall
-FROM brute b
-LEFT JOIN (SELECT query_id, neighbor_id, 1 AS hit FROM sq) p
-  ON b.query_id = p.query_id AND b.neighbor_id = p.neighbor_id
-GROUP BY b.query_id
-"""
+    return _recall_oracle(
+        "WITH " + _sq_topk_sql("sqc", "duck"),
+        f"\nsqc AS MATERIALIZED ({_sq_codes_sql('duck', 'v')}),",
+    )
 
 
 # cosine * 1e6; >= flags contamination.  Production screens sit at
@@ -4513,23 +4016,19 @@ def ann_semantic_decontaminate(
     IEEE expression trees on both engines, full value-hash oracle (the
     DuckDB oracle re-derives the same probed semantics off the inlined
     Lloyd chain)."""
-    if nprobe < 1 or nprobe > KMEANS_K:
-        raise ValueError(f"nprobe must be in [1, {KMEANS_K}]")
+    _check_nprobe(nprobe)
     af = _kmeans_assignments(spark, sf_dir)
-    cent = _kmeans_centroids(spark, sf_dir)
-    sa = _probe_sorted_expr(cent, "emb")
-    picks = ", ".join(f"__sa[{j}].c" for j in range(nprobe))
-    cos = _spark_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
+    probed = _probed_cells(
+        spark, sf_dir, af, "vec_id, emb, nrm, pcid", "vec_id, emb, nrm",
+        nprobe, where="",
+    )
+    cos = _cosine("q", "c", "spark")
     read_table(spark, f"{sf_dir}/documents.parquet").createOrReplaceTempView(
         "documents"
     )
     return spark.sql(
         f"""
-        WITH probed AS (
-          SELECT vec_id, emb, nrm, pcid FROM (
-            SELECT vec_id, emb, nrm, {sa} AS __sa FROM {af}
-          ) t LATERAL VIEW explode(array({picks})) p AS pcid
-        ),
+        WITH probed AS ({probed}),
         scored AS (
           SELECT /*+ BROADCAST(q) */ c.vec_id, MAX({cos}) AS max_cos
           FROM probed c
@@ -4555,8 +4054,7 @@ def _semantic_decontaminate_oracle(
     nprobe: int = SEM_DECON_NPROBE,
     thresh_q: int = SEM_DECON_THRESH_Q,
 ) -> str:
-    qdot = _unrolled_dot("a.emb", "c.emb", "duck")
-    cos = _duck_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
+    cos = _cosine("q", "c", "duck")
     return f"""
 WITH {_duck_v_cte()},
 {_kmeans_ctes('v', 'duck')},
@@ -4564,8 +4062,7 @@ afm AS MATERIALIZED (SELECT * FROM af),
 probed AS (
   SELECT vec_id, emb, nrm, cid AS pcid FROM (
     SELECT a.vec_id, a.emb, a.nrm, c.cid,
-           ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                ORDER BY (c.cc - (2 * ({qdot}))) ASC, c.cid) AS rn
+           {_cell_rank('duck')} AS rn
     FROM afm a CROSS JOIN c{KMEANS_ITERS} c
   ) t WHERE rn <= {nprobe}
 ),
@@ -4591,20 +4088,20 @@ JOIN documents d ON d.doc_id = a.vec_id
 def ann_pq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ADC top-K per query over the STORED PQ code table."""
     v = _normed(spark, sf_dir)
-    view = _pq_codes_view(spark, sf_dir)
-    return spark.sql(
-        f"""
-        WITH {_pq_stored_prelude(v, view)},
-        {_pq_search_body('spark').format(v=v)}
-        """
-    )
+    prelude = _pq_stored_prelude(v, _pq_codes_view(spark, sf_dir))
+    return spark.sql(f"WITH {prelude},\n{_pq_flat_sql('spark', v)}")
+
+
+def _pq_flat_sql(dialect: str, v: str) -> str:
+    """Flat (all-corpus) raw-PQ ADC search over ``cb``/``codes``."""
+    return _adc_body(dialect, v, "codes", _query_lut(dialect, v), None)
 
 
 def _pq_search_oracle() -> str:
     return f"""
 WITH {_duck_v_cte()},
 {_pq_codes_ctes('duck', 'v')},
-{_pq_search_body('duck').format(v='v')}
+{_pq_flat_sql('duck', 'v')}
 """
 
 
@@ -4787,18 +4284,27 @@ def oracles() -> dict[str, str]:
         "train_contrastive_triplets": _triplet_oracle(),
         "embeddings_quantize": _quantize_oracle(),
         "embeddings_dim_stats": _DIM_STATS_ORACLE,
-        "ann_bruteforce": _bruteforce_oracle(),
+        "ann_bruteforce": _topk_oracle("q.vec_id <> c.vec_id"),
         "ann_sq_search": _sq_search_oracle(),
         "ann_sq_recall": _sq_recall_oracle(),
         "ann_semantic_decontaminate": _semantic_decontaminate_oracle(),
-        "ann_ivf_label": _ivf_oracle(),
-        "ann_ivf_kmeans": _ivf_kmeans_oracle(),
+        "ann_ivf_label": _topk_oracle(
+            "q.label = c.label AND q.vec_id <> c.vec_id"
+        ),
+        "ann_ivf_kmeans": _topk_oracle(
+            f"q.cid = c.cid AND c.cellrn <= {IVF_CELL_CAP}"
+            " AND q.vec_id <> c.vec_id",
+            f",\n{_kmeans_ctes('v', 'duck')}",
+            corpus="af",
+        ),
         "ann_ivf_probe2": _ivf_probe2_oracle(),
         "ann_ivf_probe3_k5": _ivf_probe3_k5_oracle(),
         "ann_nprobe_recall_curve": _nprobe_curve_oracle(),
         "ann_pq_nprobe_curve": _pq_nprobe_curve_oracle(),
         "ann_pq_m_curve": _pq_m_curve_oracle(),
-        "ann_lsh_hyperplane": _lsh_oracle(),
+        "ann_lsh_hyperplane": _topk_oracle(
+            "q.bucket = c.bucket AND q.vec_id <> c.vec_id"
+        ),
         "ann_rerank": _rerank_oracle(),
         "dedup_embedding": _dedup_embedding_oracle(),
         "dedup_semantic_cluster": _semantic_cluster_oracle(),

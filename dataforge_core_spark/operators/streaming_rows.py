@@ -1249,7 +1249,7 @@ def _incoming_emb_probe(
     from dataforge_core_spark.operators.similarity import (
         _kmeans_centroids,
         _probe_sorted_expr,
-        _spark_norm,
+        _norm,
     )
     from dataforge_core_spark.streaming import stream_embeddings
 
@@ -1264,7 +1264,7 @@ def _incoming_emb_probe(
         src
         .where(f"vec_id % {INCR_MOD} >= {INCR_NEW_GE}")
         .selectExpr("vec_id", "CAST(embedding AS array<double>) AS emb")
-        .selectExpr("vec_id", "emb", f"{_spark_norm('emb')} AS nrm")
+        .selectExpr("vec_id", "emb", f"{_norm('emb', 'spark')} AS nrm")
         .selectExpr("vec_id", "emb", "nrm", f"{sa} AS __sa")
         .selectExpr(
             "vec_id", "emb", "nrm", f"explode(array({picks})) AS pcid"
@@ -1303,7 +1303,7 @@ def stream_semantic_gate(
         SEM_DECON_NPROBE,
         SEM_DECON_THRESH_Q,
         _kmeans_assignments,
-        _spark_cosine,
+        _cosine,
     )
 
     np_ = SEM_DECON_NPROBE if nprobe is None else nprobe
@@ -1311,7 +1311,7 @@ def stream_semantic_gate(
     if np_ < 1 or np_ > KMEANS_K:
         raise ValueError(f"nprobe must be in [1, {KMEANS_K}]")
     af = _kmeans_assignments(spark, sf_dir)
-    cos = _spark_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
+    cos = _cosine("q", "c", "spark")
     new = _incoming_emb_probe(spark, sf_dir, np_, batch).alias("c")
     bench = spark.sql(
         f"SELECT vec_id, emb, nrm, cid FROM {af}"
@@ -1345,7 +1345,7 @@ def _semantic_gate_oracle(
         SEM_DECON_NO_CAND_Q,
         SEM_DECON_NPROBE,
         SEM_DECON_THRESH_Q,
-        _duck_cosine,
+        _cosine,
         _duck_v_cte,
         _kmeans_ctes,
         _unrolled_dot,
@@ -1354,7 +1354,7 @@ def _semantic_gate_oracle(
     np_ = SEM_DECON_NPROBE if nprobe is None else nprobe
     thr = SEM_DECON_THRESH_Q if thresh_q is None else thresh_q
     qdot = _unrolled_dot("a.emb", "c.emb", "duck")
-    cos = _duck_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
+    cos = _cosine("q", "c", "duck")
     return f"""
 WITH {_duck_v_cte()},
 {_kmeans_ctes('v', 'duck')},
@@ -1417,7 +1417,7 @@ def stream_ann_topk(
         IVF_CELL_CAP,
         TOP_K,
         _kmeans_assignments,
-        _spark_cosine,
+        _cosine,
     )
 
     np_ = 1 if nprobe is None else nprobe
@@ -1427,7 +1427,7 @@ def stream_ann_topk(
     if k < 1:
         raise ValueError("top_k must be >= 1")
     af = _kmeans_assignments(spark, sf_dir)
-    cos = _spark_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
+    cos = _cosine("q", "c", "spark")
     qs = _incoming_emb_probe(spark, sf_dir, np_, batch=False).alias("q")
     corpus = spark.sql(
         f"SELECT vec_id, emb, nrm, cid FROM {af}"
@@ -1470,7 +1470,7 @@ def _ann_topk_oracle(
         IVF_CELL_CAP,
         KMEANS_ITERS,
         TOP_K,
-        _duck_cosine,
+        _cosine,
         _duck_v_cte,
         _kmeans_ctes,
         _unrolled_dot,
@@ -1479,7 +1479,7 @@ def _ann_topk_oracle(
     np_ = 1 if nprobe is None else nprobe
     k = TOP_K if top_k is None else top_k
     qdot = _unrolled_dot("a.emb", "c.emb", "duck")
-    cos = _duck_cosine("q.emb", "c.emb", "q.nrm", "c.nrm")
+    cos = _cosine("q", "c", "duck")
     return f"""
 WITH {_duck_v_cte()},
 {_kmeans_ctes('v', 'duck')},

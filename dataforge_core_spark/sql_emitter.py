@@ -31,6 +31,7 @@ from dataforge_core_spark.model import (
     HIVE_TO_SPARK_DDL,
     Output,
     Project,
+    ProjectError,
     Source,
 )
 from dataforge_core_spark.paths import RelationGraph
@@ -242,15 +243,16 @@ class SqlEmitter:
         if keys is None:
             # the DataFrame compiler has a row-key fallback; the SQL
             # artifact keeps the decorrelated GROUP BY form only
-            raise RuntimeError(
+            raise ProjectError(
                 "SQL emission for non-equi aggregate relation "
                 f"{m_hop.relation.name!r} is not supported; use the "
                 "DataFrame runner for theta aggregates"
             )
         if any(spec.transits or spec.this_attrs for spec in join.aggs):
-            raise RuntimeError(
+            raise ProjectError(
                 "SQL emission for aggregates with transit/[This] "
-                "attributes is not supported; use the DataFrame runner"
+                f"attributes over relation {m_hop.relation.name!r} is not "
+                "supported; use the DataFrame runner"
             )
         group_sql = [render_tokens(dst) for _, dst in keys]
         key_sql = [f"{g} AS k{j}" for j, g in enumerate(group_sql)]

@@ -10,7 +10,7 @@ def pytest_collection_modifyitems(config, items):
     """Fast default profile (r15 verdict item 8: the 584-test suite no
     longer completed inside the round driver's pytest window, leaving
     tests_ok unverifiable).  Tests marked ``slow`` — the oracle pairs
-    outside tests/test_oracle.py's 24-pair DEFAULT_PAIRS subset and
+    outside tests/test_oracle.py's 27-pair DEFAULT_PAIRS subset and
     other multi-minute sweeps — are skipped unless
     SPARK_GRAFT_SLOW_TESTS=1."""
     if os.environ.get("SPARK_GRAFT_SLOW_TESTS"):

@@ -105,3 +105,25 @@ def test_literal_probe_top1_matches_stored_assignment(spark):
         f"SELECT COUNT(*) AS n FROM {af} WHERE ({sa})[0].c <> cid"
     ).collect()[0].n
     assert bad == 0
+
+
+def test_similarity_speaks_one_sql_vocabulary():
+    """similarity.py renders its SQL through one vocabulary: a single
+    balanced reducer (_tree), and the dialect spellings of row
+    enumeration and of the integer type only inside _enum / _int_t."""
+    import inspect
+
+    from dataforge_core_spark.operators import similarity as S
+
+    src = inspect.getsource(S)
+    assert src.count("while len(terms) > 1") == 1
+    assert "while len(terms) > 1" in inspect.getsource(S._tree)
+    rest = src
+    for helper in (S._enum, S._int_t):
+        rest = rest.replace(inspect.getsource(helper), "")
+    for spelling in (
+        "explode(sequence(0,",
+        "unnest(generate_series(0,",
+        '"INT" if dialect',
+    ):
+        assert spelling not in rest, spelling

@@ -140,6 +140,9 @@ DEFAULT_PAIRS = {
     "stream_afp_gate",
     "ann_lsh_hyperplane",
     "ann_sq_recall",
+    "ann_ivf_pq_residual",
+    "embeddings_abtt",
+    "ann_rerank",
     "events_sessionize",
     "nested_aggregate",
     "stream_topk",

@@ -59,12 +59,11 @@ def _base_sources(sf_dir):
     return part, li, orders, rels
 
 
-def test_third_source_transit_aggregate(spark, sf_dir):
+def _weighted_qty_project(sf_dir):
     """part aggregates lineitems weighted by the *order's* totalprice —
     the orders attribute transits into the aggregate via the
     cardinality-1 path lineitem -> orders."""
     from dataforge_core_spark.model import Project, Rule
-    from dataforge_core_spark.runner import ProjectRunner
 
     part, li, orders, rels = _base_sources(sf_dir)
     part.rules.append(
@@ -76,7 +75,14 @@ def test_third_source_transit_aggregate(spark, sf_dir):
             ),
         )
     )
-    project = Project(sources=[part, li, orders], relations=rels)
+    return Project(sources=[part, li, orders], relations=rels)
+
+
+def test_third_source_transit_aggregate(spark, sf_dir):
+    """See _weighted_qty_project: the DataFrame runner compiles it."""
+    from dataforge_core_spark.runner import ProjectRunner
+
+    project = _weighted_qty_project(sf_dir)
     hubs = ProjectRunner(spark, project, persist_hubs=False).build()
     got = {
         r["p_partkey"]: r["weighted_qty"]
@@ -103,6 +109,18 @@ def test_third_source_transit_aggregate(spark, sf_dir):
         assert (got[k] is None) == (expect[k] is None), k
         if got[k] is not None:
             assert got[k] == expect[k], k
+
+
+def test_transit_aggregate_sql_emission_is_a_project_error(sf_dir, tmp_path):
+    """run.sql cannot render a transit aggregate; the emitter says so
+    with the ProjectError every other unrenderable project raises,
+    naming the relation."""
+    from dataforge_core_spark.model import ProjectError
+    from dataforge_core_spark.sql_emitter import SqlEmitter
+
+    project = _weighted_qty_project(sf_dir)
+    with pytest.raises(ProjectError, match=r"transit/\[This\].*pk"):
+        SqlEmitter(project).emit_all(str(tmp_path))
 
 
 def test_this_transit_aggregate(spark, sf_dir):
