@@ -246,7 +246,7 @@ def _run_index_builds(spark) -> tuple[dict[str, float], float]:
 
 
 def main() -> None:
-    from dataforge_core_spark.session import get_spark
+    from dataforge_core_spark.session import _host_defaults, get_spark
 
     import __spark_entry__ as entry
 
@@ -254,7 +254,7 @@ def main() -> None:
 
     # Provenance: a session that existed BEFORE bench ran was
     # configured by the caller, not by get_spark — its JVM heap /
-    # parallelism may differ from the 16g/local[32] bench baseline,
+    # parallelism may differ from get_spark's host defaults,
     # and that difference belongs in the stamp (r12: driver-stamp
     # inflation with no local repro).
     preexisting_session = _SS.getActiveSession() is not None
@@ -387,7 +387,7 @@ def main() -> None:
         # 8-core rerun overwrote the 32-core detail stamp; the count in
         # the payload + the _c{cpus} stamped copy below keep every
         # config's record distinguishable and durable)
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
+        "cpus": int(_host_defaults()[0]),
         "host_speed_s": host_speed,
         # Provenance (r12 judge: the stamp NAME alone is ambiguous —
         # the round driver writes CORRECTNESS_r{N} BEFORE its bench, so

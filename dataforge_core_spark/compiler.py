@@ -5,11 +5,12 @@ Replaces the reference's SQL generator
 direct DataFrame composition:
 
 - CTE levels        -> batches of ``withColumns`` (Catalyst collapses them)
-- LEFT JOIN hub     -> ``df.join(chain, F.expr(pred), "left")`` where the
-                       chain is the multi-hop lookup path with every hub's
-                       columns prefixed (collision-free); Catalyst prunes
-                       unused columns through the renames and picks
-                       broadcast vs. sort-merge per hub size
+- LEFT JOIN hub     -> one flat ``df.join(hub, F.expr(pred), "left")`` per
+                       relation-path prefix (hop), the hub's columns
+                       prefixed ``__<pathid>__`` (collision-free, and the
+                       planner's transit names); Catalyst prunes unused
+                       columns through the renames and picks broadcast
+                       vs. sort-merge per hub size
 - LEFT JOIN LATERAL -> decorrelated ``groupBy(keys).agg(...)`` + left join
                        (the scalable rewrite the reference's own dead code
                        documents — u_enr_query_generate_distinct_many_join
@@ -26,8 +27,8 @@ direct DataFrame composition:
 Scale notes (100 TB design): every construct here is a declarative
 DataFrame op — no UDFs, no driver-side row handling — so whole-stage
 codegen, AQE (skew joins, dynamic coalescing), broadcast selection and
-partial aggregation all apply.  Lookup paths are deduplicated at compile
-time (one shuffle per path, not per referencing rule), and aggregate paths
+partial aggregation all apply.  Path prefixes are deduplicated at compile
+time (one join per hop, not per referencing rule or path), and aggregate paths
 pre-aggregate on the foreign key *before* the join (map-side partials, and
 the joined side is keys+aggregates only — usually broadcastable).
 """
@@ -46,8 +47,7 @@ from dataforge_core_spark.model import (
     ProjectError,
     Source,
 )
-from dataforge_core_spark.parser import parse_relation_expression
-from dataforge_core_spark.paths import Hop, RelationGraph
+from dataforge_core_spark.paths import Hop, Path, RelationGraph
 from dataforge_core_spark.plans.outputs import plan_output
 from dataforge_core_spark.plans.planner import (
     EMPTY_ARRAY,
@@ -430,17 +430,9 @@ class SourceCompiler:
                 if pid not in needed_joins:
                     applied.add(pid)
 
-        def ready_joins() -> list[JoinElement]:
-            return [
-                j
-                for pid, j in plan.joins.items()
-                if pid not in applied and j.deps <= computed
-            ]
-
         def apply_ready(df: DataFrame) -> DataFrame:
-            for join in ready_joins():
-                df = self._apply_join(df, join, source, hubs)
-                applied.add(join.pathid)
+            for join in plan.take_ready(applied, computed):
+                df = self._apply_join(df, join, hubs)
             return df
 
         df = apply_ready(df)
@@ -526,176 +518,125 @@ class SourceCompiler:
         self,
         df: DataFrame,
         join: JoinElement,
-        source: Source,
         hubs: dict[str, DataFrame],
     ) -> DataFrame:
         if join.kind == "lookup":
-            return self._apply_lookup(df, join, source, hubs)
-        return self._apply_aggregate(df, join, source, hubs)
+            return self._apply_lookup(df, join, hubs)
+        return self._apply_aggregate(df, join, hubs)
 
-    def _chain(
+    def _join_hop(
         self,
-        join: JoinElement,
-        hubs: dict[str, DataFrame],
-        df_self: DataFrame,
-        upto: int,
-    ) -> tuple[DataFrame, list[tuple[str, DataFrame]]]:
-        """LEFT-JOINed chain of hub h0..h{upto}, columns prefixed per
-        hop, and the (hub name, frame) pairs it reads."""
-        hops = join.path.hops
-        pid = join.pathid
-
-        def hub_df(hop_dst: str) -> DataFrame:
-            if join.is_self and hop_dst == join.path.hops[0].relation.left:
-                return df_self
-            return self._hub(hop_dst, hubs)
-
-        pref = lambda i: f"__{pid}_h{i}__"  # noqa: E731
-        reads = [(hop.dst, hub_df(hop.dst)) for hop in hops[: upto + 1]]
-        chain = _prefix_all(reads[0][1], pref(0))
-        for i in range(1, upto + 1):
-            hop = hops[i]
-            nxt = self._broadcast_if_small(
-                _prefix_all(reads[i][1], pref(i)), [reads[i]]
-            )
-            # hop.src side carries pref(i-1); hop.dst side pref(i)
-            this_pref = pref(i - 1) if hop.forward else pref(i)
-            rel_pref = pref(i) if hop.forward else pref(i - 1)
-            cond = self._relation_cond(hop, this_pref, rel_pref)
-            chain = chain.join(nxt, F.expr(cond), "left")
-        return chain, reads
+        df: DataFrame,
+        hop: Hop,
+        src_prefix: str,
+        dst_prefix: str,
+        hub: tuple[str, DataFrame],
+    ) -> DataFrame:
+        """``df`` LEFT JOIN the ``(name, frame)`` hub, its columns
+        prefixed ``dst_prefix``, on the hop's predicate; the hop's
+        source side is ``df``'s ``src_prefix``-ed columns."""
+        side = self._broadcast_if_small(_prefix_all(hub[1], dst_prefix), [hub])
+        cond = self._relation_cond(hop, src_prefix, dst_prefix)
+        return df.join(side, F.expr(cond), "left")
 
     def _relation_cond(
-        self, hop: Hop, this_prefix: str, related_prefix: str
+        self, hop: Hop, src_prefix: str, dst_prefix: str
     ) -> str:
-        """The hop's predicate over prefixed columns: ``this_prefix`` on
-        the relation's [This] side, ``related_prefix`` on [Related]."""
-        pref = {"This": this_prefix, "Related": related_prefix}
+        """The hop's predicate over prefixed columns: ``src_prefix`` on
+        the hop's source side, ``dst_prefix`` on its destination side."""
         return render_relation(
-            hop, lambda side, a: f"`{pref[side]}{a}`", self._by_name[hop.dst]
+            hop,
+            lambda a: f"`{src_prefix}{a}`",
+            lambda a: f"`{dst_prefix}{a}`",
+            self._by_name[hop.dst],
         )
 
-    def _first_hop_cond(
-        self, join: JoinElement, source: Source, related_prefix: str
-    ) -> str:
-        hop = join.path.hops[0]
-        if hop.forward:
-            return self._relation_cond(hop, "", related_prefix)
-        return self._relation_cond(hop, related_prefix, "")
+    @staticmethod
+    def _src_prefix(join: JoinElement) -> str:
+        """Prefix of the columns a hop joins from: its parent's hub
+        columns, or the in-flight source's bare columns for a first hop."""
+        return f"__{join.parent}__" if join.parent else ""
 
     def _apply_lookup(
         self,
         df: DataFrame,
         join: JoinElement,
-        source: Source,
         hubs: dict[str, DataFrame],
     ) -> DataFrame:
-        hops = join.path.hops
-        pid = join.pathid
-        last = len(hops) - 1
-        chain, reads = self._chain(join, hubs, df, last)
-        # project: first-hop related-side cols (for the outer predicate)
-        # + needed target attrs under their final names
-        keep = [
-            F.col(f"__{pid}_h{last}__{attr}").alias(out)
-            for attr, out in join.needed.items()
-        ]
-        first_cols = self._hop_side_cols(hops[0], related=True)
-        rules0 = self._by_name[hops[0].dst].rule_by_name()
-        guard_cols = [
-            f"{a}_uv_flag"
-            for a in first_cols
-            if a in rules0 and rules0[a].unique
-        ]
-        keep += [
-            F.col(f"__{pid}_h0__{a}")
-            for a in sorted(set(first_cols) | set(guard_cols))
-        ]
-        chain = self._broadcast_if_small(chain.select(*keep), reads)
-        cond = self._first_hop_cond(join, source, f"__{pid}_h0__")
-        out = df.join(chain, F.expr(cond), "left")
-        # drop the join-key helper columns; keep only the needed outputs
-        return out.drop(
-            *[f"__{pid}_h0__{a}" for a in sorted(set(first_cols) | set(guard_cols))]
+        """One hop, flat: every hub column lands as ``__<pathid>__<attr>``,
+        the name rule SQL and child hops read; the final select drops
+        them."""
+        hop = join.hop
+        hub = df if join.is_self else self._hub(hop.dst, hubs)
+        return self._join_hop(
+            df, hop, self._src_prefix(join), f"__{join.pathid}__",
+            (hop.dst, hub),
         )
-
-    def _hop_side_cols(self, hop: Hop, related: bool) -> list[str]:
-        """Attribute names on the hop's dst (related=True) or src side."""
-        parsed = parse_relation_expression(hop.relation.expression)
-        want_this = (not related) == hop.forward
-        return [
-            t.attr
-            for t in parsed.tokens
-            if (t.source == "This") == want_this
-        ]
 
     def _agg_target_side(
         self,
         join: JoinElement,
         hubs: dict[str, DataFrame],
-        df_self: DataFrame | None = None,
+        df_self: DataFrame,
     ) -> tuple[DataFrame, list[tuple[str, DataFrame]]]:
         """The aggregation input: the M-target hub with all transit
         sources pre-joined (SURVEY §7.3 — transit attrs referenced inside
         the aggregate come from cardinality-1 paths *from the target*),
-        exposed under the planner's `__TR__<src>__<attr>` names, and the
-        (hub name, frame) pairs it reads.
+        one :meth:`_join_hop` per distinct transit-path prefix, exposed
+        under the planner's `__TR__<src>__<attr>` names, and the (hub
+        name, frame) pairs it reads.
 
         For self-relation aggregates the target is the in-flight frame
-        (mirroring :meth:`_chain`'s ``df_self`` handling) — the hub for
-        the source being built does not exist yet."""
-        m_hop = join.path.hops[-1]
-        if (
-            join.is_self
-            and df_self is not None
-            and m_hop.dst == join.path.hops[0].relation.left
-        ):
-            target = df_self
-        else:
-            target = self._hub(m_hop.dst, hubs)
-        target_src = self._by_name[m_hop.dst]
-        # collect needed transit attrs per source across all agg specs
-        needed: dict[str, dict[str, str]] = {}
-        paths = {}
+        ``df_self`` — the hub for the source being built does not exist
+        yet."""
+        m_hop = join.hop
+        target = df_self if join.is_self else self._hub(m_hop.dst, hubs)
+        reads = [(m_hop.dst, target)]
+        # transit source -> (path, attrs) across all agg specs
+        needed: dict[str, tuple[Path, set[str]]] = {}
         for spec in join.aggs:
             for s, tpath in spec.transits.items():
-                paths[s] = tpath
-                for m in re.finditer(
-                    rf"`__TR__{re.escape(s)}__([A-Za-z0-9_]+)`",
-                    spec.inner_sql,
-                ):
-                    needed.setdefault(s, {})[m.group(1)] = (
-                        f"__TR__{s}__{m.group(1)}"
+                needed.setdefault(s, (tpath, set()))[1].update(
+                    re.findall(
+                        rf"`__TR__{re.escape(s)}__([A-Za-z0-9_]+)`",
+                        spec.inner_sql,
                     )
-        reads = [(m_hop.dst, target)]
-        for s, attrs in needed.items():
-            tmp = JoinElement(
-                path=paths[s],
-                pathid=f"tr_{re.sub(r'[^A-Za-z0-9_]', '_', paths[s].id())}",
-                kind="lookup",
-                needed=attrs,
+                )
+        prefixes: dict[str, str] = {}  # transit-path prefix id -> prefix
+        for s, (tpath, attrs) in needed.items():
+            src_pref = ""
+            for n, hop in enumerate(tpath.hops, start=1):
+                key = Path(tpath.hops[:n]).id()
+                if key not in prefixes:
+                    prefixes[key] = f"__tr{len(prefixes)}__"
+                    hub = (hop.dst, self._hub(hop.dst, hubs))
+                    target = self._join_hop(
+                        target, hop, src_pref, prefixes[key], hub
+                    )
+                    reads.append(hub)
+                src_pref = prefixes[key]
+            target = target.withColumns(
+                {
+                    f"__TR__{s}__{a}": F.col(f"`{src_pref}{a}`")
+                    for a in sorted(attrs)
+                }
             )
-            target = self._apply_lookup(target, tmp, target_src, hubs)
-            reads += [(h.dst, self._hub(h.dst, hubs)) for h in paths[s].hops]
         return target, reads
 
     def _apply_aggregate(
         self,
         df: DataFrame,
         join: JoinElement,
-        source: Source,
         hubs: dict[str, DataFrame],
     ) -> DataFrame:
-        hops = join.path.hops
         pid = join.pathid
-        m_hop = hops[-1]
-        keys = equi_keys(m_hop)
+        keys = equi_keys(join.hop)
         if keys is None or join.needs_row_fallback:
             # arbitrary boolean M-hop predicate, or [This] values inside
             # the aggregate: the groupBy-on-foreign-key rewrite doesn't
             # apply; fall back to join + group on a synthetic row key
             # (exact LATERAL semantics, more shuffle)
-            return self._apply_aggregate_rowkey(df, join, source, hubs)
+            return self._apply_aggregate_rowkey(df, join, hubs)
         target, reads = self._agg_target_side(join, hubs, df_self=df)
         # group keys: the M-target side of each equi conjunct (dst side
         # of the hop) over the target's bare columns
@@ -709,38 +650,15 @@ class SourceCompiler:
         aggdf = self._broadcast_if_small(
             target.groupBy(*gb).agg(*aggs), reads
         )
-
-        if len(hops) == 1:
-            # join df directly on our-side exprs == group keys
-            cond = " AND ".join(
-                f"({render_tokens(src)}) = `__{pid}__k{j}`"
-                for j, (src, _) in enumerate(keys)
-            )
-            out = df.join(aggdf, F.expr(cond), "left")
-        else:
-            # chain h0..h{n-2} (all cardinality-1), then attach aggdf on the
-            # M hop, then join df on the first hop
-            upto = len(hops) - 2
-            chain, chain_reads = self._chain(join, hubs, df, upto)
-            src_pref = f"__{pid}_h{upto}__"
-            cond = " AND ".join(
-                f"({render_tokens(src, lambda a: f'`{src_pref}{a}`')}) "
-                f"= `__{pid}__k{j}`"
-                for j, (src, _) in enumerate(keys)
-            )
-            chain = chain.join(aggdf, F.expr(cond), "left")
-            first_cols = self._hop_side_cols(hops[0], related=True)
-            keep = [F.col(c) for c in aggdf.columns if c.startswith(f"__{pid}__a")]
-            keep += [F.col(f"__{pid}_h0__{a}") for a in sorted(set(first_cols))]
-            chain = self._broadcast_if_small(
-                chain.select(*keep), chain_reads + reads
-            )
-            outer = self._first_hop_cond(join, source, f"__{pid}_h0__")
-            out = df.join(chain, F.expr(outer), "left")
-            out = out.drop(
-                *[f"__{pid}_h0__{a}" for a in sorted(set(first_cols))]
-            )
-
+        # source-side exprs (the parent hop's columns past a first hop)
+        # == group keys
+        pref = self._src_prefix(join)
+        cond = " AND ".join(
+            f"({render_tokens(src, lambda a: f'`{pref}{a}`')}) "
+            f"= `__{pid}__k{j}`"
+            for j, (src, _) in enumerate(keys)
+        )
+        out = df.join(aggdf, F.expr(cond), "left")
         return self._agg_empty_fixes(out, join)
 
     def _agg_empty_fixes(self, out: DataFrame, join: JoinElement) -> DataFrame:
@@ -765,7 +683,6 @@ class SourceCompiler:
         self,
         df: DataFrame,
         join: JoinElement,
-        source: Source,
         hubs: dict[str, DataFrame],
     ) -> DataFrame:
         """Correlated aggregate via join + group on a synthetic row key.
@@ -785,14 +702,13 @@ class SourceCompiler:
         match LATERAL exactly: no-match rows feed NULL target columns,
         which count(col)/sum/min/max already skip.  Single-hop paths only.
         """
-        hops = join.path.hops
-        if len(hops) > 1:
+        m_hop = join.hop
+        if join.parent is not None:
             raise ProjectError(
                 f"Multi-hop aggregation over relation "
-                f"{hops[-1].relation.name!r} with theta predicates or "
+                f"{m_hop.relation.name!r} with theta predicates or "
                 "[This] transits is not supported"
             )
-        m_hop = hops[0]
         pid = join.pathid
         rid = f"__{pid}__rid"
         keyed = df.withColumn(
@@ -802,10 +718,7 @@ class SourceCompiler:
         target = self._broadcast_if_small(
             _prefix_all(target, f"__{pid}_t__"), reads
         )
-        this_pref, rel_pref = (
-            ("", f"__{pid}_t__") if m_hop.forward else (f"__{pid}_t__", "")
-        )
-        cond = self._relation_cond(m_hop, this_pref, rel_pref)
+        cond = self._relation_cond(m_hop, "", f"__{pid}_t__")
         joined = keyed.join(target, F.expr(cond), "left")
         aggs = []
         for spec in join.aggs:

@@ -1242,33 +1242,34 @@ def _incoming_emb_probe(
 ):
     """Shared prologue of the embedding-fed streaming lanes (semantic
     gate, ANN top-K serving): the incoming-split embeddings double-cast
-    + normed + sorted-centroid literal probe, exploded to one row per
-    (vec_id, probed cid).  ONE definition so the cast/norm/probe
-    expressions cannot diverge between lanes (r12 review fix)."""
+    + normed + similarity's sorted-centroid literal probe
+    (``_probed_cells``), exploded to one row per (vec_id, probed cid).
+    ONE definition so the cast/norm/probe expressions cannot diverge
+    between lanes (r12 review fix)."""
     from dataforge_core_spark.operators.dedup import INCR_MOD, INCR_NEW_GE
     from dataforge_core_spark.operators.similarity import (
-        _kmeans_centroids,
-        _probe_sorted_expr,
         _norm,
+        _probed_cells,
     )
     from dataforge_core_spark.streaming import stream_embeddings
 
-    sa = _probe_sorted_expr(_kmeans_centroids(spark, sf_dir), "emb")
-    picks = ", ".join(f"__sa[{j}].c" for j in range(nprobe))
     src = (
         read_table(spark, f"{sf_dir}/embeddings.parquet")
         if batch
         else stream_embeddings(spark, sf_dir)
     )
-    return (
+    normed = (
         src
         .where(f"vec_id % {INCR_MOD} >= {INCR_NEW_GE}")
         .selectExpr("vec_id", "CAST(embedding AS array<double>) AS emb")
         .selectExpr("vec_id", "emb", f"{_norm('emb', 'spark')} AS nrm")
-        .selectExpr("vec_id", "emb", "nrm", f"{sa} AS __sa")
-        .selectExpr(
-            "vec_id", "emb", "nrm", f"explode(array({picks})) AS pcid"
-        )
+    )
+    cols = "vec_id, emb, nrm"
+    return spark.sql(
+        _probed_cells(
+            spark, sf_dir, "{normed}", f"{cols}, pcid", cols, nprobe, where=""
+        ),
+        normed=normed,
     )
 
 
@@ -1297,19 +1298,18 @@ def stream_semantic_gate(
     their row with the SEM_DECON_NO_CAND_Q sentinel, exactly like the
     batch lane."""
     from dataforge_core_spark.operators.similarity import (
-        KMEANS_K,
         N_QUERIES,
         SEM_DECON_NO_CAND_Q,
         SEM_DECON_NPROBE,
         SEM_DECON_THRESH_Q,
+        _check_nprobe,
         _kmeans_assignments,
         _cosine,
     )
 
     np_ = SEM_DECON_NPROBE if nprobe is None else nprobe
     thr = SEM_DECON_THRESH_Q if thresh_q is None else thresh_q
-    if np_ < 1 or np_ > KMEANS_K:
-        raise ValueError(f"nprobe must be in [1, {KMEANS_K}]")
+    _check_nprobe(np_)
     af = _kmeans_assignments(spark, sf_dir)
     cos = _cosine("q", "c", "spark")
     new = _incoming_emb_probe(spark, sf_dir, np_, batch).alias("c")
@@ -1345,15 +1345,14 @@ def _semantic_gate_oracle(
         SEM_DECON_NO_CAND_Q,
         SEM_DECON_NPROBE,
         SEM_DECON_THRESH_Q,
+        _cell_rank,
         _cosine,
         _duck_v_cte,
         _kmeans_ctes,
-        _unrolled_dot,
     )
 
     np_ = SEM_DECON_NPROBE if nprobe is None else nprobe
     thr = SEM_DECON_THRESH_Q if thresh_q is None else thresh_q
-    qdot = _unrolled_dot("a.emb", "c.emb", "duck")
     cos = _cosine("q", "c", "duck")
     return f"""
 WITH {_duck_v_cte()},
@@ -1367,8 +1366,7 @@ inc AS (
 probed AS (
   SELECT vec_id, emb, nrm, cid AS pcid FROM (
     SELECT a.vec_id, a.emb, a.nrm, c.cid,
-           ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                ORDER BY (c.cc - (2 * ({qdot}))) ASC, c.cid) AS rn
+           {_cell_rank('duck')} AS rn
     FROM inc a CROSS JOIN cvm c
   ) t WHERE rn <= {np_}
 ),
@@ -1413,17 +1411,16 @@ def stream_ann_topk(
     exactly (the oracle runs that form)."""
     from dataforge_core_spark.operators.dedup import INCR_MOD, INCR_NEW_GE
     from dataforge_core_spark.operators.similarity import (
-        KMEANS_K,
         IVF_CELL_CAP,
         TOP_K,
+        _check_nprobe,
         _kmeans_assignments,
         _cosine,
     )
 
     np_ = 1 if nprobe is None else nprobe
     k = TOP_K if top_k is None else top_k
-    if np_ < 1 or np_ > KMEANS_K:
-        raise ValueError(f"nprobe must be in [1, {KMEANS_K}]")
+    _check_nprobe(np_)
     if k < 1:
         raise ValueError("top_k must be >= 1")
     af = _kmeans_assignments(spark, sf_dir)
@@ -1470,16 +1467,18 @@ def _ann_topk_oracle(
         IVF_CELL_CAP,
         KMEANS_ITERS,
         TOP_K,
-        _cosine,
+        _cell_rank,
         _duck_v_cte,
         _kmeans_ctes,
-        _unrolled_dot,
+        _topk_sql,
     )
 
     np_ = 1 if nprobe is None else nprobe
     k = TOP_K if top_k is None else top_k
-    qdot = _unrolled_dot("a.emb", "c.emb", "duck")
-    cos = _cosine("q", "c", "duck")
+    on = (
+        f"c.cid = q.pcid AND c.vec_id % {INCR_MOD} < {INCR_NEW_GE}"
+        f" AND c.cellrn <= {IVF_CELL_CAP}"
+    )
     return f"""
 WITH {_duck_v_cte()},
 {_kmeans_ctes('v', 'duck')},
@@ -1488,21 +1487,13 @@ cvm AS MATERIALIZED (SELECT * FROM c{KMEANS_ITERS}),
 qp AS (
   SELECT vec_id, emb, nrm, cid AS pcid FROM (
     SELECT a.vec_id, a.emb, a.nrm, c.cid,
-           ROW_NUMBER() OVER (PARTITION BY a.vec_id
-                ORDER BY (c.cc - (2 * ({qdot}))) ASC, c.cid) AS rn
+           {_cell_rank('duck')} AS rn
     FROM (SELECT * FROM afm
           WHERE vec_id % {INCR_MOD} >= {INCR_NEW_GE}) a
     CROSS JOIN cvm c
   ) t WHERE rn <= {np_}
-)
-SELECT query_id, rank, neighbor_id FROM (
-  SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         CAST(ROW_NUMBER() OVER (PARTITION BY q.vec_id
-              ORDER BY ({cos}) DESC, c.vec_id) AS INTEGER) AS rank
-  FROM qp q JOIN afm c
-    ON c.cid = q.pcid AND c.vec_id % {INCR_MOD} < {INCR_NEW_GE}
-   AND c.cellrn <= {IVF_CELL_CAP}
-) r WHERE rank <= {k}
+),
+{_topk_sql("afm", on, queries="qp", top_k=k, dialect="duck")}
 """
 
 

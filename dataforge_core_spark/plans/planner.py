@@ -10,11 +10,13 @@ a batch of ``withColumn``s/joins — Catalyst collapses adjacent projections
 (CollapseProject), so stages exist only to order joins vs. the rules that
 need them.
 
-Join/aggregate elements are deduplicated by relation-path id, replicating
-the reference's compile-time reuse (u_enr_query_add_join.sql:33-41;
-u_enr_query_add_many_join.sql:24-32) — Catalyst does not dedup separate
+Join elements are single hops, one per distinct relation-path prefix,
+each the child of the prefix one hop shorter — the reference's
+``J_<id1>_<id2>…`` reuse, where a path extending another path reuses its
+joins (u_enr_query_add_join.sql:33-41,74-97;
+u_enr_query_add_many_join.sql:24-32).  Catalyst does not dedup separate
 ``.join()`` calls on its own, so this compile-time sharing matters for the
-physical plan (one shuffle per path instead of one per referencing rule).
+physical plan (one join per prefix instead of one per referencing path).
 """
 
 from __future__ import annotations
@@ -31,7 +33,7 @@ from dataforge_core_spark.parser import (
     parse_relation_expression,
     rewrite,
 )
-from dataforge_core_spark.paths import Path, RelationGraph
+from dataforge_core_spark.paths import Hop, Path, RelationGraph
 
 
 def _sanitize(s: str) -> str:
@@ -75,23 +77,29 @@ EMPTY_ARRAY = {"collect_list", "collect_set", "array_agg"}
 
 @dataclass
 class JoinElement:
-    """One (deduplicated) relation path materialized as a join.
+    """The last hop of one (deduplicated) relation-path prefix, joined
+    onto its parent prefix's hub (or onto the source for a first hop).
 
-    kind='lookup'    -> cardinality-1 path: LEFT JOIN of the target hub
-                        chain (J1/J2/J3 in SURVEY §2.3)
-    kind='aggregate' -> M-cardinality path: groupBy+join decorrelation of
-                        the reference's LEFT JOIN LATERAL (J5)
+    kind='lookup'    -> cardinality-1 hop: LEFT JOIN of the hop's hub
+                        (J1/J2/J3 in SURVEY §2.3)
+    kind='aggregate' -> M-cardinality last hop: groupBy+join decorrelation
+                        of the reference's LEFT JOIN LATERAL (J5)
     """
 
     path: Path
     pathid: str
     kind: str  # 'lookup' | 'aggregate'
+    # pathid of the prefix one hop shorter; None for a first hop
+    parent: str | None = None
     # attrs needed from the path target: attr -> output column name
     needed: dict[str, str] = field(default_factory=dict)
     aggs: list[AggSpec] = field(default_factory=list)
-    # [This]-side attribute names used by the first-hop predicate
+    # [This]-side attribute names used by a first hop's predicate
     deps: set[str] = field(default_factory=set)
-    level: int = 0
+
+    @property
+    def hop(self) -> Hop:
+        return self.path.hops[-1]
 
     @property
     def needs_row_fallback(self) -> bool:
@@ -99,8 +107,9 @@ class JoinElement:
 
     @property
     def is_self(self) -> bool:
-        h = self.path.hops[0]
-        return h.relation.left == h.relation.right
+        """A first hop over a self relation: it joins the in-flight
+        source, whose hub does not exist yet."""
+        return self.parent is None and self.hop.dst == self.hop.src
 
 
 @dataclass
@@ -123,6 +132,21 @@ class SourcePlan:
     levels: list[list[str]] = field(default_factory=list)
     # source names whose hubs this plan reads (build-order dependencies)
     hub_deps: set[str] = field(default_factory=set)
+
+    def take_ready(
+        self, applied: set[str], computed: set[str]
+    ) -> list[JoinElement]:
+        """The unapplied joins whose deps are in ``computed`` and whose
+        parent is applied, in registration order (a parent precedes its
+        children, so a chain lands in one call); marks them applied."""
+        ready = []
+        for pid, j in self.joins.items():
+            if pid in applied or not j.deps <= computed:
+                continue
+            if j.parent is None or j.parent in applied:
+                applied.add(pid)
+                ready.append(j)
+        return ready
 
 
 def _target_attr_col(pathid: str, attr: str) -> str:
@@ -195,11 +219,10 @@ def plan_source(
                     "You must use aggregation without OVER clause. "
                     f"Target source `{tok.source}`"
                 )
-            join = _get_join(plan, path, kind="lookup")
+            join = _get_join(plan, path, "lookup", el.join_deps)
             col = join.needed.setdefault(
                 tok.attr, _target_attr_col(join.pathid, tok.attr)
             )
-            el.join_deps.add(join.pathid)
             spans.append((tok.start, tok.end, f"`{col}`"))
 
         for call in parsed.aggs:
@@ -278,7 +301,7 @@ def plan_source(
                     cardinality="1",
                 )
 
-            join = _get_join(plan, path, kind="aggregate")
+            join = _get_join(plan, path, "aggregate", el.join_deps)
             inner_spans = []
             this_attrs: set[str] = set()
             for t in call.tokens:
@@ -321,7 +344,6 @@ def plan_source(
                 )
             else:
                 out_col = existing
-            el.join_deps.add(join.pathid)
             spans.append((call.start, call.end, f"`{out_col}`"))
 
         el.compiled_sql = rewrite(rule.expression, spans)
@@ -329,7 +351,7 @@ def plan_source(
 
     # -- join deps: [This]-side attrs of first-hop predicates -------------
     for join in plan.joins.values():
-        join.deps = _first_hop_this_deps(join, source)
+        join.deps = _this_deps(join)
         # [This]-transits into aggregates are also pipeline deps
         for a in join.aggs:
             join.deps |= a.this_attrs
@@ -347,18 +369,34 @@ def plan_source(
     return plan
 
 
-def _get_join(plan: SourcePlan, path: Path, kind: str) -> JoinElement:
-    pathid = _sanitize(("agg_" if kind == "aggregate" else "j_") + path.id())
-    el = plan.joins.get(pathid)
-    if el is None:
-        el = JoinElement(path=path, pathid=pathid, kind=kind)
-        plan.joins[pathid] = el
+def _get_join(
+    plan: SourcePlan, path: Path, kind: str, join_deps: set[str]
+) -> JoinElement:
+    """The element of ``path``'s last hop, registering one lookup element
+    per shorter prefix on the way (each the parent of the next), and
+    adding every prefix's pathid to the rule's ``join_deps``.  A
+    multi-hop aggregate hangs off the prefix of its last cardinality-1
+    hop."""
+    parent = None
+    for n in range(1, len(path.hops) + 1):
+        k = kind if n == len(path.hops) else "lookup"
+        sub = Path(path.hops[:n])
+        pathid = _sanitize(("agg_" if k == "aggregate" else "j_") + sub.id())
+        el = plan.joins.get(pathid)
+        if el is None:
+            el = JoinElement(path=sub, pathid=pathid, kind=k, parent=parent)
+            plan.joins[pathid] = el
+        join_deps.add(pathid)
+        parent = pathid
     return el
 
 
-def _first_hop_this_deps(join: JoinElement, source: Source) -> set[str]:
-    """[This]-side attribute names used by the first hop's predicate."""
-    hop = join.path.hops[0]
+def _this_deps(join: JoinElement) -> set[str]:
+    """[This]-side attribute names used by a first hop's predicate (a
+    later hop's source side is its parent's hub)."""
+    if join.parent is not None:
+        return set()
+    hop = join.hop
     parsed = parse_relation_expression(hop.relation.expression)
     deps = set()
     for t in parsed.tokens:
@@ -427,7 +465,6 @@ def _assign_levels(plan: SourcePlan) -> None:
         for d in join.deps:
             if d in plan.rules:
                 lvl = max(lvl, rule_level(d))
-        join.level = lvl
         return lvl
 
     max_lvl = 0
@@ -435,8 +472,6 @@ def _assign_levels(plan: SourcePlan) -> None:
         lvl = rule_level(name)
         plan.rules[name].level = lvl
         max_lvl = max(max_lvl, lvl)
-    for join in plan.joins.values():
-        join_level(join)
 
     plan.levels = [[] for _ in range(max_lvl)]
     for name, el in plan.rules.items():

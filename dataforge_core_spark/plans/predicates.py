@@ -1,11 +1,11 @@
 """Relation predicates and token text rendered as Spark SQL.
 
 The DataFrame compiler and the SQL emitter address the same columns
-differently — prefixed names on a renamed frame (`` `__p_h0__attr` ``)
-versus table aliases (``J_p.`attr` ``) — so each renderer here takes a
-column-rendering function and owns everything else: which tokens it
-replaces, and the uniqueness guards of a join predicate
-(u_enr_query_add_join.sql:101-117).
+differently — prefixed names on a renamed frame (`` `__p__attr` ``)
+versus table aliases (``J_p.`attr` ``) — so each renderer here takes
+column-rendering functions and owns everything else: which tokens it
+replaces, which side of a hop each belongs to, and the uniqueness guards
+of a join predicate (u_enr_query_add_join.sql:101-117).
 """
 
 from __future__ import annotations
@@ -34,23 +34,30 @@ def render_tokens(text: str, col: Callable[[str], str] = bare) -> str:
 
 
 def render_relation(
-    hop: Hop, col: Callable[[str, str], str], dst: Source
+    hop: Hop,
+    src: Callable[[str], str],
+    dst: Callable[[str], str],
+    dst_source: Source,
 ) -> str:
-    """The hop's relation predicate with each token replaced by
-    ``col(side, attr)`` (side ``'This'`` = relation.left, ``'Related'``
-    = relation.right), AND-ed with the ``_uv_flag`` guard of every
-    unique rule of the hop's destination ``dst`` that it joins on (J7)."""
+    """The hop's relation predicate with each token of the hop's source
+    side replaced by ``src(attr)`` and each of its destination side by
+    ``dst(attr)`` ([This] is the relation's left source, so a reverse
+    hop swaps the roles), AND-ed with the ``_uv_flag`` guard of every
+    unique rule of ``dst_source`` that it joins on (J7)."""
     parsed = parse_relation_expression(hop.relation.expression)
     dst_side = "Related" if hop.forward else "This"
-    rules = dst.rule_by_name()
+    rules = dst_source.rule_by_name()
     guards = set()
     for t in parsed.tokens:
         rule = rules.get(t.attr) if t.source == dst_side else None
         if rule is not None and rule.unique:
-            guards.add(col(t.source, f"{t.attr}_uv_flag"))
+            guards.add(dst(f"{t.attr}_uv_flag"))
     out = rewrite(
         hop.relation.expression,
-        [(t.start, t.end, col(t.source, t.attr)) for t in parsed.tokens],
+        [
+            (t.start, t.end, (dst if t.source == dst_side else src)(t.attr))
+            for t in parsed.tokens
+        ],
     )
     for g in sorted(guards):
         out = f"({out}) AND {g}"

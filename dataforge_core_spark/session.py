@@ -39,13 +39,27 @@ def checkpoint_manager(master: str) -> str | None:
     return None
 
 
+def _host_defaults() -> tuple[str, str]:
+    """``(cpus, driver heap)`` for ``get_spark``: ``$SPARK_GRAFT_CPUS``
+    and ``$SPARK_DRIVER_MEM`` when set, else the CPUs this process may
+    run on and a quarter of physical RAM, clamped to 1g..16g."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(
+        len(os.sched_getaffinity(0))
+    )
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
+    heap = os.environ.get("SPARK_DRIVER_MEM") or (
+        f"{min(16, max(1, ram_gb // 4))}g"
+    )
+    return cpus, heap
+
+
 def get_spark(
     app_name: str = "dataforge_core_spark",
     master: str | None = None,
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus, heap = _host_defaults()
     master = master or f"local[{cpus}]"
     shuffle = shuffle_partitions or int(cpus)
     builder = (
@@ -59,11 +73,11 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # local[N] packs every executor thread into the driver JVM, so
         # this is the WHOLE cluster's heap: 8g caused GC-driven
-        # multi-second outliers late in long bench sessions (cached hub
-        # blocks + checkpointed indexes + shuffle buffers for 32
-        # threads).  16g is still an eighth of the box; a real cluster
+        # multi-second outliers late in long 32-thread bench sessions
+        # (cached hub blocks + checkpointed indexes + shuffle buffers),
+        # so the default grows with the host up to 16g; a real cluster
         # sizes executors separately.
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", heap)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64MB")
         # the generated-class cache defaults to 100 entries; a session

@@ -7,8 +7,9 @@ This emitter produces the same artifact shape from our plans:
 - per source: ``DROP TABLE IF EXISTS hub; CREATE TABLE hub AS WITH cte0
   AS (...), cte1 AS (...) SELECT ... FROM cteN`` — CTE levels mirror the
   planner's stratification (u_enr_query_generate_query.sql:45-99,121-142)
-- lookup joins: ``LEFT JOIN <hub> J_<path> ON <pred>`` chains
-  (u_enr_query_add_join.sql) — hub *tables*, enforcing the same
+- lookup joins: one ``LEFT JOIN <hub> J_<prefix> ON <pred>`` per
+  relation-path prefix, a later hop's [This] side its parent's alias
+  (u_enr_query_add_join.sql:74-97) — hub *tables*, enforcing the same
   build-order dependency as the reference (S2)
 - aggregate paths: the decorrelated ``LEFT JOIN (SELECT keys, aggs FROM
   hub GROUP BY keys)`` form (the rewrite of J5's LEFT JOIN LATERAL)
@@ -129,13 +130,10 @@ class SqlEmitter:
             # named exactly as the planner's helper refs, so rule SQL uses
             # them verbatim (same-select references resolve via Spark's
             # lateral column aliases; later levels see them as columns)
-            for pid, join in plan.joins.items():
-                if pid in applied or not (join.deps <= computed):
-                    continue
+            for join in plan.take_ready(applied, computed):
                 jsql, jcols = self._emit_join(join, prev)
                 joins_sql.append(jsql)
                 transit_cols.extend(jcols)
-                applied.add(pid)
             types = self._rule_types()
             rule_cols = []
             for name in level:
@@ -207,51 +205,41 @@ class SqlEmitter:
         )
 
     def _emit_join(self, join: JoinElement, prev: str) -> tuple[str, list[str]]:
-        """-> (LEFT JOIN clauses, transit select items `__pid__x` names)."""
+        """-> (the hop's LEFT JOIN clause, transit select items
+        `__pid__x` names).  The hop's source side is its parent's alias,
+        or ``prev`` (the previous CTE) for a first hop."""
         pid = join.pathid
-        hops = join.path.hops
-
-        def hop_clause(i: int, hop, left_alias: str, alias: str) -> str:
-            hub = self._hub(hop.dst) if not join.is_self else prev
-            pref = (
-                {"This": left_alias, "Related": alias}
-                if hop.forward
-                else {"This": alias, "Related": left_alias}
-            )
-            pred = render_relation(
-                hop, lambda side, a: f"{pref[side]}.`{a}`", self.by_name[hop.dst]
-            )
-            return f"LEFT JOIN {hub} {alias} ON {pred}"
+        hop = join.hop
+        src_alias = f"J_{join.parent}" if join.parent else prev
 
         if join.kind == "lookup":
-            clauses = []
-            for i, hop in enumerate(hops):
-                alias = f"J_{pid}" if i == len(hops) - 1 else f"J_{pid}_h{i}"
-                left_alias = prev if i == 0 else (
-                    f"J_{pid}_h{i-1}" if i - 1 < len(hops) - 1 else f"J_{pid}"
-                )
-                clauses.append(hop_clause(i, hop, left_alias, alias))
+            hub = prev if join.is_self else self._hub(hop.dst)
+            pred = render_relation(
+                hop,
+                lambda a: f"{src_alias}.`{a}`",
+                lambda a: f"J_{pid}.`{a}`",
+                self.by_name[hop.dst],
+            )
             transits = [
                 f"J_{pid}.`{attr}` AS `{out}`"
                 for attr, out in join.needed.items()
             ]
-            return ("\n  ".join(clauses), transits)
+            return (f"LEFT JOIN {hub} J_{pid} ON {pred}", transits)
 
         # aggregate join: decorrelated GROUP BY subquery (J5 rewrite)
-        m_hop = hops[-1]
-        keys = equi_keys(m_hop)
+        keys = equi_keys(hop)
         if keys is None:
             # the DataFrame compiler has a row-key fallback; the SQL
             # artifact keeps the decorrelated GROUP BY form only
             raise ProjectError(
                 "SQL emission for non-equi aggregate relation "
-                f"{m_hop.relation.name!r} is not supported; use the "
+                f"{hop.relation.name!r} is not supported; use the "
                 "DataFrame runner for theta aggregates"
             )
         if any(spec.transits or spec.this_attrs for spec in join.aggs):
             raise ProjectError(
                 "SQL emission for aggregates with transit/[This] "
-                f"attributes over relation {m_hop.relation.name!r} is not "
+                f"attributes over relation {hop.relation.name!r} is not "
                 "supported; use the DataFrame runner"
             )
         group_sql = [render_tokens(dst) for _, dst in keys]
@@ -260,24 +248,14 @@ class SqlEmitter:
             f"{spec.call_sql()} AS `a{k}`" for k, spec in enumerate(join.aggs)
         )
         sub = (
-            f"(SELECT {', '.join(key_sql)}, {aggs} FROM {self._hub(m_hop.dst)} "
+            f"(SELECT {', '.join(key_sql)}, {aggs} FROM {self._hub(hop.dst)} "
             f"GROUP BY {', '.join(group_sql)})"
         )
-        clauses = []
-        if len(hops) == 1:
-            src_alias = prev
-        else:
-            for i, hop in enumerate(hops[:-1]):
-                alias = f"J_{pid}_h{i}"
-                left_alias = prev if i == 0 else f"J_{pid}_h{i-1}"
-                clauses.append(hop_clause(i, hop, left_alias, alias))
-            src_alias = f"J_{pid}_h{len(hops) - 2}"
         conds = " AND ".join(
             f"({render_tokens(src, lambda a: f'{src_alias}.`{a}`')}) "
             f"= J_{pid}.k{j}"
             for j, (src, _) in enumerate(keys)
         )
-        clauses.append(f"LEFT JOIN {sub} J_{pid} ON {conds}")
         # transits: expose agg results under the planner's helper names,
         # with LATERAL empty-set parity (compiler._agg_empty_fixes):
         # count-family -> 0, array-family -> [] (Spark coerces the bare
@@ -290,7 +268,7 @@ class SqlEmitter:
             elif spec.call.func in EMPTY_ARRAY:
                 expr = f"coalesce({expr}, array())"
             transits.append(f"{expr} AS `{spec.out_col}`")
-        return ("\n  ".join(clauses), transits)
+        return (f"LEFT JOIN {sub} J_{pid} ON {conds}", transits)
 
     # ------------------------------------------------------------------
     def emit_output(self, output: Output) -> str:

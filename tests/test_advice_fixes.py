@@ -507,6 +507,29 @@ def test_session_key_is_application_id(spark):
 # ---------------------------------------------------------------------------
 
 
+def test_get_spark_defaults_fit_the_host(spark, monkeypatch):
+    """Without $SPARK_GRAFT_CPUS / $SPARK_DRIVER_MEM, get_spark runs one
+    task thread per CPU this process may use and a heap of a quarter of
+    physical RAM, clamped to 1g..16g; both variables still win."""
+    import os
+
+    from dataforge_core_spark.session import _host_defaults
+
+    cpus, heap = _host_defaults()
+    assert spark.sparkContext.master == f"local[{cpus}]"
+    assert spark.conf.get("spark.driver.memory") == heap
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    monkeypatch.delenv("SPARK_DRIVER_MEM", raising=False)
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    cpus, heap = _host_defaults()
+    assert cpus == str(len(os.sched_getaffinity(0)))
+    assert heap.endswith("g") and 1 <= int(heap[:-1]) <= 16
+    assert int(heap[:-1]) == min(16, max(1, int(ram_gb // 4)))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "32")
+    monkeypatch.setenv("SPARK_DRIVER_MEM", "16g")
+    assert _host_defaults() == ("32", "16g")
+
+
 def test_sq8_zero_vector_quantizes_deterministically(spark):
     """An all-zero embedding must quantize to all-zero codes (not NaN ->
     engine-dependent casts): the max-abs divisor is clamped to 1e-30
