@@ -47,7 +47,7 @@ from dataforge_core_spark.model import (
     ProjectError,
     Source,
 )
-from dataforge_core_spark.paths import Hop, Path, RelationGraph
+from dataforge_core_spark.paths import Hop, RelationGraph
 from dataforge_core_spark.plans.outputs import plan_output
 from dataforge_core_spark.plans.planner import (
     EMPTY_ARRAY,
@@ -525,19 +525,20 @@ class SourceCompiler:
         return self._apply_aggregate(df, join, hubs)
 
     def _join_hop(
-        self,
-        df: DataFrame,
-        hop: Hop,
-        src_prefix: str,
-        dst_prefix: str,
-        hub: tuple[str, DataFrame],
+        self, df: DataFrame, join: JoinElement, hub: tuple[str, DataFrame]
     ) -> DataFrame:
-        """``df`` LEFT JOIN the ``(name, frame)`` hub, its columns
-        prefixed ``dst_prefix``, on the hop's predicate; the hop's
-        source side is ``df``'s ``src_prefix``-ed columns."""
-        side = self._broadcast_if_small(_prefix_all(hub[1], dst_prefix), [hub])
-        cond = self._relation_cond(hop, src_prefix, dst_prefix)
-        return df.join(side, F.expr(cond), "left")
+        """``df`` LEFT JOIN the ``(name, frame)`` hub on ``join``'s hop,
+        every hub column landing as ``__<pathid>__<attr>`` — the name
+        rule SQL, aggregates and child hops read — and only those of
+        ``join.carry`` kept past the join (so a later checkpoint stores
+        no more than the rest of the plan reads)."""
+        dst = f"__{join.pathid}__"
+        side = self._broadcast_if_small(_prefix_all(hub[1], dst), [hub])
+        cond = self._relation_cond(join.hop, self._src_prefix(join), dst)
+        out = df.join(side, F.expr(cond), "left")
+        return out.drop(
+            *[c for c in side.columns if c[len(dst):] not in join.carry]
+        )
 
     def _relation_cond(
         self, hop: Hop, src_prefix: str, dst_prefix: str
@@ -563,15 +564,9 @@ class SourceCompiler:
         join: JoinElement,
         hubs: dict[str, DataFrame],
     ) -> DataFrame:
-        """One hop, flat: every hub column lands as ``__<pathid>__<attr>``,
-        the name rule SQL and child hops read; the final select drops
-        them."""
-        hop = join.hop
-        hub = df if join.is_self else self._hub(hop.dst, hubs)
-        return self._join_hop(
-            df, hop, self._src_prefix(join), f"__{join.pathid}__",
-            (hop.dst, hub),
-        )
+        """One hop, flat; the final select drops its helper columns."""
+        hub = df if join.is_self else self._hub(join.hop.dst, hubs)
+        return self._join_hop(df, join, (join.hop.dst, hub))
 
     def _agg_target_side(
         self,
@@ -582,9 +577,8 @@ class SourceCompiler:
         """The aggregation input: the M-target hub with all transit
         sources pre-joined (SURVEY §7.3 — transit attrs referenced inside
         the aggregate come from cardinality-1 paths *from the target*),
-        one :meth:`_join_hop` per distinct transit-path prefix, exposed
-        under the planner's `__TR__<src>__<attr>` names, and the (hub
-        name, frame) pairs it reads.
+        one :meth:`_join_hop` per transit element the planner registered,
+        and the (hub name, frame) pairs it reads.
 
         For self-relation aggregates the target is the in-flight frame
         ``df_self`` — the hub for the source being built does not exist
@@ -592,35 +586,10 @@ class SourceCompiler:
         m_hop = join.hop
         target = df_self if join.is_self else self._hub(m_hop.dst, hubs)
         reads = [(m_hop.dst, target)]
-        # transit source -> (path, attrs) across all agg specs
-        needed: dict[str, tuple[Path, set[str]]] = {}
-        for spec in join.aggs:
-            for s, tpath in spec.transits.items():
-                needed.setdefault(s, (tpath, set()))[1].update(
-                    re.findall(
-                        rf"`__TR__{re.escape(s)}__([A-Za-z0-9_]+)`",
-                        spec.inner_sql,
-                    )
-                )
-        prefixes: dict[str, str] = {}  # transit-path prefix id -> prefix
-        for s, (tpath, attrs) in needed.items():
-            src_pref = ""
-            for n, hop in enumerate(tpath.hops, start=1):
-                key = Path(tpath.hops[:n]).id()
-                if key not in prefixes:
-                    prefixes[key] = f"__tr{len(prefixes)}__"
-                    hub = (hop.dst, self._hub(hop.dst, hubs))
-                    target = self._join_hop(
-                        target, hop, src_pref, prefixes[key], hub
-                    )
-                    reads.append(hub)
-                src_pref = prefixes[key]
-            target = target.withColumns(
-                {
-                    f"__TR__{s}__{a}": F.col(f"`{src_pref}{a}`")
-                    for a in sorted(attrs)
-                }
-            )
+        for tr in join.transits.values():
+            hub = (tr.hop.dst, self._hub(tr.hop.dst, hubs))
+            target = self._join_hop(target, tr, hub)
+            reads.append(hub)
         return target, reads
 
     def _apply_aggregate(
@@ -723,7 +692,7 @@ class SourceCompiler:
         aggs = []
         for spec in join.aggs:
             # `__THIS__attr` -> our bare column; everything else (target
-            # cols and `__TR__` transits) -> target prefix
+            # cols and transit outputs) -> target prefix
             def sub(m: re.Match) -> str:
                 name = m.group(1)
                 if name.startswith("__THIS__"):

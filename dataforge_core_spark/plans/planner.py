@@ -30,10 +30,10 @@ from dataforge_core_spark.parser import (
     AggCall,
     ParsedExpression,
     parse_expression,
-    parse_relation_expression,
     rewrite,
 )
 from dataforge_core_spark.paths import Hop, Path, RelationGraph
+from dataforge_core_spark.plans.predicates import relation_sides
 
 
 def _sanitize(s: str) -> str:
@@ -46,8 +46,10 @@ class AggSpec:
 
     inner_sql tokens are rewritten to:
       `attr`                 — column of the M-target hub
-      `__TR__<src>__<attr>`  — transit from a third source (cardinality-1
-                               path from the target; SURVEY §7.3 /
+      `__<trid>__<attr>`     — transit from a third source: the output of
+                               the aggregate element's transit hop
+                               ``trid`` (cardinality-1 path from the
+                               target; SURVEY §7.3 /
                                u_enr_query_add_many_join_attribute)
       `__THIS__<attr>`       — transit of a [This] value into the
                                aggregate (forces row-key decorrelation)
@@ -56,7 +58,6 @@ class AggSpec:
     call: AggCall
     out_col: str
     inner_sql: str
-    transits: dict[str, "Path"] = field(default_factory=dict)  # src -> path
     this_attrs: set[str] = field(default_factory=set)
 
     def call_sql(self, inner: str | None = None) -> str:
@@ -94,7 +95,14 @@ class JoinElement:
     # attrs needed from the path target: attr -> output column name
     needed: dict[str, str] = field(default_factory=dict)
     aggs: list[AggSpec] = field(default_factory=list)
-    # [This]-side attribute names used by a first hop's predicate
+    # an aggregate's transit hops, pre-joined onto its target side: one
+    # element per distinct transit-path prefix, parents first, each path
+    # starting at the target
+    transits: dict[str, "JoinElement"] = field(default_factory=dict)
+    # hub attrs the join keeps: ``needed`` and the source side of the
+    # child hops' predicates
+    carry: set[str] = field(default_factory=set)
+    # [This]-side attribute names the join reads off the in-flight source
     deps: set[str] = field(default_factory=set)
 
     @property
@@ -107,9 +115,10 @@ class JoinElement:
 
     @property
     def is_self(self) -> bool:
-        """A first hop over a self relation: it joins the in-flight
-        source, whose hub does not exist yet."""
-        return self.parent is None and self.hop.dst == self.hop.src
+        """A hop back to the path's start — for a source plan's joins the
+        source being built, whose hub does not exist yet, so the hop
+        joins the in-flight frame (at any depth of the path)."""
+        return self.hop.dst == self.path.hops[0].src
 
 
 @dataclass
@@ -219,7 +228,7 @@ def plan_source(
                     "You must use aggregation without OVER clause. "
                     f"Target source `{tok.source}`"
                 )
-            join = _get_join(plan, path, "lookup", el.join_deps)
+            join = _get_join(plan.joins, path, "lookup", el.join_deps)
             col = join.needed.setdefault(
                 tok.attr, _target_attr_col(join.pathid, tok.attr)
             )
@@ -286,22 +295,26 @@ def plan_source(
                     f"{sorted(s for s, _ in m_candidates)}"
                 )
             agg_src, path = m_candidates[0]
+            join = _get_join(plan.joins, path, "aggregate", el.join_deps)
             # transit sources must be reachable from the TARGET with a
             # cardinality-1 path (they are pre-joined onto the
-            # aggregation side — SURVEY §7.3)
-            transits: dict[str, Path] = {}
-            for s in other_sources:
-                # cardinality-1 from the target (pre-joined onto the
-                # aggregation side); BFS raises the reference messages
-                # when only M paths (or none) exist
-                transits[s] = graph.discover(
-                    agg_src,
-                    s,
-                    context=f"(transit in rule {rule.name!r})",
-                    cardinality="1",
+            # aggregation side — SURVEY §7.3); BFS raises the reference
+            # messages when only M paths (or none) exist
+            transits = {
+                s: _get_join(
+                    join.transits,
+                    graph.discover(
+                        agg_src,
+                        s,
+                        context=f"(transit in rule {rule.name!r})",
+                        cardinality="1",
+                    ),
+                    "lookup",
+                    set(),
+                    tag="tr_",
                 )
-
-            join = _get_join(plan, path, "aggregate", el.join_deps)
+                for s in other_sources
+            }
             inner_spans = []
             this_attrs: set[str] = set()
             for t in call.tokens:
@@ -312,7 +325,11 @@ def plan_source(
                     this_attrs.add(t.attr)
                     el.deps.add(t.attr)
                 else:
-                    repl = f"`__TR__{t.source}__{t.attr}`"
+                    tr = transits[t.source]
+                    col = tr.needed.setdefault(
+                        t.attr, _target_attr_col(tr.pathid, t.attr)
+                    )
+                    repl = f"`{col}`"
                 inner_spans.append(
                     (
                         t.start - call.inner_offset,
@@ -338,7 +355,6 @@ def plan_source(
                         call=call,
                         out_col=out_col,
                         inner_sql=inner_sql,
-                        transits=transits,
                         this_attrs=this_attrs,
                     )
                 )
@@ -349,20 +365,19 @@ def plan_source(
         el.compiled_sql = rewrite(rule.expression, spans)
         plan.rules[rule.name] = el
 
-    # -- join deps: [This]-side attrs of first-hop predicates -------------
+    # -- per hop: the hub attrs it carries, its hub build dep -------------
+    for reg in [plan.joins] + [j.transits for j in plan.joins.values()]:
+        for join in reg.values():
+            join.carry |= set(join.needed)
+            if join.parent is not None:
+                reg[join.parent].carry |= relation_sides(join.hop)[0]
+            plan.hub_deps.add(join.hop.dst)
+    plan.hub_deps.discard(source.source_name)
     for join in plan.joins.values():
         join.deps = _this_deps(join)
         # [This]-transits into aggregates are also pipeline deps
         for a in join.aggs:
             join.deps |= a.this_attrs
-        # intermediate + target + transit hubs are build deps
-        for hop in join.path.hops:
-            plan.hub_deps.add(hop.dst)
-        for a in join.aggs:
-            for tpath in a.transits.values():
-                for hop in tpath.hops:
-                    plan.hub_deps.add(hop.dst)
-    plan.hub_deps.discard(source.source_name)
 
     _check_cycles(plan)
     _assign_levels(plan)
@@ -370,9 +385,14 @@ def plan_source(
 
 
 def _get_join(
-    plan: SourcePlan, path: Path, kind: str, join_deps: set[str]
+    registry: dict[str, JoinElement],
+    path: Path,
+    kind: str,
+    join_deps: set[str],
+    tag: str = "j_",
 ) -> JoinElement:
-    """The element of ``path``'s last hop, registering one lookup element
+    """The element of ``path``'s last hop in ``registry`` (a plan's
+    joins, or an aggregate's transits), registering one lookup element
     per shorter prefix on the way (each the parent of the next), and
     adding every prefix's pathid to the rule's ``join_deps``.  A
     multi-hop aggregate hangs off the prefix of its last cardinality-1
@@ -381,32 +401,25 @@ def _get_join(
     for n in range(1, len(path.hops) + 1):
         k = kind if n == len(path.hops) else "lookup"
         sub = Path(path.hops[:n])
-        pathid = _sanitize(("agg_" if k == "aggregate" else "j_") + sub.id())
-        el = plan.joins.get(pathid)
+        pathid = _sanitize(("agg_" if k == "aggregate" else tag) + sub.id())
+        el = registry.get(pathid)
         if el is None:
             el = JoinElement(path=sub, pathid=pathid, kind=k, parent=parent)
-            plan.joins[pathid] = el
+            registry[pathid] = el
         join_deps.add(pathid)
         parent = pathid
     return el
 
 
 def _this_deps(join: JoinElement) -> set[str]:
-    """[This]-side attribute names used by a first hop's predicate (a
-    later hop's source side is its parent's hub)."""
-    if join.parent is not None:
-        return set()
-    hop = join.hop
-    parsed = parse_relation_expression(hop.relation.expression)
-    deps = set()
-    for t in parsed.tokens:
-        # relation expr roles: This = relation.left, Related = relation.right.
-        # Our source is the hop's src: forward traversal -> This tokens are
-        # ours; reverse traversal -> Related tokens are ours.
-        if (t.source == "This") == hop.forward:
-            deps.add(t.attr)
-        elif join.is_self:
-            deps.add(t.attr)  # self-join needs both sides computed
+    """[This]-side attribute names a hop reads off the in-flight source:
+    a first hop's source side (a later hop's is its parent's hub), and a
+    self hop's hub side — its predicate's destination side and the
+    attrs it carries."""
+    src, dst = relation_sides(join.hop)
+    deps = set(src) if join.parent is None else set()
+    if join.is_self:
+        deps |= dst | join.carry
     return deps
 
 

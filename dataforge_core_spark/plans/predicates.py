@@ -47,11 +47,11 @@ def render_relation(
     parsed = parse_relation_expression(hop.relation.expression)
     dst_side = "Related" if hop.forward else "This"
     rules = dst_source.rule_by_name()
-    guards = set()
-    for t in parsed.tokens:
-        rule = rules.get(t.attr) if t.source == dst_side else None
-        if rule is not None and rule.unique:
-            guards.add(dst(f"{t.attr}_uv_flag"))
+    guards = {
+        dst(f"{a}_uv_flag")
+        for a in relation_sides(hop)[1]
+        if a in rules and rules[a].unique
+    }
     out = rewrite(
         hop.relation.expression,
         [
@@ -62,6 +62,17 @@ def render_relation(
     for g in sorted(guards):
         out = f"({out}) AND {g}"
     return out
+
+
+def relation_sides(hop: Hop) -> tuple[set[str], set[str]]:
+    """The attribute names of the hop predicate's source side and of its
+    destination side."""
+    dst_side = "Related" if hop.forward else "This"
+    src: set[str] = set()
+    dst: set[str] = set()
+    for t in parse_relation_expression(hop.relation.expression).tokens:
+        (dst if t.source == dst_side else src).add(t.attr)
+    return src, dst
 
 
 def equi_keys(hop: Hop) -> list[tuple[str, str]] | None:

@@ -42,14 +42,24 @@ def checkpoint_manager(master: str) -> str | None:
 def _host_defaults() -> tuple[str, str]:
     """``(cpus, driver heap)`` for ``get_spark``: ``$SPARK_GRAFT_CPUS``
     and ``$SPARK_DRIVER_MEM`` when set, else the CPUs this process may
-    run on and a quarter of physical RAM, clamped to 1g..16g."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(
-        len(os.sched_getaffinity(0))
-    )
-    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 30
-    heap = os.environ.get("SPARK_DRIVER_MEM") or (
-        f"{min(16, max(1, ram_gb // 4))}g"
-    )
+    run on and a quarter of physical RAM, between 1 and 16 GiB.
+
+    The same rule as ``perfbench/host.py``'s ``nproc``/``driver_heap``,
+    fallbacks included; the benchmark caps its heap at 4 GiB and pins
+    both variables for its runs, so this default never applies there."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    if not cpus:
+        try:
+            cpus = str(len(os.sched_getaffinity(0)))
+        except AttributeError:  # pragma: no cover - non-Linux
+            cpus = str(os.cpu_count() or 1)
+    heap = os.environ.get("SPARK_DRIVER_MEM")
+    if not heap:
+        try:
+            ram = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+        except (ValueError, OSError):  # pragma: no cover
+            ram = 8 << 30
+        heap = f"{max(1, min(16, ram // 4 >> 30))}g"
     return cpus, heap
 
 

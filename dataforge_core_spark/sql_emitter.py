@@ -125,15 +125,27 @@ class SqlEmitter:
         for li, level in enumerate(plan.levels, start=1):
             joins_sql = []
             transit_cols = []
-            # joins whose deps are satisfied attach at this level; their
-            # outputs become transit columns (C5 — u_enr_query_add_transit)
-            # named exactly as the planner's helper refs, so rule SQL uses
-            # them verbatim (same-select references resolve via Spark's
-            # lateral column aliases; later levels see them as columns)
+            # joins whose deps are satisfied attach before this level, in
+            # a CTE of their own; their outputs become transit columns
+            # (C5 — u_enr_query_add_transit) named exactly as the
+            # planner's helper refs, so rule SQL uses them verbatim, and
+            # the level's rules read one relation, where a bare [This]
+            # column cannot clash with a joined hub's
+            batch: set[str] = set()
             for join in plan.take_ready(applied, computed):
-                jsql, jcols = self._emit_join(join, prev)
+                jsql, jcols = self._emit_join(join, prev, batch)
+                batch.add(join.pathid)
                 joins_sql.append(jsql)
                 transit_cols.extend(jcols)
+            if joins_sql:
+                ctes.append(
+                    f"cte{li}j AS (\n  SELECT\n    "
+                    + ",\n    ".join([f"{prev}.*"] + transit_cols)
+                    + f"\n  FROM {prev}\n  "
+                    + "\n  ".join(joins_sql)
+                    + "\n)"
+                )
+                prev = f"cte{li}j"
             types = self._rule_types()
             rule_cols = []
             for name in level:
@@ -148,15 +160,11 @@ class SqlEmitter:
                     # P3 decimal normalization, as in the DataFrame path
                     expr = f"CAST({expr} AS decimal(38,12))"
                 rule_cols.append(f"{expr} AS `{name}`")
-            sel = [f"{prev}.*"] + transit_cols + rule_cols
-            cte = (
+            ctes.append(
                 f"cte{li} AS (\n  SELECT\n    "
-                + ",\n    ".join(sel)
-                + f"\n  FROM {prev}"
-                + ("\n  " + "\n  ".join(joins_sql) if joins_sql else "")
-                + "\n)"
+                + ",\n    ".join([f"{prev}.*"] + rule_cols)
+                + f"\n  FROM {prev}\n)"
             )
-            ctes.append(cte)
             computed |= set(level)
             prev = f"cte{li}"
 
@@ -204,25 +212,37 @@ class SqlEmitter:
             f"{create}{body};\n"
         )
 
-    def _emit_join(self, join: JoinElement, prev: str) -> tuple[str, list[str]]:
+    def _emit_join(
+        self, join: JoinElement, prev: str, batch: set[str]
+    ) -> tuple[str, list[str]]:
         """-> (the hop's LEFT JOIN clause, transit select items
-        `__pid__x` names).  The hop's source side is its parent's alias,
-        or ``prev`` (the previous CTE) for a first hop."""
+        `__pid__x` names).  The hop's source side is ``prev`` (the
+        previous CTE) for a first hop, else its parent's alias when the
+        parent joins in the same CTE (``batch``), else the parent's
+        carried `__<parent>__x` columns of ``prev``."""
         pid = join.pathid
         hop = join.hop
-        src_alias = f"J_{join.parent}" if join.parent else prev
+        qual, pref = prev, ""
+        if join.parent in batch:
+            qual = f"J_{join.parent}"
+        elif join.parent is not None:
+            pref = f"__{join.parent}__"
+
+        def src_col(a: str) -> str:
+            return f"{qual}.`{pref}{a}`"
+
+        # a hop back to the source being built reads the in-flight CTE
+        hub = prev if join.is_self else self._hub(hop.dst)
 
         if join.kind == "lookup":
-            hub = prev if join.is_self else self._hub(hop.dst)
             pred = render_relation(
                 hop,
-                lambda a: f"{src_alias}.`{a}`",
+                src_col,
                 lambda a: f"J_{pid}.`{a}`",
                 self.by_name[hop.dst],
             )
             transits = [
-                f"J_{pid}.`{attr}` AS `{out}`"
-                for attr, out in join.needed.items()
+                f"J_{pid}.`{a}` AS `__{pid}__{a}`" for a in sorted(join.carry)
             ]
             return (f"LEFT JOIN {hub} J_{pid} ON {pred}", transits)
 
@@ -236,7 +256,7 @@ class SqlEmitter:
                 f"{hop.relation.name!r} is not supported; use the "
                 "DataFrame runner for theta aggregates"
             )
-        if any(spec.transits or spec.this_attrs for spec in join.aggs):
+        if join.transits or join.needs_row_fallback:
             raise ProjectError(
                 "SQL emission for aggregates with transit/[This] "
                 f"attributes over relation {hop.relation.name!r} is not "
@@ -248,11 +268,11 @@ class SqlEmitter:
             f"{spec.call_sql()} AS `a{k}`" for k, spec in enumerate(join.aggs)
         )
         sub = (
-            f"(SELECT {', '.join(key_sql)}, {aggs} FROM {self._hub(hop.dst)} "
+            f"(SELECT {', '.join(key_sql)}, {aggs} FROM {hub} "
             f"GROUP BY {', '.join(group_sql)})"
         )
         conds = " AND ".join(
-            f"({render_tokens(src, lambda a: f'{src_alias}.`{a}`')}) "
+            f"({render_tokens(src, src_col)}) "
             f"= J_{pid}.k{j}"
             for j, (src, _) in enumerate(keys)
         )
