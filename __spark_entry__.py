@@ -258,11 +258,13 @@ def _build(spark: SparkSession, sf_dir: str):
     # Downstream hubs compile against the checkpointed frames, so
     # nothing is stored twice and independent hubs materialize
     # concurrently (was: sequential persist -> checkpoint ->
-    # unpersist, ~1.4x slower at sf0.1).  NOT the emitter's
-    # single-SQL-per-hub path: measured head-to-head it is
-    # warm-identical (5.61 vs 5.59s) and ~10s WORSE cold (ANTLR
-    # first-parse warmup on the giant statements), and the heap
-    # bloat degraded the cache-served dedup lanes downstream.
+    # unpersist, ~1.4x slower at sf0.1).  Each hub compiles from the
+    # emitter's own SQL (plans/render.py), one statement per CTE level
+    # rather than one per hub.  The single-SQL-per-hub path measured
+    # ~10s worse cold, blamed on ANTLR's first parse of giant
+    # statements; a fresh JVM parses all 9 tpch_demo run.sql CREATE
+    # statements (longest 4,953 chars) in 1.07s and a warm one in
+    # 0.075s (4 vCPU), and the level statements are shorter still.
     hubs = runner.build_checkpointed()
     outs = runner.build_outputs(hubs)
     return hubs, outs

@@ -1,45 +1,35 @@
 """Compiler: SourcePlan -> Spark DataFrame pipeline.
 
-Replaces the reference's SQL generator
-(enr-query-generator/u_enr_query_generate_query.sql and friends) with
-direct DataFrame composition:
+Runs, level by level, the hub SQL that the emitter writes into run.sql
+(plans/render.py; the reference's u_enr_query_generate_query.sql and
+friends): each level's join SELECT and rule SELECT go through
+``spark.sql`` over the in-flight frame and the hub frames, so the two
+back ends cannot disagree on a hub's body.  The compiler keeps only what
+needs a live frame:
 
-- CTE levels        -> batches of ``withColumns`` (Catalyst collapses them)
-- LEFT JOIN hub     -> one flat ``df.join(hub, F.expr(pred), "left")`` per
-                       relation-path prefix (hop), the hub's columns
-                       prefixed ``__<pathid>__`` (collision-free, and the
-                       planner's transit names); Catalyst prunes unused
-                       columns through the renames and picks broadcast
-                       vs. sort-merge per hub size
-- LEFT JOIN LATERAL -> decorrelated ``groupBy(keys).agg(...)`` + left join
-                       (the scalable rewrite the reference's own dead code
-                       documents — u_enr_query_generate_distinct_many_join
-                       _query.sql:16-51); only the aggregated keys+values
-                       are kept so no column collisions are possible
-- decimal discipline-> inferred DecimalType columns normalized to
-                       decimal(38,12) (u_enr_query_add_enrichment.sql:128-133)
-- uniqueness rules  -> ``<rule>_uv_flag`` companion columns
-                       (count OVER (PARTITION BY key) = 1) and join-predicate
-                       guards (u_enr_query_add_join.sql:101-117)
-- validation rules  -> ``s_validation_status_code`` CASE chain
-                       (u_enr_query_add_validation_status.sql:38-58)
+- decimal discipline-> inferred DecimalType rule columns normalized to
+                       decimal(38,12), read off each level's own types
+                       (u_enr_query_add_enrichment.sql:128-133)
+- broadcast hints   -> ``BROADCAST(J_<pathid>)`` when the hubs a join
+                       reads are measured checkpoints small enough
+                       (:meth:`SourceCompiler.record_hub_size`)
+- row-key aggregates-> theta and [This]-transit LATERAL aggregates group
+                       on a checkpointed row id, which run.sql lacks
+- recalculation     -> a rule subset over an existing hub (W4)
 
-Scale notes (100 TB design): every construct here is a declarative
-DataFrame op — no UDFs, no driver-side row handling — so whole-stage
-codegen, AQE (skew joins, dynamic coalescing), broadcast selection and
-partial aggregation all apply.  Path prefixes are deduplicated at compile
-time (one join per hop, not per referencing rule or path), and aggregate paths
-pre-aggregate on the foreign key *before* the join (map-side partials, and
-the joined side is keys+aggregates only — usually broadcastable).
+Scale notes (100 TB design): every construct is declarative SQL — no
+UDFs, no driver-side row handling — so whole-stage codegen, AQE (skew
+joins, dynamic coalescing), broadcast selection and partial aggregation
+all apply.  Path prefixes are deduplicated at plan time (one join per
+hop, not per referencing rule or path), and aggregate paths pre-aggregate
+on the foreign key *before* the join (map-side partials, and the joined
+side is keys+aggregates only — usually broadcastable).
 """
 
 from __future__ import annotations
 
-import re
-
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from dataforge_core_spark.model import (
     HIVE_TO_SPARK_DDL,
@@ -47,27 +37,15 @@ from dataforge_core_spark.model import (
     ProjectError,
     Source,
 )
-from dataforge_core_spark.paths import Hop, RelationGraph
+from dataforge_core_spark.paths import RelationGraph
 from dataforge_core_spark.plans.outputs import plan_output
 from dataforge_core_spark.plans.planner import (
-    EMPTY_ARRAY,
-    EMPTY_ZERO,
     JoinElement,
     SourcePlan,
     plan_source,
-    status_case_sql,
 )
-from dataforge_core_spark.plans.predicates import (
-    equi_keys,
-    render_relation,
-    render_tokens,
-)
-from dataforge_core_spark.plans.subsource import BACKTICKED, sub_source_sql
+from dataforge_core_spark.plans.render import HubRenderer, needs_row_key
 from dataforge_core_spark.session import sql_conf
-
-
-def _prefix_all(df: DataFrame, prefix: str) -> DataFrame:
-    return df.toDF(*[prefix + c for c in df.columns])
 
 
 class SourceCompiler:
@@ -91,21 +69,21 @@ class SourceCompiler:
         width = 8 + hub._jdf.schema().defaultSize()
         self._measured[name] = (hub, rows * width)
 
-    def _broadcast_if_small(
-        self, side: DataFrame, reads: list[tuple[str, DataFrame]]
-    ) -> DataFrame:
-        """``side`` (the non-driving side of a join) with a broadcast
-        hint when every hub frame it reads (``(name, frame)`` pairs) is
-        the frame measured for that hub and the sizes sum to at most the session's ``autoBroadcastJoinThreshold`` (-1
-        disables broadcasting); otherwise unchanged, so the planner
-        decides from its own estimates."""
-        sizes = [self._measured.get(n, (None, 0)) for n, _ in reads]
-        if not reads or any(m[0] is not f for m, (_, f) in zip(sizes, reads)):
-            return side
+    def _broadcastable(
+        self, names: list[str], hubs: dict[str, DataFrame]
+    ) -> bool:
+        """Whether a join side reading the hubs ``names`` gets a broadcast
+        hint: every hub is read as the frame measured for it and the
+        sizes sum to at most the session's autoBroadcastJoinThreshold
+        (-1 disables broadcasting).  Otherwise the planner decides from
+        its own estimates."""
+        sizes = [self._measured.get(n) for n in names]
+        if any(
+            m is None or m[0] is not hubs.get(n) for m, n in zip(sizes, names)
+        ):
+            return False
         limit = sql_conf(self.spark).autoBroadcastJoinThreshold()
-        if 0 <= sum(m[1] for m in sizes) <= limit:
-            return side.hint("broadcast")
-        return side
+        return 0 <= sum(m[1] for m in sizes) <= limit
 
     # ------------------------------------------------------------------
     # source (hub) compilation
@@ -154,16 +132,12 @@ class SourceCompiler:
             affected = self.recalculation_closure(source)
         if not affected:
             return existing
-        plan = self.plan(source)
         drop = list(affected)
         drop += [f"{r.name}_uv_flag" for r in source.rules if r.unique and r.name in affected]
         if any(r.rule_type == "V" for r in source.rules):
             drop.append("s_validation_status_code")
         base = existing.drop(*[c for c in drop if c in existing.columns])
-        return self._compile(
-            source, base, hubs, plan=plan, only_rules=affected,
-            precomputed={r.name for r in source.rules if r.name not in affected},
-        )
+        return self._compile(source, base, hubs, only_rules=affected)
 
     def window_partition_keys(self, source: Source) -> list[str] | None:
         """Common bare-column PARTITION BY list shared by *every* window
@@ -412,298 +386,87 @@ class SourceCompiler:
         source: Source,
         base: DataFrame,
         hubs: dict[str, DataFrame],
-        plan: SourcePlan | None = None,
         only_rules: set[str] | None = None,
-        precomputed: set[str] | None = None,
     ) -> DataFrame:
-        plan = plan or self.plan(source)
+        """Runs the hub's level SELECTs (plans/render.py) over ``base``."""
+        r = HubRenderer(self.project, self.graph, self.plan(source))
         df = base
-        applied: set[str] = set()
-        computed: set[str] = {a.name for a in source.raw_attributes}
-        computed |= precomputed or set()
-        if only_rules is not None:
-            # joins needed only by untouched rules stay unapplied
-            needed_joins = set()
-            for name in only_rules:
-                needed_joins |= plan.rules[name].join_deps
-            for pid in list(plan.joins):
-                if pid not in needed_joins:
-                    applied.add(pid)
+        for level in r.levels(only_rules):
+            if level.joins:
+                df = self._join_level(r, df, level.joins, hubs)
+            if level.rules:
+                df = self._rule_level(r, df, level.rules, hubs)
+        keep = set() if only_rules is None else set(df.columns)
+        return self._sql(r, r.final_select(keep), df, hubs)
 
-        def apply_ready(df: DataFrame) -> DataFrame:
-            for join in plan.take_ready(applied, computed):
-                df = self._apply_join(df, join, hubs)
-            return df
+    def _sql(
+        self,
+        r: HubRenderer,
+        text: str,
+        df: DataFrame,
+        hubs: dict[str, DataFrame],
+    ) -> DataFrame:
+        """``text`` over the in-flight frame ``df`` and the hub frames it
+        reads."""
+        rels = r.relations(lambda name: self._hub(name, hubs))
+        return self.spark.sql(text, prev=df, **rels)
 
-        df = apply_ready(df)
-        for full_level in plan.levels:
-            level = [
-                n
-                for n in full_level
-                if only_rules is None or n in only_rules
-            ]
-            if not level:
-                computed |= set(full_level)
-                df = apply_ready(df)
-                continue
-            cols: dict[str, Column] = {}
-            for name in level:
-                el = plan.rules[name]
-                col = F.expr(el.compiled_sql)
-                if el.rule.cast_datatype:
-                    ddl = HIVE_TO_SPARK_DDL.get(
-                        el.rule.cast_datatype, el.rule.cast_datatype
-                    )
-                    col = col.cast(ddl)
-                cols[name] = col
-            df = df.withColumns(cols)
-            # decimal normalization (P3): inferred decimals -> decimal(38,12)
-            dtypes = dict(df.dtypes)
-            norm: dict[str, Column] = {}
-            for name in level:
-                el = plan.rules[name]
-                if el.rule.cast_datatype:
-                    continue
-                dt = dtypes.get(name, "")
-                if dt.startswith("decimal") and dt != "decimal(38,12)":
-                    norm[name] = F.col(name).cast("decimal(38,12)")
-            if norm:
-                df = df.withColumns(norm)
-            # uniqueness companion flags (V4): <rule>_uv_flag
-            for name in level:
-                if plan.rules[name].rule.unique:
-                    df = df.withColumn(
-                        f"{name}_uv_flag",
-                        F.count(F.lit(1)).over(Window.partitionBy(name)) == 1,
-                    )
-            computed |= set(full_level)
-            df = apply_ready(df)
+    def _rule_level(
+        self,
+        r: HubRenderer,
+        df: DataFrame,
+        names: list[str],
+        hubs: dict[str, DataFrame],
+    ) -> DataFrame:
+        out = self._sql(r, r.rule_select(names), df, hubs)
+        # decimal normalization (P3): inferred decimals -> decimal(38,12),
+        # read off the level's own types
+        dtypes = dict(out.dtypes)
+        decimals = {
+            n
+            for n in names
+            if not r.plan.rules[n].rule.cast_datatype
+            and dtypes[n].startswith("decimal")
+            and dtypes[n] != "decimal(38,12)"
+        }
+        if decimals:
+            out = self._sql(r, r.rule_select(names, decimals), df, hubs)
+        return out
 
-        if len(applied) != len(plan.joins):
-            missing = set(plan.joins) - applied
-            raise ProjectError(
-                f"Internal: joins never became applicable: {missing}"
-            )
-
-        final_cols = [a.name for a in source.raw_attributes] + [
-            r.name for r in source.rules
-        ]
-        # sub-source enrichments: per-element rules over array<struct>
-        # attributes, re-packed in place (§2.11)
-        for sub in self.project.sources:
-            if sub.sub_source_parent != source.source_name:
-                continue
-            if only_rules is None or sub.source_name not in df.columns:
-                sql = sub_source_sql(self.project, self.graph, sub)
-                df = df.withColumn(sub.source_name, F.expr(sql))
-            final_cols.append(sub.source_name)
-        final_cols += [
-            f"{r.name}_uv_flag" for r in source.rules if r.unique
-        ]
-        # validation status column (V2) — CASE chain over V-rules
-        status = status_case_sql(source)
-        if status is not None:
-            df = df.withColumn("s_validation_status_code", F.expr(status))
-            final_cols.append("s_validation_status_code")
-
-        return df.select(*final_cols)
+    def _join_level(
+        self,
+        r: HubRenderer,
+        df: DataFrame,
+        joins: list[JoinElement],
+        hubs: dict[str, DataFrame],
+    ) -> DataFrame:
+        """One level's joins.  A row-key aggregate (theta predicate, or
+        [This] values inside the aggregate) groups on
+        monotonically_increasing_id(), only stable within one
+        materialization: the keyed frame is eagerly
+        ``localCheckpoint``-ed so the aggregate join and the re-attach
+        read the *same* ids from stored blocks.  Unlike ``persist()``
+        (lazy, evictable: a recomputed partition would silently renumber
+        rows), a lost checkpoint block fails the job instead of
+        mis-attaching aggregates; blocks are freed by the ContextCleaner
+        once the frame is unreferenced."""
+        row_key = None
+        if any(needs_row_key(j) for j in joins):
+            row_key = "__row_key"
+            df = df.withColumn(
+                row_key, F.monotonically_increasing_id()
+            ).localCheckpoint(eager=True)
+        text = r.join_select(
+            joins, row_key, lambda names: self._broadcastable(names, hubs)
+        )
+        out = self._sql(r, text, df, hubs)
+        return out.drop(row_key) if row_key else out
 
     # ------------------------------------------------------------------
     def _hub(self, name: str, hubs: dict[str, DataFrame]) -> DataFrame:
         if name not in hubs:
             raise ProjectError(f"Hub for source {name!r} not built yet")
         return hubs[name]
-
-    def _apply_join(
-        self,
-        df: DataFrame,
-        join: JoinElement,
-        hubs: dict[str, DataFrame],
-    ) -> DataFrame:
-        if join.kind == "lookup":
-            return self._apply_lookup(df, join, hubs)
-        return self._apply_aggregate(df, join, hubs)
-
-    def _join_hop(
-        self, df: DataFrame, join: JoinElement, hub: tuple[str, DataFrame]
-    ) -> DataFrame:
-        """``df`` LEFT JOIN the ``(name, frame)`` hub on ``join``'s hop,
-        every hub column landing as ``__<pathid>__<attr>`` — the name
-        rule SQL, aggregates and child hops read — and only those of
-        ``join.carry`` kept past the join (so a later checkpoint stores
-        no more than the rest of the plan reads)."""
-        dst = f"__{join.pathid}__"
-        side = self._broadcast_if_small(_prefix_all(hub[1], dst), [hub])
-        cond = self._relation_cond(join.hop, self._src_prefix(join), dst)
-        out = df.join(side, F.expr(cond), "left")
-        return out.drop(
-            *[c for c in side.columns if c[len(dst):] not in join.carry]
-        )
-
-    def _relation_cond(
-        self, hop: Hop, src_prefix: str, dst_prefix: str
-    ) -> str:
-        """The hop's predicate over prefixed columns: ``src_prefix`` on
-        the hop's source side, ``dst_prefix`` on its destination side."""
-        return render_relation(
-            hop,
-            lambda a: f"`{src_prefix}{a}`",
-            lambda a: f"`{dst_prefix}{a}`",
-            self._by_name[hop.dst],
-        )
-
-    @staticmethod
-    def _src_prefix(join: JoinElement) -> str:
-        """Prefix of the columns a hop joins from: its parent's hub
-        columns, or the in-flight source's bare columns for a first hop."""
-        return f"__{join.parent}__" if join.parent else ""
-
-    def _apply_lookup(
-        self,
-        df: DataFrame,
-        join: JoinElement,
-        hubs: dict[str, DataFrame],
-    ) -> DataFrame:
-        """One hop, flat; the final select drops its helper columns."""
-        hub = df if join.is_self else self._hub(join.hop.dst, hubs)
-        return self._join_hop(df, join, (join.hop.dst, hub))
-
-    def _agg_target_side(
-        self,
-        join: JoinElement,
-        hubs: dict[str, DataFrame],
-        df_self: DataFrame,
-    ) -> tuple[DataFrame, list[tuple[str, DataFrame]]]:
-        """The aggregation input: the M-target hub with all transit
-        sources pre-joined (SURVEY §7.3 — transit attrs referenced inside
-        the aggregate come from cardinality-1 paths *from the target*),
-        one :meth:`_join_hop` per transit element the planner registered,
-        and the (hub name, frame) pairs it reads.
-
-        For self-relation aggregates the target is the in-flight frame
-        ``df_self`` — the hub for the source being built does not exist
-        yet."""
-        m_hop = join.hop
-        target = df_self if join.is_self else self._hub(m_hop.dst, hubs)
-        reads = [(m_hop.dst, target)]
-        for tr in join.transits.values():
-            hub = (tr.hop.dst, self._hub(tr.hop.dst, hubs))
-            target = self._join_hop(target, tr, hub)
-            reads.append(hub)
-        return target, reads
-
-    def _apply_aggregate(
-        self,
-        df: DataFrame,
-        join: JoinElement,
-        hubs: dict[str, DataFrame],
-    ) -> DataFrame:
-        pid = join.pathid
-        keys = equi_keys(join.hop)
-        if keys is None or join.needs_row_fallback:
-            # arbitrary boolean M-hop predicate, or [This] values inside
-            # the aggregate: the groupBy-on-foreign-key rewrite doesn't
-            # apply; fall back to join + group on a synthetic row key
-            # (exact LATERAL semantics, more shuffle)
-            return self._apply_aggregate_rowkey(df, join, hubs)
-        target, reads = self._agg_target_side(join, hubs, df_self=df)
-        # group keys: the M-target side of each equi conjunct (dst side
-        # of the hop) over the target's bare columns
-        gb = [
-            F.expr(render_tokens(dst)).alias(f"__{pid}__k{j}")
-            for j, (_, dst) in enumerate(keys)
-        ]
-        aggs = [
-            F.expr(spec.call_sql()).alias(spec.out_col) for spec in join.aggs
-        ]
-        aggdf = self._broadcast_if_small(
-            target.groupBy(*gb).agg(*aggs), reads
-        )
-        # source-side exprs (the parent hop's columns past a first hop)
-        # == group keys
-        pref = self._src_prefix(join)
-        cond = " AND ".join(
-            f"({render_tokens(src, lambda a: f'`{pref}{a}`')}) "
-            f"= `__{pid}__k{j}`"
-            for j, (src, _) in enumerate(keys)
-        )
-        out = df.join(aggdf, F.expr(cond), "left")
-        return self._agg_empty_fixes(out, join)
-
-    def _agg_empty_fixes(self, out: DataFrame, join: JoinElement) -> DataFrame:
-        # LATERAL parity: empty correlated set -> 0 / [] instead of NULL
-        fixes: dict[str, Column] = {}
-        for spec in join.aggs:
-            if spec.call.func in EMPTY_ZERO:
-                fixes[spec.out_col] = F.coalesce(
-                    F.col(spec.out_col),
-                    F.lit(0).cast(dict(out.dtypes)[spec.out_col]),
-                )
-            elif spec.call.func in EMPTY_ARRAY:
-                dt = out.schema[spec.out_col].dataType
-                fixes[spec.out_col] = F.coalesce(
-                    F.col(spec.out_col), F.from_json(F.lit("[]"), dt)
-                )
-        if fixes:
-            out = out.withColumns(fixes)
-        return out
-
-    def _apply_aggregate_rowkey(
-        self,
-        df: DataFrame,
-        join: JoinElement,
-        hubs: dict[str, DataFrame],
-    ) -> DataFrame:
-        """Correlated aggregate via join + group on a synthetic row key.
-
-        Used when the M-hop predicate is non-equi (theta LATERAL) or the
-        aggregate's inner expression transits [This] values (row-correlated
-        — the foreign-key groupBy rewrite cannot express either).
-
-        The row key is monotonically_increasing_id(), only stable within
-        one materialization — the keyed frame is eagerly
-        ``localCheckpoint``-ed so the aggregate join and the final
-        re-attach read the *same* ids from stored blocks.  Unlike
-        ``persist()`` (lazy, evictable — a recomputed partition would
-        silently renumber rows), a lost checkpoint block fails the job
-        instead of mis-attaching aggregates; blocks are freed by the
-        ContextCleaner once the frame is unreferenced.  NULL semantics
-        match LATERAL exactly: no-match rows feed NULL target columns,
-        which count(col)/sum/min/max already skip.  Single-hop paths only.
-        """
-        m_hop = join.hop
-        if join.parent is not None:
-            raise ProjectError(
-                f"Multi-hop aggregation over relation "
-                f"{m_hop.relation.name!r} with theta predicates or "
-                "[This] transits is not supported"
-            )
-        pid = join.pathid
-        rid = f"__{pid}__rid"
-        keyed = df.withColumn(
-            rid, F.monotonically_increasing_id()
-        ).localCheckpoint(eager=True)
-        target, reads = self._agg_target_side(join, hubs, df_self=keyed)
-        target = self._broadcast_if_small(
-            _prefix_all(target, f"__{pid}_t__"), reads
-        )
-        cond = self._relation_cond(m_hop, "", f"__{pid}_t__")
-        joined = keyed.join(target, F.expr(cond), "left")
-        aggs = []
-        for spec in join.aggs:
-            # `__THIS__attr` -> our bare column; everything else (target
-            # cols and transit outputs) -> target prefix
-            def sub(m: re.Match) -> str:
-                name = m.group(1)
-                if name.startswith("__THIS__"):
-                    return f"`{name[len('__THIS__'):]}`"
-                return f"`__{pid}_t__{name}`"
-
-            inner = BACKTICKED.sub(sub, spec.inner_sql)
-            aggs.append(F.expr(spec.call_sql(inner)).alias(spec.out_col))
-        aggdf = joined.groupBy(rid).agg(*aggs)
-        out = keyed.join(aggdf, rid, "left").drop(rid)
-        return self._agg_empty_fixes(out, join)
 
     # ------------------------------------------------------------------
     # output compilation

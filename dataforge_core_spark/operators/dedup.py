@@ -1527,11 +1527,9 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
     from pyspark.sql.window import Window
 
-    from dataforge_core_spark.operators.text import _SPARK_TOK
-
     labels = dedup_cluster(spark, sf_dir)
     toks = read_table(spark, f"{sf_dir}/documents.parquet").selectExpr(
-        "doc_id", f"size({_SPARK_TOK}) AS n_tokens"
+        "doc_id", f"size({_SPARK_TOKENS}) AS n_tokens"
     )
     w = Window.partitionBy("cluster_id").orderBy(
         F.col("n_tokens").desc(), F.col("doc_id")
@@ -1544,8 +1542,6 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _keep_best_oracle() -> str:
-    from dataforge_core_spark.operators.text import _DUCK_TOK
-
     return f"""
 WITH RECURSIVE pairs AS ({_minhash_oracle()}),
 nodes AS (SELECT doc_id FROM documents),
@@ -1561,7 +1557,7 @@ reach AS (
 ),
 c AS (SELECT node AS doc_id, MIN(lab) AS cluster_id FROM reach GROUP BY node),
 t AS (
-  SELECT doc_id, CAST(len({_DUCK_TOK}) AS INTEGER) AS n_tokens
+  SELECT doc_id, CAST(len({_DUCK_TOKENS}) AS INTEGER) AS n_tokens
   FROM documents
 )
 SELECT c.cluster_id, c.doc_id, t.n_tokens,

@@ -1134,12 +1134,13 @@ def stream_ppl_gate(
     this with an explicit ungated-passthrough channel if short docs
     must be classified).  The oracle mirrors the same exclusion, so
     parity covers exactly the gated population."""
-    from dataforge_core_spark.operators.text import _ppl_model, _SPARK_TOK
+    from dataforge_core_spark.operators.dedup import _SPARK_TOKENS
+    from dataforge_core_spark.operators.text import _ppl_model
 
     mname, uname, ql_v, thr = _ppl_model(spark, sf_dir)
     bg = (
         _incoming_docs(spark, sf_dir, batch)
-        .selectExpr("doc_id", f"{_SPARK_TOK} AS tok")
+        .selectExpr("doc_id", f"{_SPARK_TOKENS} AS tok")
         .where("size(tok) >= 2")
         .selectExpr(
             "doc_id",
@@ -1174,18 +1175,18 @@ def stream_ppl_gate(
 
 
 def _ppl_gate_oracle() -> str:
-    from dataforge_core_spark.operators.dedup import INCR_MOD, INCR_NEW_GE
-    from dataforge_core_spark.operators.text import (
-        _DUCK_TOK,
-        _qlog2,
-        PPL_KEEP_PCT,
+    from dataforge_core_spark.operators.dedup import (
+        _DUCK_TOKENS,
+        INCR_MOD,
+        INCR_NEW_GE,
     )
+    from dataforge_core_spark.operators.text import _qlog2, PPL_KEEP_PCT
 
     ql = lambda e: _qlog2("duck", e)  # noqa: E731
     corp = f"doc_id % {INCR_MOD} < {INCR_NEW_GE}"
     new = f"doc_id % {INCR_MOD} >= {INCR_NEW_GE}"
     return f"""
-WITH t AS (SELECT doc_id, {_DUCK_TOK} AS tok FROM documents),
+WITH t AS (SELECT doc_id, {_DUCK_TOKENS} AS tok FROM documents),
 bgall AS (
   SELECT doc_id, tok[i] AS w1, tok[i + 1] AS w2
   FROM t, unnest(generate_series(1, len(tok) - 1)) AS s(i)

@@ -13,6 +13,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from dataforge_core_spark.operators._store import stored
+# the corpus tokenizer is dedup's token base, split(_SPARK_NORM): the
+# explode-shaped text lanes are served from its checkpointed tokens
+from dataforge_core_spark.operators.dedup import _DUCK_TOKENS, _SPARK_TOKENS
 from dataforge_core_spark.session import session_key
 from dataforge_core_spark.sources.readers import read_table
 
@@ -32,20 +35,6 @@ def _view(spark: SparkSession, sf_dir: str) -> None:
     )
 
 
-# COALESCE(text, '') for the same reason as dedup._SPARK_NORM (round-9
-# advice): NULL text must tokenize identically on both engines (one
-# empty token), and it makes this tokenizer EXACTLY split(_SPARK_NORM)
-# — the precondition for serving the explode-shaped text lanes from
-# dedup's checkpointed token base (pinned by
-# test_text_tokenizer_matches_token_base).
-_SPARK_TOK = (
-    "split(lower(trim(regexp_replace(coalesce(text, ''),"
-    " '\\\\s+', ' '))), ' ')"
-)
-_DUCK_TOK = (
-    "string_split(lower(trim(regexp_replace(coalesce(text, ''),"
-    " '\\s+', ' ', 'g'))), ' ')"
-)
 
 
 # ---------------------------------------------------------------------------
@@ -115,9 +104,9 @@ def text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         f"""
         SELECT doc_id,
-               size({_SPARK_TOK}) AS n_tokens,
+               size({_SPARK_TOKENS}) AS n_tokens,
                length(text) AS text_len,
-               size(array_distinct({_SPARK_TOK})) AS n_unique_tokens
+               size(array_distinct({_SPARK_TOKENS})) AS n_unique_tokens
         FROM documents
         """
     )
@@ -125,9 +114,9 @@ def text_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _TOKENS_ORACLE = f"""
 SELECT doc_id,
-       CAST(len({_DUCK_TOK}) AS INTEGER) AS n_tokens,
+       CAST(len({_DUCK_TOKENS}) AS INTEGER) AS n_tokens,
        CAST(length(text) AS INTEGER) AS text_len,
-       CAST(len(list_distinct({_DUCK_TOK})) AS INTEGER) AS n_unique_tokens
+       CAST(len(list_distinct({_DUCK_TOKENS})) AS INTEGER) AS n_unique_tokens
 FROM documents
 """
 
@@ -138,7 +127,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     stop = _count_in("tok", _EN_STOP, "spark")
     return spark.sql(
         f"""
-        WITH t AS (SELECT doc_id, {_SPARK_TOK} AS tok FROM documents)
+        WITH t AS (SELECT doc_id, {_SPARK_TOKENS} AS tok FROM documents)
         SELECT doc_id,
                size(tok) AS n_tokens,
                CAST({stop} AS DOUBLE) / size(tok) AS stopword_ratio,
@@ -153,7 +142,7 @@ def text_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _QUALITY_ORACLE = f"""
-WITH t AS (SELECT doc_id, {_DUCK_TOK} AS tok FROM documents)
+WITH t AS (SELECT doc_id, {_DUCK_TOKENS} AS tok FROM documents)
 SELECT doc_id,
        CAST(len(tok) AS INTEGER) AS n_tokens,
        CAST({_count_in('tok', _EN_STOP, 'duck')} AS DOUBLE) / len(tok)
@@ -188,7 +177,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     _view(spark, sf_dir)
     return spark.sql(
         f"""
-        WITH t AS (SELECT doc_id, lang, {_SPARK_TOK} AS tok FROM documents)
+        WITH t AS (SELECT doc_id, lang, {_SPARK_TOKENS} AS tok FROM documents)
         SELECT doc_id, lang AS labeled_lang,
                {_langid_case('spark')} AS predicted_lang
         FROM t
@@ -197,7 +186,7 @@ def text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _LANGID_ORACLE = f"""
-WITH t AS (SELECT doc_id, lang, {_DUCK_TOK} AS tok FROM documents)
+WITH t AS (SELECT doc_id, lang, {_DUCK_TOKENS} AS tok FROM documents)
 SELECT doc_id, lang AS labeled_lang,
        {_langid_case('duck')} AS predicted_lang
 FROM t
@@ -218,7 +207,7 @@ def _langid_eval_sql(dialect: str) -> str:
     corpus the same artifact reads recall/precision per language).
     ONE corpus scan; everything after the per-doc argmax is three tiny
     aggregates."""
-    tok = _SPARK_TOK if dialect == "spark" else _DUCK_TOK
+    tok = _SPARK_TOKENS if dialect == "spark" else _DUCK_TOKENS
     div = "DIV" if dialect == "spark" else "//"
     return f"""
 WITH t AS (SELECT lang, {tok} AS tok FROM documents),
@@ -259,7 +248,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     _view(spark, sf_dir)
     return spark.sql(
         f"""
-        WITH t AS (SELECT doc_id, {_SPARK_TOK} AS tok, text FROM documents)
+        WITH t AS (SELECT doc_id, {_SPARK_TOKENS} AS tok, text FROM documents)
         SELECT doc_id,
                md5(lower(trim(regexp_replace(text, '\\\\s+', ' ')))) AS content_fp,
                md5(concat_ws('|', array_sort(array_distinct(
@@ -274,7 +263,7 @@ def text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _FINGERPRINT_ORACLE = f"""
-WITH t AS (SELECT doc_id, {_DUCK_TOK} AS tok, text FROM documents)
+WITH t AS (SELECT doc_id, {_DUCK_TOKENS} AS tok, text FROM documents)
 SELECT doc_id,
        md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS content_fp,
        md5(array_to_string(list_sort(list_distinct(
@@ -323,7 +312,7 @@ def _bigram_lm_sql(dialect: str, bg_src: str | None = None) -> str:
     BIGINT sum that cannot hash-differ across engines.  Consumers divide
     lp_sum_q / n_bigrams / 1e4 for the mean log2 probability."""
     if dialect == "spark":
-        t = f"SELECT doc_id, {_SPARK_TOK} AS tok FROM documents"
+        t = f"SELECT doc_id, {_SPARK_TOKENS} AS tok FROM documents"
         bg = """
           SELECT doc_id, element_at(tok, i) AS w1,
                  element_at(tok, i + 1) AS w2
@@ -333,7 +322,7 @@ def _bigram_lm_sql(dialect: str, bg_src: str | None = None) -> str:
         if bg_src is not None:
             bg = bg_src
     else:
-        t = f"SELECT doc_id, {_DUCK_TOK} AS tok FROM documents"
+        t = f"SELECT doc_id, {_DUCK_TOKENS} AS tok FROM documents"
         bg = """
           SELECT doc_id, tok[i] AS w1, tok[i + 1] AS w2
           FROM t, unnest(generate_series(1, len(tok) - 1)) AS s(i)
@@ -412,15 +401,15 @@ def _entropy_sql(dialect: str, flat_src: str | None = None) -> str:
     """``flat_src``: optional (doc_id, term) relation SQL — the Spark
     lane passes the checkpointed token base (identical rows to the
     inline explode: the base IS posexplode(split(_SPARK_NORM)) and
-    _SPARK_TOK == split(_SPARK_NORM), tokenizer-parity-tested); the
+    _SPARK_TOKENS == split(_SPARK_NORM), tokenizer-parity-tested); the
     DuckDB oracle always re-derives inline."""
     if dialect == "spark":
         flat = flat_src or (
-            f"SELECT doc_id, explode({_SPARK_TOK}) AS term FROM documents"
+            f"SELECT doc_id, explode({_SPARK_TOKENS}) AS term FROM documents"
         )
         idiv = "DIV"
     else:
-        flat = f"SELECT doc_id, unnest({_DUCK_TOK}) AS term FROM documents"
+        flat = f"SELECT doc_id, unnest({_DUCK_TOKENS}) AS term FROM documents"
         idiv = "//"
     return f"""
 WITH tf AS (
@@ -763,7 +752,7 @@ def text_tokens_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
         WITH p AS (
           SELECT doc_id,
                  regexp_extract_all(text, '{_BPE_RE_SPARK}', 0) AS pieces,
-                 size({_SPARK_TOK}) AS n_words
+                 size({_SPARK_TOKENS}) AS n_words
           FROM documents
         )
         SELECT doc_id,
@@ -782,7 +771,7 @@ _TOKENS_BPE_ORACLE = f"""
 WITH p AS (
   SELECT doc_id,
          regexp_extract_all(text, '{_BPE_RE_DUCK}') AS pieces,
-         len({_DUCK_TOK}) AS n_words
+         len({_DUCK_TOKENS}) AS n_words
   FROM documents
 )
 SELECT doc_id,
@@ -902,7 +891,7 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""
         WITH tf AS (
           SELECT doc_id, term, COUNT(*) AS tf
-          FROM (SELECT doc_id, explode({_SPARK_TOK}) AS term
+          FROM (SELECT doc_id, explode({_SPARK_TOKENS}) AS term
                 FROM documents)
           GROUP BY term, doc_id
         ),
@@ -932,7 +921,7 @@ def text_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
 _TFIDF_ORACLE = f"""
 WITH tf AS (
   SELECT doc_id, term, COUNT(*) AS tf
-  FROM (SELECT doc_id, unnest({_DUCK_TOK}) AS term FROM documents)
+  FROM (SELECT doc_id, unnest({_DUCK_TOKENS}) AS term FROM documents)
   GROUP BY doc_id, term
 ),
 df AS (
@@ -978,7 +967,7 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""
         WITH c AS (
           SELECT doc_id,
-                 size({_SPARK_TOK}) AS n_words,
+                 size({_SPARK_TOKENS}) AS n_words,
                  GREATEST(size(regexp_extract_all(text, '[.!?]+', 0)), 1)
                    AS n_sentences,
                  size(regexp_extract_all(lower(text), '[aeiouy]+', 0))
@@ -997,7 +986,7 @@ def text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
 _READABILITY_ORACLE = f"""
 WITH c AS (
   SELECT doc_id,
-         CAST(len({_DUCK_TOK}) AS INTEGER) AS n_words,
+         CAST(len({_DUCK_TOKENS}) AS INTEGER) AS n_words,
          CAST(GREATEST(len(regexp_extract_all(text, '[.!?]+')), 1)
               AS INTEGER) AS n_sentences,
          CAST(len(regexp_extract_all(lower(text), '[aeiouy]+'))
@@ -1456,10 +1445,10 @@ QL_KEEP_MILLI = 1000000  # shifted-score keep threshold (score >= 0)
 
 def _quality_linear_sql(dialect: str) -> str:
     if dialect == "spark":
-        tok, div = _SPARK_TOK, "DIV"
+        tok, div = _SPARK_TOKENS, "DIV"
         bkt = "CAST(conv(substr(md5(t), 1, 8), 16, 10) AS BIGINT)"
     else:
-        tok, div = _DUCK_TOK, "//"
+        tok, div = _DUCK_TOKENS, "//"
         bkt = "('0x' || substr(md5(t), 1, 8))::BIGINT"
     un = (
         f"SELECT doc_id, explode({tok}) AS t FROM documents"
@@ -1529,7 +1518,7 @@ def _gopher_feats(dialect: str) -> tuple[list[str], str, str]:
     fragments over the file stream)."""
     if dialect == "spark":
         norm = "lower(trim(regexp_replace(text, '\\\\s+', ' ')))"
-        tok = _SPARK_TOK
+        tok = _SPARK_TOKENS
         size, contains = "size", "array_contains"
         rxcount = "regexp_count({s}, {p})"
         # Spark's string literal parser eats one backslash level
@@ -1540,7 +1529,7 @@ def _gopher_feats(dialect: str) -> tuple[list[str], str, str]:
         n_lines = "size(split(text, '\\\\n'))"
     else:
         norm = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
-        tok = _DUCK_TOK
+        tok = _DUCK_TOKENS
         size, contains = "len", "list_contains"
         rxcount = "len(regexp_extract_all({s}, {p}))"
         p_alpha = "' [^ ]*[a-z][^ ]* '"
@@ -1637,13 +1626,13 @@ def _quality_calibration_sql(dialect: str) -> str:
     would have a never-firing label column.)  ONE corpus scan: the
     label and the exploded token score derive from the same tokenize."""
     if dialect == "spark":
-        tok = _SPARK_TOK
+        tok = _SPARK_TOKENS
         bkt = "CAST(conv(substr(md5(t), 1, 8), 16, 10) AS BIGINT)"
         ex = "explode(tok) AS t"
         div = "DIV"
         size, dis = "size", "array_distinct"
     else:
-        tok = _DUCK_TOK
+        tok = _DUCK_TOKENS
         bkt = "('0x' || substr(md5(t), 1, 8))::BIGINT"
         ex = "unnest(tok) AS t"
         div = "//"

@@ -27,9 +27,14 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from dataforge_core_spark.operators.dedup import _duck_ex_sql, _ex_df
+from dataforge_core_spark.operators.dedup import (
+    _DUCK_TOKENS,
+    _SPARK_TOKENS,
+    _duck_ex_sql,
+    _ex_df,
+)
 from dataforge_core_spark.operators._store import stored
-from dataforge_core_spark.operators.text import _DUCK_TOK, _SPARK_TOK, _view
+from dataforge_core_spark.operators.text import _view
 from dataforge_core_spark.sources.readers import read_table
 
 TOKEN_BUDGET = 2048  # context-window size in tokens
@@ -48,7 +53,7 @@ def _pack_sql(dialect: str, token_budget: int = TOKEN_BUDGET) -> str:
     shard, far above any reachable packs-per-shard count)."""
     if token_budget < 1:
         raise ValueError(f"token_budget must be >= 1, got {token_budget}")
-    tok = _SPARK_TOK if dialect == "spark" else _DUCK_TOK
+    tok = _SPARK_TOKENS if dialect == "spark" else _DUCK_TOKENS
     length = "size" if dialect == "spark" else "len"
     int_t = "INT" if dialect == "spark" else "INTEGER"
     return f"""
@@ -99,7 +104,7 @@ def _top_tokens_sql(dialect: str, k: int = TOP_K) -> str:
         # lane docstring
         return f"""
 WITH tok AS (
-  SELECT explode({_SPARK_TOK}) AS token FROM documents
+  SELECT explode({_SPARK_TOKENS}) AS token FROM documents
 ),
 counts AS (
   SELECT token, COUNT(*) AS n FROM tok
@@ -113,7 +118,7 @@ SELECT token, n, CAST(rank AS INT) AS rank FROM (
 """
     return f"""
 WITH tok AS (
-  SELECT unnest({_DUCK_TOK}) AS token FROM documents
+  SELECT unnest({_DUCK_TOKENS}) AS token FROM documents
 ),
 counts AS (
   SELECT token, COUNT(*) AS n FROM tok WHERE token <> '' GROUP BY token
@@ -351,7 +356,7 @@ def train_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""
         WITH e AS (
           SELECT doc_id, pos, tk
-          FROM (SELECT doc_id, {_SPARK_TOK} AS tok FROM documents)
+          FROM (SELECT doc_id, {_SPARK_TOKENS} AS tok FROM documents)
           LATERAL VIEW posexplode(tok) AS pos, tk
         ),
         tri AS (
@@ -386,9 +391,9 @@ def train_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
 # re-evaluation concern) — range(1, len-1) is end-exclusive, so short
 # docs yield [] and both engines agree on n_trigrams = 0
 _DUCK_TRI = (
-    f"list_transform(range(1, greatest(len({_DUCK_TOK}) - 1, 1)), "
-    f"i -> {_DUCK_TOK}[i] || ' ' || {_DUCK_TOK}[i + 1] || ' ' || "
-    f"{_DUCK_TOK}[i + 2])"
+    f"list_transform(range(1, greatest(len({_DUCK_TOKENS}) - 1, 1)), "
+    f"i -> {_DUCK_TOKENS}[i] || ' ' || {_DUCK_TOKENS}[i + 1] || ' ' || "
+    f"{_DUCK_TOKENS}[i + 2])"
 )
 
 _REPETITION_ORACLE = f"""
@@ -423,7 +428,7 @@ def _chunk_sql(
     if dialect == "spark":
         return f"""
 WITH t AS (
-  SELECT doc_id, {_SPARK_TOK} AS tok FROM documents
+  SELECT doc_id, {_SPARK_TOKENS} AS tok FROM documents
 ),
 c AS (
   SELECT doc_id, tok,
@@ -443,7 +448,7 @@ FROM c
 """
     return f"""
 WITH t AS (
-  SELECT doc_id, {_DUCK_TOK} AS tok FROM documents
+  SELECT doc_id, {_DUCK_TOKENS} AS tok FROM documents
 ),
 c AS (
   SELECT doc_id, tok, unnest(generate_series(
@@ -601,7 +606,7 @@ WHERE {u} < r.rate_bp
 
 
 def _card_sql(dialect: str) -> str:
-    tok = _SPARK_TOK if dialect == "spark" else _DUCK_TOK
+    tok = _SPARK_TOKENS if dialect == "spark" else _DUCK_TOKENS
     idiv = "DIV" if dialect == "spark" else "//"
     return f"""
 WITH t AS (
@@ -649,7 +654,7 @@ def train_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         f"""
         WITH t AS (
-          SELECT size({_SPARK_TOK}) AS n FROM documents
+          SELECT size({_SPARK_TOKENS}) AS n FROM documents
         )
         SELECT CAST(length(bin(n)) - 1 AS INT) AS bucket,
                COUNT(*) AS n_docs, SUM(n) AS n_tokens
@@ -660,7 +665,7 @@ def train_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _LENGTH_HIST_ORACLE = f"""
 WITH t AS (
-  SELECT len({_DUCK_TOK}) AS n FROM documents
+  SELECT len({_DUCK_TOKENS}) AS n FROM documents
 )
 SELECT CAST(length(printf('%b', n)) - 1 AS INTEGER) AS bucket,
        COUNT(*) AS n_docs, CAST(SUM(n) AS BIGINT) AS n_tokens
@@ -710,14 +715,14 @@ def _span_sql(
     objective, swept when retargeting noise density (r15)."""
     _check_span_dials(rate_pct, span_max)
     if dialect == "spark":
-        tok, flat, div = _SPARK_TOK, "explode(sequence(1, n))", "DIV"
+        tok, flat, div = _SPARK_TOKENS, "explode(sequence(1, n))", "DIV"
         h = (
             "CAST(conv(substr(md5(concat(CAST(doc_id AS STRING), ':', "
             "CAST(i AS STRING))), 1, 8), 16, 10) AS BIGINT)"
         )
         itype, lenf = "INT", "size"
     else:
-        tok, flat, div = _DUCK_TOK, "unnest(generate_series(1, n))", "//"
+        tok, flat, div = _DUCK_TOKENS, "unnest(generate_series(1, n))", "//"
         h = (
             "('0x' || substr(md5(CAST(doc_id AS VARCHAR) || ':' ||"
             " CAST(i AS VARCHAR)), 1, 8))::BIGINT"
@@ -769,7 +774,7 @@ _SPAN_ORACLE = _span_sql("duck")
 def train_curriculum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sharded curriculum rank: quality tier desc, then hash-shuffled."""
     _view(spark, sf_dir)
-    tok = f"size({_SPARK_TOK})"
+    tok = f"size({_SPARK_TOKENS})"
     return spark.sql(
         f"""
         WITH t AS (
@@ -793,8 +798,8 @@ _CURRICULUM_ORACLE = f"""
 WITH t AS (
   SELECT doc_id,
          CAST(doc_id % {N_SHARDS} AS INTEGER) AS shard,
-         CASE WHEN len({_DUCK_TOK}) BETWEEN 20 AND 1000 THEN 2
-              WHEN len({_DUCK_TOK}) >= 10 THEN 1 ELSE 0 END AS tier,
+         CASE WHEN len({_DUCK_TOKENS}) BETWEEN 20 AND 1000 THEN 2
+              WHEN len({_DUCK_TOKENS}) >= 10 THEN 1 ELSE 0 END AS tier,
          CAST({_DUCK_U} AS INTEGER) AS draw
   FROM documents
 )
@@ -835,7 +840,7 @@ def train_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.sql(
         f"""
         WITH s AS (
-          SELECT size({_SPARK_TOK}) AS n,
+          SELECT size({_SPARK_TOKENS}) AS n,
                  CAST(conv(substr(md5(CAST(doc_id AS STRING)), 1, 14),
                            16, 10) AS BIGINT) % {N_SHARDS} AS shard
           FROM documents
@@ -848,7 +853,7 @@ def train_shard_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _SHARD_ORACLE = f"""
 WITH s AS (
-  SELECT len({_DUCK_TOK}) AS n,
+  SELECT len({_DUCK_TOKENS}) AS n,
          ('0x' || substr(md5(CAST(doc_id AS VARCHAR)), 1, 14))::BIGINT
            % {N_SHARDS} AS shard
   FROM documents
@@ -888,8 +893,8 @@ def train_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = dedup_cluster(spark, sf_dir)
     toks = read_table(spark, f"{sf_dir}/documents.parquet").selectExpr(
         "doc_id",
-        f"size({_SPARK_TOK}) AS n_tokens",
-        f"size(array_distinct({_SPARK_TOK})) AS n_distinct",
+        f"size({_SPARK_TOKENS}) AS n_tokens",
+        f"size(array_distinct({_SPARK_TOKENS})) AS n_distinct",
     )
     base = ex.join(labels, "doc_id").join(toks, "doc_id")
     # pass_neardup in ONE window pass, no self-join (r15 opt round,
@@ -938,8 +943,8 @@ ex AS (
   FROM (SELECT doc_id, md5({_DUCK_NORM}) AS k FROM documents)
 ),
 t AS (
-  SELECT doc_id, CAST(len({_DUCK_TOK}) AS INTEGER) AS n_tokens,
-         CAST(len(list_distinct({_DUCK_TOK})) AS INTEGER) AS n_distinct
+  SELECT doc_id, CAST(len({_DUCK_TOKENS}) AS INTEGER) AS n_tokens,
+         CAST(len(list_distinct({_DUCK_TOKENS})) AS INTEGER) AS n_distinct
   FROM documents
 ),
 base AS (
@@ -984,7 +989,7 @@ def train_pack_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"""
         WITH t AS (
           SELECT CAST(doc_id % {N_SHARDS} AS INT) AS shard,
-                 size({_SPARK_TOK}) AS n
+                 size({_SPARK_TOKENS}) AS n
           FROM documents
         ),
         s AS (
@@ -1004,7 +1009,7 @@ def train_pack_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PACK_EFFICIENCY_ORACLE = f"""
 WITH t AS (
   SELECT CAST(doc_id % {N_SHARDS} AS INTEGER) AS shard,
-         len({_DUCK_TOK}) AS n
+         len({_DUCK_TOKENS}) AS n
   FROM documents
 ),
 s AS (
@@ -1206,7 +1211,7 @@ def _dsir_feats(dialect: str) -> str:
     if dialect == "spark":
         return f"""
   SELECT doc_id, f FROM (
-    SELECT doc_id, {_SPARK_TOK} AS t FROM documents
+    SELECT doc_id, {_SPARK_TOKENS} AS t FROM documents
   ) LATERAL VIEW explode(concat(t,
       zip_with(slice(t, 1, greatest(size(t) - 1, 0)),
                slice(t, 2, greatest(size(t) - 1, 0)),
@@ -1214,10 +1219,10 @@ def _dsir_feats(dialect: str) -> str:
 """
     return f"""
   SELECT doc_id, unnest(t) AS f
-  FROM (SELECT doc_id, {_DUCK_TOK} AS t FROM documents)
+  FROM (SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents)
   UNION ALL
   SELECT doc_id, t[i] || ' ' || t[i + 1] AS f
-  FROM (SELECT doc_id, {_DUCK_TOK} AS t FROM documents),
+  FROM (SELECT doc_id, {_DUCK_TOKENS} AS t FROM documents),
        unnest(generate_series(1, len(t) - 1)) AS s(i)
 """
 

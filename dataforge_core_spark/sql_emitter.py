@@ -7,12 +7,9 @@ This emitter produces the same artifact shape from our plans:
 - per source: ``DROP TABLE IF EXISTS hub; CREATE TABLE hub AS WITH cte0
   AS (...), cte1 AS (...) SELECT ... FROM cteN`` — CTE levels mirror the
   planner's stratification (u_enr_query_generate_query.sql:45-99,121-142)
-- lookup joins: one ``LEFT JOIN <hub> J_<prefix> ON <pred>`` per
-  relation-path prefix, a later hop's [This] side its parent's alias
-  (u_enr_query_add_join.sql:74-97) — hub *tables*, enforcing the same
-  build-order dependency as the reference (S2)
-- aggregate paths: the decorrelated ``LEFT JOIN (SELECT keys, aggs FROM
-  hub GROUP BY keys)`` form (the rewrite of J5's LEFT JOIN LATERAL)
+- each level's join SELECT and rule SELECT come from plans/render.py,
+  the SQL the DataFrame compiler runs too; here they read hub *tables*,
+  enforcing the same build-order dependency as the reference (S2)
 - per output: SELECT/WHERE/GROUP BY/UNION ALL
   (u_output_generate_query.sql:88-155)
 - run.sql: all source statements in topological order, then outputs
@@ -32,25 +29,12 @@ from dataforge_core_spark.model import (
     HIVE_TO_SPARK_DDL,
     Output,
     Project,
-    ProjectError,
     Source,
 )
 from dataforge_core_spark.paths import RelationGraph
 from dataforge_core_spark.plans.outputs import plan_output
-from dataforge_core_spark.plans.planner import (
-    EMPTY_ARRAY,
-    EMPTY_ZERO,
-    JoinElement,
-    build_levels,
-    plan_source,
-    status_case_sql,
-)
-from dataforge_core_spark.plans.predicates import (
-    equi_keys,
-    render_relation,
-    render_tokens,
-)
-from dataforge_core_spark.plans.subsource import sub_source_sql
+from dataforge_core_spark.plans.planner import build_levels, plan_source
+from dataforge_core_spark.plans.render import HubRenderer
 
 
 class SqlEmitter:
@@ -118,82 +102,31 @@ class SqlEmitter:
             for a in source.raw_attributes
         )
         ctes = [f"cte0 AS (\n  SELECT\n    {raw_cols}\n  FROM {self._table(source)}\n)"]
-        applied: set[str] = set()
-        computed = {a.name for a in source.raw_attributes}
+        r = HubRenderer(self.project, self.graph, plan)
         prev = "cte0"
 
-        for li, level in enumerate(plan.levels, start=1):
-            joins_sql = []
-            transit_cols = []
-            # joins whose deps are satisfied attach before this level, in
-            # a CTE of their own; their outputs become transit columns
-            # (C5 — u_enr_query_add_transit) named exactly as the
-            # planner's helper refs, so rule SQL uses them verbatim, and
-            # the level's rules read one relation, where a bare [This]
-            # column cannot clash with a joined hub's
-            batch: set[str] = set()
-            for join in plan.take_ready(applied, computed):
-                jsql, jcols = self._emit_join(join, prev, batch)
-                batch.add(join.pathid)
-                joins_sql.append(jsql)
-                transit_cols.extend(jcols)
-            if joins_sql:
-                ctes.append(
-                    f"cte{li}j AS (\n  SELECT\n    "
-                    + ",\n    ".join([f"{prev}.*"] + transit_cols)
-                    + f"\n  FROM {prev}\n  "
-                    + "\n  ".join(joins_sql)
-                    + "\n)"
-                )
-                prev = f"cte{li}j"
-            types = self._rule_types()
-            rule_cols = []
-            for name in level:
-                el = plan.rules[name]
-                expr = el.compiled_sql
-                if el.rule.cast_datatype:
-                    ddl = HIVE_TO_SPARK_DDL.get(
-                        el.rule.cast_datatype, el.rule.cast_datatype
-                    )
-                    expr = f"CAST({expr} AS {ddl})"
-                elif types.get((source.source_name, name)) == "decimal":
-                    # P3 decimal normalization, as in the DataFrame path
-                    expr = f"CAST({expr} AS decimal(38,12))"
-                rule_cols.append(f"{expr} AS `{name}`")
-            ctes.append(
-                f"cte{li} AS (\n  SELECT\n    "
-                + ",\n    ".join([f"{prev}.*"] + rule_cols)
-                + f"\n  FROM {prev}\n)"
-            )
-            computed |= set(level)
-            prev = f"cte{li}"
+        def fill(text: str) -> str:
+            return text.format(prev=prev, **r.relations(self._hub))
 
-        final_cols = [f"`{a.name}`" for a in source.raw_attributes]
-        final_cols += [f"`{r.name}`" for r in source.rules]
-        # sub-source enrichments (§2.11) — shared SQL with the compiler
-        for sub in self.project.sources:
-            if sub.sub_source_parent == source.source_name:
-                final_cols.append(
-                    f"{sub_source_sql(self.project, self.graph, sub)} "
-                    f"AS `{sub.source_name}`"
-                )
-        status = status_case_sql(source)
-        # uv flags are window exprs — emit in the final select
-        uv_sql = "".join(
-            f",\n  (COUNT(1) OVER (PARTITION BY `{r.name}`) = 1) "
-            f"AS `{r.name}_uv_flag`"
-            for r in source.rules
-            if r.unique
-        )
-        body = (
-            "WITH "
-            + ",\n".join(ctes)
-            + "\nSELECT\n  "
-            + ",\n  ".join(final_cols)
-            + uv_sql
-            + (f",\n  {status} AS s_validation_status_code" if status else "")
-            + f"\nFROM {prev}"
-        )
+        types = self._rule_types()
+        # each level's joins attach in a CTE of their own (cte<n>j), so the
+        # level's rules read one relation, where a bare [This] column
+        # cannot clash with a joined hub's
+        for li, level in enumerate(r.levels(), start=1):
+            if level.joins:
+                sql = fill(r.join_select(level.joins))
+                ctes.append(f"cte{li}j AS (\n{sql}\n)")
+                prev = f"cte{li}j"
+            # P3 decimal normalization from the probe types, as the
+            # DataFrame path reads it off each level's types
+            decimals = {
+                n for n in level.rules
+                if types.get((source.source_name, n)) == "decimal"
+            }
+            sql = fill(r.rule_select(level.rules, decimals))
+            ctes.append(f"cte{li} AS (\n{sql}\n)")
+            prev = f"cte{li}"
+        body = "WITH " + ",\n".join(ctes) + "\n" + fill(r.final_select())
         keys = self.bucket_by.get(source.source_name)
         if keys:
             # bucketed hub DDL — same property the runner's
@@ -211,84 +144,6 @@ class SqlEmitter:
             f"DROP TABLE IF EXISTS {source.target_table};\n"
             f"{create}{body};\n"
         )
-
-    def _emit_join(
-        self, join: JoinElement, prev: str, batch: set[str]
-    ) -> tuple[str, list[str]]:
-        """-> (the hop's LEFT JOIN clause, transit select items
-        `__pid__x` names).  The hop's source side is ``prev`` (the
-        previous CTE) for a first hop, else its parent's alias when the
-        parent joins in the same CTE (``batch``), else the parent's
-        carried `__<parent>__x` columns of ``prev``."""
-        pid = join.pathid
-        hop = join.hop
-        qual, pref = prev, ""
-        if join.parent in batch:
-            qual = f"J_{join.parent}"
-        elif join.parent is not None:
-            pref = f"__{join.parent}__"
-
-        def src_col(a: str) -> str:
-            return f"{qual}.`{pref}{a}`"
-
-        # a hop back to the source being built reads the in-flight CTE
-        hub = prev if join.is_self else self._hub(hop.dst)
-
-        if join.kind == "lookup":
-            pred = render_relation(
-                hop,
-                src_col,
-                lambda a: f"J_{pid}.`{a}`",
-                self.by_name[hop.dst],
-            )
-            transits = [
-                f"J_{pid}.`{a}` AS `__{pid}__{a}`" for a in sorted(join.carry)
-            ]
-            return (f"LEFT JOIN {hub} J_{pid} ON {pred}", transits)
-
-        # aggregate join: decorrelated GROUP BY subquery (J5 rewrite)
-        keys = equi_keys(hop)
-        if keys is None:
-            # the DataFrame compiler has a row-key fallback; the SQL
-            # artifact keeps the decorrelated GROUP BY form only
-            raise ProjectError(
-                "SQL emission for non-equi aggregate relation "
-                f"{hop.relation.name!r} is not supported; use the "
-                "DataFrame runner for theta aggregates"
-            )
-        if join.transits or join.needs_row_fallback:
-            raise ProjectError(
-                "SQL emission for aggregates with transit/[This] "
-                f"attributes over relation {hop.relation.name!r} is not "
-                "supported; use the DataFrame runner"
-            )
-        group_sql = [render_tokens(dst) for _, dst in keys]
-        key_sql = [f"{g} AS k{j}" for j, g in enumerate(group_sql)]
-        aggs = ", ".join(
-            f"{spec.call_sql()} AS `a{k}`" for k, spec in enumerate(join.aggs)
-        )
-        sub = (
-            f"(SELECT {', '.join(key_sql)}, {aggs} FROM {hub} "
-            f"GROUP BY {', '.join(group_sql)})"
-        )
-        conds = " AND ".join(
-            f"({render_tokens(src, src_col)}) "
-            f"= J_{pid}.k{j}"
-            for j, (src, _) in enumerate(keys)
-        )
-        # transits: expose agg results under the planner's helper names,
-        # with LATERAL empty-set parity (compiler._agg_empty_fixes):
-        # count-family -> 0, array-family -> [] (Spark coerces the bare
-        # array() literal to the column's element type in coalesce)
-        transits = []
-        for k, spec in enumerate(join.aggs):
-            expr = f"J_{pid}.`a{k}`"
-            if spec.call.func in EMPTY_ZERO:
-                expr = f"coalesce({expr}, 0)"
-            elif spec.call.func in EMPTY_ARRAY:
-                expr = f"coalesce({expr}, array())"
-            transits.append(f"{expr} AS `{spec.out_col}`")
-        return (f"LEFT JOIN {sub} J_{pid} ON {conds}", transits)
 
     # ------------------------------------------------------------------
     def emit_output(self, output: Output) -> str:

@@ -1,6 +1,7 @@
 #!/usr/bin/env python
-"""Isolate bench lanes: replicate bench.py's warmup + index phases,
-then time the requested lanes N times each (noop sink), printing
+"""Isolate bench lanes: replicate bench.py's warmup, run each requested
+lane once untimed (which builds the stored indexes that lane reads, and
+no others), then time the lanes N times each (noop sink), printing
 per-run seconds, Spark jobs started, and the CPU of the JVM's reaped
 child processes (cutime + cstime in /proc/<jvm>/stat: the chmod and
 readlink forks Hadoop's local file system makes without libhadoop).
@@ -10,8 +11,9 @@ fork cost without a custom harness.
 
 Usage: python scripts/lane_probe.py [--runs N] [--sleep S] lane [lane ...]
   --runs N    runs per lane (default 6)
-  --sleep S   seconds to sleep between index phase and queries
-              (default 0; use e.g. 60 to let JIT/cleaner churn settle)
+  --sleep S   seconds to sleep between the untimed calls and the timed
+              runs (default 0; use e.g. 60 to let JIT/cleaner churn
+              settle)
 Env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS as bench.py.
 """
 
@@ -47,14 +49,19 @@ def main() -> None:
     spark = get_spark(app_name="lane_probe")
     qs = entry.queries()
 
-    # phase 1+2 exactly as bench.py
+    def run(name: str) -> None:
+        qs[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+
+    # bench.py's warmup, then one untimed call per lane in place of
+    # bench's whole index phase
     spark.read.parquet(f"{sf_dir}/region.parquet").write.format(
         "noop"
     ).mode("overwrite").save()
     _store.clear_all(spark)
     t0 = time.perf_counter()
-    _, wall = bench._run_index_builds(spark)
-    print(f"index phase wall {wall:.1f}s", flush=True)
+    for name in lanes:
+        run(name)
+    print(f"untimed first calls wall {time.perf_counter() - t0:.1f}s", flush=True)
     if settle:
         time.sleep(settle)
 
@@ -70,14 +77,11 @@ def main() -> None:
 
     out = {}
     for name in lanes:
-        q = qs[name]
         rs, jobs, child = [], [], []
         for _ in range(runs):
             ids, c = set(tracker.getJobIdsForGroup()), reaped_child_cpu()
             t = time.perf_counter()
-            q(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            run(name)
             rs.append(round(time.perf_counter() - t, 3))
             jobs.append(len(set(tracker.getJobIdsForGroup()) - ids))
             child.append(round(reaped_child_cpu() - c, 2))

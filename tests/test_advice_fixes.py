@@ -593,17 +593,19 @@ def test_tokenizer_null_text_keeps_a_row(spark):
 
 
 def test_text_tokenizer_matches_token_base():
-    """text._SPARK_TOK / _DUCK_TOK must stay EXACTLY split(dedup's
-    shared normalization): text_entropy / text_bigram_lm serve their
+    """The text and training lanes tokenize with dedup's token base
+    itself, split(_SPARK_NORM): text_entropy / text_bigram_lm serve their
     token streams from dedup's checkpointed token base, which is
-    posexplode(split(_SPARK_NORM)) — a drift between the two families'
-    normalizations would silently change those lanes' semantics."""
-    from dataforge_core_spark.operators import dedup, text
+    posexplode(split(_SPARK_NORM)).  One definition, so the two
+    families' normalizations cannot drift apart."""
+    from dataforge_core_spark.operators import dedup, text, training
 
-    assert text._SPARK_TOK == f"split({dedup._SPARK_NORM}, ' ')"
-    assert text._DUCK_TOK == f"string_split({dedup._DUCK_NORM}, ' ')"
-    assert dedup._SPARK_TOKENS == text._SPARK_TOK
-    assert dedup._DUCK_TOKENS == text._DUCK_TOK
+    assert dedup._SPARK_TOKENS == f"split({dedup._SPARK_NORM}, ' ')"
+    assert dedup._DUCK_TOKENS == f"string_split({dedup._DUCK_NORM}, ' ')"
+    for mod in (text, training):
+        assert mod._SPARK_TOKENS is dedup._SPARK_TOKENS
+        assert mod._DUCK_TOKENS is dedup._DUCK_TOKENS
+        assert not hasattr(mod, "_SPARK_TOK") and not hasattr(mod, "_DUCK_TOK")
 
 
 def test_narrow_session_isolates_shuffle_width(spark):

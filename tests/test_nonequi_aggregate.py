@@ -5,13 +5,14 @@ pure equi-conjunction."""
 from __future__ import annotations
 
 
-def test_theta_aggregate(spark, sf_dir):
+def _theta_project(sf_dir):
+    """cust counts and sums its orders priced above its own account
+    balance: an M-hop predicate that is not a pure equi-conjunction."""
     from dataforge_core_spark.loader import (
         parse_relations_list,
         parse_source_dict,
     )
     from dataforge_core_spark.model import Project
-    from dataforge_core_spark.runner import ProjectRunner
 
     cust = parse_source_dict(
         {
@@ -45,7 +46,13 @@ def test_theta_aggregate(spark, sf_dir):
             }
         ]
     )
-    project = Project(sources=[cust, ord_src], relations=rels)
+    return Project(sources=[cust, ord_src], relations=rels)
+
+
+def test_theta_aggregate(spark, sf_dir):
+    from dataforge_core_spark.runner import ProjectRunner
+
+    project = _theta_project(sf_dir)
     hubs = ProjectRunner(spark, project, persist_hubs=False).build()
     got = {
         r["c_custkey"]: (r["big_order_count"], r["big_order_total"])
@@ -68,3 +75,15 @@ def test_theta_aggregate(spark, sf_dir):
     }
     assert got == expect
     assert any(v[0] > 0 for v in got.values())
+
+
+def test_theta_aggregate_sql_emission_is_a_project_error(sf_dir, tmp_path):
+    """run.sql has no stable row key to group a theta aggregate on; the
+    emitter says so with a ProjectError naming the relation."""
+    import pytest
+
+    from dataforge_core_spark.model import ProjectError
+    from dataforge_core_spark.sql_emitter import SqlEmitter
+
+    with pytest.raises(ProjectError, match=r"theta predicates.*big"):
+        SqlEmitter(_theta_project(sf_dir)).emit_all(str(tmp_path))

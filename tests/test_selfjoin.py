@@ -157,3 +157,91 @@ def test_two_hop_self_paths(spark, sf_dir, tmp_path):
     finally:
         spark.sql("DROP TABLE IF EXISTS enriched_orders_sp")
     assert got == expect
+
+
+def test_self_hop_on_unique_rule(spark, sf_dir, tmp_path):
+    """A self hop whose predicate reads a ``unique`` rule is guarded by
+    that rule's ``_uv_flag``, which both back ends compute in the rule's
+    own level, before the hop joins the in-flight relation: the runner
+    frame, the run.sql table and a hand-written join agree."""
+    import shutil
+
+    from dataforge_core_spark.loader import (
+        parse_relations_list,
+        parse_source_dict,
+    )
+    from dataforge_core_spark.model import Project
+    from dataforge_core_spark.runner import ProjectRunner
+    from dataforge_core_spark.sql_emitter import SqlEmitter, run_statements
+
+    rel = "[orders_su]- nextrel -[orders_su]"
+    src = parse_source_dict(
+        {
+            "source_name": "orders_su",
+            "source_table": f"{sf_dir}/orders.parquet",
+            "target_table": "enriched_orders_su",
+            "raw_attributes": ["o_orderkey long", "o_totalprice double"],
+            "rules": [
+                {
+                    "name": "seq",
+                    "expression": "[This].o_orderkey % 1000",
+                    "unique": True,
+                },
+                {"name": "nxt", "expression": "[This].seq + 1"},
+                {
+                    "name": "next_price",
+                    "expression": "[orders_su].o_totalprice",
+                    "parameters": [
+                        {"source_name": "orders_su", "relations": [rel]}
+                    ],
+                },
+            ],
+        }
+    )
+    rels = parse_relations_list(
+        [
+            {
+                "name": rel,
+                "expression": "[This].nxt = [Related].seq",
+                "cardinality": "M-1",
+            }
+        ]
+    )
+    project = Project(sources=[src], relations=rels)
+    expect = sorted(
+        tuple(r)
+        for r in spark.sql(
+            f"""
+            WITH o AS (
+              SELECT o_orderkey, o_totalprice, o_orderkey % 1000 AS seq
+              FROM parquet.`{sf_dir}/orders.parquet`
+            ),
+            u AS (
+              SELECT seq, first(o_totalprice) AS p FROM o
+              GROUP BY seq HAVING count(*) = 1
+            )
+            SELECT o.o_orderkey, u.p FROM o LEFT JOIN u ON o.seq + 1 = u.seq
+            """
+        ).collect()
+    )
+    assert any(r[1] is not None for r in expect)
+    assert any(r[1] is None for r in expect)
+    cols = ("o_orderkey", "next_price")
+
+    hubs = ProjectRunner(spark, project, persist_hubs=False).build()
+    frame = sorted(tuple(r) for r in hubs["orders_su"].collect())
+    assert sorted(
+        tuple(r) for r in hubs["orders_su"].select(*cols).collect()
+    ) == expect
+
+    shutil.rmtree("spark-warehouse", ignore_errors=True)
+    run_sql = SqlEmitter(project).emit_all(str(tmp_path / "target"))
+    try:
+        run_statements(spark, run_sql)
+        table = spark.table("enriched_orders_su")
+        got = sorted(
+            tuple(r) for r in table.select(*hubs["orders_su"].columns).collect()
+        )
+    finally:
+        spark.sql("DROP TABLE IF EXISTS enriched_orders_su")
+    assert got == frame

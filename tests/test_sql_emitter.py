@@ -172,7 +172,8 @@ def test_batch_hub_reading_stream_source_is_named(tmp_path):
 def test_compile_front_end_has_one_implementation():
     """The emitter and the probe render the shared plans/ decisions:
     neither imports the DataFrame runner (nor the emitter the compiler),
-    and only parser.rewrite applies character spans right to left."""
+    the compiler renders no hub SQL of its own, and only parser.rewrite
+    applies character spans right to left."""
     import glob
     import re
 
@@ -193,6 +194,12 @@ def test_compile_front_end_has_one_implementation():
         imports(os.path.join(pkg, "sql_emitter.py"))
     )
     assert "runner" not in imports(os.path.join(pkg, "probe.py"))
+    # the DataFrame runner executes plans/render.py's hub SQL: it renders
+    # no relation predicate and writes no join text of its own
+    with open(os.path.join(pkg, "compiler.py")) as f:
+        compiler = f.read()
+    assert "render_relation" not in compiler
+    assert "LEFT JOIN" not in compiler
     span_loop = re.compile(r"key=lambda \w+: -(?:\w+\[0\]|\w+\.start)")
     files = [
         os.path.join(pkg, "compiler.py"),

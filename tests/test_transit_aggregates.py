@@ -111,24 +111,41 @@ def test_third_source_transit_aggregate(spark, sf_dir):
             assert got[k] == expect[k], k
 
 
-def test_transit_aggregate_sql_emission_is_a_project_error(sf_dir, tmp_path):
-    """run.sql cannot render a transit aggregate; the emitter says so
-    with the ProjectError every other unrenderable project raises,
-    naming the relation."""
-    from dataforge_core_spark.model import ProjectError
-    from dataforge_core_spark.sql_emitter import SqlEmitter
+def _run_sql_rows(spark, project, tmp_path, source_name):
+    """The rows of ``source_name``'s hub table after run.sql ran."""
+    import shutil
+
+    from dataforge_core_spark.sql_emitter import SqlEmitter, run_statements
+
+    shutil.rmtree("spark-warehouse", ignore_errors=True)
+    by_name = project.source_by_name()
+    try:
+        run_statements(
+            spark, SqlEmitter(project).emit_all(str(tmp_path / "target"))
+        )
+        return sorted(spark.table(by_name[source_name].target_table).collect())
+    finally:
+        for s in project.sources:
+            spark.sql(f"DROP TABLE IF EXISTS {s.target_table}")
+
+
+def test_transit_aggregate_run_sql_matches_runner(spark, sf_dir, tmp_path):
+    """run.sql renders a transit aggregate as the runner does: its
+    target side is the join SELECT over the target hub and its transit
+    hop, so the emitted table equals the runner's frame."""
+    from dataforge_core_spark.runner import ProjectRunner
 
     project = _weighted_qty_project(sf_dir)
-    with pytest.raises(ProjectError, match=r"transit/\[This\].*pk"):
-        SqlEmitter(project).emit_all(str(tmp_path))
+    hubs = ProjectRunner(spark, project, persist_hubs=False).build()
+    want = sorted(hubs["p"].collect())
+    assert any(r["weighted_qty"] is not None for r in want)
+    assert _run_sql_rows(spark, project, tmp_path, "p") == want
 
 
-def test_this_transit_aggregate(spark, sf_dir):
-    """[This] value inside the aggregate: part sums quantity above its
-    own retail price threshold — row-correlated, decorrelated via the
-    row-key fallback."""
+def _qty_when_cheap_project(sf_dir):
+    """part sums quantity above its own retail price threshold: a
+    [This] value inside the aggregate."""
     from dataforge_core_spark.model import Project, Rule
-    from dataforge_core_spark.runner import ProjectRunner
 
     part, li, orders, rels = _base_sources(sf_dir)
     part.rules.append(
@@ -140,7 +157,15 @@ def test_this_transit_aggregate(spark, sf_dir):
             ),
         )
     )
-    project = Project(sources=[part, li, orders], relations=rels)
+    return Project(sources=[part, li, orders], relations=rels)
+
+
+def test_this_transit_aggregate(spark, sf_dir):
+    """See _qty_when_cheap_project: row-correlated, decorrelated via the
+    row-key fallback."""
+    from dataforge_core_spark.runner import ProjectRunner
+
+    project = _qty_when_cheap_project(sf_dir)
     hubs = ProjectRunner(spark, project, persist_hubs=False).build()
     got = {
         r["p_partkey"]: r["qty_when_cheap"] for r in hubs["p"].collect()
@@ -161,6 +186,19 @@ def test_this_transit_aggregate(spark, sf_dir):
     }
     assert got == expect
     assert any(v for v in got.values() if v)
+
+
+def test_this_transit_aggregate_sql_emission_is_a_project_error(
+    sf_dir, tmp_path
+):
+    """run.sql has no stable row key to group a [This]-transit aggregate
+    on; the emitter says so with a ProjectError naming the relation."""
+    from dataforge_core_spark.model import ProjectError
+    from dataforge_core_spark.sql_emitter import SqlEmitter
+
+    project = _qty_when_cheap_project(sf_dir)
+    with pytest.raises(ProjectError, match=r"\[This\] attributes.*pk"):
+        SqlEmitter(project).emit_all(str(tmp_path))
 
 
 def test_transit_unreachable_error(spark, sf_dir):
