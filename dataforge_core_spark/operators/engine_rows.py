@@ -58,7 +58,7 @@ def canonicalize(df: DataFrame) -> DataFrame:
 # J3 — self-relation lookup AND self-relation aggregate in one source.
 # The reference joins cte(n-1) for self paths
 # (u_enr_query_generate_query.sql:90-91); our compiler mirrors with the
-# in-flight frame (compiler._chain / _agg_target_side df_self).
+# in-flight relation (the join SELECT of plans/render.py over {prev}).
 # ---------------------------------------------------------------------------
 
 

@@ -65,7 +65,7 @@ def empty_group_tables(spark):
 
 def test_emitted_sql_empty_array_parity(spark, empty_group_tables):
     """The SQL artifact must coalesce collect_list/collect_set to [] for
-    empty groups exactly like compiler._agg_empty_fixes (LATERAL parity);
+    empty groups exactly like the DataFrame runner (LATERAL parity);
     previously only the count family was coalesced."""
     from dataforge_core_spark.runner import ProjectRunner
     from dataforge_core_spark.sql_emitter import SqlEmitter, run_statements
