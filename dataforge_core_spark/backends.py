@@ -23,12 +23,18 @@ from __future__ import annotations
 
 import os
 import re
-from typing import Protocol
+from typing import Iterator, Protocol
 
 # statement splitter, verbatim pattern from databricks_sql.py:48-49
 # ("Databricks driver only allows one statement at a time. Split query
 #  into multiple statements by ;, ignoring single-quoted ;")
 STMT_SPLIT = re.compile(r"((?:[^;']|'[^']*')+)")
+
+
+def statements(query: str) -> Iterator[str]:
+    """The non-blank statements of ``query``, split with STMT_SPLIT."""
+    return (s for s in STMT_SPLIT.findall(query) if s.strip())
+
 
 VALIDATION_QUERY = "SELECT 1 as i"  # databricks_sql.py:81
 
@@ -89,9 +95,7 @@ class SparkWarehouse(_RunFileMixin):
             self.spark.sql(f"USE CATALOG {self.catalog}")
         if self.schema:
             self.spark.sql(f"USE SCHEMA {self.schema}")
-        for statement in STMT_SPLIT.findall(query):
-            if statement.strip() == "":
-                continue
+        for statement in statements(query):
             try:
                 self.spark.sql(statement)
             except Exception as e:
@@ -138,9 +142,7 @@ class DatabricksWarehouse(_RunFileMixin):
         )
         cursor = connection.cursor()
         try:
-            for statement in STMT_SPLIT.findall(query):
-                if statement.strip() == "":
-                    continue
+            for statement in statements(query):
                 try:
                     cursor.execute(statement)
                 except Exception as e:

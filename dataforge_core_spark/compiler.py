@@ -13,8 +13,6 @@ needs a live frame:
 - broadcast hints   -> ``BROADCAST(J_<pathid>)`` when the hubs a join
                        reads are measured checkpoints small enough
                        (:meth:`SourceCompiler.record_hub_size`)
-- row-key aggregates-> theta and [This]-transit LATERAL aggregates group
-                       on a checkpointed row id, which run.sql lacks
 - recalculation     -> a rule subset over an existing hub (W4)
 
 Scale notes (100 TB design): every construct is declarative SQL — no
@@ -39,12 +37,8 @@ from dataforge_core_spark.model import (
 )
 from dataforge_core_spark.paths import RelationGraph
 from dataforge_core_spark.plans.outputs import plan_output
-from dataforge_core_spark.plans.planner import (
-    JoinElement,
-    SourcePlan,
-    plan_source,
-)
-from dataforge_core_spark.plans.render import HubRenderer, needs_row_key
+from dataforge_core_spark.plans.planner import SourcePlan, plan_source
+from dataforge_core_spark.plans.render import HubRenderer
 from dataforge_core_spark.session import sql_conf
 
 
@@ -393,7 +387,10 @@ class SourceCompiler:
         df = base
         for level in r.levels(only_rules):
             if level.joins:
-                df = self._join_level(r, df, level.joins, hubs)
+                text = r.join_select(
+                    level.joins, lambda n: self._broadcastable(n, hubs)
+                )
+                df = self._sql(r, text, df, hubs)
             if level.rules:
                 df = self._rule_level(r, df, level.rules, hubs)
         keep = set() if only_rules is None else set(df.columns)
@@ -432,35 +429,6 @@ class SourceCompiler:
         if decimals:
             out = self._sql(r, r.rule_select(names, decimals), df, hubs)
         return out
-
-    def _join_level(
-        self,
-        r: HubRenderer,
-        df: DataFrame,
-        joins: list[JoinElement],
-        hubs: dict[str, DataFrame],
-    ) -> DataFrame:
-        """One level's joins.  A row-key aggregate (theta predicate, or
-        [This] values inside the aggregate) groups on
-        monotonically_increasing_id(), only stable within one
-        materialization: the keyed frame is eagerly
-        ``localCheckpoint``-ed so the aggregate join and the re-attach
-        read the *same* ids from stored blocks.  Unlike ``persist()``
-        (lazy, evictable: a recomputed partition would silently renumber
-        rows), a lost checkpoint block fails the job instead of
-        mis-attaching aggregates; blocks are freed by the ContextCleaner
-        once the frame is unreferenced."""
-        row_key = None
-        if any(needs_row_key(j) for j in joins):
-            row_key = "__row_key"
-            df = df.withColumn(
-                row_key, F.monotonically_increasing_id()
-            ).localCheckpoint(eager=True)
-        text = r.join_select(
-            joins, row_key, lambda names: self._broadcastable(names, hubs)
-        )
-        out = self._sql(r, text, df, hubs)
-        return out.drop(row_key) if row_key else out
 
     # ------------------------------------------------------------------
     def _hub(self, name: str, hubs: dict[str, DataFrame]) -> DataFrame:

@@ -52,7 +52,7 @@ class AggSpec:
                                target; SURVEY §7.3 /
                                u_enr_query_add_many_join_attribute)
       `__THIS__<attr>`       — transit of a [This] value into the
-                               aggregate (forces row-key decorrelation)
+                               aggregate (forces the [This]-domain join)
     """
 
     call: AggCall
@@ -108,10 +108,6 @@ class JoinElement:
     @property
     def hop(self) -> Hop:
         return self.path.hops[-1]
-
-    @property
-    def needs_row_fallback(self) -> bool:
-        return any(a.this_attrs for a in self.aggs)
 
     @property
     def is_self(self) -> bool:

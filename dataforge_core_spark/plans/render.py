@@ -15,7 +15,15 @@ Per level of the plan (:meth:`HubRenderer.levels`):
   carried ``__<parent>__<attr>`` columns when the parent joined at an
   earlier level; each aggregate as the decorrelated ``GROUP BY``
   subquery of J5's LEFT JOIN LATERAL, its target side the same join
-  SELECT over the target hub and its transit hops (SURVEY §7.3);
+  SELECT over the target hub and its transit hops (SURVEY §7.3).  An
+  equi predicate pre-aggregates the target on its foreign key; a theta
+  predicate or [This] values inside the aggregate join the target to
+  the *domain*, the distinct [This] values they read, group on it and
+  attach back with ``<=>`` (the unnesting of a dependent join, Neumann
+  & Kemper, BTW 2015).  The domain reads ``{prev}`` a second time, as
+  Spark's own decorrelated LATERAL does, so a domain column computed by
+  a non-deterministic rule may take other values there than in the
+  rows it attaches to;
 - the *rule SELECT* computes the level's rules, then their ``_uv_flag``
   windows (V4), so that a later self hop's uniqueness guard can read
   them.
@@ -42,6 +50,7 @@ from dataforge_core_spark.plans.planner import (
 )
 from dataforge_core_spark.plans.predicates import (
     equi_keys,
+    relation_sides,
     render_relation,
     render_tokens,
 )
@@ -54,15 +63,6 @@ PREV = "{prev}"
 def _lit(sql: str) -> str:
     """``sql`` as literal template text."""
     return sql.replace("{", "{{").replace("}", "}}")
-
-
-def needs_row_key(join: JoinElement) -> bool:
-    """An aggregate that the foreign-key ``GROUP BY`` cannot decorrelate
-    (a theta predicate, or [This] values inside the aggregate): it groups
-    on a row key of the in-flight relation instead."""
-    return join.kind == "aggregate" and (
-        join.needs_row_fallback or equi_keys(join.hop) is None
-    )
 
 
 @dataclass
@@ -123,15 +123,12 @@ class HubRenderer:
     def join_select(
         self,
         joins: list[JoinElement],
-        row_key: str | None = None,
         hint: Callable[[list[str]], bool] | None = None,
     ) -> str:
-        """One level's ``joins`` over ``{prev}``.  ``row_key`` names a
-        unique row-id column of ``{prev}``, which the row-key aggregates
-        group on (:func:`needs_row_key`); without it they raise.
-        ``hint(hubs)`` says whether a join that reads exactly those hubs
-        gets a ``BROADCAST`` hint."""
-        return self._select(PREV, "T", joins, PREV, row_key, hint)
+        """One level's ``joins`` over ``{prev}``.  ``hint(hubs)`` says
+        whether a join that reads exactly those hubs gets a ``BROADCAST``
+        hint."""
+        return self._select(PREV, "T", joins, PREV, hint)
 
     def rule_select(
         self, names: list[str], decimals: set[str] | frozenset = frozenset()
@@ -191,7 +188,6 @@ class HubRenderer:
         alias: str,
         joins: list[JoinElement],
         self_rel: str | None,
-        row_key: str | None,
         hint: Callable[[list[str]], bool] | None,
     ) -> str:
         """``rel`` (as ``alias``) LEFT JOIN each of ``joins``; a hop back
@@ -215,12 +211,10 @@ class HubRenderer:
                     for a in sorted(join.carry)
                 ]
             else:
-                sub, on, reads = self._aggregate(
-                    join, src, self_rel, row_key, hint
-                )
+                sub, on, reads = self._aggregate(join, src, self_rel, hint)
                 clauses.append(f"LEFT JOIN {sub} J_{pid} ON {on}")
                 cols += _agg_cols(join)
-            if reads and hint and not needs_row_key(join) and hint(reads):
+            if reads and hint and hint(reads):
                 hinted.append(f"J_{pid}")
             batch.add(pid)
         head = f" /*+ BROADCAST({', '.join(hinted)}) */" if hinted else ""
@@ -242,11 +236,11 @@ class HubRenderer:
         join: JoinElement,
         src: Callable[[str], str],
         self_rel: str | None,
-        row_key: str | None,
         hint: Callable[[list[str]], bool] | None,
     ) -> tuple[str, str, list[str] | None]:
         """(the aggregate's ``GROUP BY`` subquery, its ON condition, the
-        hubs it reads: None when it reads the in-flight relation)."""
+        hubs whose size bounds the subquery: None when that is the
+        in-flight relation)."""
         pid = join.pathid
         hop = join.hop
         target, reads = self._read(join, self_rel)
@@ -256,10 +250,10 @@ class HubRenderer:
             transits = list(join.transits.values())
             if reads is not None:
                 reads += [t.hop.dst for t in transits]
-            side = self._select(target, "G", transits, None, None, hint)
+            side = self._select(target, "G", transits, None, hint)
             target = f"(\n{side}\n)"
-        if not needs_row_key(join):
-            keys = equi_keys(hop)
+        keys = equi_keys(hop)
+        if keys is not None and not any(a.this_attrs for a in join.aggs):
             group = [_lit(render_tokens(dst)) for _, dst in keys]
             sel = [f"{g} AS k{j}" for j, g in enumerate(group)]
             sel += [
@@ -273,25 +267,17 @@ class HubRenderer:
             )
             return f"(\n{sub}\n)", on, reads
         # theta predicate or [This] values in the aggregate: join the
-        # keyed relation to the target and group on the row key (exact
-        # LATERAL semantics, more shuffle)
+        # distinct [This] values the predicate and the aggregates read
+        # (the domain K) to the target and group on them
         if join.parent is not None:
             raise ProjectError(
                 f"Multi-hop aggregation over relation "
                 f"{hop.relation.name!r} with theta predicates or "
                 "[This] transits is not supported"
             )
-        if row_key is None:
-            what = (
-                "[This] attributes"
-                if join.needs_row_fallback
-                else "theta predicates"
-            )
-            raise ProjectError(
-                f"SQL emission for aggregates with {what} over relation "
-                f"{hop.relation.name!r} is not supported; use the "
-                "DataFrame runner"
-            )
+        domain = sorted(
+            relation_sides(hop)[0].union(*(a.this_attrs for a in join.aggs))
+        )
 
         def inner(m) -> str:
             name = m.group(1)
@@ -303,19 +289,24 @@ class HubRenderer:
             hop, lambda a: f"K.`{a}`", lambda a: f"G.`{a}`",
             self._by_name[hop.dst],
         )
-        sel = [f"K.`{row_key}` AS k0"] + [
+        group = [f"K.`{d}`" for d in domain]
+        sel = [f"{g} AS k{j}" for j, g in enumerate(group)] + [
             f"{_lit(spec.call_sql(BACKTICKED.sub(inner, spec.inner_sql)))}"
             f" AS `a{k}`"
             for k, spec in enumerate(join.aggs)
         ]
+        distinct = _select_text(group, f"{PREV} K", " DISTINCT")
         head = " /*+ BROADCAST(G) */" if reads and hint and hint(reads) else ""
         sub = _select_text(
             sel,
-            f"{PREV} K\nLEFT JOIN {target} G ON {_lit(pred)}",
+            f"(\n{distinct}\n) K\nLEFT JOIN {target} G ON {_lit(pred)}",
             head,
-            group_by=[f"K.`{row_key}`"],
+            group_by=group,
         )
-        return f"(\n{sub}\n)", f"T.`{row_key}` = J_{pid}.k0", reads
+        on = " AND ".join(
+            f"{src(d)} <=> J_{pid}.k{j}" for j, d in enumerate(domain)
+        )
+        return f"(\n{sub}\n)", on, None
 
 
 def _src_col(

@@ -24,7 +24,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from dataforge_core_spark.backends import STMT_SPLIT
+from dataforge_core_spark.backends import statements
 from dataforge_core_spark.model import (
     HIVE_TO_SPARK_DDL,
     Output,
@@ -223,8 +223,6 @@ def run_statements(spark: SparkSession, sql_text: str) -> int:
     """Split on ';' outside quotes and execute sequentially
     (databricks_sql.py:47-60).  Returns the statement count."""
     n = 0
-    for stmt in STMT_SPLIT.findall(sql_text):
-        if stmt.strip():
-            spark.sql(stmt)
-            n += 1
+    for n, stmt in enumerate(statements(sql_text), start=1):
+        spark.sql(stmt)
     return n

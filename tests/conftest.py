@@ -23,11 +23,19 @@ def pytest_collection_modifyitems(config, items):
             item.add_marker(skip)
 
 
+# the shared session's shuffle width; a later ``get_spark()`` without
+# ``shuffle_partitions`` (``cli.main`` calls one) re-applies the host
+# default to the same session
+SHUFFLE_PARTITIONS = 8
+
+
 @pytest.fixture(scope="session")
 def spark():
     from dataforge_core_spark.session import get_spark
 
-    s = get_spark(app_name="dataforge_tests", shuffle_partitions=8)
+    s = get_spark(
+        app_name="dataforge_tests", shuffle_partitions=SHUFFLE_PARTITIONS
+    )
     yield s
 
 

@@ -19,6 +19,7 @@ import pytest
 from dataforge_core_spark.loader import load_project
 from dataforge_core_spark.runner import ProjectRunner
 from dataforge_core_spark.sources.readers import read_source
+from tests.conftest import SHUFFLE_PARTITIONS
 
 PROJ = os.path.join(
     os.path.dirname(os.path.dirname(__file__)), "projects", "tpch_demo"
@@ -28,6 +29,20 @@ PROJ = os.path.join(
 @pytest.fixture(scope="module")
 def project():
     return load_project(PROJ)
+
+
+@pytest.fixture(autouse=True)
+def _shuffle_width(spark):
+    """The session's shuffle width as the ``spark`` fixture sets it: the
+    size rules these gates check scale with it, and a ``get_spark()``
+    call by an earlier test (``tests/test_sql_emitter.py``'s
+    ``cli.main --build``) leaves the host default on the shared
+    session."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(SHUFFLE_PARTITIONS))
+    yield
+    spark.conf.set(key, prev)
 
 
 def _plan(df) -> str:

@@ -1,6 +1,7 @@
 """Transits into aggregates (SURVEY §7.3): inner expressions referencing
 third sources (pre-joined onto the aggregation side via cardinality-1
-paths from the target) and [This] values (row-key decorrelation)."""
+paths from the target) and [This] values (grouped on the distinct [This]
+values the aggregate reads)."""
 
 from __future__ import annotations
 
@@ -160,21 +161,13 @@ def _qty_when_cheap_project(sf_dir):
     return Project(sources=[part, li, orders], relations=rels)
 
 
-def test_this_transit_aggregate(spark, sf_dir):
-    """See _qty_when_cheap_project: row-correlated, decorrelated via the
-    row-key fallback."""
-    from dataforge_core_spark.runner import ProjectRunner
-
-    project = _qty_when_cheap_project(sf_dir)
-    hubs = ProjectRunner(spark, project, persist_hubs=False).build()
-    got = {
-        r["p_partkey"]: r["qty_when_cheap"] for r in hubs["p"].collect()
-    }
-    expect = {
-        r["p_partkey"]: r["q"]
-        for r in spark.sql(
+def _qty_when_cheap_expect(spark, sf_dir):
+    """The hand-written LEFT JOIN … GROUP BY of _qty_when_cheap_project's
+    part hub."""
+    return sorted(
+        spark.sql(
             f"""
-            SELECT p.p_partkey,
+            SELECT p.p_partkey, p.p_retailprice,
                    SUM(CASE WHEN l.l_quantity * 1000 > p.p_retailprice
                        THEN l.l_quantity ELSE 0 END) AS q
             FROM parquet.`{sf_dir}/part.parquet` p
@@ -183,22 +176,34 @@ def test_this_transit_aggregate(spark, sf_dir):
             GROUP BY p.p_partkey, p.p_retailprice
             """
         ).collect()
-    }
-    assert got == expect
-    assert any(v for v in got.values() if v)
+    )
 
 
-def test_this_transit_aggregate_sql_emission_is_a_project_error(
-    sf_dir, tmp_path
-):
-    """run.sql has no stable row key to group a [This]-transit aggregate
-    on; the emitter says so with a ProjectError naming the relation."""
-    from dataforge_core_spark.model import ProjectError
-    from dataforge_core_spark.sql_emitter import SqlEmitter
+def test_this_transit_aggregate(spark, sf_dir):
+    """See _qty_when_cheap_project: row-correlated, grouped on the
+    distinct [This] values it reads."""
+    from dataforge_core_spark.runner import ProjectRunner
 
     project = _qty_when_cheap_project(sf_dir)
-    with pytest.raises(ProjectError, match=r"\[This\] attributes.*pk"):
-        SqlEmitter(project).emit_all(str(tmp_path))
+    hubs = ProjectRunner(spark, project, persist_hubs=False).build()
+    got = sorted(hubs["p"].collect())
+    assert got == _qty_when_cheap_expect(spark, sf_dir)
+    assert any(r["qty_when_cheap"] for r in got)
+
+
+def test_this_transit_aggregate_run_sql_matches_runner(
+    spark, sf_dir, tmp_path
+):
+    """run.sql builds a [This]-transit aggregate as the runner does: the
+    emitted table, the runner's frame and the hand-written LEFT JOIN …
+    GROUP BY hold the same rows."""
+    from dataforge_core_spark.runner import ProjectRunner
+
+    project = _qty_when_cheap_project(sf_dir)
+    hubs = ProjectRunner(spark, project, persist_hubs=False).build()
+    want = sorted(hubs["p"].collect())
+    assert want == _qty_when_cheap_expect(spark, sf_dir)
+    assert _run_sql_rows(spark, project, tmp_path, "p") == want
 
 
 def test_transit_unreachable_error(spark, sf_dir):
